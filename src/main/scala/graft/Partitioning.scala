@@ -40,7 +40,7 @@ object Partitioning {
       .findFirstMatchIn(text.trim)
       .getOrElse(throw new IllegalArgumentException(
         s"unsupported partition strategy: $text"))
-    val keys = splitTop(m.group(2)).map(_.trim).filter(_.nonEmpty)
+    val keys = SqlText.splitTop(m.group(2)).map(_.trim).filter(_.nonEmpty)
     require(keys.nonEmpty, s"empty partition key: $text")
     val strat = m.group(1).toUpperCase
     if (strat == "LIST") require(keys.length == 1,
@@ -63,8 +63,8 @@ object Partitioning {
           .findFirstMatchIn(body)
           .getOrElse(throw new IllegalArgumentException(
             s"RANGE bounds must be FOR VALUES FROM (..) TO (..): $bounds"))
-        val lo = splitTop(m.group(1)).map(_.trim)
-        val hi = splitTop(m.group(2)).map(_.trim)
+        val lo = SqlText.splitTop(m.group(1)).map(_.trim)
+        val hi = SqlText.splitTop(m.group(2)).map(_.trim)
         require(lo.length == spec.keys.length && hi.length == spec.keys.length,
           s"bound arity ${lo.length}/${hi.length} != key arity " +
             s"${spec.keys.length}: $bounds")
@@ -83,7 +83,7 @@ object Partitioning {
         val m = """(?is)^IN\s*\((.*)\)\s*$""".r.findFirstMatchIn(body)
           .getOrElse(throw new IllegalArgumentException(
             s"LIST bounds must be FOR VALUES IN (..): $bounds"))
-        val vals = splitTop(m.group(1)).map(_.trim)
+        val vals = SqlText.splitTop(m.group(1)).map(_.trim)
         val (nulls, rest) = vals.partition(_.equalsIgnoreCase("NULL"))
         val k = spec.keys.head
         val inPart =
@@ -197,7 +197,7 @@ object Partitioning {
 
   private def listValues(b: String): Seq[String] =
     """(?is)^IN\s*\((.*)\)\s*$""".r.findFirstMatchIn(stripForValues(b))
-      .map(m => splitTop(m.group(1)).map { v0 =>
+      .map(m => SqlText.splitTop(m.group(1)).map { v0 =>
         // quoted string literals compare VERBATIM — LIST values are
         // case-sensitive ('eu' and 'EU' are distinct partitions, in
         // PG and in this engine's own routing predicate); only bare
@@ -238,8 +238,8 @@ object Partitioning {
       } else v.toDoubleOption
     }
     for {
-      lo <- rank(splitTop(m.group(1)).head)
-      hi <- rank(splitTop(m.group(2)).head)
+      lo <- rank(SqlText.splitTop(m.group(1)).head)
+      hi <- rank(SqlText.splitTop(m.group(2)).head)
     } yield (lo, hi)
   }
 
@@ -278,28 +278,5 @@ object Partitioning {
     spec.keys.flatMap(k =>
       "[A-Za-z_][A-Za-z0-9_$]*".r.findAllIn(k)
         .flatMap(t => lower.get(t.toLowerCase))).distinct
-  }
-
-  /** Split on top-level commas (parens + single quotes nest). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new java.lang.StringBuilder
-    var depth = 0
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { cur.append(c); if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.setLength(0)
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.length > 0 || out.nonEmpty) out += cur.toString
-    out.toSeq
   }
 }

@@ -91,70 +91,13 @@ object PgCompat {
     hardcodedQueries.get(normalizeFull(q))
 
   // ------------------------------------------------------------------
-  // masking: spans inside single quotes (with '' doubling) blanked so
-  // scanners never fire inside string literals; double-quoted spans
-  // are identifiers and stay visible to the table-name scanner but are
-  // masked for the operator scanners.
+  // lexing: every pass reads PG text (standard_conforming_strings: a
+  // backslash is literal inside '...'), scanning a SqlText mask so no
+  // rewrite fires inside a string literal or a comment. Double-quoted
+  // spans are identifiers: visible to the table-name scanners, masked
+  // for the operator scanners.
 
-  private[graft] def maskQuoted(s: String, maskDouble: Boolean): String = {
-    val b = s.toCharArray
-    var i = 0
-    while (i < b.length) {
-      b(i) match {
-        case '\'' =>
-          i += 1
-          while (i < b.length && (b(i) != '\'' ||
-            (i + 1 < b.length && b(i + 1) == '\''))) {
-            if (b(i) == '\'' ) { b(i) = ' '; i += 1 } // the doubled quote
-            if (i < b.length) { b(i) = ' '; i += 1 }
-          }
-          i += 1
-        case '"' if maskDouble =>
-          i += 1
-          while (i < b.length && b(i) != '"') { b(i) = ' '; i += 1 }
-          i += 1
-        case _ => i += 1
-      }
-    }
-    new String(b)
-  }
-
-  /** Balanced-paren extent: `open` indexes a '(' in `masked`; returns
-    * the index of its matching ')'. -1 when unbalanced. */
-  private def closeParen(masked: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Top-level comma split of an argument span in `s` using `masked`
-    * for structure. */
-  private def splitArgs(s: String, masked: String, from: Int, to: Int): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var start = from
-    var i = from
-    while (i < to) {
-      masked.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          parts += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    parts += s.substring(start, to)
-    parts.result()
-  }
+  private def pgSpans(s: String) = SqlText.spans(s, standardStrings = true)
 
   // ------------------------------------------------------------------
   // 1. table references → __sys__ (reference ConvertToSys,
@@ -175,7 +118,7 @@ object PgCompat {
     ("""(?i)"?information_schema"?\."?(""" + isNamesAlt + """)"?\b(?!\s*\()""").r
 
   private[graft] def toSys(s: String): String = {
-    val masked = maskQuoted(s, maskDouble = false)
+    val masked = SqlText.mask(s, pgSpans(s), keep = "\"")
     // collect replacement spans on the masked text, splice the original
     val spans = (ToSysRe.findAllMatchIn(masked).map(m =>
       (m.start, m.end, m.group(1) + m.group(2) + "__sys__" + m.group(3).toLowerCase)) ++
@@ -202,7 +145,7 @@ object PgCompat {
     """(?i)\b"?(?:pg_catalog|information_schema)"?\."?(\w+)"?(\s*\()""".r
 
   private[graft] def dropFunctionQualifiers(s: String): String = {
-    val masked = maskQuoted(s, maskDouble = false)
+    val masked = SqlText.mask(s, pgSpans(s), keep = "\"")
     val spans = FnQualRe.findAllMatchIn(masked)
       .filterNot(m => m.group(1).toLowerCase.startsWith("__sys__"))
       .map(m => (m.start, m.end, m.group(1) + m.group(2))).toSeq
@@ -230,15 +173,16 @@ object PgCompat {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = maskQuoted(cur, maskDouble = true)
+      val masked = SqlText.mask(cur, pgSpans(cur))
       val re = ("""(?i)\b""" + fn + """\s*\(""").r
       re.findFirstMatchIn(masked) match {
         case None => return cur
         case Some(m) =>
           val open = masked.indexOf('(', m.start)
-          val close = closeParen(masked, open)
+          val close = SqlText.matchParen(masked, open)
           if (close < 0) return cur
-          val args = splitArgs(cur, masked, open + 1, close)
+          val inner = cur.substring(open + 1, close)
+          val args = SqlText.splitTop(inner, sps = pgSpans(inner))
             .map(_.trim).filter(_.nonEmpty)
           cur = cur.substring(0, m.start) + replace(args) +
             cur.substring(close + 1)
@@ -299,12 +243,12 @@ object PgCompat {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = maskQuoted(cur, maskDouble = true)
+      val masked = SqlText.mask(cur, pgSpans(cur))
       AnyRe.findFirstMatchIn(masked) match {
         case None => return cur
         case Some(m) =>
           val open = masked.indexOf('(', m.end - 1)
-          val close = closeParen(masked, open)
+          val close = SqlText.matchParen(masked, open)
           if (close < 0) return cur
           val lhs = cur.substring(m.start(1), m.end(1))
           val inner = cur.substring(open + 1, close).trim
@@ -326,7 +270,7 @@ object PgCompat {
     """("[^"]+"|[\w.$]+)\s*(!~\*|!~|~\*|~)\s*('(?:[^']|'')*')""".r
 
   private[graft] def regexOps(s: String): String = {
-    val masked = maskQuoted(s, maskDouble = false)
+    val masked = SqlText.mask(s, pgSpans(s), keep = "\"")
     val spans = RegexOpRe.findAllMatchIn(masked).map { m =>
       val lhs = s.substring(m.start(1), m.end(1))
       val rhs = s.substring(m.start(3), m.end(3))
@@ -349,7 +293,8 @@ object PgCompat {
   // ------------------------------------------------------------------
   // 6. ::type casts. LHS extends left over an identifier chain, a
   //    quoted identifier, a string literal, a number, or a
-  //    parenthesized expression; RHS is a (possibly parenthesized)
+  //    parenthesized expression together with the identifier chain
+  //    glued to it (`count(*)`, `s.f(x)`); RHS is a (possibly parenthesized)
   //    type word. regclass/regtype literals resolve against the live
   //    catalog at rewrite time — settings and oids are statement-time
   //    constants, the same contract the reference's rewrites rely on.
@@ -372,39 +317,23 @@ object PgCompat {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val masked = maskQuoted(cur, maskDouble = true)
+      val sps = pgSpans(cur)
+      val masked = SqlText.mask(cur, sps)
       val i = masked.indexOf("::")
       if (i < 0) return cur
       // ---- LHS extent
-      var lo = i
-      if (lo > 0 && (cur.charAt(lo - 1) == '\'' || cur.charAt(lo - 1) == '"')) {
-        // quoted literal/identifier: scan to its opener on the original
-        val q = cur.charAt(lo - 1)
-        var j = lo - 2
-        var done = false
-        while (j >= 0 && !done) {
-          if (cur.charAt(j) == q) {
-            if (q == '\'' && j > 0 && cur.charAt(j - 1) == '\'') j -= 2
-            else { done = true }
-          } else j -= 1
-        }
-        lo = math.max(j, 0)
-      } else if (lo > 0 && masked.charAt(lo - 1) == ')') {
-        var depth = 0
-        var j = lo - 1
-        var done = false
-        while (j >= 0 && !done) {
-          masked.charAt(j) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1; if (depth == 0) done = true
-            case _ =>
-          }
-          if (!done) j -= 1
-        }
-        lo = math.max(j, 0)
-      } else {
+      def chainStart(end: Int): Int = {
+        var lo = end
         while (lo > 0 && (masked.charAt(lo - 1).isLetterOrDigit ||
           "._$".contains(masked.charAt(lo - 1)))) lo -= 1
+        lo
+      }
+      val lo = sps.find(sp => sp.end == i && sp.kind == SqlText.Quoted) match {
+        case Some(quoted) => quoted.start
+        case None if i > 0 && masked.charAt(i - 1) == ')' =>
+          val open = SqlText.matchParen(masked, i - 1)
+          if (open < 0) 0 else chainStart(open)
+        case None => chainStart(i)
       }
       // ---- RHS extent: word, optional second word, optional (args),
       //      optional []
@@ -432,7 +361,7 @@ object PgCompat {
       }
       var precision = ""
       if (hi < masked.length && masked.charAt(hi) == '(') {
-        val c = closeParen(masked, hi)
+        val c = SqlText.matchParen(masked, hi)
         if (c > 0) { precision = cur.substring(hi, c + 1); hi = c + 1 }
       }
       if (hi + 1 < masked.length && masked.charAt(hi) == '[' &&
@@ -490,7 +419,7 @@ object PgCompat {
 
   private[graft] def expandSrf(s: String): String = {
     if (!s.toLowerCase.contains("_pg_expandarray")) return s
-    val masked = maskQuoted(s, maskDouble = true)
+    val masked = SqlText.mask(s, pgSpans(s))
     val mlower = masked.toLowerCase
     val n = s.length
     def wordAt(j: Int, w: String): Boolean =
@@ -519,12 +448,8 @@ object PgCompat {
         var j = i + 15
         while (j < n && masked.charAt(j).isWhitespace) j += 1
         if (j < n && masked.charAt(j) == '(') {
-          var d2 = 1; var k2 = j + 1
-          while (k2 < n && d2 > 0) {
-            if (masked.charAt(k2) == '(') d2 += 1
-            else if (masked.charAt(k2) == ')') d2 -= 1
-            k2 += 1
-          }
+          val close = SqlText.matchParen(masked, j)
+          val k2 = if (close < 0) n else close + 1
           val arg = s.substring(j + 1, k2 - 1).trim
           // nearest enclosing depth with a clause state decides whether
           // this occurrence is in a select list (the LATERAL VIEW
@@ -601,34 +526,18 @@ object PgCompat {
   // 7. double-quoted identifiers → backticks (PG quoting → Spark
   //    quoting; "" inside an identifier unescapes to ").
 
-  /** `backslashEscapes = true` for MySQL-lexed input (the ANSI_QUOTES
+  /** `standardStrings = false` for MySQL-lexed input (the ANSI_QUOTES
     * sql_mode fold): `\'` inside a single-quoted literal must not
-    * close it. PG callers keep the default — standard_conforming
-    * strings treat backslash literally. */
+    * close it. PG callers keep the default. */
   private[graft] def quoteIdents(s: String,
-      backslashEscapes: Boolean = false): String = {
-    val b = new java.lang.StringBuilder
-    var i = 0
-    var inSingle = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inSingle && backslashEscapes && c == '\\' && i + 1 < s.length) {
-        b.append(c).append(s.charAt(i + 1)); i += 2
-      } else if (c == '\'') {
-        // '' doubling stays inside the literal
-        inSingle = !inSingle
-        b.append(c); i += 1
-      } else if (c == '"' && !inSingle) {
-        val close = {
-          var j = i + 1
-          while (j < s.length && s.charAt(j) != '"') j += 1
-          j
-        }
-        b.append('`').append(s.substring(i + 1, close).replace("\"\"", "\""))
-          .append('`')
-        i = close + 1
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
+      standardStrings: Boolean = true): String =
+    SqlText.spans(s, standardStrings = standardStrings).map { sp =>
+      val seg = s.substring(sp.start, sp.end)
+      if (sp.kind != SqlText.Quoted || seg.head != '"') seg
+      else {
+        val closed = seg.length > 1 && seg.last == '"'
+        "`" + seg.substring(1, if (closed) seg.length - 1 else seg.length)
+          .replace("\"\"", "\"") + "`"
+      }
+    }.mkString
 }

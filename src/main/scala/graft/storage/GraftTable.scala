@@ -1297,7 +1297,7 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     manifest.props.collect { case (k, v) if k.startsWith("unique.") =>
       k.stripPrefix("unique.") -> (
         if (v.startsWith("expr:"))
-          GraftTable.splitTopLevel(v.stripPrefix("expr:")).map(_.trim)
+          graft.SqlText.splitTop(v.stripPrefix("expr:")).map(_.trim)
         else v.split(',').map(_.trim).toSeq)
     }
 
@@ -1688,19 +1688,10 @@ final class GraftTable(val spark: SparkSession, val path: Path,
 
   /** Word-boundary identifier rename inside a stored SQL expression;
     * string literals stay untouched (span-scanned). */
-  private def renameInExpr(e: String, from: String, to: String): String = {
-    if (!e.toLowerCase.contains(from.toLowerCase)) return e
-    val pat = ("(?i)(?<![A-Za-z0-9_$.])" +
-      java.util.regex.Pattern.quote(from) + "(?![A-Za-z0-9_$])").r
-    val b = new StringBuilder
-    graft.SqlText.spans(e, dollarQuotes = false).foreach { sp =>
-      val seg = e.substring(sp.start, sp.end)
-      if (sp.kind != graft.SqlText.Code) b.append(seg)
-      else b.append(pat.replaceAllIn(seg,
-        java.util.regex.Matcher.quoteReplacement(to)))
-    }
-    b.toString
-  }
+  private def renameInExpr(e: String, from: String, to: String): String =
+    if (!e.toLowerCase.contains(from.toLowerCase)) e
+    else graft.SqlText.replaceCode(e, ("(?i)(?<![A-Za-z0-9_$.])" +
+      java.util.regex.Pattern.quote(from) + "(?![A-Za-z0-9_$])").r)(_ => to)
 
   // ------------------------------------------------------------------
 
@@ -2149,30 +2140,6 @@ object GraftTable {
     * any harness log (r14 verdict #6). */
   private[graft] val obsFallbacks =
     new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Split at top-level commas (paren-depth 0, single-quote-aware) —
-    * an expression-index entry like `concat(a, b)` must stay one item. */
-  private[graft] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var quote = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote) { if (c == '\'') quote = false }
-      else c match {
-        case '\'' => quote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
 
   /** CREATE TABLE: initialize an empty manifest (A19 analog). */
   def create(spark: SparkSession, path: Path, schema: StructType,

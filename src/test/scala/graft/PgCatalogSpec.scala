@@ -438,6 +438,14 @@ class PgCatalogSpec extends SparkSpec {
       === "SELECT CAST((a + b) AS DECIMAL(10,2)) FROM t")
     assert(PgCompat.casts(e, "SELECT ts::timestamp without time zone FROM t")
       === "SELECT CAST(ts AS TIMESTAMP) FROM t")
+    // a paren group glued to an identifier chain is a call: the whole
+    // call is the operand; a doubled quote stays inside its literal
+    assert(PgCompat.casts(e, "SELECT count(*)::bigint FROM t")
+      === "SELECT CAST(count(*) AS BIGINT) FROM t")
+    assert(PgCompat.casts(e, "SELECT s.f(x, ')')::int FROM t")
+      === "SELECT CAST(s.f(x, ')') AS INT) FROM t")
+    assert(PgCompat.casts(e, "SELECT 'it''s'::text")
+      === "SELECT CAST('it''s' AS STRING)")
     // ANY with a subquery operand becomes IN, array operand the shim
     assert(PgCompat.anyOp("WHERE x = ANY(SELECT id FROM t)")
       === "WHERE x IN (SELECT id FROM t)")

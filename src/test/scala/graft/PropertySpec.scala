@@ -238,17 +238,17 @@ class PropertySpec extends SparkSpec {
     // fragments whose composition covers the scanner's decision space:
     // the keyword in code position, inside every quote kind, inside
     // parens, and embedded in identifiers
-    // note: a bare \' fragment is deliberately absent — backslash
-    // handling inside literals is dialect territory where splitTopWord
-    // (escapes honored) and maskQuoted (verbatim) legitimately differ
+    // note: a bare \' fragment is deliberately absent — an unbalanced
+    // quote runs to end of input, so the balance assertions below
+    // would not hold for the before-part
     val frag = Gen.oneOf(
       "a = 1", "'x WHERE y'", "\"w WHERE z\"", "`q WHERE r`",
       "(SELECT 1 WHERE true)", "wherever", "my_where", "where_to",
       "f(a, 'b)')", "x")
     val gen = Gen.listOfN(6, frag).map(_.mkString(" "))
     samples(gen, 150).foreach { s =>
-      SqlRouter.splitTopWord(s, "WHERE") match {
-        case Some((before, after)) =>
+      SqlText.splitTop(s, "WHERE", 2) match {
+        case Seq(before, after) =>
           // the split point is a REAL keyword: gluing the pieces back
           // with it reproduces the input modulo whitespace, and the
           // before-part carries balanced quotes/parens
@@ -257,11 +257,11 @@ class PropertySpec extends SparkSpec {
           assert(before.count(_ == '(') === before.count(_ == ')'))
           Seq('\'', '"', '`').foreach(q =>
             assert(before.count(_ == q) % 2 === 0, s"unbalanced $q in: $before"))
-        case None =>
+        case _ =>
           // no top-level keyword: every WHERE in the input is quoted,
           // parenthesized, or part of an identifier — verified by the
           // masked scan finding none either
-          val masked = PgCompat.maskQuoted(s, maskDouble = true)
+          val masked = SqlText.mask(s)
           """(?i)(?<![\w$])where(?![\w$])""".r.findAllMatchIn(masked).foreach { m =>
             // any remaining bare WHERE must be inside parens or backticks
             val prefix = masked.substring(0, m.start)
@@ -269,6 +269,32 @@ class PropertySpec extends SparkSpec {
             val inBacktick = prefix.count(_ == '`') % 2 == 1
             assert(depth > 0 || inBacktick, s"missed WHERE in: $s")
           }
+      }
+    }
+  }
+
+  test("SqlText.mask keeps the length and every code character") {
+    // fragments over every span kind and knob-sensitive spelling:
+    // escapes, doubled delimiters, comments, dollar bodies, unterminated
+    // openers
+    val frag = Gen.oneOf("a", " ", "(", ")", ",", "'x'", "'it''s'",
+      "'b\\'c'", "\"d\"", "`e``f`", "-- c\n", "/* k */", "$$ g $$",
+      "$t$ h $t$", "#", "'", "\"", "/*", "\\", "$1")
+    val gen = Gen.listOf(frag).map(_.mkString)
+    samples(gen, 300).foreach { s =>
+      for {
+        hash <- Seq(true, false)
+        dollar <- Seq(true, false)
+        std <- Seq(true, false)
+      } {
+        val sps = SqlText.spans(s, hashComments = hash, dollarQuotes = dollar,
+          standardStrings = std)
+        val masked = SqlText.mask(s, sps)
+        assert(masked.length === s.length, s"length of mask($s)")
+        sps.filter(_.kind == SqlText.Code).foreach { sp =>
+          assert(masked.substring(sp.start, sp.end) ===
+            s.substring(sp.start, sp.end), s"code of mask($s)")
+        }
       }
     }
   }

@@ -339,6 +339,45 @@ class SqlRouterSpec extends SparkSpec {
       "file values must survive for non-SET columns; SET sees the file value")
   }
 
+  test("LOAD DATA SET: quoted @names stay text; an escaped-quote option keeps the SET") {
+    val e = new Engine(spark, tmpDir("router_load_lexing"))
+    exec(e, "CREATE TABLE t (id BIGINT NOT NULL AUTO_INCREMENT, em STRING, " +
+      "n INT, PRIMARY KEY (id))")
+    val f = java.nio.file.Files.createTempFile("router_load_lexing", ".tsv")
+    java.nio.file.Files.write(f, "a\t3\n".getBytes("UTF-8"))
+    // an @name inside a string literal is text, not a file column
+    exec(e, s"LOAD DATA INFILE '$f' INTO TABLE t (em, @x) " +
+      "SET n = CAST(@x AS INT), em = CONCAT(em, 'it\\'s @x')")
+    assert(exec(e, "SELECT em, n FROM t").df.get.as[(String, Int)].collect()
+      .toSeq === Seq(("ait's @x", 3)))
+    // a backslash-escaped quote in an option literal must not hide the
+    // column list and the SET clause behind it
+    val g = java.nio.file.Files.createTempFile("router_load_lexing2", ".tsv")
+    java.nio.file.Files.write(g, "'b'\t4\n".getBytes("UTF-8"))
+    exec(e, s"LOAD DATA INFILE '$g' INTO TABLE t FIELDS TERMINATED BY '\\t' " +
+      "ENCLOSED BY '\\'' (em, @x) SET n = CAST(@x AS INT) * 2")
+    assert(exec(e, "SELECT em, n FROM t WHERE id = 2").df.get
+      .as[(String, Int)].collect().toSeq === Seq(("b", 8)))
+  }
+
+  test("one lexer: statement shapes the per-pass scanners misread") {
+    val e = new Engine(spark, tmpDir("router_one_lexer"))
+    exec(e, "CREATE TABLE t (id BIGINT PRIMARY KEY, v STRING)")
+    exec(e, "INSERT INTO t VALUES (1, 'a')")
+    // ON DUPLICATE KEY UPDATE glued to the VALUES paren still upserts
+    exec(e, "INSERT INTO t VALUES (1, 'x')ON DUPLICATE KEY UPDATE v = 'b'")
+    assert(exec(e, "SELECT v FROM t WHERE id = 1").df.get.as[String].head() === "b")
+    // a double-quoted (MySQL string) `INTO q FROM` is data, not a
+    // SELECT ... INTO target
+    assert(exec(e, "SELECT \"p INTO q FROM r\" AS s").df.get.as[String]
+      .head() === "p INTO q FROM r")
+    assert(!e.listTables().contains("q"))
+    // an apostrophe inside a comment does not hide a catalog
+    // reference from the PG rewrites
+    assert(exec(e, "SELECT /* it's */ count(*) FROM pg_catalog.pg_namespace")
+      .df.get.as[Long].head() > 0)
+  }
+
   test("LOAD DATA quoted column lists parse; stray paren groups refuse") {
     // r15 ADVICE (low): a backtick/double-quoted column list used to
     // fail the bare-identifier regex and silently degrade to a
@@ -586,6 +625,7 @@ class SqlRouterSpec extends SparkSpec {
     assert(SqlRouter.unwrapParens("(SELECT a) UNION ALL (SELECT b)") ===
       "(SELECT a) UNION ALL (SELECT b)")
     assert(SqlRouter.unwrapParens("(SELECT ')' AS x)") === "SELECT ')' AS x")
+    assert(SqlRouter.unwrapParens("(SELECT 1 AS `a)b`)") === "SELECT 1 AS `a)b`")
     val e = new Engine(spark, tmpDir("router_ctas_union"))
     exec(e, "CREATE TABLE u AS (SELECT 1 AS x) UNION ALL (SELECT 2 AS x)")
     assert(exec(e, "SELECT x FROM u").df.get.as[Int].collect().sorted
@@ -892,6 +932,35 @@ class SqlRouterSpec extends SparkSpec {
       .exists(_.kind == SqlText.LineComment))
     assert(SqlText.spans("$1 $$x$$", dollarQuotes = true)
       .count(_.kind == SqlText.Dollar) === 1) // $1 never opens a span
+    // a doubled delimiter stays inside its span; standardStrings makes
+    // a backslash literal inside '...'
+    assert(SqlText.spans("'it''s' x").head === SqlText.Span(SqlText.Quoted, 0, 7))
+    assert(SqlText.spans("'a\\' b'").size === 1)
+    assert(SqlText.spans("'a\\' b'", standardStrings = true).size === 3)
+    // mask: delimiters stay, bodies and comments blank, `keep` exempts
+    assert(SqlText.mask("f('a,b') -- x\n\"c\"") === "f('   ')      \" \"")
+    assert(SqlText.mask("\"c\" 'd'", keep = "\"") === "\"c\" ' '")
+    assert(SqlText.mask("$q$ x $q$", SqlText.spans("$q$ x $q$",
+      dollarQuotes = true)) === "$q$   $q$")
+    // replaceCode: literals and comments copy through
+    assert(SqlText.replaceCode("a + 'a' /* a */", "a".r)(_ => "b") ===
+      "b + 'a' /* a */")
+    // splitTop: commas at depth 0 only; keywords whole-word, spaced
+    // freely, case-insensitive; limit 2 cuts at the first one
+    assert(SqlText.splitTop("a, f(b, c), 'd,e'") === Seq("a", " f(b, c)", " 'd,e'"))
+    assert(SqlText.splitTop("") === Nil)
+    assert(SqlText.splitTop("a,") === Seq("a", ""))
+    assert(SqlText.splitTop("x = 1 where_to (a WHERE b) wHeRe y", "WHERE", 2) ===
+      Seq("x = 1 where_to (a WHERE b) ", " y"))
+    assert(SqlText.splitTop("(v)ON  duplicate\nKEY UPDATE w", "ON DUPLICATE KEY UPDATE",
+      2) === Seq("(v)", " w"))
+    assert(SqlText.splitTop("a 'WHERE' b", "WHERE", 2) === Seq("a 'WHERE' b"))
+    // matchParen: both directions, -1 when unbalanced
+    val m = SqlText.mask("f(a, ')', (b))")
+    assert(SqlText.matchParen(m, 1) === 13)
+    assert(SqlText.matchParen(m, 13) === 1)
+    assert(SqlText.matchParen(m, 10) === 12)
+    assert(SqlText.matchParen(SqlText.mask("(a"), 0) === -1)
   }
 
   test("stripPublicSchema: an apostrophe inside a comment can't flip quote state") {

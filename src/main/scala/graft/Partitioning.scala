@@ -34,13 +34,18 @@ object Partitioning {
 
   final case class Spec(strategy: String, keys: Seq[String])
 
+  // top-level comma split of PG text: standard strings, so a
+  // backslash is literal inside '...' (`IN ('C:\', 'D:\')` is two values)
+  private def splitPg(s: String): Seq[String] =
+    SqlText.splitTop(s, sps = SqlText.spans(s, standardStrings = true))
+
   /** Parse the recorded `partition.by` prop text, e.g. `RANGE (a, b)`. */
   def parse(text: String): Spec = {
     val m = """(?is)^\s*(RANGE|LIST|HASH)\s*\((.*)\)\s*$""".r
       .findFirstMatchIn(text.trim)
       .getOrElse(throw new IllegalArgumentException(
         s"unsupported partition strategy: $text"))
-    val keys = SqlText.splitTop(m.group(2)).map(_.trim).filter(_.nonEmpty)
+    val keys = splitPg(m.group(2)).map(_.trim).filter(_.nonEmpty)
     require(keys.nonEmpty, s"empty partition key: $text")
     val strat = m.group(1).toUpperCase
     if (strat == "LIST") require(keys.length == 1,
@@ -63,8 +68,8 @@ object Partitioning {
           .findFirstMatchIn(body)
           .getOrElse(throw new IllegalArgumentException(
             s"RANGE bounds must be FOR VALUES FROM (..) TO (..): $bounds"))
-        val lo = SqlText.splitTop(m.group(1)).map(_.trim)
-        val hi = SqlText.splitTop(m.group(2)).map(_.trim)
+        val lo = splitPg(m.group(1)).map(_.trim)
+        val hi = splitPg(m.group(2)).map(_.trim)
         require(lo.length == spec.keys.length && hi.length == spec.keys.length,
           s"bound arity ${lo.length}/${hi.length} != key arity " +
             s"${spec.keys.length}: $bounds")
@@ -83,7 +88,7 @@ object Partitioning {
         val m = """(?is)^IN\s*\((.*)\)\s*$""".r.findFirstMatchIn(body)
           .getOrElse(throw new IllegalArgumentException(
             s"LIST bounds must be FOR VALUES IN (..): $bounds"))
-        val vals = SqlText.splitTop(m.group(1)).map(_.trim)
+        val vals = splitPg(m.group(1)).map(_.trim)
         val (nulls, rest) = vals.partition(_.equalsIgnoreCase("NULL"))
         val k = spec.keys.head
         val inPart =
@@ -197,7 +202,7 @@ object Partitioning {
 
   private def listValues(b: String): Seq[String] =
     """(?is)^IN\s*\((.*)\)\s*$""".r.findFirstMatchIn(stripForValues(b))
-      .map(m => SqlText.splitTop(m.group(1)).map { v0 =>
+      .map(m => splitPg(m.group(1)).map { v0 =>
         // quoted string literals compare VERBATIM — LIST values are
         // case-sensitive ('eu' and 'EU' are distinct partitions, in
         // PG and in this engine's own routing predicate); only bare
@@ -238,8 +243,8 @@ object Partitioning {
       } else v.toDoubleOption
     }
     for {
-      lo <- rank(SqlText.splitTop(m.group(1)).head)
-      hi <- rank(SqlText.splitTop(m.group(2)).head)
+      lo <- rank(splitPg(m.group(1)).head)
+      hi <- rank(splitPg(m.group(2)).head)
     } yield (lo, hi)
   }
 

@@ -80,12 +80,17 @@ object SqlRouter {
     """(?is)\s*INSERT\s+INTO\s+([\w.]+)\s*(?:\(([\w\s,]+)\)\s*)?\s+(OVERRIDING\s+(?:SYSTEM|USER)\s+VALUE\s+.*|VALUES\s*.*|SELECT\s+.*|FROM\s+.*)""".r
   // an INSERT carrying a top-level upsert clause: (insert head, clause
   // tail), cut at the phrase in code position — the phrase inside a
-  // string literal never triggers the upsert arm
+  // string literal never triggers the upsert arm. The span scan only
+  // runs when the phrase's distinctive word (CONFLICT / DUPLICATE)
+  // occurs at all: plain multi-MB dump-replay INSERTs skip it.
   private class InsertUpsert(phrase: String) {
+    private val probe = java.util.regex.Pattern.compile(phrase.split(' ')(1),
+      java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.LITERAL)
     def unapply(s: String): Option[(String, String)] = {
       val h = s.indexWhere(!_.isWhitespace)
-      if (h < 0 || !s.regionMatches(true, h, "INSERT", 0, 6)) None
-      else SqlText.splitTop(s, phrase, 2) match {
+      if (h < 0 || !s.regionMatches(true, h, "INSERT", 0, 6) ||
+        !probe.matcher(s).find()) None
+      else SqlText.splitTop(s, phrase) match {
         case Seq(head, tail) if Insert.matches(head) => Some((head, tail))
         case _ => None
       }
@@ -233,7 +238,7 @@ object SqlRouter {
       val head = s.dropWhile(_.isWhitespace)
       if (!head.regionMatches(true, 0, "UPDATE", 0, 6) ||
         head.length <= 6 || !head.charAt(6).isWhitespace) return None
-      SqlText.splitTop(head.substring(7), "SET", 2) match {
+      SqlText.splitTop(head.substring(7), "SET") match {
         case Seq(refs, tail) if refs.trim.nonEmpty => Some((refs.trim, tail.trim))
         case _ => None
       }
@@ -251,7 +256,7 @@ object SqlRouter {
       val usingForm = body.regionMatches(true, 0, "FROM", 0, 4) &&
         body.length > 4 && body.charAt(4).isWhitespace
       SqlText.splitTop(if (usingForm) body.substring(5) else body,
-        if (usingForm) "USING" else "FROM", 2) match {
+        if (usingForm) "USING" else "FROM") match {
         case Seq(tgt, refs) if tgt.trim.nonEmpty =>
           Some((tgt.trim, refs.trim, usingForm))
         case _ => None
@@ -1696,7 +1701,7 @@ object SqlRouter {
       // split (they'd otherwise ride inside the WHERE capture)
       val (tailO, orderOpt, limitOpt) = splitLimitOrder(tail, "UPDATE")
       val (setList0, whereOpt) = splitSetWhere(tailO)
-      val pgFrom = SqlText.splitTop(setList0, "FROM", 2) match {
+      val pgFrom = SqlText.splitTop(setList0, "FROM") match {
         case Seq(sets, from) => Some((sets.trim, from.trim))
         case _ => None
       }
@@ -1917,8 +1922,12 @@ object SqlRouter {
       // columns' qualifiers (exactly one table may be written).
       val (tail1, returning) = splitReturning(tailAfterSet)
       val (setList1, whereOpt) = splitSetWhere(tail1)
-      val setPart +: fromOpt = SqlText.splitTop(setList1, "FROM", 2)
+      val (setPart, fromOpt) = SqlText.splitTop(setList1, "FROM") match {
+        case Seq(sets, from) => (sets, Some(from))
+        case _ => (setList1, None)
+      }
       val sets = parseSetList(setPart)
+      require(sets.nonEmpty, s"empty SET list: UPDATE $refs SET $tailAfterSet")
       val refsList = joinRefs(refs)
       require(refsList.nonEmpty, s"cannot parse UPDATE table references: $refs")
       val quals = sets.collect {
@@ -2049,8 +2058,11 @@ object SqlRouter {
       // statement is rebuilt in canonical VALUES form and RE-ROUTED —
       // the ODKU/auto-inc/RETURNING arms then apply unchanged.
       val (tail1, ret) = splitReturning(tail)
-      val setPart +: odku =
-        SqlText.splitTop(tail1, "ON DUPLICATE KEY UPDATE", 2)
+      val (setPart, odku) =
+        SqlText.splitTop(tail1, "ON DUPLICATE KEY UPDATE") match {
+          case Seq(sets, o) => (sets, Some(o))
+          case _ => (tail1, None)
+        }
       val kvs = SqlText.splitTop(setPart).map { kv =>
         val Array(k, v) = kv.split("=", 2)
         (k.trim, v.trim)
@@ -3109,7 +3121,7 @@ object SqlRouter {
     if (!head.regionMatches(true, 0, "SELECT", 0, 6)) return s
     // first top-level position of keyword `w` in `t` (t.length: none)
     def at(t: String, w: String) =
-      SqlText.splitTop(t, w, 2, SqlText.spans(t, dollarQuotes = true))
+      SqlText.splitTop(t, w, SqlText.spans(t, dollarQuotes = true))
         .head.length
     val havingPos = at(s, "HAVING")
     val fromPos = at(s, "FROM")
@@ -4694,13 +4706,13 @@ object SqlRouter {
     * paths can never drift. Returns (rest, orderItems, limit). */
   private def splitLimitOrder(tail: String, what: String)
       : (String, Option[String], Option[Int]) = {
-    val (t2, limitOpt) = SqlText.splitTop(tail, "LIMIT", 2) match {
+    val (t2, limitOpt) = SqlText.splitTop(tail, "LIMIT") match {
       case Seq(b, l) =>
         require(l.trim.matches("\\d+"), s"unsupported $what LIMIT tail: ${l.trim}")
         (b.trim, Some(l.trim.toInt))
       case _ => (tail, None)
     }
-    val (t3, orderOpt) = SqlText.splitTop(t2, "ORDER", 2) match {
+    val (t3, orderOpt) = SqlText.splitTop(t2, "ORDER") match {
       case Seq(b, o) =>
         val ob = o.trim
         require(ob.regionMatches(true, 0, "BY", 0, 2) && ob.length > 2 &&
@@ -4975,7 +4987,7 @@ object SqlRouter {
     * word inside a string literal, a `$$...$$` body, a scalar subquery
     * or an identifier (`returning_customer`) never triggers. */
   private[graft] def splitReturning(s: String): (String, Option[String]) =
-    SqlText.splitTop(s, "RETURNING", 2,
+    SqlText.splitTop(s, "RETURNING",
       SqlText.spans(s, dollarQuotes = true)) match {
       case Seq(before, exprs) => (before, Some(exprs.trim))
       case _ => (s, None)
@@ -5608,7 +5620,7 @@ object SqlRouter {
     * (`SET note = 'a, b = c WHERE x'`) or a scalar subquery never
     * terminates the SET list. */
   private[graft] def splitSetWhere(tail: String): (String, Option[String]) =
-    SqlText.splitTop(tail, "WHERE", 2) match {
+    SqlText.splitTop(tail, "WHERE") match {
       case Seq(before, cond) =>
         // a bare trailing WHERE is a syntax error, NOT an
         // unconditional update (silently updating every row from a

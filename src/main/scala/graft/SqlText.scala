@@ -27,7 +27,7 @@ import scala.util.matching.Regex
   * | `hashComments`        | `#` starts a line comment (MySQL)      | stripLeadingComments, normalizeMysqlLiterals |
   * | `dollarQuotes`        | `$tag$...$tag$` is one span (PG)       | splitStatements (off when the DELIMITER holds `$`), foldDollarQuotes, stripComments, callHeads, rewriteAliasHaving, rewriteSysVars, observeDialectEvidence, splitReturning |
   * | `backslashInBacktick` | `\` escapes inside `` `...` ``         | normalizeMysqlLiterals |
-  * | `standardStrings`     | `\` is literal in `'...'`/`"..."` (PG) | every PgCompat pass, PgCompat.quoteIdents (off for the MySQL ANSI_QUOTES fold) |
+  * | `standardStrings`     | `\` is literal in `'...'`/`"..."` (PG) | every PgCompat pass, PgCompat.quoteIdents (off for the MySQL ANSI_QUOTES fold), Partitioning's bound splits |
   * | `keep` ([[mask]] only) | quote kinds left unmasked             | PgCompat toSys/dropFunctionQualifiers/regexOps (`"`), isDumpFunction and joinRefs (`` ` `` `"`), observeDialectEvidence (`` ` ``) |
   *
   * Keep `hashComments` OFF wherever Postgres text can flow through: PG
@@ -163,17 +163,16 @@ object SqlText {
     b.toString
   }
 
-  /** `s` cut at its top-level occurrences of `sep` — paren depth 0,
-    * code spans only. `sep` is a punctuation character (`","`) or a
-    * keyword phrase (`"ON DUPLICATE KEY UPDATE"`): keywords match
-    * case-insensitively as whole words, any whitespace run between
-    * their words. Pieces are raw (untrimmed) and exclude the
-    * separator; n cuts give n + 1 pieces and an empty `s` gives none.
-    * `limit` > 0 caps the piece count, so `limit = 2` splits at the
-    * FIRST keyword: `Seq(before, after)`, or `Seq(s)` without one
-    * (`.head.length` is then the keyword's position, or `s.length`).
-    * `sps` as in [[mask]]. */
-  def splitTop(s: String, sep: String = ",", limit: Int = 0,
+  /** `s` cut at top-level occurrences of `sep` — paren depth 0, code
+    * spans only. `sep` is a punctuation character (`","`), cut at
+    * EVERY top-level occurrence, or a keyword phrase
+    * (`"ON DUPLICATE KEY UPDATE"`), cut at its FIRST one only: keywords
+    * match case-insensitively as whole words, any whitespace run
+    * between their words, and give `Seq(before, after)`, or `Seq(s)`
+    * without one (`.head.length` is then the keyword's position, or
+    * `s.length`). Pieces are raw (untrimmed) and exclude the separator;
+    * an empty `s` gives none. `sps` as in [[mask]]. */
+  def splitTop(s: String, sep: String = ",",
       sps: Seq[Span] = Nil): Seq[String] = {
     if (s.isEmpty) return Nil
     val masked = mask(s, sps)
@@ -200,17 +199,17 @@ object SqlText {
       if (keyword && j < masked.length && ident(masked.charAt(j))) -1 else j
     }
     val out = Vector.newBuilder[String]
-    var pieces = 1
+    var cut = false
     var depth = 0
     var start = 0
     var i = 0
-    while (i < masked.length && (limit <= 0 || pieces < limit)) {
+    while (i < masked.length && !(keyword && cut)) {
       val c = masked.charAt(i)
       val end =
         if (depth == 0 && Character.toLowerCase(c) == first) sepEnd(i) else -1
       if (end >= 0) {
         out += s.substring(start, i)
-        pieces += 1
+        cut = true
         start = end
         i = end
       } else {

@@ -247,7 +247,7 @@ class PropertySpec extends SparkSpec {
       "f(a, 'b)')", "x")
     val gen = Gen.listOfN(6, frag).map(_.mkString(" "))
     samples(gen, 150).foreach { s =>
-      SqlText.splitTop(s, "WHERE", 2) match {
+      SqlText.splitTop(s, "WHERE") match {
         case Seq(before, after) =>
           // the split point is a REAL keyword: gluing the pieces back
           // with it reproduces the input modulo whitespace, and the

@@ -950,11 +950,11 @@ class SqlRouterSpec extends SparkSpec {
     assert(SqlText.splitTop("a, f(b, c), 'd,e'") === Seq("a", " f(b, c)", " 'd,e'"))
     assert(SqlText.splitTop("") === Nil)
     assert(SqlText.splitTop("a,") === Seq("a", ""))
-    assert(SqlText.splitTop("x = 1 where_to (a WHERE b) wHeRe y", "WHERE", 2) ===
+    assert(SqlText.splitTop("x = 1 where_to (a WHERE b) wHeRe y", "WHERE") ===
       Seq("x = 1 where_to (a WHERE b) ", " y"))
-    assert(SqlText.splitTop("(v)ON  duplicate\nKEY UPDATE w", "ON DUPLICATE KEY UPDATE",
-      2) === Seq("(v)", " w"))
-    assert(SqlText.splitTop("a 'WHERE' b", "WHERE", 2) === Seq("a 'WHERE' b"))
+    assert(SqlText.splitTop("(v)ON  duplicate\nKEY UPDATE w", "ON DUPLICATE KEY UPDATE") ===
+      Seq("(v)", " w"))
+    assert(SqlText.splitTop("a 'WHERE' b", "WHERE") === Seq("a 'WHERE' b"))
     // matchParen: both directions, -1 when unbalanced
     val m = SqlText.mask("f(a, ')', (b))")
     assert(SqlText.matchParen(m, 1) === 13)
@@ -1433,6 +1433,10 @@ class SqlRouterSpec extends SparkSpec {
     // writing two tables in one UPDATE is refused loudly
     intercept[IllegalArgumentException] {
       exec(e, "UPDATE acc JOIN adj ON acc.id = adj.id SET acc.bal = 0, adj.delta = 0")
+    }
+    // a join-UPDATE with nothing after SET is refused loudly
+    intercept[IllegalArgumentException] {
+      exec(e, "UPDATE acc JOIN adj ON acc.id = adj.id SET")
     }
     // join-UPDATE of a primary-key column is refused loudly
     intercept[IllegalArgumentException] {
@@ -2553,6 +2557,11 @@ class SqlRouterSpec extends SparkSpec {
     // duplicate list value is loud
     intercept[Exception](exec(e,
       "CREATE TABLE lt_dup PARTITION OF lt FOR VALUES IN ('b')"))
+    // bounds are PG text: a backslash is literal inside '...', so
+    // ('C:\', 'D:\') is two values and 'D:\' collides
+    intercept[IllegalArgumentException](Partitioning.validateNewChild(
+      Partitioning.Spec("LIST", Seq("k")), "FOR VALUES IN ('D:\\')",
+      Seq("lt_win" -> "FOR VALUES IN ('C:\\', 'D:\\')")))
     exec(e, "INSERT INTO lt VALUES ('a', 1), (NULL, 2), ('z', 3)")
     assert(exec(e, "SELECT count(*) FROM lt_ab").df.get.as[Long].head() === 1L)
     assert(exec(e, "SELECT count(*) FROM lt_null").df.get.as[Long].head() === 2L)

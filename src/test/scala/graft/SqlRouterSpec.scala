@@ -2360,6 +2360,12 @@ class SqlRouterSpec extends SparkSpec {
     exec(e, "CREATE TABLE t2 (id BIGINT PRIMARY KEY, email STRING, " +
       "UNIQUE KEY uq2 ((lower(email))))")
     assert(e.table("t2").uniqueArbiters("uq2") === Seq("lower(email)"))
+    // recorded expression text is Spark SQL, where `\` escapes inside a
+    // literal: `'\')'` is ONE literal, so its `)` closes nothing
+    exec(e, "CREATE TABLE t5 (id BIGINT PRIMARY KEY, email STRING, " +
+      "UNIQUE KEY uq5 ((concat(email, '\\')')), id))")
+    assert(e.table("t5").uniqueArbiters("uq5") ===
+      Seq("concat(email, '\\')')", "id"))
     // a quoted plain column records as the bare column, not as an
     // expression — selectExpr would read `"Email"` as a string LITERAL
     // and arbiter-join on a constant (the silent worst case)

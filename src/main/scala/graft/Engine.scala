@@ -808,7 +808,7 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     // back-fills the executor slots one small table's write tail leaves
     // idle (guide §2.6), so a many-table database backs up in
     // ~max(table) instead of sum(tables)
-    inParallel(names, maxThreads = 4) { t =>
+    fanOut(names, maxThreads = 4, (t: String) => s"backup of table $t") { t =>
       val tbl = table(s"$db.$t")
       val m = tbl.manifest
       tbl.read().write.mode("overwrite")
@@ -824,19 +824,43 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     Files.write(destDir.resolve("_views.json"), mapper.writeValueAsBytes(views.asJava))
   }
 
-  /** Run `body` over `items` on a small fixed pool, propagating the
-    * first failure; sequential for 0/1 items. Used by backup/restore,
-    * whose per-table work is independent by construction. */
-  private def inParallel[T](items: Seq[T], maxThreads: Int)(
-      body: T => Unit): Unit = {
-    if (items.size <= 1) { items.foreach(body); return }
+  /** The engine's one fan-out: run `body` over independent `items` on
+    * at most `maxThreads` threads and return the results in input
+    * order. Sequential for 0/1 items and inside a transaction (the
+    * staged io seam is not a proven concurrent structure). After the
+    * first failure no queued item starts; every started item finishes
+    * before that failure is rethrown, so nothing commits after the
+    * caller sees the error. Each item gets a generous named bound: a
+    * wedged item surfaces as "<what> did not finish within 30
+    * minutes" instead of hanging the statement. */
+  private[graft] def fanOut[T, R](items: Seq[T], maxThreads: Int,
+      what: T => String)(body: T => R): Seq[R] = {
+    if (items.size <= 1 || inTransaction) return items.map(body)
+    import java.util.concurrent.{Callable, ExecutionException, TimeUnit,
+      TimeoutException}
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val pool = java.util.concurrent.Executors
       .newFixedThreadPool(math.min(items.size, maxThreads))
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      import scala.concurrent.{Await, Future}
-      val fs = items.map(it => Future(body(it))(ec))
-      fs.foreach(Await.result(_, scala.concurrent.duration.Duration(30, "min")))
+      val futures = items.map(it => pool.submit(new Callable[Option[R]] {
+        def call(): Option[R] =
+          if (failure.get != null) None // a sibling failed: never start
+          else try Some(body(it)) catch {
+            case e: Throwable => failure.compareAndSet(null, e); throw e
+          }
+      }))
+      val results = items.zip(futures).map { case (it, f) =>
+        try f.get(30, TimeUnit.MINUTES) catch {
+          case _: ExecutionException => None // recorded in `failure`
+          case _: TimeoutException =>
+            val e = new IllegalStateException(
+              s"${what(it)} did not finish within 30 minutes")
+            failure.compareAndSet(null, e)
+            throw e
+        }
+      }
+      Option(failure.get).foreach(e => throw e)
+      results.flatten
     } finally pool.shutdown()
   }
 
@@ -860,7 +884,7 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     listViews(db).foreach(v => dropView(s"$db.$v"))
     // independent per-table restores (disjoint target dirs, disjoint
     // source data) — same §2.6 overlap as backupDatabase above
-    inParallel(names, maxThreads = 4) { t =>
+    fanOut(names, maxThreads = 4, (t: String) => s"restore of table $t") { t =>
       val meta = mapper.readValue(Files.readAllBytes(srcDir.resolve(t).resolve("_meta.json")),
         classOf[java.util.Map[String, Object]])
       val schema = org.apache.spark.sql.types.DataType

@@ -1364,34 +1364,15 @@ object SqlRouter {
       // arbiter can't key the file-rewrite join; replaceRows rejects
       // it loudly rather than silently reverting to PK semantics)
       val repKey = impliedUniqueArbiter(t, "REPLACE INTO", colList)
-      // a partitioned parent routes with per-child REPLACE semantics —
-      // valid because MySQL (like PG) requires every unique key on a
-      // partitioned table to include the partition key, so a
-      // conflicting row can only live in the child the incoming row
-      // routes to
-      if (t.partitionBy.isDefined)
-        Result(None, routeFrame(engine, name, t,
-          mergeSource(engine, t, colList, rest),
-          _.replaceRows(_, repKey)))
-      else Result(None,
-        t.replaceRows(mergeSource(engine, t, colList, rest), repKey))
+      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
+        Replace(repKey), None)
     case InsertIgnore(name, colList, rest) =>
       val t = engine.table(name)
       // MySQL checks EVERY unique index (r15): the omitted-auto-PK +
       // single-unique-arbiter shape keys the ignore on that arbiter
       val igKey = impliedUniqueArbiter(t, "INSERT IGNORE", colList)
-      // MySQL leaves LAST_INSERT_ID() untouched when nothing inserts
-      // (all-duplicate batch); mergeSource sets it at id-assignment
-      // time, so a zero-insert outcome restores the prior value
-      val priorLid = engine.getVar("last_insert_id")
-      val n =
-        if (t.partitionBy.isDefined)
-          routeFrame(engine, name, t,
-            mergeSource(engine, t, colList, rest),
-            _.insertIgnoreRows(_, igKey))
-        else t.insertIgnoreRows(mergeSource(engine, t, colList, rest), igKey)
-      if (n == 0) engine.setVar("last_insert_id", priorLid.getOrElse("0"))
-      Result(None, n)
+      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
+        Ignore(igKey), None)
     // PG's upsert spelling (ON CONFLICT ... DO NOTHING | DO UPDATE SET
     // ... [WHERE ...]) maps onto the same storage machinery as MySQL's
     // ON DUPLICATE KEY: `excluded.c` is the incoming row (the __new_<c>
@@ -1457,132 +1438,22 @@ object SqlRouter {
           t.partitionBy.map(Partitioning.parse).foreach(
             Partitioning.requireKeyCovered(_, arbiter,
               "ON CONFLICT arbiter"))
-          val pk = arbiter
-          def retSel(df: DataFrame, rx: String): DataFrame =
-            df.selectExpr(SqlText.splitTop(rx).map(_.trim): _*)
-          if (nothing != null) returning match {
-            case None =>
-              // per-child DO NOTHING is exact: PG requires every
-              // unique key on a partitioned table to include the
-              // partition key, so the conflicting row can only live
-              // in the child the incoming row routes to. The resolved
-              // arbiter columns exist on every child (same schema).
-              // LAST_INSERT_ID stays untouched when nothing inserts
-              // (same restore as INSERT IGNORE).
-              val priorLid = engine.getVar("last_insert_id")
-              val n =
-                if (t.partitionBy.isDefined)
-                  routeFrame(engine, name, t,
-                    mergeSource(engine, t, colList, rest),
-                    _.insertIgnoreRows(_, pk))
-                else t.insertIgnoreRows(
-                  mergeSource(engine, t, colList, rest), pk)
-              if (n == 0)
-                engine.setVar("last_insert_id", priorLid.getOrElse("0"))
-              Result(None, n)
-            case Some(rx) =>
-              // PG returns only the rows actually INSERTED under DO
-              // NOTHING; the pre-insert key set is frozen (immutable
-              // files), the source pinned once. Expression arbiters
-              // compute on both frames via the table's helper. Through
-              // a PARTITIONED parent the same logic runs per child
-              // (concurrent across disjoint children) and the RETURNING
-              // frames union across children (r13; the ORM id-grab
-              // upsert works on partitioned tables in PG).
-              val src = mergeSource(engine, t, colList, rest)
-              def ignoreWithImages(ct: graft.storage.GraftTable,
-                  slice: DataFrame): (DataFrame, Long) = {
-                val (keyCols, addArb) = ct.withArbiterKey(pk)
-                val preKeys = addArb(ct.read()).select(keyCols.map(col): _*)
-                val n = ct.insertIgnoreRows(slice, pk)
-                // same first-occurrence condensation insertIgnoreRows
-                // applies, so the image rows ARE the stored rows
-                (ct.firstPerKey(addArb(slice), keyCols)
-                  .join(preKeys, keyCols, "left_anti"), n)
-              }
-              if (t.partitionBy.isDefined) {
-                // keyed by child path: concurrent child writes finish
-                // in any order, the union assembles deterministically
-                val frames =
-                  scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-                val n = routeFrame(engine, name, t, src, (ct, slice) => {
-                  val (img, k) = ignoreWithImages(ct, slice)
-                  frames.put(ct.path.toString, img)
-                  k
-                })
-                Result(Some(retSel(frames.toSeq.sortBy(_._1).map(_._2)
-                  .reduceOption(_ union _)
-                  .getOrElse(src.limit(0)), rx)), n)
-              } else {
-                val (img, n) = ignoreWithImages(t, src)
-                Result(Some(retSel(img, rx)), n)
-              }
-          } else {
-            val (sets0, whereOpt) = splitSetWhere(setList)
-            val sets = SqlText.splitTop(sets0).map { kv =>
-              val Array(k, v) = kv.split("=", 2)
-              val key = k.trim.stripPrefix("\"").stripSuffix("\"")
-              val rhs = rewriteConflictRefs(v.trim, name)
-              key -> whereOpt.map(w =>
-                s"CASE WHEN (${rewriteConflictRefs(w, name)}) THEN ($rhs) ELSE $key END")
-                .getOrElse(rhs)
-            }.toMap
-            // MySQL/PG leave LAST_INSERT_ID() untouched when a DO
-            // UPDATE batch only updates rows (r14 ADVICE): mergeSource
-            // sets it at id-assignment time, BEFORE the merge knows the
-            // insert count, so a zero-insert outcome restores the prior
-            // value here — same contract as the INSERT IGNORE restore,
-            // keyed on INSERTS (the affected count is nonzero for a
-            // pure-update batch and could not stand in).
-            val priorLid = engine.getVar("last_insert_id")
-            val insertedTot = new java.util.concurrent.atomic.AtomicLong(0)
-            def restoreLid(): Unit =
-              if (insertedTot.get == 0)
-                engine.setVar("last_insert_id", priorLid.getOrElse("0"))
-            returning match {
-              case None if t.partitionBy.isDefined =>
-                // per-child DO UPDATE, same argument as DO NOTHING;
-                // RETURNING stays loud (cross-child image union)
-                val n = routeFrame(engine, name, t,
-                  mergeSource(engine, t, colList, rest), (ct, slice) => {
-                    val (aff, ins) =
-                      ct.upsertOnDuplicateCounts(slice, sets, pk)
-                    insertedTot.addAndGet(ins); aff
-                  })
-                restoreLid()
-                Result(None, n)
-              case None =>
-                val (aff, ins) = t.upsertOnDuplicateCounts(
-                  mergeSource(engine, t, colList, rest), sets, pk)
-                insertedTot.addAndGet(ins); restoreLid()
-                Result(None, aff)
-              case Some(rx) =>
-                val src = mergeSource(engine, t, colList, rest)
-                val guard = whereOpt.map(w => rewriteConflictRefs(w, name))
-                if (t.partitionBy.isDefined) {
-                  // per-child upsert-with-images, RETURNING = the
-                  // cross-child union assembled by child path
-                  // (deterministic under concurrent child writes)
-                  val frames =
-                    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-                  val n = routeFrame(engine, name, t, src, (ct, slice) => {
-                    val (img, k, ins) =
-                      upsertWithImages(ct, slice, sets, guard, pk)
-                    frames.put(ct.path.toString, img)
-                    insertedTot.addAndGet(ins)
-                    k
-                  })
-                  restoreLid()
-                  Result(Some(retSel(frames.toSeq.sortBy(_._1).map(_._2)
-                    .reduceOption(_ union _)
-                    .getOrElse(src.limit(0)), rx)), n)
-                } else {
-                  val (img, n, ins) = upsertWithImages(t, src, sets, guard, pk)
-                  insertedTot.addAndGet(ins); restoreLid()
-                  Result(Some(retSel(img, rx)), n)
-                }
+          val action =
+            if (nothing != null) Ignore(arbiter)
+            else {
+              val (sets0, whereOpt) = splitSetWhere(setList)
+              val guard = whereOpt.map(rewriteConflictRefs(_, name))
+              val sets = SqlText.splitTop(sets0).map { kv =>
+                val Array(k, v) = kv.split("=", 2)
+                val key = k.trim.stripPrefix("\"").stripSuffix("\"")
+                val rhs = rewriteConflictRefs(v.trim, name)
+                key -> guard.fold(rhs)(g =>
+                  s"CASE WHEN ($g) THEN ($rhs) ELSE $key END")
+              }.toMap
+              Upsert(sets, guard, arbiter)
             }
-          }
+          writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
+            action, returning)
         case other => throw new IllegalArgumentException(
           s"unsupported ON CONFLICT clause: $other")
       }
@@ -1619,56 +1490,8 @@ object SqlRouter {
       // + single-unique-arbiter shape keys the upsert on that arbiter
       val odkuKey = impliedUniqueArbiter(t, "ON DUPLICATE KEY UPDATE",
         colList)
-      // LAST_INSERT_ID() restore on a zero-insert ODKU batch (r14
-      // ADVICE) — same contract as the ON CONFLICT DO UPDATE arm above
-      val priorLid = engine.getVar("last_insert_id")
-      val insertedTot = new java.util.concurrent.atomic.AtomicLong(0)
-      def restoreLid(): Unit =
-        if (insertedTot.get == 0)
-          engine.setVar("last_insert_id", priorLid.getOrElse("0"))
-      returning match {
-        case None if t.partitionBy.isDefined =>
-          // per-child ODKU is exact for the same reason as REPLACE
-          // (unique keys include the partition key); RETURNING would
-          // need a cross-child union and stays loud
-          val n = routeFrame(engine, name, t,
-            mergeSource(engine, t, colList, rest), (ct, slice) => {
-              val (aff, ins) = ct.upsertOnDuplicateCounts(slice, sets, odkuKey)
-              insertedTot.addAndGet(ins); aff
-            })
-          restoreLid()
-          Result(None, n)
-        case None =>
-          val (aff, ins) = t.upsertOnDuplicateCounts(
-            mergeSource(engine, t, colList, rest), sets, odkuKey)
-          insertedTot.addAndGet(ins); restoreLid()
-          Result(None, aff)
-        case Some(rx) =>
-          val src = mergeSource(engine, t, colList, rest)
-          def sel(df: DataFrame): DataFrame =
-            df.selectExpr(SqlText.splitTop(rx).map(_.trim): _*)
-          if (t.partitionBy.isDefined) {
-            // MariaDB ODKU RETURNING through a partitioned parent:
-            // per-child images, cross-child union keyed by child path
-            // (deterministic under concurrent child writes)
-            val frames =
-              scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-            val n = routeFrame(engine, name, t, src, (ct, slice) => {
-              val (img, k, ins) = upsertWithImages(ct, slice, sets, None, odkuKey)
-              frames.put(ct.path.toString, img)
-              insertedTot.addAndGet(ins)
-              k
-            })
-            restoreLid()
-            Result(Some(sel(frames.toSeq.sortBy(_._1).map(_._2)
-              .reduceOption(_ union _)
-              .getOrElse(src.limit(0)))), n)
-          } else {
-            val (img, n, ins) = upsertWithImages(t, src, sets, None, odkuKey)
-            insertedTot.addAndGet(ins); restoreLid()
-            Result(Some(sel(img)), n)
-          }
-      }
+      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
+        Upsert(sets, None, odkuKey), returning)
     case InsertDefaults(name) =>
       // PG's all-defaults one-row insert: declared DEFAULTs, null
       // elsewhere, the auto-increment column assigned
@@ -1832,13 +1655,7 @@ object SqlRouter {
         }
         // fan out WITH the returning tail: each child answers its own
         // stored images, the parent unions them (disjoint children)
-        val childResults = fanChildren(engine, tPar.partitionChildren) { c =>
-          val s2 = s"UPDATE ${childRef(name, c)} SET $tail0"
-          executeRouted(engine, s2, s2)
-        }
-        val n = childResults.map(_.affected).sum
-        return Result(returning.flatMap(_ =>
-          childResults.flatMap(_.df).reduceOption(_ union _)), n)
+        return fanToChildren(engine, name, tPar)(c => s"UPDATE $c SET $tail0")
       }
       if (pgFrom.isDefined) {
         // PG UPDATE ... FROM: the target joins the FROM list on the
@@ -1968,13 +1785,7 @@ object SqlRouter {
           "DELETE through a partitioned parent takes only WHERE " +
             "[RETURNING]: target the partition for ORDER BY/LIMIT")
         val tl = Option(tailRaw).getOrElse("")
-        val childResults = fanChildren(engine, t.partitionChildren) { c =>
-          val s2 = s"DELETE FROM ${childRef(name, c)} $tl"
-          executeRouted(engine, s2, s2)
-        }
-        val n = childResults.map(_.affected).sum
-        return Result(returning.flatMap(_ =>
-          childResults.flatMap(_.df).reduceOption(_ union _)), n)
+        return fanToChildren(engine, name, t)(c => s"DELETE FROM $c $tl")
       }
       val cond = whereOpt.map(expr).getOrElse(expr("true"))
       if (orderOpt.isEmpty && limitOpt.isEmpty) {
@@ -2073,14 +1884,16 @@ object SqlRouter {
         ret.map(r => s" RETURNING $r").getOrElse("")
       executeRouted(engine, canonical, canonical)
     case ReplaceSet(name, setList) =>
+      // sugar for a one-row column-list REPLACE, rebuilt in canonical
+      // VALUES form and RE-ROUTED like InsertSet: auto-increment ids,
+      // the implied unique arbiter and partition routing then apply
       val kvs = SqlText.splitTop(setList).map { kv =>
         val Array(k, v) = kv.split("=", 2)
         (k.trim, v.trim)
       }
-      val t = engine.table(name)
-      Result(None, t.replaceRows(sourceDfFor(engine, t,
-        kvs.map(_._1).mkString(", "),
-        s"VALUES (${kvs.map(_._2).mkString(", ")})")))
+      val canonical = s"REPLACE INTO $name (${kvs.map(_._1).mkString(", ")})" +
+        s" VALUES (${kvs.map(_._2).mkString(", ")})"
+      executeRouted(engine, canonical, canonical)
     case Explain(tail) =>
       val (analyze, mode, inner) = parseExplain(tail)
       // leading '('s come off only for the KEYWORD check — set-op heads
@@ -2269,43 +2082,28 @@ object SqlRouter {
             s"columns in declaration order (${t.schema.fieldNames.mkString(", ")})"))
       val (fmt, csvOpts, header) = copyOptions(optList)
       // a partitioned PARENT routes the loaded frame to its children
-      // by bounds (COPY is PG's primary ingest path — PG routes it);
-      // plain tables write directly as before
-      val parentRoute: Option[DataFrame => Long] =
-        if (t.partitionBy.isEmpty) None
-        else Some(df => routeFrameSinglePass(engine, name, t, df))
-      def sink(df: => DataFrame, direct: => Long): Long =
-        parentRoute.fold(direct)(_(df))
-      val n = fmt match {
+      // by bounds (COPY is PG's primary ingest path — PG routes it)
+      val df = fmt match {
         case "CSV" =>
-          sink(graft.sources.BulkIO.loadCsv(engine.spark, path, t.schema,
-              csvOpts.copy(header = header)),
-            graft.sources.BulkIO.loadCsvInto(t, path,
-              csvOpts.copy(header = header)))
+          graft.sources.BulkIO.loadCsv(engine.spark, path, t.schema,
+            csvOpts.copy(header = header))
         case "TEXT" =>
           // pg_dump's default format is NOT a csv dialect: escape
           // sequences decode per field, \N is NULL pre-unescape,
           // bytea accepts the \x hex form
-          sink(graft.sources.BulkIO.pgTextFrame(engine.spark, t.schema,
-              path, sep = csvOpts.sep, nullStr = csvOpts.nullValue),
-            graft.sources.BulkIO.loadPgTextInto(t, path,
-              sep = csvOpts.sep, nullStr = csvOpts.nullValue))
-        case "PARQUET" =>
-          val df = engine.spark.read.schema(t.schema).parquet(path)
-          sink(df, t.insert(df))
-        case "JSON" =>
-          sink(engine.spark.read.schema(t.schema).json(path),
-            graft.sources.BulkIO.loadJsonInto(t, path))
+          graft.sources.BulkIO.pgTextFrame(engine.spark, t.schema,
+            path, sep = csvOpts.sep, nullStr = csvOpts.nullValue)
+        case "PARQUET" => engine.spark.read.schema(t.schema).parquet(path)
+        case "JSON" => engine.spark.read.schema(t.schema).json(path)
         case "ARROW" => // A16: Arrow IPC stream → insert
           val hp = new org.apache.hadoop.fs.Path(path)
           val is = hp.getFileSystem(
             engine.spark.sessionState.newHadoopConf()).open(hp)
-          val df = try graft.sources.ArrowCodec.decodeFrom(engine.spark, is)
-            finally is.close()
-          sink(df, t.insert(df))
+          try graft.sources.ArrowCodec.decodeFrom(engine.spark, is)
+          finally is.close()
         case f => throw new IllegalArgumentException(s"COPY format $f")
       }
-      Result(None, n)
+      writeRows(engine, name, t, df, Append, None)
     case LoadData(path, dupMode, name, tail) =>
       val t = engine.table(name)
       // MySQL's trailing `(col_or_@var, ...)` list and transform
@@ -2323,11 +2121,6 @@ object SqlRouter {
             s"LOAD DATA CHARACTER SET $cs is not supported: convert the " +
               "file to UTF-8 (utf8/ascii/binary pass through)"))
       val opts = loadDataOptions(optsText)
-      val mode = Option(dupMode).map(_.toUpperCase) match {
-        case Some("IGNORE") => graft.sources.BulkIO.Ignore
-        case Some("REPLACE") => graft.sources.BulkIO.Replace
-        case _ => graft.sources.BulkIO.Append
-      }
       // the default MySQL dialect (ESCAPED BY '\', no enclosure) reads
       // through the escape-AWARE path — backslash-escaped tabs and even
       // escaped line terminators decode correctly, OUTFILE's exact
@@ -2342,52 +2135,29 @@ object SqlRouter {
         if (fileEntries.isEmpty && setPairsRaw.nonEmpty)
           t.schema.fieldNames.toSeq
         else fileEntries
-      val n = if (fileEntries2.isEmpty) {
-        // no column list, no SET: the original full-schema paths
-        if (t.partitionBy.isDefined) {
-          // partitioned parent: build the frame, route by bounds; the
-          // IGNORE/REPLACE duplicate-key semantics apply PER CHILD —
-          // exactly right, since a key lives in one partition
-          val df =
-            if (escAware)
-              graft.sources.BulkIO.mySqlTextFrame(engine.spark, t.schema,
-                path, opts)
-            else graft.sources.BulkIO.loadCsv(engine.spark, path, t.schema, opts)
-          mode match {
-            case graft.sources.BulkIO.Ignore =>
-              routeFrame(engine, name, t, df.localCheckpoint(true),
-                _.insertIgnoreRows(_))
-            case graft.sources.BulkIO.Replace =>
-              routeFrame(engine, name, t, df.localCheckpoint(true),
-                _.replaceRows(_))
-            case _ => routeFrameSinglePass(engine, name, t, df)
-          }
-        } else if (escAware)
-          graft.sources.BulkIO.loadMySqlTextInto(t, path, opts, mode)
-        else graft.sources.BulkIO.loadCsvInto(t, path, opts, mode)
-      } else {
-        val (df0, providedCols) = loadDataColFrame(engine, t, path, opts,
-          escAware, fileEntries2, setPairsRaw)
-        // the omitted-auto + single-unique shape arbitrates on the
-        // unique index, same as the INSERT-statement merge family
-        val key =
-          if (mode == graft.sources.BulkIO.Append) Nil
-          else impliedUniqueArbiter(t, "LOAD DATA " +
-            (if (mode == graft.sources.BulkIO.Replace) "REPLACE" else "IGNORE"),
-            providedCols)
-        if (t.partitionBy.isDefined) mode match {
-          case graft.sources.BulkIO.Ignore =>
-            routeFrame(engine, name, t, df0, _.insertIgnoreRows(_, key))
-          case graft.sources.BulkIO.Replace =>
-            routeFrame(engine, name, t, df0, _.replaceRows(_, key))
-          case _ => routeFrame(engine, name, t, df0, _.insert(_))
-        } else mode match {
-          case graft.sources.BulkIO.Ignore => t.insertIgnoreRows(df0, key)
-          case graft.sources.BulkIO.Replace => t.replaceRows(df0, key)
-          case _ => t.insert(df0)
-        }
+      // the columns the statement supplies (null: every column); the
+      // omitted-auto + single-unique shape arbitrates on the unique
+      // index, same as the INSERT-statement merge family
+      val provided =
+        if (fileEntries2.isEmpty) null
+        else (fileEntries2.filterNot(_.startsWith("@")) ++
+          setPairsRaw.map(_._1)).mkString(",")
+      def key(mode: String) =
+        impliedUniqueArbiter(t, s"LOAD DATA $mode", provided)
+      val action = Option(dupMode).map(_.toUpperCase) match {
+        case Some("IGNORE") => Ignore(key("IGNORE"))
+        case Some("REPLACE") => Replace(key("REPLACE"))
+        case _ => Append
       }
-      Result(None, n)
+      def source: DataFrame =
+        if (fileEntries2.nonEmpty)
+          loadDataColFrame(engine, t, path, opts, escAware, fileEntries2,
+            setPairsRaw)
+        // no column list, no SET: the file holds every column
+        else if (escAware)
+          graft.sources.BulkIO.mySqlTextFrame(engine.spark, t.schema, path, opts)
+        else graft.sources.BulkIO.loadCsv(engine.spark, path, t.schema, opts)
+      writeRows(engine, name, t, source, action, None)
     case Prepare(name, text) =>
       engine.prepare(name, text.replace("''", "'")); ddl
     case ExecuteStmt(name, usingList) =>
@@ -3573,12 +3343,10 @@ object SqlRouter {
     * NULL), stored generated columns recompute, and an omitted
     * AUTO_INCREMENT column gets distributed id assignment — the same
     * semantics the column-list INSERT path implements. Returns the
-    * schema-complete frame plus the provided-column list (the implied
-    * unique-arbiter input). */
+    * schema-complete frame. */
   private def loadDataColFrame(engine: Engine, t: graft.storage.GraftTable,
       path: String, opts: graft.sources.BulkIO.CsvOptions, escAware: Boolean,
-      entries: Seq[String], setPairsRaw: Seq[(String, String)])
-      : (DataFrame, String) = {
+      entries: Seq[String], setPairsRaw: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val m = t.manifest
     def uvName(e: String) = "__uv_" + e.drop(1)
@@ -3629,7 +3397,7 @@ object SqlRouter {
           setPairs.contains(c))
         .map(g => expr(g).cast(m.schema(c).dataType).as(c))
         .getOrElse(col(c))): _*)
-    val out = (autoCol, autoOmitted) match {
+    (autoCol, autoOmitted) match {
       case (Some(c), true) =>
         val baseId = m.autoInc
         val (withIds, total) = t.assignAutoIncIds(filled, c)
@@ -3638,7 +3406,6 @@ object SqlRouter {
         withIds.select(m.schema.fieldNames.map(col): _*)
       case _ => filled.localCheckpoint(true)
     }
-    (out, (providedDirect ++ setPairs.keys).distinct.mkString(","))
   }
 
   /** MySQL LOAD DATA tail (`loaddata.go:115-227` surface): FIELDS
@@ -3854,18 +3621,6 @@ object SqlRouter {
         .mkString("(", ", ", ")")).mkString("VALUES ", ", ", ""))
   }
 
-  /** Shared attach bookkeeping for CREATE..PARTITION OF and ATTACH
-    * PARTITION: the default-sibling probe (PG: attaching bounds the
-    * DEFAULT partition already holds rows for is refused — those rows
-    * would otherwise duplicate keys with future routed inserts and
-    * stay hidden in the default), the parent's `partchild.*` prop,
-    * the child's `partof` reverse pointer, and — for non-HASH,
-    * non-DEFAULT bounds — the bound recorded as a child CHECK, so
-    * DIRECT child DML that violates the partition constraint fails
-    * loudly (PG semantics) instead of writing rows the parent's
-    * bounds-filtered read would silently hide. HASH children get no
-    * CHECK and no read filter: a restored pg_dump placed their rows
-    * by PG's hash, not this engine's. */
   /** PG: attaching bounds the DEFAULT partition already holds rows
     * for is refused — those rows would duplicate keys with future
     * routed inserts and stay hidden in the default. Runs BEFORE any
@@ -3884,6 +3639,15 @@ object SqlRouter {
         }
   }
 
+  /** Shared attach bookkeeping for CREATE..PARTITION OF and ATTACH
+    * PARTITION: the parent's `partchild.*` prop, the child's `partof`
+    * reverse pointer, and — for non-HASH, non-DEFAULT bounds — the
+    * bound recorded as a child CHECK, so DIRECT child DML that
+    * violates the partition constraint fails loudly (PG semantics)
+    * instead of writing rows the parent's bounds-filtered read would
+    * silently hide. HASH children get no CHECK and no read filter: a
+    * restored pg_dump placed their rows by PG's hash, not this
+    * engine's. */
   private def recordAttachment(engine: Engine, parentName: String,
       parent: graft.storage.GraftTable, spec: Partitioning.Spec,
       childName: String, bounds: String): Unit = {
@@ -3919,12 +3683,6 @@ object SqlRouter {
     db(a) == db(b)
   }
 
-  /** Qualify a recorded bare child name against the parent's database
-    * spelling, so fan-out works when the parent was referenced
-    * db-qualified. */
-  /** Apply a maintenance op to every LEAF under `name` (or to the
-    * table itself when it is not partitioned) — OPTIMIZE/VACUUM/ANALYZE
-    * fan out like PG's, since a parent owns no files. */
   /** PG semantics: column-level ALTERs (ADD/DROP/RENAME/MODIFY COLUMN,
     * SET/DROP DEFAULT, ADD CHECK) on a partitioned parent recurse to
     * every attached child — partitions share the parent's column set,
@@ -3968,55 +3726,121 @@ object SqlRouter {
       .replaceFirstIn(stmt,
         "$1" + java.util.regex.Matcher.quoteReplacement(child))
 
+  /** Apply a maintenance op to every LEAF under `name` (or to the
+    * table itself when it is not partitioned) — OPTIMIZE fans out like
+    * PG's, since a parent owns no files. Leaves are independent tables,
+    * so the op overlaps through [[Engine.fanOut]]. */
   private def forEachLeaf(engine: Engine, name: String)(
       f: graft.storage.GraftTable => Unit): Unit = {
-    // leaves of a partition tree are independent tables — maintenance
-    // over them (OPTIMIZE) overlaps in autocommit, exactly like the
-    // DML fan-outs (§2.6); in a transaction the staged seam serializes
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[graft.storage.GraftTable]
-    def walk(n: String): Unit = {
+    def leaves(n: String): Seq[graft.storage.GraftTable] = {
       val t = engine.table(n)
-      if (t.partitionBy.isDefined)
-        t.partitionChildren.foreach(c => walk(childRef(n, c._1)))
-      else leaves += t
+      if (t.partitionBy.isEmpty) Seq(t)
+      else t.partitionChildren.flatMap(c => leaves(childRef(n, c._1)))
     }
-    walk(name)
-    if (leaves.size <= 1 || engine.inTransaction) { leaves.foreach(f); return }
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(leaves.size, 8))
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      import scala.concurrent.{Await, Future}
-      leaves.map(t => Future(f(t))(ec))
-        .foreach(Await.result(_, scala.concurrent.duration.Duration(30, "min")))
-    } finally pool.shutdown()
+    engine.fanOut(leaves(name), 8,
+      (l: graft.storage.GraftTable) => s"maintenance of ${l.path}")(f)
   }
 
-  /** Parent UPDATE/DELETE fan-out over partition children. Children
-    * are INDEPENDENT tables (disjoint dirs/manifests/key spaces), so
-    * in autocommit the per-child statements run CONCURRENTLY — the
-    * same §2.6 overlap routeFrame's child writes already use; results
-    * keep the children's declaration order (RETURNING union order is
-    * unchanged). Inside an explicit transaction the staged io seam
-    * serializes, exactly like routeFrame. */
-  private def fanChildren(engine: Engine,
-      kids: Seq[(String, String)])(body: String => Result): Seq[Result] = {
-    if (kids.size <= 1 || engine.inTransaction)
-      return kids.map { case (c, _) => body(c) }
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(kids.size, 8))
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      import scala.concurrent.{Await, Future}
-      kids.map { case (c, _) => Future(body(c))(ec) }
-        .map(Await.result(_, scala.concurrent.duration.Duration(30, "min")))
-    } finally pool.shutdown()
-  }
+  /** Parent UPDATE/DELETE: the same statement (`stmtFor` gets the
+    * child's name) runs on every partition child. Children are
+    * INDEPENDENT tables (disjoint dirs/manifests/key spaces), so they
+    * overlap through [[Engine.fanOut]]; each answers its own RETURNING
+    * images, unioned in declaration order. */
+  private def fanToChildren(engine: Engine, name: String,
+      t: graft.storage.GraftTable)(stmtFor: String => String): Result =
+    unionResults(engine.fanOut(t.partitionChildren.map(_._1), 8,
+        (c: String) => s"statement on partition child '$c' of $name") { c =>
+      val s2 = stmtFor(childRef(name, c))
+      executeRouted(engine, s2, s2)
+    })
 
+  /** Per-child results of one parent write, in child declaration
+    * order: affected rows add up, RETURNING frames union. */
+  private def unionResults(rs: Seq[Result]): Result =
+    Result(rs.flatMap(_.df).reduceOption(_ union _), rs.map(_.affected).sum)
+
+  /** Qualify a recorded bare child name against the parent's database
+    * spelling, so fan-out works when the parent was referenced
+    * db-qualified. */
   private def childRef(parentName: String, child: String): String =
     if (parentName.contains('.'))
       parentName.substring(0, parentName.lastIndexOf('.') + 1) + child
     else child
+
+  /** What a write does with an incoming row whose key is already
+    * stored. `key` is the conflict arbiter (empty: the primary key). */
+  private sealed trait ConflictAction
+  /** Plain append: INSERT-style LOAD DATA and COPY FROM. */
+  private case object Append extends ConflictAction
+  /** The stored row wins: INSERT IGNORE, ON CONFLICT DO NOTHING, LOAD
+    * DATA IGNORE. */
+  private final case class Ignore(key: Seq[String]) extends ConflictAction
+  /** The incoming row wins: REPLACE, LOAD DATA REPLACE. */
+  private final case class Replace(key: Seq[String]) extends ConflictAction
+  /** The stored row takes `sets` (column -> SQL over the stored row and
+    * the incoming `__new_<c>`): ON CONFLICT DO UPDATE and ON DUPLICATE
+    * KEY UPDATE. `guard` is DO UPDATE's WHERE, already folded into
+    * `sets`; RETURNING reads it to emit only the updated rows. */
+  private final case class Upsert(sets: Map[String, String],
+      guard: Option[String], key: Seq[String]) extends ConflictAction
+
+  /** The one write path of the conflict-action statements (REPLACE,
+    * INSERT IGNORE, ON CONFLICT, ON DUPLICATE KEY UPDATE, LOAD DATA,
+    * COPY FROM). An unpartitioned table is written directly. A
+    * partitioned parent sends `Append` through the single-pass ingest
+    * and every other action through [[routeFrame]], applied PER LEAF —
+    * exact, because MySQL and PG both require every unique key of a
+    * partitioned table to include the partition key, so a conflicting
+    * row can only live in the leaf the incoming row routes to.
+    * RETURNING (IGNORE and upsert only) unions the leaves' images.
+    *
+    * MySQL leaves LAST_INSERT_ID() untouched when an IGNORE / upsert
+    * batch inserts nothing, but the source assigns it at id-assignment
+    * time — so the prior value is read BEFORE `src` is built and
+    * restored when no leaf inserted. */
+  private def writeRows(engine: Engine, name: String,
+      t: graft.storage.GraftTable, src: => DataFrame, action: ConflictAction,
+      returning: Option[String]): Result = {
+    val priorLid = action match {
+      case Ignore(_) | Upsert(_, _, _) => Some(engine.getVar("last_insert_id"))
+      case _ =>
+        require(returning.isEmpty, s"RETURNING is not supported for $action")
+        None
+    }
+    val df = src
+    def images(img: DataFrame): Option[DataFrame] = returning.map(rx =>
+      img.selectExpr(SqlText.splitTop(rx).map(_.trim): _*))
+    // one leaf's (result, rows inserted)
+    def leaf(lt: graft.storage.GraftTable, slice: DataFrame): (Result, Long) =
+      action match {
+        case Append =>
+          val n = lt.insert(slice); (Result(None, n), n)
+        case Replace(key) =>
+          val n = lt.replaceRows(slice, key); (Result(None, n), n)
+        case Ignore(key) if returning.isEmpty =>
+          val n = lt.insertIgnoreRows(slice, key); (Result(None, n), n)
+        case Ignore(key) =>
+          val (img, n) = ignoreWithImages(lt, slice, key)
+          (Result(images(img), n), n)
+        case Upsert(sets, _, key) if returning.isEmpty =>
+          val (aff, ins) = lt.upsertOnDuplicateCounts(slice, sets, key)
+          (Result(None, aff), ins)
+        case Upsert(sets, guard, key) =>
+          val (img, aff, ins) = upsertWithImages(lt, slice, sets, guard, key)
+          (Result(images(img), aff), ins)
+      }
+    val leaves =
+      if (t.partitionBy.isEmpty) Seq(leaf(t, df))
+      else if (action == Append) {
+        val n = routeFrameSinglePass(engine, name, t, df)
+        Seq((Result(None, n), n))
+      } else routeFrame(engine, name, t, df, leaf)
+    if (leaves.map(_._2).sum == 0)
+      priorLid.foreach(p => engine.setVar("last_insert_id", p.getOrElse("0")))
+    val r = unionResults(leaves.map(_._1))
+    // no leaf hit: RETURNING still answers an empty frame
+    r.copy(df = r.df.orElse(images(df.limit(0))))
+  }
 
   /** INSERT through a partitioned PARENT routes rows to children by
     * bounds (the behavior PG implements in its executor —
@@ -4073,24 +3897,6 @@ object SqlRouter {
       src.selectExpr(SqlText.splitTop(rx).map(_.trim): _*)), total)
   }
 
-  /** Freeze a merge-family source only when it MUST be frozen: a plan
-    * with any non-deterministic expression (rand/uuid/now-family)
-    * could change values between the routing count, the per-child
-    * slices, and a RETURNING re-select, so it pins via an eager
-    * localCheckpoint. A fully deterministic plan — the overwhelmingly
-    * common shape: parquet/table scans + pure expressions, with file
-    * lists already pinned by the manifest at frame build — re-reads
-    * identically and skips the checkpoint, saving one materialization
-    * job per statement (the micro-batch statement floor) AND, at
-    * 100 TB, the block-store copy of the whole source: each child then
-    * reads a column-pruned, filter-pushed scan instead. */
-  private def frozenSource(engine: Engine, t: graft.storage.GraftTable,
-      colList: String, rest: String): DataFrame = {
-    val df = sourceDfFor(engine, t, colList, rest)
-    if (planIsStable(df.queryExecution.analyzed)) df
-    else df.localCheckpoint(true)
-  }
-
   /** True when every evaluation of the plan yields the same rows.
     * Three hazards beyond `Expression.deterministic`: the now()-family
     * reports deterministic=true but is STAMPED PER QueryExecution
@@ -4110,15 +3916,6 @@ object SqlRouter {
     plan.find(p => p.expressions.exists(e => !exprStable(e))).isEmpty
   }
 
-  /** Merge-family source (REPLACE / INSERT IGNORE / ODKU / ON
-    * CONFLICT): an OMITTED AUTO_INCREMENT column gets ids ASSIGNED,
-    * exactly like the plain-INSERT path — MySQL assigns (and burns,
-    * under InnoDB defaults, even for rows that end up updating) auto
-    * ids for these statements too. Before round 14 an omitted id rode
-    * in as NULL from the default-fill and was silently STORED; the
-    * write-funnel NOT NULL guard now makes that loud, and this helper
-    * makes it correct. Explicit ids (column listed, or no column list
-    * at all) pass through [[frozenSource]] untouched. */
   /** Merge-family small-source fold (r16 verdict #6 — the statement
     * job floor): a SELECT-sourced upsert batch that turns out SMALL
     * pays the whole distributed fleet — cache + per-partition id
@@ -4154,6 +3951,13 @@ object SqlRouter {
     else base
   }
 
+  /** Merge-family source (REPLACE / INSERT IGNORE / ODKU / ON
+    * CONFLICT): an OMITTED AUTO_INCREMENT column gets ids ASSIGNED,
+    * exactly like the plain-INSERT path — MySQL assigns (and burns,
+    * under InnoDB defaults, even for rows that end up updating) auto
+    * ids for these statements too (the write-funnel NOT NULL guard
+    * refuses an omitted id left NULL by the default-fill). Explicit ids (column listed, or no column list
+    * at all) pass through [[foldSmallSource]] untouched. */
   private def mergeSource(engine: Engine, t: graft.storage.GraftTable,
       colList: String, rest: String): DataFrame = {
     val m = t.manifest
@@ -4174,25 +3978,23 @@ object SqlRouter {
         if (total > 0) engine.setVar("last_insert_id", base.toString)
         withIds
       case None =>
-        // the fold subsumes frozenSource's checkpoint discipline:
+        // the fold carries the evaluate-once discipline:
         // unstable plans checkpoint inside it, stable big ones pass
         // through unchanged, small ones become LocalRelations
         foldSmallSource(engine, sourceDfFor(engine, t, colList, rest))
     }
   }
 
-  /** Route a FROZEN (checkpointed or deterministic — [[frozenSource]])
-    * frame into a partitioned
-    * parent's children by bounds — the shared core of routed INSERT,
-    * COPY FROM, and LOAD DATA on a parent. `write` is the per-child
-    * commit (plain insert, or LOAD's IGNORE/REPLACE duplicate-key
-    * semantics applied PER CHILD, which is exactly PG/MySQL behavior
-    * since a key lives in one partition). See [[routedInsert]]'s
-    * scaladoc for the scale shape (one tag aggregate, only non-empty
-    * children commit, unroutable rows loud first). */
-  private def routeFrame(engine: Engine, parentName: String,
+  /** Route a FROZEN (checkpointed or deterministic) frame into a
+    * partitioned parent's children by bounds — [[writeRows]]' path for
+    * the read-modify-write actions. `write` is the per-leaf commit;
+    * the per-leaf results come back in child declaration order. See
+    * [[routedInsert]]'s scaladoc for the scale shape (one tag
+    * aggregate, only non-empty children commit, unroutable rows loud
+    * first). */
+  private def routeFrame[R](engine: Engine, parentName: String,
       t: graft.storage.GraftTable, src: DataFrame,
-      write: (graft.storage.GraftTable, DataFrame) => Long): Long = {
+      write: (graft.storage.GraftTable, DataFrame) => R): Seq[R] = {
     val m = t.manifest
     val spec = Partitioning.parse(m.props("partition.by"))
     val kids = t.partitionChildren
@@ -4257,56 +4059,27 @@ object SqlRouter {
     }
     val hit = preds.collect {
       case (c, _) if counts.get(Some(c)).exists(_ > 0) => c }
-    def writeChild(c: String): Long = {
+    def writeChild(c: String): Seq[R] = {
       val ref = childRef(parentName, c)
       val childT = engine.table(ref)
       val slice = src.filter(tag === lit(c))
       // a SUBPARTITIONED child routes its slice one level further
       if (childT.partitionBy.isDefined)
         routeFrame(engine, ref, childT, slice, write)
-      else write(childT, slice)
+      else Seq(write(childT, slice))
     }
     // children are INDEPENDENT tables (disjoint dirs, disjoint
     // manifests, disjoint key spaces — every unique key on a
     // partitioned table includes the partition key), so autocommit
-    // writes run CONCURRENTLY — each slice filters the one
-    // checkpointed source, and wall-clock drops from sum(children) to
-    // ~max(children), the difference between a routed 100 TB bulk
-    // load taking N sequential scans' time and one. This includes the
-    // MERGE family (REPLACE / INSERT IGNORE / ODKU / ON CONFLICT):
-    // r12 serialized those as a determinism guess at the q111 driver
-    // gate, two red rounds proved serialization was not the cause,
-    // and the results are order-independent by construction (disjoint
-    // children; RETURNING frames assemble keyed by child path, not by
-    // completion order — the 20-iteration bit-exact loop spec pins
-    // it). Inside an explicit transaction the staged io seam
-    // serializes (same loop, same per-child order) — staging is not a
-    // proven concurrent structure and atomicity matters more than
-    // latency there.
-    val total =
-      if (hit.size > 1 && !engine.inTransaction) {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(hit.size, 8))
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          import scala.concurrent.{Await, Future}
-          val fs = hit.map(c => c -> Future(writeChild(c))(ec))
-          // generous NAMED bound (r14 verdict #5): a wedged child write
-          // under Duration.Inf hung the statement forever with zero
-          // diagnostic; 30 min is far above any healthy child write at
-          // target scale while still surfacing WHICH child hung
-          fs.map { case (c, f) =>
-            try Await.result(f,
-              scala.concurrent.duration.Duration(30, "min"))
-            catch {
-              case _: java.util.concurrent.TimeoutException =>
-                throw new IllegalStateException(
-                  s"routed write into partition child '$c' of " +
-                    s"$parentName did not finish within 30 minutes")
-            }
-          }.sum
-        } finally pool.shutdown()
-      } else hit.map(writeChild).sum
+    // writes run CONCURRENTLY — each slice filters the one frozen
+    // source, and wall-clock drops from sum(children) to
+    // ~max(children). This includes the MERGE family (REPLACE /
+    // INSERT IGNORE / ODKU / ON CONFLICT): the results are
+    // order-independent by construction (disjoint children; results
+    // come back in declaration order, not completion order — the
+    // 20-iteration bit-exact loop spec pins it).
+    val results = engine.fanOut(hit, 8, (c: String) =>
+      s"routed write into partition child '$c' of $parentName")(writeChild)
     // A23 through the parent: EXPLICIT ids (INSERT, REPLACE, IGNORE,
     // ODKU, COPY, LOAD — every routed path) advance the PARENT's
     // counter, which owns id assignment; the children's own withFiles
@@ -4315,7 +4088,7 @@ object SqlRouter {
     // funnel; already-advanced counters (the auto-assign path) see an
     // equal value and skip the commit.
     explicitMax.foreach(mx => t.advanceAutoInc(mx + 1L))
-    total
+    results.flatten
   }
 
   /** SINGLE-PASS routed ingest for PLAIN-INSERT semantics (round-12
@@ -4776,6 +4549,22 @@ object SqlRouter {
         col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
       .dropDuplicates(m.pkCols)
     stageMergeImages(t, img, action = 0, returning)
+  }
+
+  /** INSERT IGNORE + the images RETURNING projects (PG `ON CONFLICT
+    * DO NOTHING RETURNING`): only the rows actually INSERTED. The
+    * pre-insert key set is frozen (immutable files); expression
+    * arbiters compute on both frames via the table's helper, and the
+    * batch condenses with insertIgnoreRows' own first-occurrence rule,
+    * so the image rows ARE the stored rows. */
+  private def ignoreWithImages(t: graft.storage.GraftTable, src: DataFrame,
+      key: Seq[String]): (DataFrame, Long) = {
+    val (keyCols, addArb) =
+      t.withArbiterKey(if (key.nonEmpty) key else t.manifest.pkCols)
+    val preKeys = addArb(t.read()).select(keyCols.map(col): _*)
+    val n = t.insertIgnoreRows(src, key)
+    (t.firstPerKey(addArb(src), keyCols)
+      .join(preKeys, keyCols, "left_anti"), n)
   }
 
   /** Upsert + the post-images RETURNING projects, shared by PG

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
-import graft.storage.GraftTable
 
 /** Bulk + columnar IO (reference A11–A17):
   * MySQL `LOAD DATA [LOCAL] INFILE` option surface
@@ -89,24 +88,6 @@ object BulkIO {
     }
   }
 
-  sealed trait DupMode
-  case object Append extends DupMode
-  /** `LOAD DATA IGNORE` / `INSERT OR IGNORE`: existing PKs win. */
-  case object Ignore extends DupMode
-  /** `LOAD DATA REPLACE` / `INSERT OR REPLACE`: incoming rows win. */
-  case object Replace extends DupMode
-
-  /** LOAD INTO a managed table with MySQL duplicate-key semantics. */
-  def loadCsvInto(table: GraftTable, path: String, opts: CsvOptions,
-      mode: DupMode = Append): Long = {
-    val df = loadCsv(table.spark, path, table.schema, opts)
-    mode match {
-      case Append => table.insert(df)
-      case Ignore => table.insertIgnoreRows(df)
-      case Replace => table.replaceRows(df)
-    }
-  }
-
   /** COPY ... FROM in PostgreSQL's default TEXT format — the format
     * pg_dump emits when not asked for csv. NOT a csv dialect: fields
     * split on RAW delimiter characters only (tabs/newlines/backslashes
@@ -119,13 +100,6 @@ object BulkIO {
     * supported: dump with the default). Strict: a row with the wrong
     * field count ERRORS (the COPY contract). Reference surface:
     * `pgserver/dataloader.go:19-289`. */
-  def loadPgTextInto(table: GraftTable, path: String, sep: String = "\t",
-      nullStr: String = "\\N"): Long =
-    table.insert(pgTextFrame(table.spark, table.schema, path, sep, nullStr))
-
-  /** [[loadPgTextInto]]'s frame builder — shared with the router's
-    * partitioned-parent COPY routing, which needs the frame BEFORE any
-    * table write. */
   def pgTextFrame(spark: SparkSession, schema: StructType, path: String,
       sep: String = "\t", nullStr: String = "\\N"): DataFrame = {
     require(sep.length == 1, s"single-char delimiter: '$sep'")
@@ -166,7 +140,7 @@ object BulkIO {
       .select(cols.toIndexedSeq: _*)
   }
 
-  /** COPY ... TO in PG TEXT format — [[loadPgTextInto]]'s inverse:
+  /** COPY ... TO in PG TEXT format — [[pgTextFrame]]'s inverse:
     * every field escapes the delimiter/record chars (codegen
     * `pg_escape`), BINARY columns emit the `\x` hex form, NULL emits
     * `nullStr`. Written as one text line per row; `singleStream`
@@ -294,20 +268,8 @@ object BulkIO {
     * decode per the MySQL input rules. Each FILE parses as one unit
     * (MySQL reads the file sequentially too) via wholetext — a glob of
     * files still parallelizes per file; fields then decode in codegen.
-    * Strict arity like the PG TEXT path. */
-  def loadMySqlTextInto(table: GraftTable, path: String,
-      opts: CsvOptions = CsvOptions(), mode: DupMode = Append): Long = {
-    val df = mySqlTextFrame(table.spark, table.schema, path, opts)
-    mode match {
-      case Append => table.insert(df)
-      case Ignore => table.insertIgnoreRows(df)
-      case Replace => table.replaceRows(df)
-    }
-  }
-
-  /** [[loadMySqlTextInto]]'s frame builder (shared with the router's
-    * partitioned-parent LOAD DATA routing). Falls back to the
-    * streaming CSV frame for oversized files, like the Into form. */
+    * Strict arity like the PG TEXT path. Falls back to the streaming
+    * CSV frame for oversized files. */
   def mySqlTextFrame(spark: SparkSession, schema: StructType,
       path: String, opts: CsvOptions = CsvOptions()): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -408,18 +370,6 @@ object BulkIO {
     df.write.mode("overwrite").parquet(path)
   def exportJson(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  /** LOAD newline-delimited JSON into a managed table (declared schema,
-    * same duplicate-key modes as CSV). */
-  def loadJsonInto(table: GraftTable, path: String,
-      mode: DupMode = Append): Long = {
-    val df = table.spark.read.schema(table.schema).json(path)
-    mode match {
-      case Append => table.insert(df)
-      case Ignore => table.insertIgnoreRows(df)
-      case Replace => table.replaceRows(df)
-    }
-  }
 
   /** A17: direct file querying (`SELECT ... FROM 'file.parquet'`). */
   def queryParquet(spark: SparkSession, path: String): DataFrame =

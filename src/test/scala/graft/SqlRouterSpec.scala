@@ -2830,6 +2830,69 @@ class SqlRouterSpec extends SparkSpec {
       === 151L)
   }
 
+  test("REPLACE ... SET routes like REPLACE ... VALUES (partitioned parent, omitted auto key)") {
+    val e = new Engine(spark, tmpDir("router_replace_set"))
+    exec(e, "CREATE TABLE rp (id BIGINT NOT NULL AUTO_INCREMENT, v STRING, " +
+      "PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE rp_lo PARTITION OF rp FOR VALUES FROM (1) TO (100)")
+    exec(e, "CREATE TABLE rp_hi PARTITION OF rp DEFAULT")
+    exec(e, "INSERT INTO rp VALUES (5, 'a'), (150, 'b')")
+    // through the parent: per-child REPLACE semantics
+    exec(e, "REPLACE INTO rp SET id = 150, v = 'b2'")
+    assert(exec(e, "SELECT v FROM rp_hi WHERE id = 150").df.get
+      .as[String].head() === "b2")
+    assert(exec(e, "SELECT count(*) FROM rp").df.get.as[Long].head() === 2L)
+    // omitted auto-increment key: a fresh id, like the VALUES form
+    exec(e, "REPLACE INTO rp SET v = 'c'")
+    assert(exec(e, "SELECT id FROM rp WHERE v = 'c'").df.get
+      .as[Long].head() === 151L)
+    // unpartitioned: the omitted auto key plus the single unique index
+    // arbitrate, exactly as REPLACE INTO u (em, n) VALUES would
+    exec(e, "CREATE TABLE u (id BIGINT NOT NULL AUTO_INCREMENT, em STRING, " +
+      "n INT, PRIMARY KEY (id), UNIQUE KEY uq_em (em))")
+    exec(e, "REPLACE INTO u SET em = 'a', n = 1")
+    exec(e, "REPLACE INTO u SET em = 'a', n = 2")
+    assert(exec(e, "SELECT id, em, n FROM u").df.get
+      .as[(Long, String, Int)].collect().toSeq === Seq((2L, "a", 2)))
+  }
+
+  test("partitioning: column-list LOAD DATA (append / IGNORE / REPLACE) routes and advances the parent counter") {
+    val e = new Engine(spark, tmpDir("router_part_loadcols"))
+    exec(e, "CREATE TABLE lp (id BIGINT NOT NULL AUTO_INCREMENT, v STRING, " +
+      "n INT DEFAULT 7, PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE lp_lo PARTITION OF lp FOR VALUES FROM (1) TO (100)")
+    exec(e, "CREATE TABLE lp_hi PARTITION OF lp DEFAULT")
+    def tsv(body: String) = {
+      val f = java.nio.file.Files.createTempFile("router_part_loadcols", ".tsv")
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      f
+    }
+    def rows() = exec(e, "SELECT id, v, n FROM lp ORDER BY id").df.get
+      .as[(Long, String, Int)].collect().toSeq
+    // append with explicit ids: both children, unlisted n takes DEFAULT
+    assert(exec(e, s"LOAD DATA INFILE '${tsv("5\ta\n150\tb\n")}' " +
+      "INTO TABLE lp (id, v)").affected === 2L)
+    assert(exec(e, "SELECT count(*) FROM lp_lo").df.get.as[Long].head() === 1L)
+    assert(exec(e, "SELECT count(*) FROM lp_hi").df.get.as[Long].head() === 1L)
+    // IGNORE: stored rows win per child, new ids land where they route
+    assert(exec(e, s"LOAD DATA INFILE '${tsv("5\tX\t0\n200\tc\t2\n")}' " +
+      "IGNORE INTO TABLE lp (id, v, n)").affected === 1L)
+    // REPLACE: incoming rows win per child
+    exec(e, s"LOAD DATA INFILE '${tsv("150\tb2\t3\n7\td\t4\n")}' " +
+      "REPLACE INTO TABLE lp (id, v, n)")
+    assert(rows() === Seq((5L, "a", 7), (7L, "d", 4), (150L, "b2", 3),
+      (200L, "c", 2)))
+    // every routed explicit id advanced the PARENT's counter
+    exec(e, "INSERT INTO lp (v) VALUES ('auto')")
+    assert(exec(e, "SELECT id FROM lp WHERE v = 'auto'").df.get
+      .as[Long].head() === 201L)
+    // omitted auto key: ids assign at the parent, then route
+    exec(e, s"LOAD DATA INFILE '${tsv("e\nf\n")}' IGNORE INTO TABLE lp (v)")
+    assert(exec(e, "SELECT id FROM lp WHERE v IN ('e', 'f') ORDER BY id")
+      .df.get.as[Long].collect().toSeq === Seq(202L, 203L))
+    assert(exec(e, "SELECT count(*) FROM lp_hi").df.get.as[Long].head() === 5L)
+  }
+
   test("PG identity ALWAYS: explicit ids refused; OVERRIDING SYSTEM/USER VALUE") {
     val e = new Engine(spark, tmpDir("router_identity_ovr"))
     exec(e, "CREATE TABLE idt (id BIGINT GENERATED ALWAYS AS IDENTITY, " +

@@ -41,7 +41,7 @@ class BulkIOSpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("load_ign"), xySchema, Seq("pk"))
     t.insert(Seq((1, "old")).toDF("pk", "c1"))
     val f = writeFile("in.csv", "1,new\n2,two\n")
-    loadCsvInto(t, f, CsvOptions(), Ignore)
+    t.insertIgnoreRows(loadCsv(spark, f, t.schema, CsvOptions()))
     assert(t.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "old"), (2, "two")))
   }
@@ -50,7 +50,7 @@ class BulkIOSpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpDir("load_rep"), xySchema, Seq("pk"))
     t.insert(Seq((1, "old")).toDF("pk", "c1"))
     val f = writeFile("in.csv", "1,new\n2,two\n")
-    loadCsvInto(t, f, CsvOptions(), Replace)
+    t.replaceRows(loadCsv(spark, f, t.schema, CsvOptions()))
     assert(t.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "new"), (2, "two")))
   }
@@ -61,7 +61,7 @@ class BulkIOSpec extends SparkSpec {
     // MySQL REPLACE processes the file in order: the final occurrence of
     // each key wins, and the table must end with one row per PK
     val f = writeFile("dup.csv", "1,first\n2,two\n1,second\n1,last\n")
-    loadCsvInto(t, f, CsvOptions(), Replace)
+    t.replaceRows(loadCsv(spark, f, t.schema, CsvOptions()))
     assert(t.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "last"), (2, "two")))
     assert(t.checkUnique().count() === 0)
@@ -91,7 +91,7 @@ class BulkIOSpec extends SparkSpec {
     t.insert(Seq((1, "old")).toDF("pk", "c1"))
     val f = writeFile("in.jsonl",
       """{"pk": 1, "c1": "new"}""" + "\n" + """{"pk": 2, "c1": "two"}""" + "\n")
-    loadJsonInto(t, f, Replace)
+    t.replaceRows(spark.read.schema(t.schema).json(f))
     assert(t.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "new"), (2, "two")))
   }
@@ -152,7 +152,7 @@ class BulkIOSpec extends SparkSpec {
       "3\tocta\\101l and hex\\x41!\t\\\\x00ff7f\t0\n" +
       "4\tback\\\\slash\t\\\\x\t1\n"
     val f = writeFile("pg.txt", body)
-    assert(BulkIO.loadPgTextInto(t, f) === 4L)
+    assert(t.insert(pgTextFrame(spark, t.schema, f)) === 4L)
     val got = t.read().orderBy("id").collect().map(r => (r.getInt(0),
       Option(r.getString(1)), Option(r.get(2)).map(_.asInstanceOf[Array[Byte]].toSeq),
       Option(r.get(3))))
@@ -167,7 +167,7 @@ class BulkIOSpec extends SparkSpec {
       StructField("id", IntegerType), StructField("v", StringType)))
     val t = GraftTable.create(spark, tmpDir("pgtext_bad"), schema, Seq("id"))
     val f = writeFile("bad.txt", "1\ta\n2\tb\textra\n")
-    intercept[Exception](BulkIO.loadPgTextInto(t, f))
+    intercept[Exception](t.insert(pgTextFrame(spark, t.schema, f)))
   }
 
   test("LINES TERMINATED BY: multi-char terminators, escaped first char stays data") {
@@ -180,7 +180,7 @@ class BulkIOSpec extends SparkSpec {
     val f = writeFile("crlf.txt", body)
     val opts = CsvOptions(sep = "\t", quote = "\u0000", escape = "\\",
       nullValue = "\\N", lineSep = "\r\n")
-    assert(BulkIO.loadMySqlTextInto(t, f, opts) === 3L)
+    assert(t.insert(mySqlTextFrame(spark, t.schema, f, opts)) === 3L)
     val got = t.read().orderBy("pk").as[(Int, String)].collect()
     assert(got(0) === ((1, "one")) && got(2) === ((3, "three")))
     assert(got(1)._2.startsWith("two") && got(1)._2.contains("still"),
@@ -190,8 +190,8 @@ class BulkIOSpec extends SparkSpec {
     // to \r\n — backend/loaddata.go:162-167; MySQL honors them)
     val t2 = GraftTable.create(spark, tmpDir("lines_xx"), xySchema, Seq("pk"))
     val f2 = writeFile("xx.txt", "1\taxx2\tbxx3\tcxx")
-    assert(BulkIO.loadMySqlTextInto(t2, f2,
-      opts.copy(lineSep = "xx")) === 3L)
+    assert(t2.insert(mySqlTextFrame(spark, t2.schema, f2,
+      opts.copy(lineSep = "xx"))) === 3L)
     assert(t2.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "a"), (2, "b"), (3, "c")))
   }
@@ -205,7 +205,7 @@ class BulkIOSpec extends SparkSpec {
     val f = writeFile("prefix.txt", body)
     val opts = CsvOptions(sep = "\t", quote = "\u0000", escape = "\\",
       nullValue = "\\N", lineStart = ">>")
-    assert(BulkIO.loadMySqlTextInto(t, f, opts) === 3L)
+    assert(t.insert(mySqlTextFrame(spark, t.schema, f, opts)) === 3L)
     assert(t.read().orderBy("pk").as[(Int, String)].collect()
       === Array((1, "one"), (2, "two"), (3, "three")))
   }

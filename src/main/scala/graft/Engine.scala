@@ -830,9 +830,12 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     * staged io seam is not a proven concurrent structure). After the
     * first failure no queued item starts; every started item finishes
     * before that failure is rethrown, so nothing commits after the
-    * caller sees the error. Each item gets a generous named bound: a
-    * wedged item surfaces as "<what> did not finish within 30
-    * minutes" instead of hanging the statement. */
+    * caller sees the error — and one SHOW WARNINGS Note names, by
+    * `what`, the items that finished (partition children that
+    * committed before a sibling failed stay committed; MySQL's 1196
+    * is the same "could not be rolled back" report). Each item gets a
+    * generous named bound: a wedged item surfaces as "<what> did not
+    * finish within 30 minutes" instead of hanging the statement. */
   private[graft] def fanOut[T, R](items: Seq[T], maxThreads: Int,
       what: T => String)(body: T => R): Seq[R] = {
     if (items.size <= 1 || inTransaction) return items.map(body)
@@ -859,7 +862,13 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
             throw e
         }
       }
-      Option(failure.get).foreach(e => throw e)
+      Option(failure.get).foreach { e =>
+        val done = items.zip(results).collect { case (it, Some(_)) => what(it) }
+        addWarning("Note", 1196, s"${done.size} of ${items.size} items " +
+          "finished before the failure and keep their effects" +
+          (if (done.isEmpty) "" else done.mkString(": ", "; ", "")))
+        throw e
+      }
       results.flatten
     } finally pool.shutdown()
   }

@@ -106,9 +106,7 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     * time, and may be omitted from `df`. */
   def insert(df: DataFrame): Long = {
     val m = manifest
-    val full = withGenerated(m, df)
-    val (files, n, st) = writeFilesChecked(m,
-      full.select(m.schema.fieldNames.map(col): _*))
+    val (files, n, st) = writeFilesChecked(m, rowImage(m, df, Map.empty))
     // MySQL counter semantics (A23) — explicit ids advance the
     // auto-inc counter past max(id) — ride in Manifest.withFiles, the
     // single funnel EVERY data commit passes through; no second
@@ -168,8 +166,9 @@ final class GraftTable(val spark: SparkSession, val path: Path,
   }
 
   /** (Re)compute stored generated columns (`generated.<col>` props)
-    * from the incoming row values — shared by insert, auto-inc insert,
-    * and update (which recomputes from the post-SET image). */
+    * from the incoming row values, typed as their columns — shared by
+    * [[rowImage]] and update (which recomputes from the post-SET
+    * image). */
   private def withGenerated(m: Manifest, df: DataFrame): DataFrame = {
     val gen = m.props.collect {
       case (k, v) if k.startsWith("generated.") => k.stripPrefix("generated.") -> v
@@ -177,9 +176,25 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     m.schema.fieldNames.foldLeft(df) { (acc, f) =>
       if (gen.contains(f)) {
         val without = if (acc.columns.contains(f)) acc.drop(f) else acc
-        without.withColumn(f, expr(gen(f)))
+        without.withColumn(f, expr(gen(f)).cast(m.schema(f).dataType))
       } else acc
     }
+  }
+
+  /** The row image this table stores for `rows`, and so the image
+    * RETURNING answers: each `sets` entry (column -> new value, all
+    * evaluated over the incoming row) replaces its column, cast to the
+    * column type; stored generated columns recompute from the result;
+    * columns come out in schema order. [[insert]] writes exactly this
+    * image. */
+  def rowImage(rows: DataFrame, sets: Map[String, Column] = Map.empty): DataFrame =
+    rowImage(manifest, rows, sets)
+
+  private def rowImage(m: Manifest, rows: DataFrame,
+      sets: Map[String, Column]): DataFrame = {
+    val setRows = if (sets.isEmpty) rows else rows.select(m.schema.fields.map { f =>
+      sets.get(f.name).fold(col(f.name))(_.cast(f.dataType)).as(f.name) }: _*)
+    withGenerated(m, setRows).select(m.schema.fieldNames.map(col): _*)
   }
 
   /** CHECK constraints (A22): enforced on every DML write path (insert,
@@ -240,9 +255,8 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     // DISTRIBUTED sources (INSERT ... SELECT over a big scan).
     indexedLocal(df) match {
       case Some((local, total)) =>
-        val withId = withGenerated(m,
-          local.withColumn(idCol, lit(base) + col("__idx")))
-          .select(m.schema.fieldNames.map(col): _*)
+        val withId = rowImage(m,
+          local.withColumn(idCol, lit(base) + col("__idx")), Map.empty)
         val (files, n, st) = writeFilesChecked(m, withId)
         io.commit(path,
           m.withFiles(m.files ++ files, st).copy(autoInc = base + total))
@@ -255,9 +269,8 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     mid.cache()
     try {
       val (offDf, total) = idOffsets(mid)
-      val withId = withGenerated(m, mid.join(offDf, "__pid")
-        .withColumn(idCol, lit(base) + col("__off") + col("__pos")))
-        .select(m.schema.fieldNames.map(col): _*)
+      val withId = rowImage(m, mid.join(offDf, "__pid")
+        .withColumn(idCol, lit(base) + col("__off") + col("__pos")), Map.empty)
       // same DML contract as insert(): constraints and generated
       // columns apply to auto-inc appends too (checks ride the write)
       val (files, n, st) = writeFilesChecked(m, withId)
@@ -380,51 +393,43 @@ final class GraftTable(val spark: SparkSession, val path: Path,
   def delete(cond: Column): Long = {
     val m = manifest
     if (m.files.isEmpty) return 0L
-    // size-switched pruning (merge's RewriteAllMaxBytes idea, r17):
-    // deciding WHICH files hold matches costs a full scan + collect —
-    // a whole action — and only pays off by shrinking the rewrite.
-    // Under the threshold, rewrite everything in the single write job
-    // (halves the actions of every DELETE in a small-table DML chain);
-    // at warehouse scale the pruned path below is the only option.
-    if (tableBytesAtMost(m, RewriteAllMaxBytes)) {
-      val all = readManifest(m)
-      val (observed, fetch) = observeOnce(all,
-        Seq(count(lit(1)).as("__all")))
-      val survivors = observed.filter(!coalesce(cond, lit(false)))
-      val (files, kept, st) = writeFiles(survivors)
-      val before: Long = fetch()
-        .flatMap(_.get("__all").map(_.asInstanceOf[Number].longValue()))
-        .getOrElse(all.count()) // event lost: pay the explicit count
-      if (before == kept) {
-        // nothing matched: a no-op DELETE must stay a no-op
-        // commit-wise (no version bump) — drop the staged rewrite
-        cleanupStaged(files)
-        return 0L
-      }
-      io.commit(path, m.withFiles(files, st))
-      return before - kept
-    }
-    val tagged = readManifest(m).withColumn("__file", input_file_name())
-    val affected = tagged.filter(cond).select(col("__file")).distinct()
-      .collect().map(r => fileKey(r.getString(0))).toSet
+    val affected = affectedFiles(m, cond)
     if (affected.isEmpty) return 0L
-    val affectedSeq = normalize(m.files).zip(m.files)
-      .filter { case (n, _) => affected.contains(n) }.map(_._2)
-    val affectedDf = readFiles(m, affectedSeq)
+    val src = readFiles(m, affected)
     // the pre-filter row count rides the rewrite action (observe node
     // BELOW the survivor filter counts every streamed row) — round 14:
     // it was a separate count job per DELETE statement
-    val (observed, fetch) = observeOnce(affectedDf,
-      Seq(count(lit(1)).as("__all")))
-    val survivors = observed.filter(!coalesce(cond, lit(false)))
-    val (files, kept, st) = writeFiles(survivors)
+    val (observed, fetch) = observeOnce(src, Seq(count(lit(1)).as("__all")))
+    val (files, kept, st) = writeFiles(observed.filter(!coalesce(cond, lit(false))))
     val before: Long = fetch()
       .flatMap(_.get("__all").map(_.asInstanceOf[Number].longValue()))
-      .getOrElse(affectedDf.count()) // event lost: pay the explicit count
-    val newFiles = m.files.diff(affectedSeq) ++ files
-    io.commit(path, m.withFiles(newFiles, st))
+      .getOrElse(src.count()) // event lost: pay the explicit count
+    if (before == kept) {
+      // nothing matched: a no-op DELETE must stay a no-op
+      // commit-wise (no version bump) — drop the staged rewrite
+      cleanupStaged(files)
+      return 0L
+    }
+    io.commit(path, m.withFiles(m.files.diff(affected) ++ files, st))
     before - kept
   }
+
+  /** The files a DELETE/UPDATE under `cond` rewrites. Size-switched
+    * (merge's RewriteAllMaxBytes idea, r17; UPDATE since r18): deciding
+    * WHICH files hold matches costs a full scan + collect — a whole
+    * action — and only pays off by shrinking the rewrite. Under the
+    * threshold every file is rewritten in the single write job (rows
+    * that don't match pass through unchanged); at warehouse scale the
+    * probed set is the only option, and empty means nothing matched. */
+  private def affectedFiles(m: Manifest, cond: Column): Seq[String] =
+    if (tableBytesAtMost(m, RewriteAllMaxBytes)) m.files
+    else {
+      val affected = readManifest(m).withColumn("__file", input_file_name())
+        .filter(cond).select(col("__file")).distinct()
+        .collect().map(r => fileKey(r.getString(0))).toSet
+      normalize(m.files).zip(m.files)
+        .filter { case (n, _) => affected.contains(n) }.map(_._2)
+    }
 
   /** Copy-on-write UPDATE: rewrite affected files applying `set`.
     * Stored generated columns are RECOMPUTED from the post-SET values
@@ -436,25 +441,8 @@ final class GraftTable(val spark: SparkSession, val path: Path,
   def update(cond: Column, set: Map[String, Column]): Long = {
     val m = manifest
     if (m.files.isEmpty) return 0L
-    // size-switched rewrite-all (delete's r17 switch, ported in the
-    // r18 optimization round): the affected-file probe is a full scan
-    // + collect — one whole action per UPDATE statement — and only
-    // pays off by shrinking the rewrite. Under the threshold rewrite
-    // every file in the single write job (unmatched rows pass through
-    // the when() guards unchanged); the matched count and CHECK
-    // verdicts ride that job's Observation exactly as before. At
-    // warehouse scale the pruned path below remains the only option.
-    val rewriteAll = tableBytesAtMost(m, RewriteAllMaxBytes)
-    val affectedSeq =
-      if (rewriteAll) m.files
-      else {
-        val tagged = readManifest(m).withColumn("__file", input_file_name())
-        val affected = tagged.filter(cond).select(col("__file")).distinct()
-          .collect().map(r => fileKey(r.getString(0))).toSet
-        if (affected.isEmpty) return 0L
-        normalize(m.files).zip(m.files)
-          .filter { case (n, _) => affected.contains(n) }.map(_._2)
-      }
+    val affectedSeq = affectedFiles(m, cond)
+    if (affectedSeq.isEmpty) return 0L
     val src = readFiles(m, affectedSeq)
     val flagged = src.withColumn("__m", coalesce(cond, lit(false)))
     val postSet = flagged.select(col("__m") +: m.schema.fieldNames.map { f =>
@@ -494,10 +482,9 @@ final class GraftTable(val spark: SparkSession, val path: Path,
           cleanupStaged(files); throw e }
         flagged.filter(col("__m")).count()
     }
-    if (rewriteAll && nMatched == 0L) {
+    if (nMatched == 0L) {
       // nothing matched: a no-op UPDATE must stay a no-op commit-wise
-      // (the pruned path returns before writing) — drop the staged
-      // rewrite instead of bumping the version
+      // — drop the staged rewrite instead of bumping the version
       cleanupStaged(files)
       return 0L
     }

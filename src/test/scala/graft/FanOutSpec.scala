@@ -44,6 +44,11 @@ class FanOutSpec extends SparkSpec {
     assert(slowWriteDone.get, "the error surfaced while a sibling was still writing")
     assert(started.asScala.toSet === Set("bad", "slow"),
       s"a queued item ran after the failure: ${started.asScala.mkString(", ")}")
+    // one Note names what finished before the failure surfaced
+    val notes = e.warnings.filter(_._1 == "Note").map(_._3)
+    assert(notes.size === 1, s"notes: $notes")
+    assert(notes.head.contains("write into slow") &&
+      !notes.head.contains("write into bad"), notes.head)
   }
 
   test("fanOut: sequential on the calling thread inside a transaction") {

@@ -1744,6 +1744,34 @@ class SqlRouterSpec extends SparkSpec {
     val r = exec(e, "UPDATE gc SET a = 5 WHERE id = 1 RETURNING g")
     assert(r.df.get.as[Int].head() === 6)
     assert(exec(e, "SELECT g FROM gc WHERE id = 1").df.get.as[Int].head() === 6)
+    // every RETURNING path answers the stored g, never NULL or the
+    // pre-statement value
+    def returnsStored(tbl: String, id: Long, stmt: String): Unit = {
+      val ret = exec(e, stmt).df.get.as[Int].collect().toSeq
+      val stored = exec(e, s"SELECT g FROM $tbl WHERE id = $id").df.get.as[Int].head()
+      assert(ret === Seq(stored), stmt)
+    }
+    returnsStored("gc", 2, "INSERT INTO gc (id, a) VALUES (2, 7) RETURNING g")
+    returnsStored("gc", 3,
+      "INSERT INTO gc (id, a) VALUES (3, 30) ON CONFLICT (id) DO NOTHING RETURNING g")
+    returnsStored("gc", 1, "INSERT INTO gc (id, a) VALUES (1, 0) " +
+      "ON CONFLICT (id) DO UPDATE SET a = 20 RETURNING g")
+    returnsStored("gc", 1, "INSERT INTO gc (id, a) VALUES (1, 0) " +
+      "ON DUPLICATE KEY UPDATE a = 40 RETURNING g")
+    assert(exec(e, "SELECT g FROM gc WHERE id = 1").df.get.as[Int].head() === 41)
+    exec(e, "CREATE TABLE gk (id BIGINT, a INT, " +
+      "g INT GENERATED ALWAYS AS (a * 2) STORED)")
+    exec(e, "INSERT INTO gk (id, a) VALUES (1, 1)")
+    returnsStored("gk", 1, "UPDATE gk SET a = 3 WHERE id = 1 RETURNING g")
+    exec(e, "CREATE TABLE gp (id BIGINT NOT NULL, a INT, " +
+      "g INT GENERATED ALWAYS AS (a + 1) STORED, PRIMARY KEY (id)) " +
+      "PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE gp_lo PARTITION OF gp FOR VALUES FROM (0) TO (100)")
+    exec(e, "CREATE TABLE gp_hi PARTITION OF gp FOR VALUES FROM (100) TO (1000)")
+    returnsStored("gp", 1, "INSERT INTO gp (id, a) VALUES (1, 4) RETURNING g")
+    returnsStored("gp", 101,
+      "UPDATE gp SET id = id + 100, a = 9 WHERE id = 1 RETURNING g")
+    assert(exec(e, "SELECT g FROM gp_hi WHERE id = 101").df.get.as[Int].head() === 10)
 
     // 'INTO OUTFILE' inside a DOUBLE-quoted MySQL string literal stays
     // inert (default mode: double quotes are strings)
@@ -1771,6 +1799,29 @@ class SqlRouterSpec extends SparkSpec {
       .df.get.as[(String, String)].head()
     assert(s2 === (("don't say \"v\"", "col")))
     exec(e, "SET sql_mode = ''")
+  }
+
+  test("duplicate SET targets: the last assignment wins on every UPDATE path") {
+    val e = new Engine(spark, tmpDir("router_dupset"))
+    exec(e, "CREATE TABLE d (id BIGINT PRIMARY KEY, v STRING)")
+    exec(e, "CREATE TABLE o (id BIGINT PRIMARY KEY, w STRING)")
+    exec(e, "INSERT INTO d VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    exec(e, "INSERT INTO o VALUES (3, 'o')")
+    def stored(id: Long) =
+      exec(e, s"SELECT v FROM d WHERE id = $id").df.get.as[String].head()
+    exec(e, "UPDATE d SET v = 'x', v = 'y' WHERE id = 1")
+    assert(stored(1) === "y")
+    val ret = exec(e, "UPDATE d SET v = 'p', v = 'q' WHERE id = 1 RETURNING v")
+    assert(ret.df.get.as[String].collect().toSeq === Seq("q"))
+    assert(stored(1) === "q")
+    val lim = exec(e, "UPDATE d SET v = 'r', v = 's' ORDER BY id DESC LIMIT 1 RETURNING v")
+    assert(lim.df.get.as[String].collect().toSeq === Seq("s"))
+    assert(stored(3) === "s")
+    val jn = exec(e,
+      "UPDATE d JOIN o ON d.id = o.id SET d.v = 'j', d.v = o.w RETURNING v")
+    assert(jn.df.get.as[String].collect().toSeq === Seq("o"))
+    assert(stored(3) === "o")
+    assert(stored(2) === "b")
   }
 
   test("MariaDB INSERT ... ON DUPLICATE KEY UPDATE ... RETURNING answers post-images") {
@@ -3095,6 +3146,27 @@ class SqlRouterSpec extends SparkSpec {
     assert(exec(e, "SELECT id FROM mv WHERE v = 'b'").df.get.as[Long].head()
       === 20L)
     assert(exec(e, "SELECT count(*) FROM mv").df.get.as[Long].head() === 3L)
+  }
+
+  test("partitioning: a failed parent UPDATE notes the children that committed") {
+    val e = new Engine(spark, tmpDir("router_part_fail"))
+    exec(e, "CREATE TABLE fp (id BIGINT NOT NULL, n INT, PRIMARY KEY (id)) " +
+      "PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE fp_lo PARTITION OF fp FOR VALUES FROM (0) TO (100)")
+    exec(e, "CREATE TABLE fp_hi PARTITION OF fp FOR VALUES FROM (100) TO (1000)")
+    exec(e, "INSERT INTO fp VALUES (1, 1), (150, 1)")
+    // a child-local CHECK makes exactly one child's write fail
+    exec(e, "ALTER TABLE ONLY fp_hi ADD CONSTRAINT n_small CHECK (n < 10)")
+    intercept[Exception](exec(e, "UPDATE fp SET n = n + 50"))
+    val notes = exec(e, "SHOW WARNINGS").df.get.collect()
+      .filter(_.getString(0) == "Note").map(_.getString(2))
+    assert(notes.length === 1, notes.mkString("; "))
+    assert(!notes.head.contains("'fp_hi'"), notes.head)
+    // the Note names fp_lo exactly when its update committed
+    val loCommitted =
+      exec(e, "SELECT n FROM fp_lo").df.get.as[Int].head() == 51
+    assert(notes.head.contains("'fp_lo'") === loCommitted, notes.head)
+    assert(exec(e, "SELECT n FROM fp_hi").df.get.as[Int].head() === 1)
   }
 
   test("partitioning: UPDATE/DELETE RETURNING through the parent (r12 verdict #4)") {

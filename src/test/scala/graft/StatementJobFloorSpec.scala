@@ -22,10 +22,12 @@ class StatementJobFloorSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val e = new Engine(spark, Files.createTempDirectory("graft_jobfloor"))
-      def run(q: String): Int = {
+      // `collect`: the count includes reading the RETURNING frame
+      def run(q: String, collect: Boolean = false): Int = {
         Thread.sleep(200) // let the listener queue drain
         val j0 = jobs.get()
-        SqlRouter.execute(e, q)
+        val r = SqlRouter.execute(e, q)
+        if (collect) r.df.foreach(_.collect())
         Thread.sleep(200)
         jobs.get() - j0
       }
@@ -47,6 +49,34 @@ class StatementJobFloorSpec extends SparkSpec {
       assert(SqlRouter.execute(e, "SELECT id, v, n FROM t ORDER BY id")
         .df.get.as[(Long, String, Int)].collect().toSeq ===
         Seq((1L, "rep", 9), (2L, "seed", 1), (3L, "a", 1)))
+
+      // UPDATE / DELETE shapes; bounds are the counts measured before
+      // the row-image refactor, plus one
+      run("CREATE TABLE u (id BIGINT NOT NULL, v STRING, n INT, PRIMARY KEY (id))")
+      run("INSERT INTO u VALUES (1, 'a', 1), (2, 'b', 2), (3, 'c', 3), (4, 'd', 4)")
+      val upd = run("UPDATE u SET n = n + 1 WHERE id = 1")
+      assert(upd <= 2, s"plain UPDATE ran $upd jobs")
+      val del = run("DELETE FROM u WHERE id = 4")
+      assert(del <= 2, s"plain DELETE ran $del jobs")
+      val updRet = run("UPDATE u SET n = 7 WHERE id = 2 RETURNING id, n",
+        collect = true)
+      assert(updRet <= 4, s"staged UPDATE ... RETURNING ran $updRet jobs")
+      val updLim = run("UPDATE u SET v = 'z' ORDER BY id DESC LIMIT 1")
+      assert(updLim <= 3, s"UPDATE ... ORDER BY ... LIMIT ran $updLim jobs")
+      val delLim = run("DELETE FROM u ORDER BY id LIMIT 1")
+      assert(delLim <= 3, s"DELETE ... LIMIT ran $delLim jobs")
+      run("CREATE TABLE p (id BIGINT NOT NULL, v STRING, PRIMARY KEY (id)) " +
+        "PARTITION BY RANGE (id)")
+      run("CREATE TABLE p_lo PARTITION OF p FOR VALUES FROM (0) TO (100)")
+      run("CREATE TABLE p_hi PARTITION OF p FOR VALUES FROM (100) TO (1000)")
+      run("INSERT INTO p VALUES (1, 'a'), (2, 'b'), (150, 'c')")
+      val move = run("UPDATE p SET id = id + 200 WHERE id = 1")
+      assert(move <= 6, s"partition-key UPDATE (row movement) ran $move jobs")
+      assert(SqlRouter.execute(e, "SELECT id, v, n FROM u ORDER BY id")
+        .df.get.as[(Long, String, Int)].collect().toSeq ===
+        Seq((2L, "b", 7), (3L, "z", 3)))
+      assert(SqlRouter.execute(e, "SELECT id FROM p_hi ORDER BY id")
+        .df.get.as[Long].collect().toSeq === Seq(150L, 201L))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -50,14 +50,28 @@ class GraftTableSpec extends SparkSpec {
     // file holding id=1 is carried over untouched
     assert(filesBefore.intersect(filesAfter).nonEmpty)
     assert(t.read().select("id").as[Long].collect() === Array(1L))
+    // the rewrite-all arm (default threshold) answers the same
+    val t2 = freshTable()
+    t2.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "v"))
+    t2.insert(Seq((2L, "b", 2.0)).toDF("id", "name", "v"))
+    assert(t2.delete(col("id") === 2L) === 1)
+    assert(t2.read().select("id").as[Long].collect() === Array(1L))
   }
 
   test("delete with no matches is a no-op commit-wise") {
-    val t = freshTable()
-    t.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "v"))
-    val v = t.manifest.version
-    assert(t.delete(col("id") === 99L) === 0)
-    assert(t.manifest.version === v)
+    // both copy-on-write arms: rewrite-all (default) and pruned (0)
+    for (cap <- Seq(None, Some("0"))) {
+      val t = freshTable()
+      t.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "v"))
+      val v = t.manifest.version
+      cap.foreach(spark.conf.set("spark.graft.merge.rewriteAllMaxBytes", _))
+      try {
+        assert(t.delete(col("id") === 99L) === 0)
+        assert(t.update(col("id") === 99L, Map("v" -> lit(0.0))) === 0)
+      } finally spark.conf.unset("spark.graft.merge.rewriteAllMaxBytes")
+      assert(t.manifest.version === v, s"arm $cap bumped the version")
+      assert(t.read().as[(Long, String, Double)].collect() === Array((1L, "a", 1.0)))
+    }
   }
 
   test("update applies set-exprs to matching rows only") {

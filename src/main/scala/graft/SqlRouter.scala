@@ -75,9 +75,11 @@ object SqlRouter {
   // unlisted columns get their declared DEFAULT expression, else null
   // OVERRIDING {SYSTEM|USER} VALUE (PG identity; pg_dump --inserts
   // emits it for GENERATED ALWAYS columns) rides at the head of the
-  // source capture — doInsert peels it
+  // source capture — insertRows peels it
   private val Insert =
     """(?is)\s*INSERT\s+INTO\s+([\w.]+)\s*(?:\(([\w\s,]+)\)\s*)?\s+(OVERRIDING\s+(?:SYSTEM|USER)\s+VALUE\s+.*|VALUES\s*.*|SELECT\s+.*|FROM\s+.*)""".r
+  private val Overriding =
+    """(?is)^\s*OVERRIDING\s+(SYSTEM|USER)\s+VALUE\s+(.*)$""".r
   // an INSERT carrying a top-level upsert clause: (insert head, clause
   // tail), cut at the phrase in code position — the phrase inside a
   // string literal never triggers the upsert arm. The span scan only
@@ -169,7 +171,7 @@ object SqlRouter {
     """(?is)\s*SHOW\s+(?:GLOBAL\s+|SESSION\s+)?STATUS\s*(?:LIKE\s+'([^']*)')?\s*""".r
   // PG: INSERT with every column defaulted
   private val InsertDefaults =
-    """(?is)\s*INSERT\s+INTO\s+([\w.]+)\s+DEFAULT\s+VALUES\s*""".r
+    """(?is)\s*INSERT\s+INTO\s+([\w.]+)\s+DEFAULT\s+VALUES(?:\s+RETURNING\s+(.+?))?\s*""".r
   private val ShowColumns =
     """(?is)\s*(?:SHOW\s+COLUMNS\s+FROM|DESCRIBE|DESC)\s+([\w.]+)\s*""".r
   private val ShowCreateTable =
@@ -1356,23 +1358,16 @@ object SqlRouter {
         "RELEASE SAVEPOINT can only be used in transaction blocks"))
         .release(nm)
       ddl
+    // MySQL checks EVERY unique key (r15): an empty key here means the
+    // implied arbiter (insertRows) — PLAIN columns only for REPLACE (an
+    // expression arbiter can't key the file-rewrite join; replaceRows
+    // rejects it loudly rather than silently reverting to PK semantics)
     case ReplaceInto(name, colList, rest) =>
-      val t = engine.table(name)
-      // MySQL REPLACE deletes rows conflicting on ANY unique key (r15):
-      // the omitted-auto-PK + single-unique-arbiter shape keys the
-      // replace on that arbiter — PLAIN columns only (an expression
-      // arbiter can't key the file-rewrite join; replaceRows rejects
-      // it loudly rather than silently reverting to PK semantics)
-      val repKey = impliedUniqueArbiter(t, "REPLACE INTO", colList)
-      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
-        Replace(repKey), None)
+      insertRows(engine, name, engine.table(name), colList, rest,
+        Replace(Nil), None)
     case InsertIgnore(name, colList, rest) =>
-      val t = engine.table(name)
-      // MySQL checks EVERY unique index (r15): the omitted-auto-PK +
-      // single-unique-arbiter shape keys the ignore on that arbiter
-      val igKey = impliedUniqueArbiter(t, "INSERT IGNORE", colList)
-      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
-        Ignore(igKey), None)
+      insertRows(engine, name, engine.table(name), colList, rest,
+        Ignore(Nil), None)
     // PG's upsert spelling (ON CONFLICT ... DO NOTHING | DO UPDATE SET
     // ... [WHERE ...]) maps onto the same storage machinery as MySQL's
     // ON DUPLICATE KEY: `excluded.c` is the incoming row (the __new_<c>
@@ -1451,8 +1446,7 @@ object SqlRouter {
               }
               Upsert(sets, guard, arbiter)
             }
-          writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
-            action, returning)
+          insertRows(engine, name, t, colList, rest, action, returning)
         case other => throw new IllegalArgumentException(
           s"unsupported ON CONFLICT clause: $other")
       }
@@ -1485,38 +1479,17 @@ object SqlRouter {
           // VALUES(c) → __new_c in code only: a literal 'VALUES(x)' survives
           k -> SqlText.replaceCode(v1, ValuesRef)("__new_" + _.group(1))
       }
-      // MySQL ODKU checks EVERY unique index (r15): the omitted-auto-PK
-      // + single-unique-arbiter shape keys the upsert on that arbiter
-      val odkuKey = impliedUniqueArbiter(t, "ON DUPLICATE KEY UPDATE",
-        colList)
-      writeRows(engine, name, t, mergeSource(engine, t, colList, rest),
-        Upsert(sets, None, odkuKey), returning)
-    case InsertDefaults(name) =>
-      // PG's all-defaults one-row insert: declared DEFAULTs, null
-      // elsewhere, the auto-increment column assigned
-      val t = engine.table(name)
-      val m = t.manifest
-      val auto = m.schema.fieldNames
-        .find(c => m.props.get(s"autoinc.$c").contains("true"))
-      val one = engine.spark.range(1)
-      def defaultFor(f: StructField) =
-        m.props.get(s"default.${f.name}")
-          .map(d => expr(d).cast(f.dataType))
-          .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-      auto match {
-        case Some(c) =>
-          val src = one.select(
-            m.schema.fields.filterNot(_.name == c).map(defaultFor).toSeq: _*)
-          val base = m.autoInc
-          val n = t.insertAutoInc(src, c)
-          if (n > 0) engine.setVar("last_insert_id", base.toString)
-          Result(None, n)
-        case None =>
-          Result(None, t.insert(one.select(
-            m.schema.fields.map(defaultFor).toSeq: _*)))
-      }
-    case Insert(name, colList, rest) =>
-      doInsert(engine, name, colList, rest)
+      // the key comes from the implied unique arbiter (insertRows)
+      insertRows(engine, name, t, colList, rest, Upsert(sets, None, Nil),
+        returning)
+    case InsertDefaults(name, returning) =>
+      // PG's all-defaults insert: one row, no listed column
+      insertRows(engine, name, engine.table(name), "",
+        "SELECT * FROM VALUES (1)", Append, Option(returning))
+    case Insert(name, colList, rest0) =>
+      val (rest, returning) = splitReturning(rest0)
+      insertRows(engine, name, engine.table(name), colList, rest, Append,
+        returning)
     case Update(name, tail0) =>
       val (tail, returning) = splitReturning(tail0)
       // MySQL's trailing ORDER BY/LIMIT come off before the SET/WHERE
@@ -2047,15 +2020,14 @@ object SqlRouter {
         if (fileEntries.isEmpty && setPairsRaw.nonEmpty)
           t.schema.fieldNames.toSeq
         else fileEntries
-      // the columns the statement supplies (null: every column); the
-      // omitted-auto + single-unique shape arbitrates on the unique
-      // index, same as the INSERT-statement merge family
-      val provided =
-        if (fileEntries2.isEmpty) null
-        else (fileEntries2.filterNot(_.startsWith("@")) ++
-          setPairsRaw.map(_._1)).mkString(",")
+      // the auto column a column-list load omits; the omitted-auto +
+      // single-unique shape arbitrates on the unique index, same as the
+      // INSERT family
+      val m = t.manifest
+      val omitted = m.autoIncCol.filter(c => fileEntries2.nonEmpty &&
+        !(fileEntries2 ++ setPairsRaw.map(_._1)).exists(_.equalsIgnoreCase(c)))
       def key(mode: String) =
-        impliedUniqueArbiter(t, s"LOAD DATA $mode", provided)
+        impliedUniqueArbiter(t, s"LOAD DATA $mode", omitted.isDefined)
       val action = Option(dupMode).map(_.toUpperCase) match {
         case Some("IGNORE") => Ignore(key("IGNORE"))
         case Some("REPLACE") => Replace(key("REPLACE"))
@@ -2063,8 +2035,8 @@ object SqlRouter {
       }
       def source: DataFrame =
         if (fileEntries2.nonEmpty)
-          loadDataColFrame(engine, t, path, opts, escAware, fileEntries2,
-            setPairsRaw)
+          insertSource(engine, t, m, loadDataColFrame(engine, m, path, opts,
+            escAware, fileEntries2, setPairsRaw), omitted, action, None)
         // no column list, no SET: the file holds every column
         else if (escAware)
           graft.sources.BulkIO.mySqlTextFrame(engine.spark, t.schema, path, opts)
@@ -3135,9 +3107,9 @@ object SqlRouter {
   /** Build the source DataFrame of an INSERT-family statement: a
     * `VALUES ...` tail is wrapped so Catalyst types the tuples against
     * the table's column list; `SELECT`/`FROM` tails run as-is. */
-  private def sourceDf(engine: Engine, t: graft.storage.GraftTable,
+  private def sourceDf(engine: Engine, m: graft.storage.Manifest,
       rest: String): DataFrame = {
-    val names = t.schema.fieldNames
+    val names = m.schema.fieldNames
     val q =
       if (rest.trim.toUpperCase.startsWith("VALUES"))
         s"SELECT * FROM ($rest) AS __v(${names.mkString(", ")})"
@@ -3252,15 +3224,13 @@ object SqlRouter {
     * file supplies exactly the listed entries (a `@var` reads as a
     * string usable only from SET expressions), SET assignments compute
     * over them, unlisted columns take their declared DEFAULT (else
-    * NULL), stored generated columns recompute, and an omitted
-    * AUTO_INCREMENT column gets distributed id assignment — the same
-    * semantics the column-list INSERT path implements. Returns the
-    * schema-complete frame. */
-  private def loadDataColFrame(engine: Engine, t: graft.storage.GraftTable,
+    * NULL). Returns the schema-complete frame; [[insertSource]] mints
+    * an omitted auto-increment column and the write recomputes stored
+    * generated columns. */
+  private def loadDataColFrame(engine: Engine, m: graft.storage.Manifest,
       path: String, opts: graft.sources.BulkIO.CsvOptions, escAware: Boolean,
       entries: Seq[String], setPairsRaw: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val m = t.manifest
     def uvName(e: String) = "__uv_" + e.drop(1)
     def resolve(c: String): StructField =
       m.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
@@ -3279,45 +3249,13 @@ object SqlRouter {
         graft.sources.BulkIO.mySqlTextFrame(engine.spark, fileSchema, path, opts)
       else graft.sources.BulkIO.loadCsv(engine.spark, path, fileSchema, opts)
     val providedDirect = entries.filterNot(_.startsWith("@")).map(resolve(_).name)
-    val autoCol = m.schema.fieldNames.find(c =>
-      m.props.get(s"autoinc.$c").contains("true"))
-    val autoOmitted = autoCol.exists(c =>
-      !providedDirect.exists(_.equalsIgnoreCase(c)) && !setPairs.contains(c))
-    // base fill: provided / SET / DEFAULT / NULL, generated recomputed
-    // from the filled row, auto column deferred to id assignment
-    val base = m.schema.fields.filterNot(f =>
-      autoOmitted && autoCol.contains(f.name)).map { f =>
-      setPairs.get(f.name).map(ex => expr(ex).cast(f.dataType).as(f.name))
-        .orElse(if (providedDirect.exists(_.equalsIgnoreCase(f.name)))
-          Some(col(f.name).cast(f.dataType).as(f.name)) else None)
-        .getOrElse {
-          m.props.get(s"generated.${f.name}")
-            .map(_ => lit(null).cast(f.dataType).as(f.name)) // filled below
-            .orElse(m.props.get(s"default.${f.name}")
-              .map(d => expr(d).cast(f.dataType).as(f.name)))
-            .getOrElse(lit(null).cast(f.dataType).as(f.name))
-        }
-    }
-    val filled0 = raw.select(base.toIndexedSeq: _*)
-    // stored generated columns recompute over the filled row
-    val gen = m.props.collect {
-      case (k, v) if k.startsWith("generated.") => k.stripPrefix("generated.") -> v
-    }
-    val filled = if (gen.isEmpty) filled0 else filled0.select(
-      filled0.columns.map(c => gen.get(c)
-        .filterNot(_ => providedDirect.exists(_.equalsIgnoreCase(c)) ||
-          setPairs.contains(c))
-        .map(g => expr(g).cast(m.schema(c).dataType).as(c))
-        .getOrElse(col(c))): _*)
-    (autoCol, autoOmitted) match {
-      case (Some(c), true) =>
-        val baseId = m.autoInc
-        val (withIds, total) = t.assignAutoIncIds(filled, c)
-        t.advanceAutoInc(baseId + total)
-        if (total > 0) engine.setVar("last_insert_id", baseId.toString)
-        withIds.select(m.schema.fieldNames.map(col): _*)
-      case _ => filled.localCheckpoint(true)
-    }
+    // provided / SET / DEFAULT / NULL
+    raw.select(m.schema.fields.map { f =>
+      setPairs.get(f.name).map(expr)
+        .orElse(providedDirect.find(_ == f.name).map(col))
+        .orElse(m.props.get(s"default.${f.name}").map(expr))
+        .getOrElse(lit(null)).cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
   }
 
   /** MySQL LOAD DATA tail (`loaddata.go:115-227` surface): FIELDS
@@ -3367,118 +3305,105 @@ object SqlRouter {
     try { engine.table(name); true }
     catch { case _: graft.storage.Manifest.NoSuchTableException => false }
 
-  /** Source frame for an INSERT-family statement with an optional
-    * explicit column list (null = all columns). */
-  /** The INSERT execution path shared by the VALUES/SELECT form and
-    * MySQL's `INSERT ... SET` sugar. Routes through the distributed
-    * auto-inc assignment when the column list omits the table's
-    * auto-increment column (A23 via SQL), and answers PG's
-    * `RETURNING <exprs>` tail: for auto-assigned inserts the returned
-    * rows read back by the id range this statement assigned (exact —
-    * ids are contiguous — and generated columns carry their stored
-    * values); for explicit inserts they project the row image of the
-    * frozen source rows. */
-  private def doInsert(engine: Engine, name: String, colList: String,
-      rest0: String): Result = {
-    val t = engine.table(name)
+  /** The one source rule of the INSERT family — plain INSERT (INSERT
+    * ... SET and DEFAULT VALUES arrive in this shape too), REPLACE,
+    * INSERT IGNORE, ON CONFLICT and ON DUPLICATE KEY UPDATE — applied in
+    * one order before [[writeRows]] writes the rows:
+    *  1. `OVERRIDING SYSTEM|USER VALUE` comes off the source;
+    *  2. an explicit value for a GENERATED ALWAYS identity column is
+    *     refused unless OVERRIDING SYSTEM VALUE is present (PG; COPY
+    *     bypasses the check, exactly like PG's COPY) — BY DEFAULT
+    *     identity and MySQL AUTO_INCREMENT keep accepting explicit ids;
+    *  3. MySQL NULL-triggers-assign ([[rewriteNullAutoInc]]; PG
+    *     identity columns are excluded: PG raises NOT NULL there). An
+    *     action without a key (REPLACE, IGNORE, ODKU) then takes
+    *     [[impliedUniqueArbiter]] on the REWRITTEN column list: a NULL
+    *     id is a fresh id, so the unique key arbitrates;
+    *  4. unlisted columns take their DEFAULT ([[sourceDfFor]]);
+    *  5–6. [[insertSource]] folds a small conflict-action source and
+    *     mints ids for the omitted auto column — also an OVERRIDING USER
+    *     VALUE one, whose supplied values are built and dropped. */
+  private def insertRows(engine: Engine, name: String,
+      t: graft.storage.GraftTable, colList0: String, rest0: String,
+      action0: ConflictAction, returning: Option[String]): Result = {
     val m = t.manifest
-    val (rest1, returning) = splitReturning(rest0)
-    // PG identity override clause, sitting between the column list
-    // and the source (pg_dump --inserts emits OVERRIDING SYSTEM VALUE
-    // for GENERATED ALWAYS columns; OVERRIDING USER VALUE discards
-    // the supplied values in favor of the sequence)
-    val (rest, overriding) =
-      """(?is)^\s*OVERRIDING\s+(SYSTEM|USER)\s+VALUE\s+(.*)$""".r
-        .findFirstMatchIn(rest1)
-        .map(mo => (mo.group(2), Some(mo.group(1).toUpperCase)))
-        .getOrElse((rest1, None))
-    val autoCol = m.schema.fieldNames
-      .find(c => m.props.get(s"autoinc.$c").contains("true"))
-    def providesCol(c: String): Boolean = colList == null ||
-      colList.split(',').map(_.trim).exists(_.equalsIgnoreCase(c))
-    // PG refuses explicit values for a GENERATED ALWAYS identity
-    // column unless OVERRIDING SYSTEM VALUE is present (COPY bypasses
-    // the check, exactly like PG's COPY). BY DEFAULT identity and
-    // MySQL AUTO_INCREMENT keep accepting explicit ids.
-    autoCol.filter(c => m.props.get(s"identity.$c").contains("always") &&
-        providesCol(c) && overriding.isEmpty).foreach { c =>
+    val (rest1, overriding) = Overriding.findFirstMatchIn(rest0)
+      .map(mo => (mo.group(2), Some(mo.group(1).toUpperCase)))
+      .getOrElse((rest0, None))
+    val auto = m.autoIncCol
+    val identity = auto.flatMap(c => m.props.get(s"identity.$c"))
+    def listed(colList: String, c: String): Boolean = colList == null ||
+      colList.split(',').exists(_.trim.equalsIgnoreCase(c))
+    auto.filter(c => identity.contains("always") && overriding.isEmpty &&
+        listed(colList0, c)).foreach { c =>
       throw new IllegalArgumentException(
         s"""cannot insert a non-DEFAULT value into column "$c": it is """ +
           "an identity column defined as GENERATED ALWAYS — use " +
           "OVERRIDING SYSTEM VALUE to override")
     }
-    // MySQL NULL-triggers-assign (r14 ADVICE): mysqldump/ORM replays
-    // spell `INSERT INTO t VALUES (NULL, ...)` expecting the AUTO_
-    // INCREMENT column to assign. When EVERY tuple of a literal VALUES
-    // source carries literal NULL at that position, rewrite to the
-    // omitted-column form — the auto-assign path then mints ids and
-    // advances the counter exactly as MySQL does. PG identity columns
-    // are excluded (PG raises NOT NULL there, it never assigns on
-    // NULL), and mixed NULL/explicit batches stay on the explicit
-    // path where the write-funnel NOT NULL guard stays loud (per-row
-    // mixed assignment would need per-row sequencing).
-    val (colListA, restA) =
-      if (autoCol.exists(c => m.props.contains(s"identity.$c")))
-        (colList, rest)
-      else rewriteNullAutoInc(m.schema.fieldNames.toSeq, autoCol,
-        colList, rest)
-    if (m.props.contains("partition.by")) {
-      require(!overriding.contains("USER"), "OVERRIDING USER VALUE " +
-        "through a partitioned parent is not supported: target the " +
-        "partition directly")
-      return routedInsert(engine, name, t, colListA, restA, returning)
+    val (colList, rest) =
+      if (identity.isDefined) (colList0, rest1)
+      else rewriteNullAutoInc(m.schema.fieldNames.toSeq, auto, colList0, rest1)
+    val omitted =
+      auto.filter(c => overriding.contains("USER") || !listed(colList, c))
+    def implied(stmt: String) = impliedUniqueArbiter(t, stmt, omitted.isDefined)
+    val action = action0 match {
+      case Replace(Nil) => Replace(implied("REPLACE INTO"))
+      case Ignore(Nil) => Ignore(implied("INSERT IGNORE"))
+      case Upsert(sets, guard, Nil) =>
+        Upsert(sets, guard, implied("ON DUPLICATE KEY UPDATE"))
+      case a => a
     }
-    // OVERRIDING USER VALUE: the identity column auto-assigns even
-    // when the statement supplies it — same arm as an omitted column
-    // (the supplied values are built and dropped)
-    val omittedAuto =
-      if (overriding.contains("USER")) autoCol
-      else autoCol.filter(c => colListA != null && !colListA.split(',')
-        .map(_.trim).exists(_.equalsIgnoreCase(c)))
-    omittedAuto match {
-      case Some(c) =>
-        val base = m.autoInc
-        val n = t.insertAutoInc(
-          sourceDfFor(engine, t, colListA, restA).drop(c), c)
-        // MySQL LAST_INSERT_ID(): the FIRST id this statement assigned
-        if (n > 0) engine.setVar("last_insert_id", base.toString)
-        Result(returned(returning, t.read()
-          .filter(col(c) >= lit(base) && col(c) < lit(base + n))), n)
-      case None =>
-        val src0 = sourceDfFor(engine, t, colListA, restA)
-        returning match {
-          case None => Result(None, t.insert(src0))
-          case Some(rx) =>
-            // pin the source rows ONCE: a lazy re-execution after the
-            // insert would re-evaluate volatile expressions (uuid(),
-            // now()) or re-read the now-changed table for a SELECT
-            // source, returning values that differ from what was
-            // stored
-            val src = src0.localCheckpoint(true)
-            val n = t.insert(src)
-            Result(returned(returning, t.rowImage(src)), n)
+    writeRows(engine, name, t, insertSource(engine, t, m,
+      sourceDfFor(engine, m, colList, rest), omitted, action, returning),
+      action, returning)
+  }
+
+  /** The last two steps of the INSERT source rule, shared with the
+    * column-list LOAD DATA. `filled` holds every column (`omitted`, the
+    * auto column the statement does not supply, at any value).
+    *  5. A conflict action reads its source more than once, so a small
+    *     one folds into a LocalRelation ([[foldSmallSource]]); a plain
+    *     append reads it once and never pays the collect.
+    *  6. Ids for `omitted`: an unpartitioned append without RETURNING
+    *     leaves the column out, and [[writeRows]] mints inside the
+    *     append's own commit (`insertAutoInc`: one manifest version);
+    *     every other write gets a reserved range from
+    *     `assignAutoIncIds` (a partitioned parent owns the counter and
+    *     routes the ids as explicit values). MySQL LAST_INSERT_ID() is
+    *     the first id minted; [[writeRows]] restores the prior value
+    *     when no row lands. */
+  private def insertSource(engine: Engine, t: graft.storage.GraftTable,
+      m: graft.storage.Manifest, filled: DataFrame, omitted: Option[String],
+      action: ConflictAction, returning: Option[String]): DataFrame = {
+    val src = if (action == Append) filled else foldSmallSource(engine, filled)
+    omitted.fold(src) { c =>
+      val (out, firstId) =
+        if (action == Append && returning.isEmpty &&
+          !m.props.contains("partition.by")) (src.drop(c), Some(m.autoInc))
+        else {
+          val (withIds, base, n) = t.assignAutoIncIds(src.drop(c), c)
+          (withIds, Some(base).filter(_ => n > 0))
         }
+      firstId.foreach(id => engine.setVar("last_insert_id", id.toString))
+      out
     }
   }
 
-  /** MySQL's implicit conflict arbiter for INSERT IGNORE / ON
-    * DUPLICATE KEY UPDATE: MySQL checks EVERY unique index, not only
-    * the PK. The engine's merge is single-keyed, so this resolves the
-    * one shape where the rule is unambiguous — the ORM upsert idiom:
-    * the AUTO_INCREMENT PK is OMITTED from the column list (its fresh
-    * ids can never conflict with stored rows) and exactly ONE unique
+  /** MySQL's implicit conflict arbiter for REPLACE / INSERT IGNORE / ON
+    * DUPLICATE KEY UPDATE / LOAD DATA: MySQL checks EVERY unique index,
+    * not only the PK. The engine's merge is single-keyed, so this
+    * resolves the one shape where the rule is unambiguous — the ORM
+    * upsert idiom: the AUTO_INCREMENT PK is OMITTED (`autoOmitted`: not
+    * listed, or NULL in every tuple — its fresh ids can never conflict
+    * with stored rows) and exactly ONE unique
     * arbiter is recorded, which then IS the conflict key. With several
     * unique arbiters and an omitted PK, MySQL's multi-index resolution
     * would be needed — stay loud rather than silently pick one. Every
     * other shape (PK provided, or no unique index) keeps the PK key. */
   private def impliedUniqueArbiter(t: graft.storage.GraftTable,
-      stmt: String, colList: String): Seq[String] = {
-    val m = t.manifest
-    val autoOmitted = m.schema.fieldNames
-      .find(c => m.props.get(s"autoinc.$c").contains("true"))
-      .exists(c => colList != null &&
-        !colList.split(',').map(_.trim).exists(_.equalsIgnoreCase(c)))
-    val arbs = t.uniqueArbiters
+      stmt: String, autoOmitted: Boolean): Seq[String] = {
+    lazy val arbs = t.uniqueArbiters
     if (!autoOmitted || arbs.isEmpty) Nil
     else {
       // r15 ADVICE: the remedy depends on the statement — REPLACE and
@@ -3677,9 +3602,11 @@ object SqlRouter {
     else child
 
   /** What a write does with an incoming row whose key is already
-    * stored. `key` is the conflict arbiter (empty: the primary key). */
+    * stored. `key` is the conflict arbiter (empty: the primary key;
+    * [[insertRows]] first turns an empty key into the implied unique
+    * arbiter where one applies). */
   private sealed trait ConflictAction
-  /** Plain append: INSERT-style LOAD DATA and COPY FROM. */
+  /** Plain append: INSERT, INSERT-style LOAD DATA and COPY FROM. */
   private case object Append extends ConflictAction
   /** The stored row wins: INSERT IGNORE, ON CONFLICT DO NOTHING, LOAD
     * DATA IGNORE. */
@@ -3693,35 +3620,45 @@ object SqlRouter {
   private final case class Upsert(sets: Map[String, String],
       guard: Option[String], key: Seq[String]) extends ConflictAction
 
-  /** The one write path of the conflict-action statements (REPLACE,
-    * INSERT IGNORE, ON CONFLICT, ON DUPLICATE KEY UPDATE, LOAD DATA,
-    * COPY FROM). An unpartitioned table is written directly. A
-    * partitioned parent sends `Append` through the single-pass ingest
-    * and every other action through [[routeFrame]], applied PER LEAF —
-    * exact, because MySQL and PG both require every unique key of a
-    * partitioned table to include the partition key, so a conflicting
-    * row can only live in the leaf the incoming row routes to.
-    * RETURNING (IGNORE and upsert only) unions the leaves' images.
+  /** The one write path of the INSERT family (INSERT, REPLACE, INSERT
+    * IGNORE, ON CONFLICT, ON DUPLICATE KEY UPDATE — their source built
+    * by [[insertRows]]), LOAD DATA and COPY FROM. An unpartitioned table
+    * is written directly. A partitioned parent sends `Append` through
+    * the single-pass ingest and every other action through
+    * [[routeFrame]], applied PER LEAF — exact, because MySQL and PG both
+    * require every unique key of a partitioned table to include the
+    * partition key, so a conflicting row can only live in the leaf the
+    * incoming row routes to. RETURNING (append, IGNORE and upsert)
+    * unions the leaves' images; an append freezes its source once
+    * ([[freezeImages]]) and answers the stored row image of it.
     *
-    * MySQL leaves LAST_INSERT_ID() untouched when an IGNORE / upsert
-    * batch inserts nothing, but the source assigns it at id-assignment
-    * time — so the prior value is read BEFORE `src` is built and
-    * restored when no leaf inserted. */
+    * An append whose source lacks the table's auto column mints it
+    * inside its own commit (`insertAutoInc`, see [[insertSource]]).
+    * MySQL leaves LAST_INSERT_ID() untouched when a statement inserts
+    * nothing, but the source sets it when ids are minted — so the prior
+    * value is read BEFORE `src` is built and restored when no leaf
+    * inserted or the write failed. */
   private def writeRows(engine: Engine, name: String,
       t: graft.storage.GraftTable, src: => DataFrame, action: ConflictAction,
       returning: Option[String]): Result = {
-    val priorLid = action match {
-      case Ignore(_) | Upsert(_, _, _) => Some(engine.getVar("last_insert_id"))
-      case _ =>
-        require(returning.isEmpty, s"RETURNING is not supported for $action")
-        None
-    }
-    val df = src
+    if (action.isInstanceOf[Replace])
+      require(returning.isEmpty, s"RETURNING is not supported for $action")
+    val priorLid = engine.getVar("last_insert_id")
+    def restoreLid(): Unit = if (engine.getVar("last_insert_id") != priorLid)
+      engine.setVar("last_insert_id", priorLid.getOrElse("0"))
+    val m = t.manifest
+    val df =
+      if (action == Append && returning.isDefined)
+        freezeImages(engine.spark, src)._1
+      else src
+    val mint = m.autoIncCol
+      .filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
     // one leaf's (result, rows inserted)
     def leaf(lt: graft.storage.GraftTable, slice: DataFrame): (Result, Long) =
       action match {
         case Append =>
-          val n = lt.insert(slice); (Result(None, n), n)
+          val n = mint.fold(lt.insert(slice))(lt.insertAutoInc(slice, _))
+          (Result(returned(returning, lt.rowImage(slice)), n), n)
         case Replace(key) =>
           val n = lt.replaceRows(slice, key); (Result(None, n), n)
         case Ignore(key) if returning.isEmpty =>
@@ -3737,70 +3674,17 @@ object SqlRouter {
           (Result(returned(returning, img), aff), ins)
       }
     val leaves =
-      if (t.partitionBy.isEmpty) Seq(leaf(t, df))
-      else if (action == Append) {
-        val n = routeFrameSinglePass(engine, name, t, df)
-        Seq((Result(None, n), n))
-      } else routeFrame(engine, name, t, df, leaf)
-    if (leaves.map(_._2).sum == 0)
-      priorLid.foreach(p => engine.setVar("last_insert_id", p.getOrElse("0")))
+      try {
+        if (!m.props.contains("partition.by")) Seq(leaf(t, df))
+        else if (action == Append) {
+          val n = routeFrameSinglePass(engine, name, t, df)
+          Seq((Result(returned(returning, t.rowImage(df)), n), n))
+        } else routeFrame(engine, name, t, df, leaf)
+      } catch { case scala.util.control.NonFatal(e) => restoreLid(); throw e }
+    if (leaves.map(_._2).sum == 0) restoreLid()
     val r = unionResults(leaves.map(_._1))
     // no leaf hit: RETURNING still answers an empty frame
     r.copy(df = r.df.orElse(returned(returning, df.limit(0))))
-  }
-
-  /** INSERT through a partitioned PARENT routes rows to children by
-    * bounds (the behavior PG implements in its executor —
-    * `GraftTable.writeFiles`' parent guard promises exactly this).
-    *
-    * Scale shape: the source frame is frozen ONCE (localCheckpoint —
-    * volatile expressions and auto-assigned ids must not recompute),
-    * then ONE distributed aggregate computes per-child routed counts
-    * via a first-match-wins CASE tag — mutually exclusive by
-    * construction even if recorded ranges overlapped — and only
-    * NON-EMPTY children get an insert (each an ordinary distributed
-    * append over a filter of the frozen frame). A 100-child parent
-    * receiving rows for 2 children runs 1 + 2 jobs, not 100. A row no
-    * child accepts is loud BEFORE any child commits. The CASE chain
-    * is O(#children) deep — fine for PG-typical child counts (10s to
-    * low 100s); 10k+ children would want a broadcast-joined bounds
-    * table instead.
-    *
-    * Auto-inc: the PARENT owns the counter (PG: the parent owns the
-    * sequence). Ids are assigned at parent level (same distributive
-    * offsets as insertAutoInc), the counter advances in a
-    * manifest-only commit on the parent, and the id-carrying rows
-    * route as explicit values. */
-  private def routedInsert(engine: Engine, parentName: String,
-      t: graft.storage.GraftTable, colList: String, rest: String,
-      returning: Option[String]): Result = {
-    val m = t.manifest
-    // fail on a no-partition parent (and a malformed strategy) BEFORE
-    // evaluating the source — its expressions may be volatile
-    Partitioning.parse(m.props("partition.by"))
-    require(t.partitionChildren.nonEmpty,
-      s"$parentName has no partitions: attach one before inserting")
-    val omittedAuto = m.schema.fieldNames
-      .find(c => m.props.get(s"autoinc.$c").contains("true"))
-      .filter(c => colList != null &&
-        !colList.split(',').map(_.trim).exists(_.equalsIgnoreCase(c)))
-    val src = omittedAuto match {
-      case Some(c) =>
-        val base = m.autoInc
-        val (withIds, total) = t.assignAutoIncIds(
-          sourceDfFor(engine, t, colList, rest).drop(c), c)
-        t.advanceAutoInc(base + total)
-        if (total > 0) engine.setVar("last_insert_id", base.toString)
-        withIds
-      case None =>
-        // single-pass ingest consumes the source exactly once (the
-        // staged partitionBy write) — a checkpoint is only needed when
-        // RETURNING re-reads the frame afterwards
-        val s0 = sourceDfFor(engine, t, colList, rest)
-        if (returning.isDefined) s0.localCheckpoint(true) else s0
-    }
-    val total = routeFrameSinglePass(engine, parentName, t, src)
-    Result(returned(returning, t.rowImage(src)), total)
   }
 
   /** True when every evaluation of the plan yields the same rows.
@@ -3862,8 +3746,9 @@ object SqlRouter {
       new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)), schema)
 
   /** Freeze a row-image plan so the write, the count and RETURNING all
-    * read the same rows — the one rule of UPDATE row movement and the
-    * staged merge path ([[stageMergeImages]]). A STABLE plan of at most
+    * read the same rows — the one rule of UPDATE row movement, the
+    * staged merge path ([[stageMergeImages]]) and an append's
+    * RETURNING. A STABLE plan of at most
     * [[SmallMergeSourceRows]] rows folds into a LocalRelation from ONE
     * bounded collect (r19: the unconditional checkpoint + count was
     * two jobs, and a checkpointed frame kept the downstream merge on
@@ -3888,47 +3773,16 @@ object SqlRouter {
       img: => DataFrame): Option[DataFrame] =
     returning.map(rx => img.selectExpr(SqlText.splitTop(rx).map(_.trim): _*))
 
-  /** Merge-family source (REPLACE / INSERT IGNORE / ODKU / ON
-    * CONFLICT): an OMITTED AUTO_INCREMENT column gets ids ASSIGNED,
-    * exactly like the plain-INSERT path — MySQL assigns (and burns,
-    * under InnoDB defaults, even for rows that end up updating) auto
-    * ids for these statements too (the write-funnel NOT NULL guard
-    * refuses an omitted id left NULL by the default-fill). Explicit ids (column listed, or no column list
-    * at all) pass through [[foldSmallSource]] untouched. */
-  private def mergeSource(engine: Engine, t: graft.storage.GraftTable,
-      colList: String, rest: String): DataFrame = {
-    val m = t.manifest
-    val omittedAuto = m.schema.fieldNames
-      .find(c => m.props.get(s"autoinc.$c").contains("true"))
-      .filter(c => colList != null &&
-        !colList.split(',').map(_.trim).exists(_.equalsIgnoreCase(c)))
-    omittedAuto match {
-      case Some(c) =>
-        val base = m.autoInc
-        // folded-small sources take assignAutoIncIds' driver-local
-        // arm (no jobs); big ones its frozen distributed arm — ids
-        // derive from monotonically_increasing_id and never recompute
-        val (withIds, total) = t.assignAutoIncIds(
-          foldSmallSource(engine,
-            sourceDfFor(engine, t, colList, rest).drop(c)), c)
-        t.advanceAutoInc(base + total)
-        if (total > 0) engine.setVar("last_insert_id", base.toString)
-        withIds
-      case None =>
-        // the fold carries the evaluate-once discipline:
-        // unstable plans checkpoint inside it, stable big ones pass
-        // through unchanged, small ones become LocalRelations
-        foldSmallSource(engine, sourceDfFor(engine, t, colList, rest))
-    }
-  }
-
   /** Route a FROZEN (checkpointed or deterministic) frame into a
     * partitioned parent's children by bounds — [[writeRows]]' path for
     * the read-modify-write actions. `write` is the per-leaf commit;
-    * the per-leaf results come back in child declaration order. See
-    * [[routedInsert]]'s scaladoc for the scale shape (one tag
-    * aggregate, only non-empty children commit, unroutable rows loud
-    * first). */
+    * the per-leaf results come back in child declaration order.
+    *
+    * Scale shape: ONE aggregate computes per-child routed counts via
+    * the first-match-wins tag of [[boundCase]], and only NON-EMPTY
+    * children get a write (each over a filter of the frozen frame): a
+    * 100-child parent receiving rows for 2 children runs 1 + 2 writes,
+    * not 100. A row no child accepts is loud BEFORE any child commits. */
   private def routeFrame[R](engine: Engine, parentName: String,
       t: graft.storage.GraftTable, src: DataFrame,
       write: (graft.storage.GraftTable, DataFrame) => R): Seq[R] = {
@@ -3937,28 +3791,15 @@ object SqlRouter {
     val kids = t.partitionChildren
     require(kids.nonEmpty,
       s"$parentName has no partitions: attach one before inserting")
-    val preds = kids.map { case (c, b) =>
-      (c, Partitioning.boundPredicateSql(spec, b).map(expr)) }
-    val defaultChild = preds.collectFirst { case (c, None) => c }
-    val nonDefault = preds.collect { case (c, Some(p)) => (c, p) }
-    val tag = {
-      val chain = nonDefault.foldLeft(Option.empty[Column]) {
-        case (acc, (c, p)) =>
-          val hit = coalesce(p, lit(false))
-          Some(acc.fold(when(hit, lit(c)))(_.when(hit, lit(c))))
-      }
-      chain.fold(lit(defaultChild.orNull): Column)(
-        _.otherwise(lit(defaultChild.orNull)))
-    }
+    val tag = boundCase(kids.map { case (c, b) =>
+      (Partitioning.boundPredicateSql(spec, b).map(expr), lit(c)) })
     // ONE aggregate answers the routing counts, the loud unroutable
     // check, AND (when the parent carries an auto-inc pk) the explicit
     // id max the A23 advance below needs — round-14 review: the max()
     // used to re-execute the whole (possibly unfrozen) source a third
     // time as its own action
-    val autoCol = m.schema.fieldNames
-      .find(c => m.props.get(s"autoinc.$c").contains("true"))
-      .filter(c => m.pkCols.contains(c) &&
-        m.schema(c).dataType != org.apache.spark.sql.types.StringType)
+    val autoCol = m.autoIncCol.filter(c => m.pkCols.contains(c) &&
+      m.schema(c).dataType != org.apache.spark.sql.types.StringType)
     val aggCols = count(lit(1)).as("__n") +:
       autoCol.map(c => max(col(c).cast("long")).as("__mx")).toSeq
     val srcIsLocal = src.queryExecution.optimizedPlan
@@ -3994,8 +3835,7 @@ object SqlRouter {
       throw new IllegalArgumentException(
         s"no partition of $parentName found for $n inserted row(s)")
     }
-    val hit = preds.collect {
-      case (c, _) if counts.get(Some(c)).exists(_ > 0) => c }
+    val hit = kids.map(_._1).filter(c => counts.get(Some(c)).exists(_ > 0))
     def writeChild(c: String): Seq[R] = {
       val ref = childRef(parentName, c)
       val childT = engine.table(ref)
@@ -4022,13 +3862,37 @@ object SqlRouter {
     // counter, which owns id assignment; the children's own withFiles
     // bumps advance counters nothing reads. The max rode the routing
     // aggregate above — no extra job, same guards as the withFiles
-    // funnel; already-advanced counters (the auto-assign path) see an
-    // equal value and skip the commit.
+    // funnel; ids minted at the parent already reserved their range,
+    // so their max sees an equal counter and skips the commit.
     explicitMax.foreach(mx => t.advanceAutoInc(mx + 1L))
     results.flatten
   }
 
-  /** SINGLE-PASS routed ingest for PLAIN-INSERT semantics (round-12
+  /** The routing tag over one level's bound predicates: the value of
+    * the FIRST entry whose predicate holds (mutually exclusive by
+    * construction even if recorded ranges overlapped; a NULL predicate
+    * counts as false), else the DEFAULT entry's (no predicate), else
+    * NULL — the unroutable mark. The CASE chain is O(#children) deep:
+    * fine for PG-typical child counts (10s to low 100s); 10k+ children
+    * would want a broadcast-joined bounds table instead. */
+  private def boundCase(entries: Seq[(Option[Column], Column)]): Column = {
+    val dflt = entries.collectFirst { case (None, v) => v }
+      .getOrElse(lit(null).cast("string"))
+    entries.collect { case (Some(p), v) => (p, v) }
+      .foldLeft(Option.empty[Column]) { case (acc, (p, v)) =>
+        val hit = coalesce(p, lit(false))
+        Some(acc.fold(when(hit, v))(_.when(hit, v)))
+      }.fold(dflt)(_.otherwise(dflt))
+  }
+
+  /** INSERT through a partitioned PARENT routes rows to children by
+    * bounds (the behavior PG implements in its executor —
+    * `GraftTable.writeFiles`' parent guard promises exactly this). The
+    * PARENT owns the auto-inc counter (PG: the parent owns the
+    * sequence): omitted ids arrive already minted at parent level from
+    * a reserved range ([[insertSource]]) and route as explicit values.
+    *
+    * SINGLE-PASS routed ingest for PLAIN-INSERT semantics (round-12
     * verdict #2): instead of checkpointing the source and re-reading
     * it once per hit child, ONE distributed job tags every row with
     * its LEAF partition (a nested-CASE index spanning every level of
@@ -4051,7 +3915,7 @@ object SqlRouter {
       t: graft.storage.GraftTable, src: DataFrame): Long = {
     val m = t.manifest
     // leaf tag: index string per LEAF table across the whole tree,
-    // first-match-wins per level (same chaining as routeFrame);
+    // first-match-wins per level ([[boundCase]], as routeFrame);
     // ancestry records each leaf's MID-LEVEL parents (root excluded)
     // so their A23 counters advance like routeFrame's per-level pass
     val leafMap = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -4062,7 +3926,7 @@ object SqlRouter {
       val kids = pt.partitionChildren
       require(kids.nonEmpty,
         s"$pn has no partitions: attach one before inserting")
-      val entries = kids.map { case (c, b) =>
+      boundCase(kids.map { case (c, b) =>
         val ref = childRef(pn, c)
         val childT = engine.table(ref)
         val leafCol: Column =
@@ -4074,15 +3938,7 @@ object SqlRouter {
             lit(idx)
           }
         (Partitioning.boundPredicateSql(spec, b).map(expr), leafCol)
-      }
-      val dflt = entries.collectFirst { case (None, lc) => lc }
-        .getOrElse(lit(null).cast("string"))
-      val chain = entries.collect { case (Some(p), lc) => (p, lc) }
-        .foldLeft(Option.empty[Column]) { case (acc, (p, lc)) =>
-          val hit = coalesce(p, lit(false))
-          Some(acc.fold(when(hit, lc))(_.when(hit, lc)))
-        }
-      chain.fold(dflt)(_.otherwise(dflt))
+      })
     }
     val tag = build(parentName, t, Nil)
     // the parent's CHECK pass rides the staged write itself (round 14:
@@ -4118,8 +3974,7 @@ object SqlRouter {
       // explicit ones). One grouped, column-pruned scan over the
       // staged local files yields every per-leaf max at once.
       val perLeafMax: Map[String, Long] =
-        m.schema.fieldNames
-          .find(c => m.props.get(s"autoinc.$c").contains("true"))
+        m.autoIncCol
           .filter(c => m.pkCols.contains(c) &&
             m.schema(c).dataType != org.apache.spark.sql.types.StringType)
           .filter(_ => dirs.nonEmpty)
@@ -4679,26 +4534,20 @@ object SqlRouter {
       case _ => (s, None)
     }
 
-  private def sourceDfFor(engine: Engine, t: graft.storage.GraftTable,
-      colList: String, rest0: String): DataFrame = {
-    // OVERRIDING SYSTEM VALUE means "use the supplied values" — which
-    // is what every source build does — so it peels here and the
-    // valid PG combo `INSERT ... OVERRIDING SYSTEM VALUE ... ON
-    // CONFLICT` works through the upsert arms too. OVERRIDING USER
-    // VALUE changes semantics (discard the values) and is handled by
-    // doInsert alone; anywhere else it stays a loud parse failure.
-    val rest = """(?is)^\s*OVERRIDING\s+SYSTEM\s+VALUE\s+(.*)$""".r
-      .findFirstMatchIn(rest0).map(_.group(1)).getOrElse(rest0)
-    if (colList == null) sourceDf(engine, t, rest)
-    else sourceDfCols(engine, t, colList.split(',').map(_.trim).toSeq, rest)
-  }
+  /** Source frame for an INSERT-family statement with an optional
+    * explicit column list (null = all columns; empty = none, the
+    * DEFAULT VALUES row). */
+  private def sourceDfFor(engine: Engine, m: graft.storage.Manifest,
+      colList: String, rest: String): DataFrame =
+    if (colList == null) sourceDf(engine, m, rest)
+    else sourceDfCols(engine, m,
+      colList.split(',').map(_.trim).filter(_.nonEmpty).toSeq, rest)
 
   /** Column-list INSERT: type the VALUES tuples against the listed
     * columns; unlisted columns get their declared DEFAULT expression
     * (manifest `default.<col>` prop — MySQL semantics), else null. */
-  private def sourceDfCols(engine: Engine, t: graft.storage.GraftTable,
+  private def sourceDfCols(engine: Engine, m: graft.storage.Manifest,
       cols: Seq[String], rest: String): DataFrame = {
-    val m = t.manifest
     val fields = m.schema.fields
     cols.foreach(c => require(fields.exists(_.name.equalsIgnoreCase(c)),
       s"unknown column $c"))
@@ -4706,7 +4555,7 @@ object SqlRouter {
       if (rest.trim.toUpperCase.startsWith("VALUES"))
         s"SELECT * FROM ($rest) AS __v(${cols.mkString(", ")})"
       else rest
-    val src = engine.sql(q).toDF(cols: _*)
+    val src = if (cols.isEmpty) engine.sql(q) else engine.sql(q).toDF(cols: _*)
     val out = fields.map { f =>
       cols.find(_.equalsIgnoreCase(f.name))
         .map(org.apache.spark.sql.functions.col(_).cast(f.dataType))

@@ -247,38 +247,41 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     * counter; the counter advances in the same commit. */
   def insertAutoInc(df: DataFrame, idCol: String): Long = {
     val m = manifest
-    val base = m.autoInc
-    // Literal-VALUES fast path (r15 verdict #5: the per-statement job
-    // floor): a driver-local source needs no distributed id machinery —
-    // index the rows in Scala and keep ONE Spark job (the write). The
-    // cache + offsets-collect + broadcast-join below exist for
-    // DISTRIBUTED sources (INSERT ... SELECT over a big scan).
-    indexedLocal(df) match {
-      case Some((local, total)) =>
-        val withId = rowImage(m,
-          local.withColumn(idCol, lit(base) + col("__idx")), Map.empty)
-        val (files, n, st) = writeFilesChecked(m, withId)
-        io.commit(path,
-          m.withFiles(m.files ++ files, st).copy(autoInc = base + total))
-        return n
-      case None => ()
-    }
-    val mid = df.withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", expr("CAST(__mid >> 33 AS BIGINT)"))
-      .withColumn("__pos", expr("CAST(__mid & 8589934591 AS BIGINT)"))
-    mid.cache()
-    try {
-      val (offDf, total) = idOffsets(mid)
-      val withId = rowImage(m, mid.join(offDf, "__pid")
-        .withColumn(idCol, lit(base) + col("__off") + col("__pos")), Map.empty)
+    withIds(m, df, idCol) { (withId, total) =>
       // same DML contract as insert(): constraints and generated
       // columns apply to auto-inc appends too (checks ride the write)
-      val (files, n, st) = writeFilesChecked(m, withId)
+      val (files, n, st) = writeFilesChecked(m, rowImage(m, withId, Map.empty))
       io.commit(path,
-        m.withFiles(m.files ++ files, st).copy(autoInc = base + total))
+        m.withFiles(m.files ++ files, st).copy(autoInc = m.autoInc + total))
       n
-    } finally mid.unpersist()
+    }
   }
+
+  /** The id-assignment core of [[insertAutoInc]] and
+    * [[assignAutoIncIds]]: `df` plus `idCol` = consecutive ids from
+    * `m.autoInc`, handed to `use` with the row count.
+    *
+    * Literal-VALUES fast path (r15 verdict #5: the per-statement job
+    * floor): a driver-local source needs no distributed id machinery —
+    * index the rows in Scala, no Spark job. The cache + offsets-collect
+    * + broadcast-join arm exists for DISTRIBUTED sources (INSERT ...
+    * SELECT over a big scan); `mid` stays cached while `use` runs. */
+  private def withIds[R](m: Manifest, df: DataFrame, idCol: String)(
+      use: (DataFrame, Long) => R): R =
+    indexedLocal(df) match {
+      case Some((local, total)) =>
+        use(local.withColumn(idCol, lit(m.autoInc) + col("__idx")), total)
+      case None =>
+        val mid = df.withColumn("__mid", monotonically_increasing_id())
+          .withColumn("__pid", expr("CAST(__mid >> 33 AS BIGINT)"))
+          .withColumn("__pos", expr("CAST(__mid & 8589934591 AS BIGINT)"))
+        mid.cache()
+        try {
+          val (offDf, total) = idOffsets(mid)
+          use(mid.join(offDf, "__pid")
+            .withColumn(idCol, lit(m.autoInc) + col("__off") + col("__pos")), total)
+        } finally mid.unpersist()
+    }
 
   /** True when `df`'s optimized plan is a (bounded) LocalRelation —
     * literal data whose collect runs no Spark job. */
@@ -330,41 +333,36 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     (broadcast(offsets.toSeq.sortBy(_._1).toDF("__pid", "__off")), total)
   }
 
-  /** Assign consecutive auto-inc ids WITHOUT writing files — the
-    * partitioned-parent INSERT path: the parent owns the counter but
-    * stores no data, so the router needs the id-assigned frame back to
-    * route rows to children. Returns the FROZEN (localCheckpoint)
-    * frame — ids derive from monotonically_increasing_id and must
-    * never recompute — plus the row count; the caller advances the
-    * counter via [[advanceAutoInc]]. */
-  def assignAutoIncIds(df: DataFrame, idCol: String): (DataFrame, Long) = {
+  /** Mint consecutive auto-inc ids WITHOUT writing files — for writes
+    * whose rows are not a plain append to this table (a partitioned
+    * parent routes them to its children, which hold the data; a
+    * conflict action merges them). Returns the frame with ids in
+    * schema order — FROZEN unless it is local data, since ids derive
+    * from monotonically_increasing_id and must never recompute — plus
+    * the first id and the row count.
+    *
+    * The range is RESERVED before the frame comes back: the counter
+    * moves to first + count in a manifest-only commit against the
+    * manifest the ids were minted from, with no retry. A writer that
+    * lost a race fails with ConcurrentModificationException instead of
+    * handing out ids another writer already holds. No rows, no commit. */
+  def assignAutoIncIds(df: DataFrame, idCol: String): (DataFrame, Long, Long) = {
     val m = manifest
-    val base = m.autoInc
-    // literal-VALUES fast path (see insertAutoInc): local data is
-    // deterministic by construction — no checkpoint, no jobs at all
-    indexedLocal(df) match {
-      case Some((local, total)) =>
-        return (local.withColumn(idCol, lit(base) + col("__idx"))
-          .select(m.schema.fieldNames.map(col): _*), total)
-      case None => ()
-    }
-    val mid = df.withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", expr("CAST(__mid >> 33 AS BIGINT)"))
-      .withColumn("__pos", expr("CAST(__mid & 8589934591 AS BIGINT)"))
-    mid.cache()
-    try {
-      val (offDf, total) = idOffsets(mid)
-      val withId = mid.join(offDf, "__pid")
-        .withColumn(idCol, lit(base) + col("__off") + col("__pos"))
+    val (out, n) = withIds(m, df, idCol) { (withId, total) =>
+      val img = withId
+        .withColumn(idCol, col(idCol).cast(m.schema(idCol).dataType))
         .select(m.schema.fieldNames.map(col): _*)
-        .localCheckpoint(true)
-      (withId, total)
-    } finally mid.unpersist()
+      (if (isLocalPlan(img)) img else img.localCheckpoint(true), total)
+    }
+    if (n > 0) io.commit(path, m.copy(autoInc = m.autoInc + n))
+    (out, m.autoInc, n)
   }
 
-  /** Advance the auto-inc counter without touching data — a
-    * manifest-only commit through the io seam, transactional with the
-    * statement like every other commit. Monotone: never rolls back. */
+  /** Advance the auto-inc counter past explicit ids routed through a
+    * partitioned parent (minted ids reserve their own range: see
+    * [[assignAutoIncIds]]) — a manifest-only commit through the io
+    * seam, transactional with the statement like every other commit.
+    * Monotone: never rolls back. */
   def advanceAutoInc(to: Long): Unit = {
     // monotone, so a lost OCC race just re-reads and retries — two
     // engines advancing one parent's counter concurrently both land

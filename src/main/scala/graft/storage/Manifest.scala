@@ -78,12 +78,8 @@ final case class Manifest(
   def withFiles(f: Seq[String],
       newStats: Map[String, Map[String, Seq[String]]] = Map.empty): Manifest = {
     val listed = f.toSet
-    val autoCol = props.keys.collectFirst {
-      case k if k.startsWith("autoinc.") && !k.startsWith("autoinc.__") =>
-        k.stripPrefix("autoinc.")
-    }
     val bumped = (for {
-      c <- autoCol
+      c <- autoIncCol
       if pkCols.contains(c)
       fld <- schema.fields.find(_.name == c)
       if fld.dataType != org.apache.spark.sql.types.StringType
@@ -95,6 +91,11 @@ final case class Manifest(
     copy(files = f, autoInc = bumped,
       fileStats = (fileStats ++ newStats).filter { case (k, _) => listed(k) })
   }
+
+  /** The column `autoInc` assigns (AUTO_INCREMENT, serial or identity:
+    * an `autoinc.<col>` prop), if the table has one. */
+  def autoIncCol: Option[String] =
+    schema.fieldNames.find(c => props.get(s"autoinc.$c").contains("true"))
 }
 
 object Manifest {

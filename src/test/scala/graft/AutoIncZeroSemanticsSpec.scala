@@ -58,6 +58,38 @@ class AutoIncZeroSemanticsSpec extends SparkSpec {
     intercept[Exception](
       exec(e, "INSERT INTO t SELECT NULL, 'q' FROM t WHERE id = 1"))
     assert(exec(e, "SELECT count(*) FROM t").df.get.as[Long].head() === 3L)
+    // the same rule holds for IGNORE, REPLACE and ODKU
+    exec(e, "INSERT IGNORE INTO t VALUES (NULL, 'i')")
+    exec(e, "REPLACE INTO t VALUES (NULL, 'r')")
+    exec(e, "INSERT INTO t VALUES (NULL, 'o') ON DUPLICATE KEY UPDATE v = 'dup'")
+    assert(exec(e, "SELECT id, v FROM t WHERE id > 3 ORDER BY id").df.get
+      .as[(Long, String)].collect().toSeq === Seq((4L, "i"), (5L, "r"), (6L, "o")))
+    assert(e.getVar("last_insert_id").contains("6"))
+    intercept[Exception](
+      exec(e, "INSERT IGNORE INTO t VALUES (NULL, 'm3'), (60, 'm4')"))
+    // a NULL id is a fresh id: IGNORE arbitrates on the one unique key
+    exec(e, "CREATE TABLE tu (id BIGINT NOT NULL AUTO_INCREMENT, em STRING, " +
+      "PRIMARY KEY (id), UNIQUE KEY uq_em (em))")
+    exec(e, "INSERT INTO tu VALUES (NULL, 'a')")
+    assert(exec(e, "INSERT IGNORE INTO tu VALUES (NULL, 'a'), (NULL, 'b')")
+      .affected === 1L)
+    assert(exec(e, "SELECT em FROM tu ORDER BY em").df.get.as[String]
+      .collect().toSeq === Seq("a", "b"))
+    // and through a partitioned parent, which owns the counter
+    exec(e, "CREATE TABLE pp (id BIGINT NOT NULL AUTO_INCREMENT, v STRING, " +
+      "PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE pp_lo PARTITION OF pp FOR VALUES FROM (0) TO (100)")
+    exec(e, "CREATE TABLE pp_hi PARTITION OF pp FOR VALUES FROM (100) TO (1000)")
+    exec(e, "INSERT INTO pp VALUES (NULL, 'a')")
+    exec(e, "INSERT IGNORE INTO pp VALUES (NULL, 'b')")
+    exec(e, "REPLACE INTO pp VALUES (NULL, 'c')")
+    exec(e, "INSERT INTO pp VALUES (NULL, 'd') ON DUPLICATE KEY UPDATE v = 'dup'")
+    assert(exec(e, "SELECT id, v FROM pp_lo ORDER BY id").df.get
+      .as[(Long, String)].collect().toSeq ===
+      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    intercept[Exception](
+      exec(e, "INSERT IGNORE INTO pp VALUES (NULL, 'm5'), (150, 'm6')"))
+    assert(exec(e, "SELECT count(*) FROM pp").df.get.as[Long].head() === 4L)
   }
 
   test("explicit NULL into a PG identity column stays loud (PG raises)") {

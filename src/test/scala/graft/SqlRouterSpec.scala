@@ -1066,6 +1066,16 @@ class SqlRouterSpec extends SparkSpec {
     exec(e, "CREATE TABLE d1 (id serial PRIMARY KEY, v STRING)")
     exec(e, "INSERT INTO d1 DEFAULT VALUES")
     assert(exec(e, "SELECT id FROM d1").df.get.as[Int].head() === 1)
+    // RETURNING answers the assigned id
+    assert(exec(e, "INSERT INTO d1 DEFAULT VALUES RETURNING id").df.get
+      .as[Int].collect().toSeq === Seq(2))
+    // a partitioned parent routes the one defaulted row
+    exec(e, "CREATE TABLE dp (id serial, v STRING DEFAULT 'dv', " +
+      "PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE dp_lo PARTITION OF dp FOR VALUES FROM (0) TO (100)")
+    exec(e, "INSERT INTO dp DEFAULT VALUES")
+    assert(exec(e, "SELECT id, v FROM dp_lo").df.get.as[(Int, String)]
+      .collect().toSeq === Seq((1, "dv")))
   }
 
   test("UPDATE/DELETE RETURNING answer post-update and deleted-row images") {
@@ -2970,6 +2980,24 @@ class SqlRouterSpec extends SparkSpec {
       "INSERT INTO idt (id, v) OVERRIDING USER VALUE VALUES (99, 'y')")
     assert(exec(e, "SELECT id FROM idt ORDER BY id").df.get
       .as[Long].collect().toSeq === Seq(1L, 10L, 11L, 12L))
+    // the ON CONFLICT forms refuse an explicit ALWAYS id the same way
+    Seq("DO NOTHING", "(id) DO UPDATE SET v = excluded.v").foreach { c =>
+      val exC = intercept[Exception](
+        exec(e, s"INSERT INTO idt (id, v) VALUES (51, 'n') ON CONFLICT $c"))
+      assert(exC.getMessage.contains("GENERATED ALWAYS"), c)
+    }
+    // ... and OVERRIDING USER VALUE assigns from the sequence there too
+    exec(e, "INSERT INTO idt (id, v) OVERRIDING USER VALUE VALUES (98, 'u') " +
+      "ON CONFLICT DO NOTHING")
+    assert(exec(e, "SELECT id FROM idt WHERE v = 'u'").df.get
+      .as[Long].collect().toSeq === Seq(13L))
+    // through a partitioned parent the parent's sequence assigns
+    exec(e, "CREATE TABLE ipp (id BIGINT GENERATED ALWAYS AS IDENTITY, " +
+      "v STRING, PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE ipp_lo PARTITION OF ipp FOR VALUES FROM (0) TO (100)")
+    exec(e, "INSERT INTO ipp (id, v) OVERRIDING USER VALUE VALUES (500, 'p')")
+    assert(exec(e, "SELECT id, v FROM ipp").df.get.as[(Long, String)]
+      .collect().toSeq === Seq((1L, "p")))
     // BY DEFAULT identity keeps accepting explicit ids
     exec(e, "CREATE TABLE idd (id BIGINT GENERATED BY DEFAULT AS " +
       "IDENTITY, v STRING, PRIMARY KEY (id))")

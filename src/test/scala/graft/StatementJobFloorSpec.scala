@@ -77,6 +77,45 @@ class StatementJobFloorSpec extends SparkSpec {
         Seq((2L, "b", 7), (3L, "z", 3)))
       assert(SqlRouter.execute(e, "SELECT id FROM p_hi ORDER BY id")
         .df.get.as[Long].collect().toSeq === Seq(150L, 201L))
+
+      // INSERT-family shapes; bounds are the counts measured before
+      // plain INSERT moved onto the shared write path, plus one
+      val litIns = run("INSERT INTO t VALUES (10, 'lit', 1)")
+      assert(litIns <= 2, s"literal explicit-id INSERT ran $litIns jobs")
+      val selIns = run("INSERT INTO u SELECT id + 100, v, n FROM u")
+      assert(selIns <= 2, s"small INSERT ... SELECT ran $selIns jobs")
+      val autoSel = run("INSERT INTO t (v, n) SELECT v, n FROM u WHERE id > 100")
+      assert(autoSel <= 6,
+        s"omitted-auto INSERT ... SELECT ran $autoSel jobs")
+      val autoRet = run("INSERT INTO t (v, n) VALUES ('ret', 2) RETURNING id",
+        collect = true)
+      assert(autoRet <= 3,
+        s"omitted-auto INSERT ... RETURNING (with the collect) ran $autoRet jobs")
+      val dflt = run("INSERT INTO t DEFAULT VALUES")
+      assert(dflt <= 6, s"INSERT ... DEFAULT VALUES ran $dflt jobs")
+      val routed = run("INSERT INTO p VALUES (3, 'd'), (160, 'e')")
+      assert(routed <= 2,
+        s"literal INSERT into a two-child parent ran $routed jobs")
+      val autoIgn = run("INSERT IGNORE INTO t (v, n) VALUES ('ig', 3)")
+      assert(autoIgn <= 3, s"omitted-auto INSERT IGNORE ran $autoIgn jobs")
+      run("CREATE TABLE pa (id BIGINT NOT NULL AUTO_INCREMENT, v STRING, " +
+        "PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+      run("CREATE TABLE pa_lo PARTITION OF pa FOR VALUES FROM (0) TO (100)")
+      run("CREATE TABLE pa_hi PARTITION OF pa FOR VALUES FROM (100) TO (1000)")
+      val autoRouted = run("INSERT INTO pa (v) VALUES ('a'), ('b')")
+      assert(autoRouted <= 2,
+        s"omitted-auto INSERT into a two-child parent ran $autoRouted jobs")
+      // the omitted-auto literal INSERT mints inside its own commit
+      val h0 = e.table("t").history().size
+      run("INSERT INTO t (v, n) VALUES ('one', 4)")
+      assert(e.table("t").history().size === h0 + 1,
+        "omitted-auto literal INSERT committed more than one manifest version")
+      assert(SqlRouter.execute(e, "SELECT id, v FROM t WHERE id >= 10 " +
+        "AND id NOT IN (11, 12) ORDER BY id").df.get.as[(Long, String)]
+        .collect().toSeq === Seq((10L, "lit"), (13L, "ret"), (14L, null),
+          (15L, "ig"), (16L, "one")))
+      assert(SqlRouter.execute(e, "SELECT id FROM pa_lo ORDER BY id")
+        .df.get.as[Long].collect().toSeq === Seq(1L, 2L))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -416,6 +416,35 @@ class GraftTableSpec extends SparkSpec {
       === Array(1L, 97L, 98L, 99L))
   }
 
+  test("assignAutoIncIds reserves its range: a stale minter fails loudly") {
+    val path = tmpDir("graft_ai_reserve")
+    GraftTable.create(spark, path, schema, Seq("id"))
+    val before = Manifest.load(path)
+    val src = Seq(("a", 1.0), ("b", 2.0)).toDF("name", "v")
+    def ids(t: GraftTable) =
+      t.assignAutoIncIds(src, "id")._1.select("id").as[Long].collect().toSeq
+    assert(ids(new GraftTable(spark, path)) === Seq(1L, 2L))
+    // io seam: this handle's first load answers the manifest as it was
+    // before the other handle's ids were minted
+    var stale = true
+    val late = new GraftTable(spark, path, new Manifest.TableIO {
+      def load(table: java.nio.file.Path): Manifest =
+        if (stale) { stale = false; before } else Manifest.load(table)
+      def commit(table: java.nio.file.Path, m: Manifest): Manifest =
+        Manifest.commit(table, m)
+    })
+    val minted = scala.util.Try(ids(late))
+    assert(minted.failed.toOption
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      s"a stale minter returned $minted (the other handle holds 1, 2)")
+    // a fresh read mints past the reserved range
+    assert(ids(late) === Seq(3L, 4L))
+    // no rows: no reservation commit
+    val v = Manifest.load(path).version
+    late.assignAutoIncIds(src.limit(0), "id")
+    assert(Manifest.load(path).version === v)
+  }
+
   test("time travel refuses an aborted transaction's staged version") {
     val t = freshTable()
     t.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "v"))

@@ -61,7 +61,7 @@ object Bench {
   /** Previous-round per-query band at sf0.1 (round-12 verdict #3):
     * min over the carried floor and the latest measured colds —
     * refreshed in the r19 optimization round from the two
-    * post-optimization back-to-back full epochs (OPTIMIZATION_r19.md),
+    * post-optimization back-to-back full epochs (BENCH_r19*.json),
     * so this round's improvements become next round's regression floor
     * AND the r19 band-outlier re-run trigger.
     * Any cold run exceeding 2x its band lands

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement tool (guide §1.4/§7.2): writes the
   * `.explain("formatted")` output of declared queries to files so
-  * plan claims in OPTIMIZATION_rNN.md are checkable offline.
+  * before/after plan claims are checkable offline.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [nameSubstr,...]
   *

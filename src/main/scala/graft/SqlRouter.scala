@@ -125,11 +125,6 @@ object SqlRouter {
     """(?is)\s*COMMIT(?:\s+WORK)?(?:\s+AND\s+((?:NO\s+)?CHAIN))?(?:\s+(?:NO\s+)?RELEASE)?\s*""".r
   private val RollbackTxn =
     """(?is)\s*ROLLBACK(?:\s+WORK)?(?:\s+AND\s+((?:NO\s+)?CHAIN))?(?:\s+(?:NO\s+)?RELEASE)?\s*""".r
-  // aliased single-table DELETE (PG `DELETE FROM t [AS] x WHERE x...`)
-  // — tried AFTER the plain and join forms, so the "alias" here is a
-  // genuine alias word, never USING/WHERE/etc.
-  private val DeleteAliased =
-    """(?is)\s*DELETE\s+FROM\s+([\w.]+)\s+(?:AS\s+)?([A-Za-z_]\w*)(\s+\S.*)?\s*""".r
   // savepoints — the nested-transaction shape psycopg/ORMs emit. The
   // ROLLBACK TO form must stay distinct from the plain-rollback regex
   // (it is: RollbackTxn's optional groups never match a TO tail).
@@ -226,51 +221,30 @@ object SqlRouter {
   // txn-scoped) is accepted as session scope
   private val SetVariable =
     """(?is)\s*SET\s+(?:@@)?(?:(GLOBAL|SESSION|PERSIST|LOCAL)(?:\s+|\.))?(@?[\w.]+)(?:\s*=\s*|\s+TO\s+)(.+?)\s*""".r
-  // the SET/WHERE boundary is found by a quote-aware scan
-  // (splitSetWhere), not this regex: a WHERE inside a string literal
-  // must not end the SET list
-  private val Update =
-    """(?is)\s*UPDATE\s+([\w.]+)\s+SET\s+(.*)""".r
-  // multi-table UPDATE (MySQL join spelling / PG alias'd target): the
-  // plain Update regex above takes the single-bare-name form first, so
-  // anything landing here has a join spec or alias before SET
-  private object UpdateJoinStmt {
+  // UPDATE and DELETE in every spelling: the extractors only find the
+  // statement; parseUpdate / parseDelete split its clauses quote-aware
+  // into one Mutation
+  private object UpdateStmt {
     /** (table refs, tail after SET) */
-    def unapply(s: String): Option[(String, String)] = {
-      val head = s.dropWhile(_.isWhitespace)
-      if (!head.regionMatches(true, 0, "UPDATE", 0, 6) ||
-        head.length <= 6 || !head.charAt(6).isWhitespace) return None
-      SqlText.splitTop(head.substring(7), "SET") match {
+    def unapply(s: String): Option[(String, String)] =
+      afterKeyword(s, "UPDATE").flatMap(SqlText.splitTop(_, "SET") match {
         case Seq(refs, tail) if refs.trim.nonEmpty => Some((refs.trim, tail.trim))
         case _ => None
-      }
-    }
+      })
   }
-  // multi-table DELETE: `DELETE a FROM <refs>` (MySQL) and
-  // `DELETE FROM t [AS a] USING <refs>` (PG + MySQL's second spelling)
-  private object DeleteJoinStmt {
-    /** (target spec, refs+tail, usingForm) */
-    def unapply(s: String): Option[(String, String, Boolean)] = {
-      val head = s.dropWhile(_.isWhitespace)
-      if (!head.regionMatches(true, 0, "DELETE", 0, 6) ||
-        head.length <= 6 || !head.charAt(6).isWhitespace) return None
-      val body = head.substring(7).trim
-      val usingForm = body.regionMatches(true, 0, "FROM", 0, 4) &&
-        body.length > 4 && body.charAt(4).isWhitespace
-      SqlText.splitTop(if (usingForm) body.substring(5) else body,
-        if (usingForm) "USING" else "FROM") match {
-        case Seq(tgt, refs) if tgt.trim.nonEmpty =>
-          Some((tgt.trim, refs.trim, usingForm))
-        case _ => None
-      }
-    }
+  private object DeleteStmt {
+    /** the text after DELETE */
+    def unapply(s: String): Option[String] = afterKeyword(s, "DELETE")
   }
-  // the whole tail captures raw; the arm splits RETURNING / LIMIT /
-  // ORDER BY / WHERE off it quote-aware (a regex alternation over
-  // those four optional clauses would misread literals). The USING
-  // form falls through to DeleteJoinStmt via the arm's guard.
-  private val Delete =
-    """(?is)\s*DELETE\s+FROM\s+([\w.]+)(\s+\S.*)?\s*""".r
+  private def afterKeyword(s: String, kw: String): Option[String] = {
+    val head = s.dropWhile(_.isWhitespace)
+    val n = kw.length
+    if (head.regionMatches(true, 0, kw, 0, n) && head.length > n &&
+      head.charAt(n).isWhitespace) Some(head.substring(n + 1).trim)
+    else None
+  }
+  // an UPDATE/DELETE target: `name [[AS] alias]`
+  private val TargetRef = """(?is)\s*([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s*""".r
   // MySQL server-maintenance statements clients and maintenance
   // scripts emit (mysqldump --flush-logs/--flush-privileges preambles,
   // mysqlcheck, replication cutover scripts): FLUSH and KILL have no
@@ -1490,250 +1464,8 @@ object SqlRouter {
       val (rest, returning) = splitReturning(rest0)
       insertRows(engine, name, engine.table(name), colList, rest, Append,
         returning)
-    case Update(name, tail0) =>
-      val (tail, returning) = splitReturning(tail0)
-      // MySQL's trailing ORDER BY/LIMIT come off before the SET/WHERE
-      // split (they'd otherwise ride inside the WHERE capture)
-      val (tailO, orderOpt, limitOpt) = splitLimitOrder(tail, "UPDATE")
-      val (setList0, whereOpt) = splitSetWhere(tailO)
-      val pgFrom = SqlText.splitTop(setList0, "FROM") match {
-        case Seq(sets, from) => Some((sets.trim, from.trim))
-        case _ => None
-      }
-      val t = engine.table(name)
-      val m0 = t.manifest
-      val setPairs = parseSetList(pgFrom.map(_._1).getOrElse(setList0))
-      val sets = resolveSets(m0, name, setPairs)
-      // parsed only by the arms that evaluate them here (a fan-out
-      // child or the FROM join parses its own text)
-      lazy val setCols = sets.map { case (c, v) => c -> expr(v) }
-      lazy val cond = whereOpt.map(expr).getOrElse(expr("true"))
-      if (t.partitionBy.isDefined) {
-        // PG routes parent UPDATEs to the children; fan the SAME
-        // statement out per child (each child update is the ordinary
-        // distributed CoW path). RETURNING (round-12 verdict #4) is
-        // the cross-child union of the per-child RETURNING frames —
-        // for row movement it answers the frozen post-SET images.
-        // LIMIT would apply PER CHILD (up to n×children rows — the
-        // same over-application the DELETE arm refuses)
-        require(orderOpt.isEmpty && limitOpt.isEmpty,
-          "UPDATE through a partitioned parent takes no ORDER BY/LIMIT: " +
-            "target the partition directly")
-        val spec = Partitioning.parse(t.partitionBy.get)
-        // guard COLUMNS the key references, not key text — an
-        // expression key `lower(name)` must block `SET name` too (the
-        // per-child __partbound CHECK backstops this loudly anyway)
-        val moved = Partitioning.keyColumns(spec, m0.schema.fieldNames.toSeq)
-          .filter(c => sets.keys.exists(_.equalsIgnoreCase(c)))
-        if (moved.nonEmpty) {
-          // PG ≥11 row movement: an UPDATE that changes the partition
-          // key deletes the matched originals and routes the post-SET
-          // images back through the parent's bounds — the exact
-          // mechanism PG documents (DELETE + re-routed INSERT). The
-          // images are frozen FIRST and validated routable to full
-          // subpartition depth with a no-op writer BEFORE any delete,
-          // so an out-of-bounds SET fails loudly with nothing changed.
-          // FROM-joined movement stays loud (the per-child fan-out
-          // can't see the join, and the single-table rewrite here
-          // can't see the FROM list).
-          require(pgFrom.isEmpty, "UPDATE ... FROM cannot move rows " +
-            "between partitions: target the partition directly")
-          // generated columns recompute in the image BEFORE routing —
-          // a generated partition key must route on its fresh value
-          // (each child's insert recomputes them too, and its
-          // __partbound CHECK backstops the placement)
-          val (images, local) = freezeImages(engine.spark,
-            t.rowImage(engine.tableFrame(name).filter(cond), setCols))
-          val nMoved = local.fold(images.count())(_.length.toLong)
-          if (nMoved == 0L) return Result(returned(returning, images), 0L)
-          routeFrame(engine, name, t, images, (_, _) => 0L)
-          // inherited CHECKs validate on the images BEFORE the delete
-          // too — a violating SET must abort with nothing changed
-          // (cast/expression errors already fired at the freeze above;
-          // partition bounds at the no-op route)
-          t.enforceChecks(m0, images)
-          val del = s"DELETE FROM $name" +
-            whereOpt.map(w => s" WHERE $w").getOrElse("")
-          // the delete and the re-insert publish ATOMICALLY: inside a
-          // user transaction they stage with it; in autocommit an
-          // internal transaction wraps them (PG's row movement is one
-          // statement — a crash between the two halves must not lose
-          // the moved rows)
-          val ownTxn = !engine.inTransaction
-          if (ownTxn) engine.begin()
-          try {
-            executeRouted(engine, del, del)
-            routeFrame(engine, name, engine.table(name), images,
-              _.insert(_))
-            if (ownTxn) engine.commit()
-          } catch {
-            case scala.util.control.NonFatal(ex2) =>
-              if (ownTxn && engine.inTransaction) engine.rollback()
-              throw ex2
-          }
-          // movement RETURNING = the frozen post-SET images (PG
-          // returns the NEW rows)
-          return Result(returned(returning, images), nMoved)
-        }
-        // fan out WITH the returning tail: each child answers its own
-        // stored images, the parent unions them (disjoint children)
-        return fanToChildren(engine, name, t)(c => s"UPDATE $c SET $tail0")
-      }
-      if (pgFrom.isDefined) {
-        // PG UPDATE ... FROM: the target joins the FROM list on the
-        // WHERE condition (DuckDB speaks this too — oracle-checkable).
-        // Neither MySQL's multi-table UPDATE nor PG's FROM form takes
-        // ORDER BY/LIMIT.
-        require(orderOpt.isEmpty && limitOpt.isEmpty,
-          "UPDATE ... FROM does not take ORDER BY/LIMIT")
-        return updateViaJoin(engine, name, name.split('.').last,
-          s"$name, ${pgFrom.get._2}", setPairs, whereOpt, returning)
-      }
-      // `SET t.id = 7` resolves to the PK column here too, or the
-      // staged path would reject a statement the classic arm handles
-      val touchesPk = m0.pkCols.exists(p => sets.keys.exists(_.equalsIgnoreCase(p)))
-      if (orderOpt.isDefined || limitOpt.isDefined) {
-        // MySQL `UPDATE ... [ORDER BY ...] LIMIT n`: the matched slice
-        // stages through the merge path (PK-keyed; PK-changing SETs
-        // would re-key the merge and are refused)
-        require(m0.pkCols.nonEmpty && !touchesPk,
-          "UPDATE with ORDER BY/LIMIT needs a PRIMARY KEY and non-PK SETs")
-        var matched = t.read().filter(cond)
-        orderOpt.foreach(o => matched = matched.sort(parseSortCols(o): _*))
-        limitOpt.foreach(nm => matched = matched.limit(nm))
-        return stageMergeImages(t, t.rowImage(matched, setCols), action = 1,
-          returning)
-      }
-      if (returning.isDefined && m0.pkCols.nonEmpty && !touchesPk)
-        // RETURNING answers the STORED images exactly (volatile SET
-        // expressions included): stage through the merge path, which
-        // materializes the post-image frame once for write and read
-        return updateViaJoin(engine, name, name.split('.').last, name,
-          setPairs, whereOpt, returning)
-      // RETURNING here (only the keyless / pk-touching tables reach
-      // this arm with it — pk tables took the staged path above)
-      // re-applies the row image over the frozen pre-update file list.
-      // Caveat: a VOLATILE set expression (uuid(), rand()) re-evaluates
-      // and may differ from the stored value on THESE tables;
-      // deterministic expressions match exactly.
-      val pre = returning.map(_ => t.read().filter(cond))
-      val n = t.update(cond, setCols)
-      Result(returned(returning, t.rowImage(pre.get, setCols)), n)
-    case UpdateJoinStmt(refs, tailAfterSet) =>
-      // MySQL `UPDATE a JOIN b ON ... SET a.x = ...` and the alias'd
-      // PG forms. Which table is the target follows from the SET
-      // columns' qualifiers (exactly one table may be written).
-      val (tail1, returning) = splitReturning(tailAfterSet)
-      val (setList1, whereOpt) = splitSetWhere(tail1)
-      val (setPart, fromOpt) = SqlText.splitTop(setList1, "FROM") match {
-        case Seq(sets, from) => (sets, Some(from))
-        case _ => (setList1, None)
-      }
-      val sets = parseSetList(setPart)
-      require(sets.nonEmpty, s"empty SET list: UPDATE $refs SET $tailAfterSet")
-      val refsList = joinRefs(refs)
-      require(refsList.nonEmpty, s"cannot parse UPDATE table references: $refs")
-      val quals = sets.collect {
-        case (k, _) if k.contains('.') =>
-          k.substring(0, k.lastIndexOf('.')).replace("`", "")
-      }.map(_.toLowerCase).distinct
-      val (target, alias) = quals match {
-        case Seq() => refsList.head
-        case Seq(q) => refsList.find(r => r._2.equalsIgnoreCase(q) ||
-          r._1.equalsIgnoreCase(q) || r._1.split('.').last.equalsIgnoreCase(q))
-          .getOrElse(throw new IllegalArgumentException(
-            s"SET qualifier $q names no table in: $refs"))
-        case many => throw new IllegalArgumentException(
-          s"UPDATE writing several tables (${many.mkString(", ")}) " +
-            "is not supported — one statement per target")
-      }
-      val joinSrc = refs + fromOpt.map(f => s", ${f.trim}").mkString
-      updateViaJoin(engine, target, alias, joinSrc, sets, whereOpt, returning)
-    case Delete(name, tailRaw) if Option(tailRaw).map(_.trim).forall(x =>
-        // single-table tails only: WHERE/ORDER/LIMIT/RETURNING or
-        // nothing. Anything else — `USING ...`, `AS x USING ...`, a
-        // bare alias — belongs to DeleteJoinStmt (or fails loudly
-        // there), never to this arm's tail parser.
-        x.isEmpty || {
-          val w = x.takeWhile(!_.isWhitespace).toUpperCase
-          Set("WHERE", "ORDER", "LIMIT", "RETURNING")(w)
-        }) =>
-      val t = engine.table(name)
-      val (whereOpt, orderOpt, limitOpt, returning) =
-        parseDmlTail(Option(tailRaw).getOrElse(""), "DELETE")
-      if (t.partitionBy.isDefined) {
-        // parent DELETE fans out per child (PG semantics). RETURNING
-        // (round-12 verdict #4) is the cross-child union of the
-        // per-child RETURNING frames — each child freezes its own
-        // pre-delete images. LIMIT would apply per child
-        // (over-deleting) and stays refused loudly.
-        require(orderOpt.isEmpty && limitOpt.isEmpty,
-          "DELETE through a partitioned parent takes only WHERE " +
-            "[RETURNING]: target the partition for ORDER BY/LIMIT")
-        val tl = Option(tailRaw).getOrElse("")
-        return fanToChildren(engine, name, t)(c => s"DELETE FROM $c $tl")
-      }
-      val cond = whereOpt.map(expr).getOrElse(expr("true"))
-      if (orderOpt.isEmpty && limitOpt.isEmpty) {
-        // deleted-row images: frozen pre-delete file list (built only
-        // when RETURNING is present)
-        val pre = returning.map(_ => t.read().filter(cond))
-        val n = t.delete(cond)
-        Result(returned(returning, pre.get), n)
-      } else {
-        // MySQL `DELETE ... [ORDER BY ...] LIMIT n` — the batched-
-        // delete shape. The matched slice stages through the merge
-        // path keyed on the PK (a keyless table would delete every
-        // duplicate of a limited row's image — refused instead).
-        val m = t.manifest
-        require(m.pkCols.nonEmpty,
-          "DELETE with ORDER BY/LIMIT needs a PRIMARY KEY")
-        var matched = t.read().filter(cond)
-        orderOpt.foreach(o => matched = matched.sort(parseSortCols(o): _*))
-        limitOpt.foreach(nm => matched = matched.limit(nm))
-        stageMergeImages(t,
-          matched.select(m.schema.fieldNames.map(col): _*),
-          action = 0, returning)
-      }
-    case DeleteAliased(name, alias, tailRaw)
-      if Option(tailRaw).map(_.trim).forall(x => x.isEmpty || {
-        val w = x.takeWhile(!_.isWhitespace).toUpperCase
-        Set("WHERE", "RETURNING")(w)
-      }) && !Set("WHERE", "ORDER", "LIMIT", "RETURNING", "USING")(
-        alias.toUpperCase) =>
-      // aliased single-table DELETE rides the join-delete machinery
-      // with the one-table join source (alias-qualified refs resolve)
-      val (whereOpt, _, _, returning) =
-        parseDmlTail(Option(tailRaw).getOrElse(""), "DELETE")
-      deleteViaJoin(engine, name, alias, s"$name AS $alias",
-        whereOpt, returning)
-    case DeleteJoinStmt(targetSpec0, refsAndTail, usingForm) =>
-      // MySQL `DELETE a FROM a JOIN b ...` / `DELETE FROM a USING a
-      // JOIN b ...` and PG `DELETE FROM a [AS x] USING b WHERE ...`
-      val (refsAndTail1, returning) = splitReturning(refsAndTail)
-      val (refs, whereOpt) = splitSetWhere(refsAndTail1)
-      val refsList = joinRefs(refs)
-      require(refsList.nonEmpty, s"cannot parse DELETE table references: $refs")
-      val targetSpec = targetSpec0.stripSuffix(".*").trim
-      require(!targetSpec.contains(","),
-        "DELETE from several tables in one statement is not supported " +
-          "— one statement per target")
-      if (usingForm) {
-        val Seq((tname, talias)) = joinRefs(targetSpec)
-        // MySQL repeats the target inside USING; PG does not — add it
-        // to the join source only when absent
-        val present = refsList.exists(r => r._1.equalsIgnoreCase(tname) ||
-          r._2.equalsIgnoreCase(talias))
-        val joinSrc = if (present) refs else s"$targetSpec, $refs"
-        deleteViaJoin(engine, tname, talias, joinSrc, whereOpt, returning)
-      } else {
-        val r = refsList.find(x => x._2.equalsIgnoreCase(targetSpec) ||
-          x._1.equalsIgnoreCase(targetSpec) ||
-          x._1.split('.').last.equalsIgnoreCase(targetSpec))
-          .getOrElse(throw new IllegalArgumentException(
-            s"DELETE target $targetSpec names no table in: $refs"))
-        deleteViaJoin(engine, r._1, r._2, refs, whereOpt, returning)
-      }
+    case UpdateStmt(refs, tail) => mutate(engine, parseUpdate(refs, tail))
+    case DeleteStmt(body) => mutate(engine, parseDelete(body))
     case VersionQuery(name, v) =>
       val t = engine.table(name)
       // a partitioned parent holds no files at ANY version — its
@@ -2930,7 +2662,8 @@ object SqlRouter {
 
   /** Target table of an autocommit-batchable DML statement. REPLACE /
     * INSERT IGNORE / ON DUPLICATE KEY are included — they stage through
-    * the same table txn API; LOAD/COPY are not (their own bulk commit
+    * the same table txn API; UPDATE and DELETE name the target their
+    * Mutation parse finds; LOAD/COPY are not (their own bulk commit
     * is already one version). */
   private def dmlTarget(stmt: String): Option[String] = {
     val s = stripIdentQuotes(stmt)
@@ -2941,8 +2674,10 @@ object SqlRouter {
       case Insert(name, _, _) => Some(name)
       case InsertSet(name, _) => Some(name)
       case ReplaceSet(name, _) => Some(name)
-      case Update(name, _) => Some(name)
-      case Delete(name, _, _) => Some(name)
+      // a statement that does not parse runs (and fails) on its own
+      case UpdateStmt(refs, tail) =>
+        scala.util.Try(parseUpdate(refs, tail).target).toOption
+      case DeleteStmt(body) => scala.util.Try(parseDelete(body).target).toOption
       case _ => None
     }
   }
@@ -3575,19 +3310,6 @@ object SqlRouter {
       (l: graft.storage.GraftTable) => s"maintenance of ${l.path}")(f)
   }
 
-  /** Parent UPDATE/DELETE: the same statement (`stmtFor` gets the
-    * child's name) runs on every partition child. Children are
-    * INDEPENDENT tables (disjoint dirs/manifests/key spaces), so they
-    * overlap through [[Engine.fanOut]]; each answers its own RETURNING
-    * images, unioned in declaration order. */
-  private def fanToChildren(engine: Engine, name: String,
-      t: graft.storage.GraftTable)(stmtFor: String => String): Result =
-    unionResults(engine.fanOut(t.partitionChildren.map(_._1), 8,
-        (c: String) => s"statement on partition child '$c' of $name") { c =>
-      val s2 = stmtFor(childRef(name, c))
-      executeRouted(engine, s2, s2)
-    })
-
   /** Per-child results of one parent write, in child declaration
     * order: affected rows add up, RETURNING frames union. */
   private def unionResults(rs: Seq[Result]): Result =
@@ -3747,7 +3469,7 @@ object SqlRouter {
 
   /** Freeze a row-image plan so the write, the count and RETURNING all
     * read the same rows — the one rule of UPDATE row movement, the
-    * staged merge path ([[stageMergeImages]]) and an append's
+    * staged merge path ([[stageImages]]) and an append's
     * RETURNING. A STABLE plan of at most
     * [[SmallMergeSourceRows]] rows folds into a LocalRelation from ONE
     * bounded collect (r19: the unconditional checkpoint + count was
@@ -4147,90 +3869,296 @@ object SqlRouter {
     refs.toSeq
   }
 
-  /** Multi-table UPDATE core (MySQL `UPDATE a JOIN b ... SET ...`
-    * — GMS surface `/root/reference/main_test.go:948` —, PG
-    * `UPDATE t SET ... FROM ...`, and the staged single-table form):
-    * the join evaluates as an ordinary distributed Catalyst join
-    * projecting ONE post-image row per target PK, and the image set
-    * applies through the same CDC merge path C7 uses — touched-PK
-    * file pruning, generated-column recompute, CHECK enforcement,
-    * the txn io seam. 100 TB: the join shuffles on its own keys
-    * (broadcast when a side is small), then CoW rewrites only files
-    * containing touched keys; nothing driver-sized anywhere. The
-    * staged frame is frozen ONCE ([[freezeImages]]), so the count,
-    * the merge, and RETURNING all read the same rows — RETURNING is
-    * exact even for volatile SET expressions. */
-  private def updateViaJoin(engine: Engine, target: String, alias: String,
-      joinSrc: String, pairs: Seq[(String, String)], where: Option[String],
-      returning: Option[String]): Result = {
-    val t = engine.table(target)
-    val m = t.manifest
-    require(m.pkCols.nonEmpty,
-      s"multi-table UPDATE needs a PRIMARY KEY on $target")
-    val sets = resolveSets(m, target, pairs)
-    sets.keys.find(k => m.pkCols.exists(_.equalsIgnoreCase(k))).foreach { k =>
-      throw new IllegalArgumentException(
-        s"updating primary-key column $k through a join UPDATE is not supported")
+  /** One UPDATE or DELETE, parsed: every spelling of both statements
+    * (single-table, aliased, MySQL multi-table, PG FROM / USING) comes
+    * out as this value, and [[mutateRows]] alone executes it. `binding`
+    * is the name the statement's text gives the target: its alias, else
+    * the bare table name. `join` is the whole join source (target
+    * included) of the multi-table forms; `sets` the SET pairs, None for
+    * DELETE. */
+  private final case class Mutation(target: String, binding: String,
+      join: Option[String], where: Option[String], orderBy: Option[String],
+      limit: Option[Int], sets: Option[Seq[(String, String)]],
+      returning: Option[String])
+
+  /** `UPDATE <refs> SET <tail>` — `refs` is the target, optionally
+    * aliased, or a join (MySQL); `tail` may carry PG's FROM list. With
+    * several tables the SET columns' qualifiers name the target (exactly
+    * one table may be written). */
+  private def parseUpdate(refs: String, tail0: String): Mutation = {
+    val (tail1, returning) = splitReturning(tail0)
+    // MySQL's trailing ORDER BY/LIMIT come off before the SET/WHERE
+    // split (they'd otherwise ride inside the WHERE capture)
+    val (tail, orderBy, limit) = splitLimitOrder(tail1, "UPDATE")
+    val (setList, where) = splitSetWhere(tail)
+    val (setPart, from) = SqlText.splitTop(setList, "FROM") match {
+      case Seq(sets, f) => (sets, Some(f.trim))
+      case _ => (setList, None)
     }
+    val sets = parseSetList(setPart)
+    require(sets.nonEmpty, s"empty SET list: UPDATE $refs SET $tail0")
+    val refsList = joinRefs(refs)
+    require(refsList.nonEmpty, s"cannot parse UPDATE table references: $refs")
+    val quals = sets.collect {
+      case (k, _) if k.contains('.') =>
+        k.substring(0, k.lastIndexOf('.')).replace("`", "")
+    }.map(_.toLowerCase).distinct
+    val (target, binding) = quals match {
+      case Seq() => refsList.head
+      case Seq(q) => refsList.find(r => r._2.equalsIgnoreCase(q) ||
+          r._1.equalsIgnoreCase(q) || r._1.split('.').last.equalsIgnoreCase(q))
+        .getOrElse(throw new IllegalArgumentException(
+          s"SET qualifier $q names no table in: $refs"))
+      case many => throw new IllegalArgumentException(
+        s"UPDATE writing several tables (${many.mkString(", ")}) " +
+          "is not supported — one statement per target")
+    }
+    val join = if (refsList.size > 1 || from.isDefined)
+      Some(refs + from.map(f => s", $f").mkString) else None
+    Mutation(target, binding, join, where, orderBy, limit, Some(sets),
+      returning)
+  }
+
+  /** `DELETE FROM t [[AS] x] [tail]`, `DELETE FROM t [[AS] x] USING
+    * <refs> [tail]` (PG; MySQL's second spelling repeats the target in
+    * the USING list) and MySQL's `DELETE t FROM <refs> [tail]`. */
+  private def parseDelete(body: String): Mutation = {
+    val (body1, returning) = splitReturning(body)
+    val (rest, orderBy, limit) = splitLimitOrder(body1, "DELETE")
+    def unsupported =
+      new IllegalArgumentException(s"unsupported DELETE: DELETE $body")
+    def target(spec: String) = spec match {
+      case TargetRef(name, alias) =>
+        (name, Option(alias).getOrElse(name.split('.').last))
+      case _ => throw unsupported
+    }
+    def mutation(name: String, binding: String, join: Option[String],
+        where: Option[String]) =
+      Mutation(name, binding, join, where, orderBy, limit, None, returning)
+    val from = afterKeyword(rest, "FROM")
+    // (target spec, join refs, WHERE)
+    val (spec, refs, where) = from.fold(SqlText.splitTop(rest, "FROM"))(
+        SqlText.splitTop(_, "USING")) match {
+      case Seq(spec, refsTail) if spec.trim.nonEmpty =>
+        val (refs, where) = splitSetWhere(refsTail)
+        (spec, Some(refs), where)
+      case Seq(single) if from.isDefined =>
+        val (spec, where) = splitSetWhere(single)
+        (spec, None, where)
+      case _ => throw unsupported
+    }
+    val tspec = spec.trim.stripSuffix(".*").trim
+    refs.fold {
+      val (name, binding) = target(tspec)
+      mutation(name, binding, None, where)
+    } { refs =>
+      require(!tspec.contains(","),
+        "DELETE from several tables in one statement is not supported " +
+          "— one statement per target")
+      val refsList = joinRefs(refs)
+      require(refsList.nonEmpty, s"cannot parse DELETE table references: $refs")
+      refsList.find(x => x._2.equalsIgnoreCase(tspec) ||
+          x._1.equalsIgnoreCase(tspec) ||
+          x._1.split('.').last.equalsIgnoreCase(tspec)) match {
+        case Some((name, binding)) => mutation(name, binding, Some(refs), where)
+        case None =>
+          // PG's USING list does not repeat the target: add it
+          require(from.isDefined,
+            s"DELETE target $tspec names no table in: $refs")
+          val (name, binding) = target(tspec)
+          mutation(name, binding, Some(s"$tspec, $refs"), where)
+      }
+    }
+  }
+
+  private def mutate(engine: Engine, mu: Mutation): Result =
+    mutateRows(engine, mu.target, engine.table(mu.target), mu)
+
+  /** The one execution path of UPDATE and DELETE in every spelling —
+    * the twin of [[writeRows]]. `name`/`t` is the table this call
+    * writes: the target, or one of its partition children.
+    *  - Binding: the target's rows are named `mu.binding` wherever
+    *    WHERE, SET values and ORDER BY evaluate over them, so the
+    *    analyzer resolves alias- and self-qualified references (also
+    *    from inside a correlated subquery) and those forms need no join
+    *    and no key.
+    *  - Arm: the plain copy-on-write `update`/`delete`, unless the
+    *    statement joins, has ORDER BY/LIMIT, or asks RETURNING of a
+    *    keyed UPDATE that keeps its key. Those stage one image per key
+    *    through the merge ([[stageImages]]), which needs a PRIMARY KEY
+    *    and leaves its columns unset.
+    *  - Partitioned parent: the plain arm runs the same Mutation on
+    *    every child through [[Engine.fanOut]] (children are independent
+    *    tables); the staged arm builds its images once over the
+    *    parent's union frame and routes them to the leaves; an UPDATE
+    *    of the partition key moves rows ([[moveRows]]). ORDER BY/LIMIT
+    *    would apply per child and is refused.
+    *  - RETURNING: the stored post-images (UPDATE) or the removed rows
+    *    (DELETE), unioned across children in declaration order. */
+  private def mutateRows(engine: Engine, name: String,
+      t: graft.storage.GraftTable, mu: Mutation): Result = {
+    val m = t.manifest
+    val verb = if (mu.sets.isDefined) "UPDATE" else "DELETE"
+    val sets = mu.sets.fold(Map.empty[String, String])(resolveSets(m, name, _))
+    // the given columns this statement assigns
+    def assigned(cols: Seq[String]) =
+      cols.filter(c => sets.keys.exists(_.equalsIgnoreCase(c)))
+    lazy val cond = mu.where.fold(lit(true))(expr)
+    lazy val setCols = sets.map { case (c, v) => c -> expr(v) }
+    val ordered = mu.orderBy.isDefined || mu.limit.isDefined
+    val partitionBy = m.props.get("partition.by")
+    partitionBy.foreach { by =>
+      require(!ordered, s"$verb through a partitioned parent takes no " +
+        "ORDER BY/LIMIT: target the partition directly")
+      // guard COLUMNS the key references, not key text — an expression
+      // key `lower(name)` must block `SET name` too
+      if (assigned(Partitioning.keyColumns(Partitioning.parse(by),
+          m.schema.fieldNames.toSeq)).nonEmpty) {
+        require(mu.join.isEmpty, "UPDATE ... FROM cannot move rows " +
+          "between partitions: target the partition directly")
+        return moveRows(engine, name, t, mu, cond, setCols)
+      }
+    }
+    if (mu.join.isDefined || ordered || (mu.returning.isDefined &&
+        mu.sets.isDefined && m.pkCols.nonEmpty && assigned(m.pkCols).isEmpty)) {
+      require(mu.join.isEmpty || !ordered,
+        s"a multi-table $verb takes no ORDER BY/LIMIT")
+      require(m.pkCols.nonEmpty,
+        s"$verb with a join or ORDER BY/LIMIT needs a PRIMARY KEY on $name")
+      assigned(m.pkCols).headOption.foreach { k =>
+        throw new IllegalArgumentException(s"updating primary-key column " +
+          s"$k with a join or ORDER BY/LIMIT is not supported")
+      }
+      val images = mu.join.fold {
+        var matched = engine.tableFrame(name).as(mu.binding).filter(cond)
+        mu.orderBy.foreach(o => matched = matched.sort(parseSortCols(o): _*))
+        mu.limit.foreach(n => matched = matched.limit(n))
+        t.rowImage(matched, setCols)
+      }(joinImages(engine, t, m, mu, sets, _))
+      return stageImages(engine, name, t, partitionBy.isDefined, mu, images)
+    }
+    if (partitionBy.isDefined)
+      return unionResults(engine.fanOut(t.partitionChildren.map(_._1), 8,
+          (c: String) => s"statement on partition child '$c' of $name") { c =>
+        val ref = childRef(name, c)
+        mutateRows(engine, ref, engine.table(ref), mu)
+      })
+    // RETURNING reads the frozen pre-statement file list; an UPDATE
+    // re-applies its row image to it. Caveat: a VOLATILE SET
+    // expression (uuid(), rand()) re-evaluates and may differ from the
+    // stored value — only keyless or key-changing UPDATEs reach this
+    // arm with RETURNING (the others staged above)
+    val pre = mu.returning.map(_ => t.read().as(mu.binding).filter(cond))
+    if (mu.sets.isEmpty) {
+      val n = t.delete(cond, Some(mu.binding))
+      Result(returned(mu.returning, pre.get), n)
+    } else {
+      val n = t.update(cond, setCols, Some(mu.binding))
+      Result(returned(mu.returning, t.rowImage(pre.get, setCols)), n)
+    }
+  }
+
+  /** PG ≥11 row movement: an UPDATE of a partitioned parent's key
+    * deletes the matched originals and routes the post-SET images back
+    * through the parent's bounds — the mechanism PG documents (DELETE
+    * + re-routed INSERT). The images freeze FIRST (generated columns
+    * recomputed, so a generated key routes on its fresh value), route
+    * to full subpartition depth through a no-op writer and pass the
+    * inherited CHECKs, all BEFORE the delete: an out-of-bounds or
+    * violating SET fails with nothing changed. The delete (the plain
+    * parent DELETE of the same WHERE) and the re-insert publish
+    * ATOMICALLY: inside a user transaction they stage with it, in
+    * autocommit an internal transaction wraps them. RETURNING answers
+    * the frozen images (PG returns the NEW rows). */
+  private def moveRows(engine: Engine, name: String,
+      t: graft.storage.GraftTable, mu: Mutation, cond: Column,
+      setCols: Map[String, Column]): Result = {
+    val (images, local) = freezeImages(engine.spark,
+      t.rowImage(engine.tableFrame(name).as(mu.binding).filter(cond), setCols))
+    val n = local.fold(images.count())(_.length.toLong)
+    if (n == 0L) return Result(returned(mu.returning, images), 0L)
+    routeFrame(engine, name, t, images, (_, _) => 0L)
+    t.enforceChecks(t.manifest, images)
+    val ownTxn = !engine.inTransaction
+    if (ownTxn) engine.begin()
+    try {
+      mutateRows(engine, name, engine.table(name),
+        mu.copy(sets = None, returning = None))
+      routeFrame(engine, name, engine.table(name), images, _.insert(_))
+      if (ownTxn) engine.commit()
+    } catch {
+      case scala.util.control.NonFatal(ex) =>
+        if (ownTxn && engine.inTransaction) engine.rollback()
+        throw ex
+    }
+    Result(returned(mu.returning, images), n)
+  }
+
+  /** A join statement's images: the join evaluates as an ordinary
+    * distributed Catalyst join (broadcast when a side is small)
+    * projecting the target's columns — UPDATE's SET values in place,
+    * cast and derived like every other image — and collapses to ONE
+    * row per target key. Several matches per key leave an arbitrary
+    * winner (MySQL and PG both leave the pick unspecified); the
+    * collapse counts them in `__fan` within the same hash-agg pass, so
+    * [[stageImages]] can say so. */
+  private def joinImages(engine: Engine, t: graft.storage.GraftTable,
+      m: graft.storage.Manifest, mu: Mutation, sets: Map[String, String],
+      join: String): DataFrame = {
     val proj = m.schema.fieldNames.map { f =>
-      sets.get(f).fold(s"$alias.`$f`")(v => s"($v)") + s" AS `$f`"
+      sets.get(f).fold(s"${mu.binding}.`$f`")(v => s"($v)") + s" AS `$f`"
     }.mkString(", ")
-    val sql = s"SELECT $proj FROM $joinSrc" +
-      where.map(w => s" WHERE $w").getOrElse("")
-    // the SET values, evaluated by the join, cast and derive like
-    // every other image
-    val raw0 = t.rowImage(engine.sql(PgCompat.rewriteQuery(engine, sql)),
+    val sql = s"SELECT $proj FROM $join" + mu.where.fold("")(w => s" WHERE $w")
+    val img = t.rowImage(engine.sql(PgCompat.rewriteQuery(engine, sql)),
       sets.map { case (c, _) => c -> col(c) })
-    // several join matches per key collapse to one arbitrary winner —
-    // both MySQL and PG leave the pick unspecified — but the collapse
-    // is DETECTED (round-9 verdict #7): the dedup aggregation carries a
-    // per-key match count in the SAME hash-agg pass (first() keeps the
-    // partial/map-side-combine shape dropDuplicates had), and a fan-out
-    // > 1 records a SHOW WARNINGS note naming the count, so the one
-    // place nondeterminism can reach stored data is no longer silent.
     val dataCols = m.schema.fieldNames.filterNot(m.pkCols.contains)
-    val raw = raw0.groupBy(m.pkCols.map(col): _*)
+    img.groupBy(m.pkCols.map(col): _*)
       .agg(count(lit(1)).as("__fan"),
         dataCols.map(c => first(col(c)).as(c)).toIndexedSeq: _*)
       .select((m.schema.fieldNames.map(col) :+ col("__fan")).toIndexedSeq: _*)
-    stageMergeImages(t, raw, action = 1, returning, fanWarn = Some(engine))
   }
 
-  /** Stage a row-image frame (schema order; [[updateViaJoin]] adds its
-    * `__fan` match count) through the merge path: ONE freeze shared by
-    * the write, the count, and RETURNING — volatile expressions stay
-    * exact. */
-  private def stageMergeImages(t: graft.storage.GraftTable, img: DataFrame,
-      action: Int, returning: Option[String],
-      fanWarn: Option[Engine] = None): Result = {
-    val hasFan = img.columns.contains("__fan")
-    val (staged, localRows) = freezeImages(t.spark, img)
-    // one pass over the materialized frame serves the affected count
-    // AND the multi-match diagnostic — driver-side when local (no job)
+  /** Apply a staged statement's images (schema order, plus a join's
+    * `__fan`) through the merge — UPDATE upserts them, DELETE removes
+    * their keys — after ONE freeze shared by the write, the count and
+    * RETURNING, so volatile SET values stay exact. On a partitioned
+    * `parent` each image routes to the leaf holding its key
+    * ([[routeFrame]]). A join UPDATE that matched some key several
+    * times records a SHOW WARNINGS Note. */
+  private def stageImages(engine: Engine, name: String,
+      t: graft.storage.GraftTable, parent: Boolean, mu: Mutation,
+      img: DataFrame): Result = {
+    val (staged, localRows) = freezeImages(engine.spark, img)
+    // one pass over the frozen frame serves the affected count AND the
+    // multi-match diagnostic — driver-side when local (no job)
     val fanIdx = img.schema.fieldNames.indexOf("__fan")
     val (n, fan) = localRows match {
-      case Some(rows) if hasFan =>
-        val mx = rows.iterator.filter(!_.isNullAt(fanIdx))
-          .map(_.getLong(fanIdx)).foldLeft(1L)(math.max)
-        (rows.length.toLong, mx)
+      case Some(rows) if fanIdx >= 0 =>
+        (rows.length.toLong, rows.iterator.filter(!_.isNullAt(fanIdx))
+          .map(_.getLong(fanIdx)).foldLeft(1L)(math.max))
       case Some(rows) => (rows.length.toLong, 1L)
-      case None if hasFan =>
+      case None if fanIdx >= 0 =>
         val r = staged.agg(count(lit(1)), max(col("__fan"))).head()
         (r.getLong(0), if (r.isNullAt(1)) 1L else r.getLong(1))
       case None => (staged.count(), 1L)
     }
-    if (fan > 1) fanWarn.foreach(_.addWarning("Note", 1706,
+    if (fan > 1 && mu.sets.isDefined) engine.addWarning("Note", 1706,
       s"$fan join matches collapsed to one row for at least one " +
         s"${t.path.getFileName} primary key; the surviving value is " +
-        "unspecified (both MySQL and PostgreSQL leave this pick open)"))
-    val clean = if (hasFan) staged.drop("__fan") else staged
-    if (n > 0) t.merge(clean.withColumn("action", lit(action)))
-    Result(returned(returning, clean), n)
+        "unspecified (both MySQL and PostgreSQL leave this pick open)")
+    val clean = if (fanIdx >= 0) staged.drop("__fan") else staged
+    if (n > 0) {
+      val action = lit(if (mu.sets.isDefined) 1 else 0)
+      def apply(lt: graft.storage.GraftTable, rows: DataFrame) =
+        lt.merge(rows.withColumn("action", action))
+      if (parent) routeFrame(engine, name, t, clean, apply)
+      else apply(t, clean)
+    }
+    Result(returned(mu.returning, clean), n)
   }
 
-  /** Trailing `[ORDER BY items] [LIMIT n]` split quote-aware off a DML
-    * tail — shared by the UPDATE arm and [[parseDmlTail]] so the two
-    * paths can never drift. Returns (rest, orderItems, limit). */
+  /** Trailing `[ORDER BY items] [LIMIT n]` split quote-aware off an
+    * UPDATE or DELETE. Returns (rest, orderItems, limit). */
   private def splitLimitOrder(tail: String, what: String)
       : (String, Option[String], Option[Int]) = {
     val (t2, limitOpt) = SqlText.splitTop(tail, "LIMIT") match {
@@ -4250,27 +4178,6 @@ object SqlRouter {
     (t3, orderOpt, limitOpt)
   }
 
-  /** DML tail parser: `[WHERE cond] [ORDER BY items] [LIMIT n]
-    * [RETURNING exprs]` split quote-aware off a raw captured tail —
-    * anything left over fails loudly (the regex capture is the whole
-    * tail, so an unrecognized clause must never silently vanish). */
-  private def parseDmlTail(tail0: String, what: String)
-      : (Option[String], Option[String], Option[Int], Option[String]) = {
-    val (t1, returning) = splitReturning(tail0)
-    val (t3, orderOpt, limitOpt) = splitLimitOrder(t1, what)
-    val w = t3.trim
-    val whereOpt =
-      if (w.isEmpty) None
-      else {
-        require(w.regionMatches(true, 0, "WHERE", 0, 5) && w.length > 5 &&
-          w.charAt(5).isWhitespace, s"unsupported $what tail: $w")
-        val c = w.substring(6).trim
-        require(c.nonEmpty, "empty WHERE clause")
-        Some(c)
-      }
-    (whereOpt, orderOpt, limitOpt, returning)
-  }
-
   /** `ORDER BY` item list → sort Columns ("x DESC, y" etc.; NULLS
     * FIRST/LAST and other tails fail loudly in expr()). */
   private def parseSortCols(spec: String): Seq[Column] =
@@ -4281,29 +4188,6 @@ object SqlRouter {
       else if (up.endsWith(" ASC")) expr(it.substring(0, it.length - 4)).asc
       else expr(it)
     }
-
-  /** Multi-table DELETE core (MySQL `DELETE a FROM a JOIN b ...`,
-    * `DELETE FROM a USING ...`, PG `DELETE ... USING`): the join
-    * projects the target's matched row images, the key set applies as
-    * a merge delete (action 0) — same pruned CoW path, same scale
-    * story as [[updateViaJoin]]. */
-  private def deleteViaJoin(engine: Engine, target: String, alias: String,
-      joinSrc: String, where: Option[String],
-      returning: Option[String]): Result = {
-    val t = engine.table(target)
-    val m = t.manifest
-    require(m.pkCols.nonEmpty,
-      s"multi-table DELETE needs a PRIMARY KEY on $target")
-    val proj = m.schema.fieldNames.map(f => s"$alias.`$f` AS `$f`")
-      .mkString(", ")
-    val sql = s"SELECT $proj FROM $joinSrc" +
-      where.map(w => s" WHERE $w").getOrElse("")
-    val img = engine.sql(PgCompat.rewriteQuery(engine, sql))
-      .select(m.schema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      .dropDuplicates(m.pkCols)
-    stageMergeImages(t, img, action = 0, returning)
-  }
 
   /** INSERT IGNORE + the images RETURNING projects (PG `ON CONFLICT
     * DO NOTHING RETURNING`): only the rows actually INSERTED. The

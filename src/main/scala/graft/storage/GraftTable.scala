@@ -387,13 +387,15 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     if (m.autoInc != 1L) io.commit(path, m.copy(autoInc = 1L))
   }
 
-  /** Copy-on-write DELETE: rewrite only files containing matches. */
-  def delete(cond: Column): Long = {
+  /** Copy-on-write DELETE: rewrite only files containing matches.
+    * `binding` names the rows `cond` reads (a statement's alias or
+    * table name), so references qualified by it resolve. */
+  def delete(cond: Column, binding: Option[String] = None): Long = {
     val m = manifest
     if (m.files.isEmpty) return 0L
-    val affected = affectedFiles(m, cond)
+    val affected = affectedFiles(m, cond, binding)
     if (affected.isEmpty) return 0L
-    val src = readFiles(m, affected)
+    val src = named(readFiles(m, affected), binding)
     // the pre-filter row count rides the rewrite action (observe node
     // BELOW the survivor filter counts every streamed row) — round 14:
     // it was a separate count job per DELETE statement
@@ -419,15 +421,20 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     * threshold every file is rewritten in the single write job (rows
     * that don't match pass through unchanged); at warehouse scale the
     * probed set is the only option, and empty means nothing matched. */
-  private def affectedFiles(m: Manifest, cond: Column): Seq[String] =
+  private def affectedFiles(m: Manifest, cond: Column,
+      binding: Option[String]): Seq[String] =
     if (tableBytesAtMost(m, RewriteAllMaxBytes)) m.files
     else {
-      val affected = readManifest(m).withColumn("__file", input_file_name())
+      val affected = named(readManifest(m), binding)
+        .withColumn("__file", input_file_name())
         .filter(cond).select(col("__file")).distinct()
         .collect().map(r => fileKey(r.getString(0))).toSet
       normalize(m.files).zip(m.files)
         .filter { case (n, _) => affected.contains(n) }.map(_._2)
     }
+
+  private def named(df: DataFrame, binding: Option[String]): DataFrame =
+    binding.fold(df)(df.as(_))
 
   /** Copy-on-write UPDATE: rewrite affected files applying `set`.
     * Stored generated columns are RECOMPUTED from the post-SET values
@@ -435,13 +442,14 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     * image of the rows that matched the PRE-update condition — the
     * match flag is pinned on the source rows first, because re-applying
     * `cond` to updated values silently exempts any row whose SET
-    * changed a column the WHERE references. */
-  def update(cond: Column, set: Map[String, Column]): Long = {
+    * changed a column the WHERE references. `binding` as in [[delete]]. */
+  def update(cond: Column, set: Map[String, Column],
+      binding: Option[String] = None): Long = {
     val m = manifest
     if (m.files.isEmpty) return 0L
-    val affectedSeq = affectedFiles(m, cond)
+    val affectedSeq = affectedFiles(m, cond, binding)
     if (affectedSeq.isEmpty) return 0L
-    val src = readFiles(m, affectedSeq)
+    val src = named(readFiles(m, affectedSeq), binding)
     val flagged = src.withColumn("__m", coalesce(cond, lit(false)))
     val postSet = flagged.select(col("__m") +: m.schema.fieldNames.map { f =>
       set.get(f) match {
@@ -503,6 +511,10 @@ final class GraftTable(val spark: SparkSession, val path: Path,
     */
   def merge(changes0: DataFrame, key0: Seq[String] = Nil): MergeCounts = {
     val m = manifest
+    // a parent holds no files: its delete-only arm would find nothing
+    // and report success (UPDATE/DELETE route images to the leaves)
+    require(!m.props.contains("partition.by"),
+      s"table at $path is a partitioned parent: merge into its partitions")
     val dataCols = m.schema.fieldNames
     // Keyless tables (reference index-less mode,
     // /root/reference/delta/controller.go:137-600 "no-PK" arm): the

@@ -64,6 +64,15 @@ class DumpReplaySpec extends SparkSpec {
     SqlRouter.execute(e, "REPLACE INTO alltypes VALUES (3,8,1.00,'z',NULL,'high')")
     assert(e.sql("SELECT c_txt FROM alltypes WHERE id = 3")
       .as[String].head() === "z")
+    // runs of UPDATEs and of DELETEs on one table auto-stage the same way
+    val v0 = e.table("alltypes").history().size
+    executeScript(e, "UPDATE alltypes SET c_small = 1 WHERE id = 1;\n" +
+      "UPDATE alltypes SET c_small = 2 WHERE id = 2;\n")
+    assert(e.table("alltypes").history().size === v0 + 1)
+    executeScript(e, "DELETE FROM alltypes WHERE id = 1;\n" +
+      "DELETE FROM alltypes WHERE id = 2;\n")
+    assert(e.table("alltypes").history().size === v0 + 2)
+    assert(e.sql("SELECT id FROM alltypes").as[Int].collect().toSeq === Seq(3))
   }
 
   test("partitioned-table dump: the 50100 PARTITION BY trailer can't derail CREATE") {

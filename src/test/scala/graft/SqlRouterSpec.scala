@@ -2033,6 +2033,85 @@ class SqlRouterSpec extends SparkSpec {
       === Seq(2L))
   }
 
+  test("a self-qualified WHERE binds the target's own columns") {
+    val e = new Engine(spark, tmpDir("router_selfqual"))
+    exec(e, "CREATE TABLE u (id BIGINT NOT NULL, v STRING, PRIMARY KEY (id))")
+    exec(e, "INSERT INTO u VALUES (3, 'x'), (4, 'y')")
+    assert(exec(e, "UPDATE u SET v = 'w' WHERE u.id = 3").affected === 1)
+    assert(exec(e, "SELECT v FROM u ORDER BY id").df.get.as[String]
+      .collect().toSeq === Seq("w", "y"))
+  }
+
+  test("an aliased DELETE on a keyless table needs no key") {
+    val e = new Engine(spark, tmpDir("router_keyless_alias"))
+    exec(e, "CREATE TABLE k (a INT, b STRING)")
+    exec(e, "INSERT INTO k VALUES (1, 'a'), (1, 'a'), (2, 'b')")
+    assert(exec(e, "DELETE FROM k AS x WHERE x.a = 1").affected === 2)
+    assert(exec(e, "SELECT a FROM k").df.get.as[Int].collect().toSeq
+      === Seq(2))
+  }
+
+  /** A two-child parent `p` (ids 1-5 low, 101-103 high) and a plain
+    * `u` keyed on the same ids, for the parent UPDATE/DELETE spellings. */
+  private def parentAndSource(dir: String): Engine = {
+    val e = new Engine(spark, tmpDir(dir))
+    exec(e, "CREATE TABLE p (id BIGINT NOT NULL, v STRING, PRIMARY KEY (id)) " +
+      "PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE p_lo PARTITION OF p FOR VALUES FROM (0) TO (100)")
+    exec(e, "CREATE TABLE p_hi PARTITION OF p FOR VALUES FROM (100) TO (1000)")
+    exec(e, "INSERT INTO p VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd'), " +
+      "(5, 'e'), (101, 'f'), (102, 'g'), (103, 'h')")
+    exec(e, "CREATE TABLE u (id BIGINT NOT NULL, v STRING, PRIMARY KEY (id))")
+    exec(e, "INSERT INTO u VALUES (3, 'x'), (4, 'y'), (101, 'z')")
+    e
+  }
+
+  private def idsOf(e: Engine, t: String): Seq[Long] =
+    exec(e, s"SELECT id FROM $t ORDER BY id").df.get.as[Long].collect().toSeq
+
+  test("partitioning: an aliased parent DELETE removes the rows it reports") {
+    val e = parentAndSource("router_part_del_alias")
+    assert(exec(e, "DELETE FROM p AS x WHERE x.id = 2").affected === 1)
+    assert(idsOf(e, "p") === Seq(1L, 3L, 4L, 5L, 101L, 102L, 103L))
+  }
+
+  test("partitioning: a self-qualified parent DELETE reaches the children") {
+    val e = parentAndSource("router_part_del_qual")
+    assert(exec(e, "DELETE FROM p WHERE p.id = 3").affected === 1)
+    assert(idsOf(e, "p_lo") === Seq(1L, 2L, 4L, 5L))
+  }
+
+  test("partitioning: join DELETEs through the parent remove the rows they report") {
+    val e = parentAndSource("router_part_del_join")
+    assert(exec(e, "DELETE p FROM p JOIN u ON p.id = u.id WHERE u.v = 'y'")
+      .affected === 1)
+    assert(idsOf(e, "p") === Seq(1L, 2L, 3L, 5L, 101L, 102L, 103L))
+    assert(exec(e, "DELETE FROM p USING u WHERE p.id = u.id").affected === 2)
+    assert(idsOf(e, "p_lo") === Seq(1L, 2L, 5L))
+    assert(idsOf(e, "p_hi") === Seq(102L, 103L))
+  }
+
+  test("partitioning: UPDATE ... FROM through the parent") {
+    val e = parentAndSource("router_part_upd_from")
+    val r = exec(e, "UPDATE p SET v = u.v FROM u WHERE p.id = u.id " +
+      "RETURNING id, v")
+    assert(r.affected === 3)
+    assert(r.df.get.orderBy("id").as[(Long, String)].collect().toSeq ===
+      Seq((3L, "x"), (4L, "y"), (101L, "z")))
+    assert(exec(e, "SELECT id, v FROM p WHERE id IN (2, 3, 4, 101, 102) " +
+      "ORDER BY id").df.get.as[(Long, String)].collect().toSeq ===
+      Seq((2L, "b"), (3L, "x"), (4L, "y"), (101L, "z"), (102L, "g")))
+    assert(idsOf(e, "p_hi") === Seq(101L, 102L, 103L))
+  }
+
+  test("partitioning: an aliased parent UPDATE") {
+    val e = parentAndSource("router_part_upd_alias")
+    assert(exec(e, "UPDATE p x SET v = 'q' WHERE x.id IN (2, 102)")
+      .affected === 2)
+    assert(exec(e, "SELECT id FROM p WHERE v = 'q' ORDER BY id").df.get
+      .as[Long].collect().toSeq === Seq(2L, 102L))
+  }
+
   test("review regressions: dialect-evidence masking, arbiter PK guard, rename follow-through, txn-staged ALTER props") {
     // 1. quoted data and PG's @@ operator never flip the dialect
     val e = new Engine(spark, tmpDir("router_rev10"))

@@ -29,6 +29,38 @@ class SqlTextGuardSpec extends AnyFunSuite {
       }
   }
 
+  private val DmlRender = "s\"(UPDATE|DELETE FROM) \\$".r
+
+  /** `file:line` of every UPDATE/DELETE text `file` builds by
+    * interpolation: the shape of a statement rendered only to be routed
+    * again. Every UPDATE/DELETE form goes through one parsed mutation
+    * path instead. */
+  private[graft] def dmlRenders(file: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(file).asScala.toIndexedSeq
+    lines.indices.filter(i => DmlRender.findFirstIn(lines(i)).isDefined)
+      .map(i => s"${file.getFileName}:${i + 1}")
+  }
+
+  test("SqlRouter renders no UPDATE/DELETE text to re-route") {
+    val f = java.nio.file.Paths.get("src", "main", "scala", "graft",
+      "SqlRouter.scala")
+    assert(java.nio.file.Files.isRegularFile(f), s"run from the repo root: $f")
+    val found = dmlRenders(f)
+    assert(found.isEmpty, "UPDATE/DELETE text rendered for re-routing " +
+      s"(hand the parsed Mutation to mutateRows): ${found.mkString(", ")}")
+  }
+
+  test("the render guard recognizes a re-rendered DELETE") {
+    val f = java.nio.file.Files.createTempFile("dml_guard", ".scala")
+    java.nio.file.Files.write(f, Seq(
+      "object R {",
+      "  def f(c: String, w: String) = s\"DELETE FROM $c WHERE $w\"",
+      "  def g(c: String) = s\"UPDATE $c SET v = 1\"",
+      "}").mkString("\n").getBytes("UTF-8"))
+    assert(dmlRenders(f) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
+  }
+
   test("no quote or comment state machine outside SqlText") {
     val root = java.nio.file.Paths.get("src", "main", "scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")

@@ -116,6 +116,22 @@ class StatementJobFloorSpec extends SparkSpec {
           (15L, "ig"), (16L, "one")))
       assert(SqlRouter.execute(e, "SELECT id FROM pa_lo ORDER BY id")
         .df.get.as[Long].collect().toSeq === Seq(1L, 2L))
+
+      // parent, aliased and join UPDATE/DELETE shapes; bounds are the
+      // counts measured before they shared one mutation path, plus one
+      val parUpd = run("UPDATE p SET v = 'w' WHERE id IN (2, 150)")
+      assert(parUpd <= 3, s"plain parent UPDATE ran $parUpd jobs")
+      val parDel = run("DELETE FROM p WHERE id IN (3, 160)")
+      assert(parDel <= 3, s"parent DELETE ran $parDel jobs")
+      val aliasDel = run("DELETE FROM u AS x WHERE x.id = 3")
+      assert(aliasDel <= 4, s"aliased single-table DELETE ran $aliasDel jobs")
+      val joinDel = run("DELETE u FROM u JOIN t ON u.id = t.id")
+      assert(joinDel <= 5, s"join DELETE ran $joinDel jobs")
+      assert(SqlRouter.execute(e, "SELECT id, v FROM p ORDER BY id")
+        .df.get.as[(Long, String)].collect().toSeq ===
+        Seq((2L, "w"), (150L, "w"), (201L, "a")))
+      assert(SqlRouter.execute(e, "SELECT id FROM u ORDER BY id")
+        .df.get.as[Long].collect().toSeq === Seq(102L, 103L))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

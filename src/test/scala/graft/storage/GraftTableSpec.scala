@@ -123,6 +123,14 @@ class GraftTableSpec extends SparkSpec {
     assert(t.read().select("id").as[Long].collect() === Array(2L))
   }
 
+  test("merge refuses a partitioned parent, which holds no rows") {
+    val t = GraftTable.create(spark, tmpDir("graft_parent_merge"), schema,
+      Seq("id"), props = Map("partition.by" -> "RANGE (id)"))
+    val ex = intercept[IllegalArgumentException](
+      t.merge(Seq((1L, "a", 1.0, 0)).toDF("id", "name", "v", "action")))
+    assert(ex.getMessage.contains("partitioned parent"), ex.getMessage)
+  }
+
   test("merge into empty table inserts upserts") {
     val t = freshTable()
     t.merge(Seq((1L, "a", 1.0, 2)).toDF("id", "name", "v", "action"))

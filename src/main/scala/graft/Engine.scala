@@ -524,7 +524,7 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     // pure numeric literals also match but never collide with a table
     "\\w+".r.findAllIn(s).map(_.toLowerCase).toSet
 
-  private def registerReferenced(q: String): Unit = synchronized {
+  private[graft] def registerReferenced(q: String): Unit = synchronized {
     drainReplicationBeforeRead(idents(q))
     val allTables = listTables()
     val allViews = loadViews(currentDb)

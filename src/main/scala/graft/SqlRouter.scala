@@ -3971,8 +3971,17 @@ object SqlRouter {
     }
   }
 
-  private def mutate(engine: Engine, mu: Mutation): Result =
+  /** Execute `mu` on its target. A subquery in its WHERE, SET values or
+    * ORDER BY names the tables it reads: bind them first, as
+    * `Engine.sql` does for a query (the join arm's SQL binds its own). */
+  private def mutate(engine: Engine, mu: Mutation): Result = {
+    val text = (mu.where ++ mu.sets.toSeq.flatten.map(_._2) ++ mu.orderBy)
+      .mkString(" ")
+    if (SelectWord.findFirstIn(SqlText.mask(text)).isDefined)
+      engine.registerReferenced(text)
     mutateRows(engine, mu.target, engine.table(mu.target), mu)
+  }
+  private val SelectWord = "(?i)\\bSELECT\\b".r
 
   /** The one execution path of UPDATE and DELETE in every spelling —
     * the twin of [[writeRows]]. `name`/`t` is the table this call

@@ -2042,6 +2042,24 @@ class SqlRouterSpec extends SparkSpec {
       .collect().toSeq === Seq("w", "y"))
   }
 
+  test("subqueries in UPDATE/DELETE bind the tables they read") {
+    val e = new Engine(spark, tmpDir("router_dml_subq"))
+    exec(e, "CREATE TABLE u (id BIGINT NOT NULL, v STRING, PRIMARY KEY (id))")
+    exec(e, "INSERT INTO u VALUES (3, 'x'), (4, 'y'), (5, 'z')")
+    exec(e, "CREATE TABLE w (id BIGINT NOT NULL, tag STRING, PRIMARY KEY (id))")
+    exec(e, "INSERT INTO w VALUES (4, 't'), (5, 's')")
+    assert(exec(e, "UPDATE u SET v = 'q' WHERE EXISTS " +
+      "(SELECT 1 FROM w WHERE w.id = u.id AND w.tag = 's')").affected === 1)
+    assert(exec(e, "UPDATE u AS x SET v = (SELECT max(tag) FROM w " +
+      "WHERE w.id = x.id) WHERE x.id = 4").affected === 1)
+    assert(exec(e, "SELECT v FROM u ORDER BY id").df.get.as[String]
+      .collect().toSeq === Seq("x", "t", "q"))
+    assert(exec(e, "DELETE FROM u WHERE id IN (SELECT id FROM w)")
+      .affected === 2)
+    assert(exec(e, "SELECT id FROM u").df.get.as[Long].collect().toSeq
+      === Seq(3L))
+  }
+
   test("an aliased DELETE on a keyless table needs no key") {
     val e = new Engine(spark, tmpDir("router_keyless_alias"))
     exec(e, "CREATE TABLE k (a INT, b STRING)")

@@ -53,6 +53,7 @@ class SqlTextGuardSpec extends AnyFunSuite {
 
   test("the render guard recognizes a re-rendered DELETE") {
     val f = java.nio.file.Files.createTempFile("dml_guard", ".scala")
+    f.toFile.deleteOnExit()
     java.nio.file.Files.write(f, Seq(
       "object R {",
       "  def f(c: String, w: String) = s\"DELETE FROM $c WHERE $w\"",

@@ -3301,13 +3301,16 @@ object SqlRouter {
     * so the op overlaps through [[Engine.fanOut]]. */
   private def forEachLeaf(engine: Engine, name: String)(
       f: graft.storage.GraftTable => Unit): Unit = {
-    def leaves(n: String): Seq[graft.storage.GraftTable] = {
-      val t = engine.table(n)
-      if (t.partitionBy.isEmpty) Seq(t)
-      else t.partitionChildren.flatMap(c => leaves(childRef(n, c._1)))
-    }
-    engine.fanOut(leaves(name), 8,
+    engine.fanOut(leafRefs(engine, name).map(engine.table), 8,
       (l: graft.storage.GraftTable) => s"maintenance of ${l.path}")(f)
+  }
+
+  /** The leaves under `name` (the table itself when it is not
+    * partitioned), through every subpartition level. */
+  private def leafRefs(engine: Engine, name: String): Seq[String] = {
+    val t = engine.table(name)
+    if (t.partitionBy.isEmpty) Seq(name)
+    else t.partitionChildren.flatMap(c => leafRefs(engine, childRef(name, c._1)))
   }
 
   /** Per-child results of one parent write, in child declaration
@@ -3996,12 +3999,13 @@ object SqlRouter {
     *    keyed UPDATE that keeps its key. Those stage one image per key
     *    through the merge ([[stageImages]]), which needs a PRIMARY KEY
     *    and leaves its columns unset.
-    *  - Partitioned parent: the plain arm runs the same Mutation on
+    *  - Partitioned parent: a single-table statement runs whole on
     *    every child through [[Engine.fanOut]] (children are independent
-    *    tables); the staged arm builds its images once over the
-    *    parent's union frame and routes them to the leaves; an UPDATE
-    *    of the partition key moves rows ([[moveRows]]). ORDER BY/LIMIT
-    *    would apply per child and is refused.
+    *    tables); a join builds its images once over the parent's union
+    *    frame and applies each to the leaf holding its key
+    *    ([[applyToHolders]]); an UPDATE of the partition key moves rows
+    *    ([[moveRows]]). ORDER BY/LIMIT would apply per child and is
+    *    refused.
     *  - RETURNING: the stored post-images (UPDATE) or the removed rows
     *    (DELETE), unioned across children in declaration order. */
   private def mutateRows(engine: Engine, name: String,
@@ -4028,6 +4032,14 @@ object SqlRouter {
         return moveRows(engine, name, t, mu, cond, setCols)
       }
     }
+    // a single-table statement runs whole on each child (its staged
+    // form too); only a join builds its images over the parent
+    if (partitionBy.isDefined && mu.join.isEmpty)
+      return unionResults(engine.fanOut(t.partitionChildren.map(_._1), 8,
+          (c: String) => s"statement on partition child '$c' of $name") { c =>
+        val ref = childRef(name, c)
+        mutateRows(engine, ref, engine.table(ref), mu)
+      })
     if (mu.join.isDefined || ordered || (mu.returning.isDefined &&
         mu.sets.isDefined && m.pkCols.nonEmpty && assigned(m.pkCols).isEmpty)) {
       require(mu.join.isEmpty || !ordered,
@@ -4046,12 +4058,6 @@ object SqlRouter {
       }(joinImages(engine, t, m, mu, sets, _))
       return stageImages(engine, name, t, partitionBy.isDefined, mu, images)
     }
-    if (partitionBy.isDefined)
-      return unionResults(engine.fanOut(t.partitionChildren.map(_._1), 8,
-          (c: String) => s"statement on partition child '$c' of $name") { c =>
-        val ref = childRef(name, c)
-        mutateRows(engine, ref, engine.table(ref), mu)
-      })
     // RETURNING reads the frozen pre-statement file list; an UPDATE
     // re-applies its row image to it. Caveat: a VOLATILE SET
     // expression (uuid(), rand()) re-evaluates and may differ from the
@@ -4131,8 +4137,8 @@ object SqlRouter {
     * `__fan`) through the merge — UPDATE upserts them, DELETE removes
     * their keys — after ONE freeze shared by the write, the count and
     * RETURNING, so volatile SET values stay exact. On a partitioned
-    * `parent` each image routes to the leaf holding its key
-    * ([[routeFrame]]). A join UPDATE that matched some key several
+    * `parent` each image goes to the leaf holding its key
+    * ([[applyToHolders]]). A join UPDATE that matched some key several
     * times records a SHOW WARNINGS Note. */
   private def stageImages(engine: Engine, name: String,
       t: graft.storage.GraftTable, parent: Boolean, mu: Mutation,
@@ -4160,10 +4166,34 @@ object SqlRouter {
       val action = lit(if (mu.sets.isDefined) 1 else 0)
       def apply(lt: graft.storage.GraftTable, rows: DataFrame) =
         lt.merge(rows.withColumn("action", action))
-      if (parent) routeFrame(engine, name, t, clean, apply)
+      if (parent) applyToHolders(engine, name, t.manifest.pkCols, clean)(apply)
       else apply(t, clean)
     }
     Result(returned(mu.returning, clean), n)
+  }
+
+  /** Apply images built over a partitioned parent, each to the leaf
+    * that HOLDS its key — found by key, not routed by bounds: a HASH
+    * leaf restored from pg_dump keeps rows where PG's hash put them,
+    * which this engine's routing hash cannot reproduce, and an upsert
+    * routed elsewhere would add a second row with the key. One job
+    * names the holding leaves; only they get a write, each of its own
+    * keys' images. */
+  private def applyToHolders(engine: Engine, name: String, pk: Seq[String],
+      images: DataFrame)(write: (graft.storage.GraftTable, DataFrame) => Any)
+      : Unit = {
+    val pkCols = pk.map(col)
+    val keysOf = leafRefs(engine, name).map(engine.table)
+      .map(lt => lt -> lt.read().select(pkCols: _*))
+    val hits = keysOf.zipWithIndex.map { case ((_, keys), i) =>
+      keys.join(images.select(pkCols: _*), pk, "left_semi")
+        .select(lit(i).as("__leaf"))
+    }.reduce(_ union _).distinct().collect().map(_.getInt(0)).toSet
+    engine.fanOut(keysOf.indices.filter(hits), 8,
+        (i: Int) => s"write into partition leaf ${keysOf(i)._1.path}") { i =>
+      val (lt, keys) = keysOf(i)
+      write(lt, images.join(keys, pk, "left_semi"))
+    }
   }
 
   /** Trailing `[ORDER BY items] [LIMIT n]` split quote-aware off an

@@ -2843,6 +2843,36 @@ class SqlRouterSpec extends SparkSpec {
     intercept[Exception](exec(e2, "UPDATE xt SET name = 'zed' WHERE v = 1"))
     // UPDATE ... LIMIT through the parent would apply per child
     intercept[Exception](exec(e2, "UPDATE xt SET v = 2 LIMIT 1"))
+    // a keyed restored HASH parent: UPDATE ... RETURNING and join
+    // UPDATE/DELETE write the leaf that holds each key, wherever this
+    // engine's hash would place it — no second row with the key
+    val e3 = new Engine(spark, tmpDir("router_part_hashkeyed"))
+    exec(e3, "CREATE TABLE hk (id BIGINT PRIMARY KEY, v STRING) " +
+      "PARTITION BY HASH (id)")
+    exec(e3, "CREATE TABLE hk0 (id BIGINT PRIMARY KEY, v STRING)")
+    exec(e3, "INSERT INTO hk0 VALUES (1, 'a'), (2, 'a'), (3, 'a'), " +
+      "(4, 'a'), (5, 'a'), (6, 'a'), (7, 'a'), (8, 'a')")
+    exec(e3, "ALTER TABLE hk ATTACH PARTITION hk0 " +
+      "FOR VALUES WITH (MODULUS 2, REMAINDER 0)")
+    exec(e3, "CREATE TABLE hk1 PARTITION OF hk " +
+      "FOR VALUES WITH (MODULUS 2, REMAINDER 1)")
+    exec(e3, "CREATE TABLE hu (id BIGINT PRIMARY KEY, v STRING)")
+    exec(e3, "INSERT INTO hu VALUES (3, 'j'), (4, 'j'), (5, 'j'), (6, 'j')")
+    def rows(q: String) = exec(e3, q).df.get.as[(Long, String)].collect().toSeq
+    val upd = exec(e3, "UPDATE hk SET v = 'r' WHERE id <= 4 RETURNING id, v")
+    assert(upd.affected === 4L)
+    assert(upd.df.get.as[(Long, String)].collect().sortBy(_._1).toSeq ===
+      (1L to 4L).map(_ -> "r"))
+    assert(exec(e3, "UPDATE hk JOIN hu ON hk.id = hu.id SET hk.v = hu.v")
+      .affected === 4L)
+    assert(rows("SELECT id, v FROM hk ORDER BY id") ===
+      Seq(1L -> "r", 2L -> "r", 3L -> "j", 4L -> "j", 5L -> "j", 6L -> "j",
+        7L -> "a", 8L -> "a"))
+    assert(exec(e3, "DELETE hk FROM hk JOIN hu ON hk.id = hu.id")
+      .affected === 4L)
+    assert(rows("SELECT id, v FROM hk ORDER BY id") ===
+      Seq(1L -> "r", 2L -> "r", 7L -> "a", 8L -> "a"))
+    assert(exec(e3, "SELECT count(*) FROM hk1").df.get.as[Long].head() === 0L)
   }
 
   test("partitioning: DROP drops children with the parent; dropping a child detaches") {

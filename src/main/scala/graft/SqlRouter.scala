@@ -3708,11 +3708,11 @@ object SqlRouter {
             // per-leaf max straight from the STAGED parquet footers on
             // the driver (r19 — the same no-job discipline as
             // collectFooterMeta): the grouped re-read of the staging
-            // dir was one whole Spark job per routed INSERT. Any file
-            // whose stats are unusable (non-numeric physical type,
-            // missing chunk stats) falls back to the grouped read —
-            // correctness never rides on footer presence.
-            footerLeafMax(engine, dirs, phys).getOrElse {
+            // dir was one whole Spark job per routed INSERT. A
+            // non-integral key, or any file whose stats are unusable,
+            // falls back to the grouped read — correctness never
+            // rides on footer presence.
+            footerLeafMax(engine, dirs, phys, m.schema(c).dataType).getOrElse {
               engine.spark.read.parquet(staging.toString)
                 // partition-type inference may read the tag as INT —
                 // cast back to the string key space of leafMap
@@ -3788,12 +3788,17 @@ object SqlRouter {
       try st.iterator().asScala.toList finally st.close()
     }
 
-  /** Per-leaf max of a numeric column from staged `__part=` parquet
-    * footers — driver-side, no Spark job. None when any file's chunk
-    * stats are unusable (caller falls back to the grouped read). */
+  /** Per-leaf max of an integral column from staged `__part=` parquet
+    * footers — driver-side, no Spark job. None when the key's type is
+    * not integral (a DECIMAL or TIMESTAMP stored as INT32/INT64 reads
+    * its unscaled or epoch-micros value, not the key) or any file's
+    * chunk stats are unusable: the caller falls back to the grouped read. */
   private def footerLeafMax(engine: Engine,
-      dirs: Seq[java.nio.file.Path], phys: String)
+      dirs: Seq[java.nio.file.Path], phys: String,
+      keyType: org.apache.spark.sql.types.DataType)
       : Option[Map[String, Long]] = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(keyType)) return None
     import scala.jdk.CollectionConverters._
     val conf = engine.spark.sessionState.newHadoopConf()
     val out = scala.collection.mutable.Map.empty[String, Long]

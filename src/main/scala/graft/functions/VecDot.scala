@@ -140,18 +140,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     val yv = ctx.freshName("yv")
     nullSafeCodeGen(ctx, ev, (a, b) => {
       // When the expression is NON-nullable (both inputs non-nullable
-      // arrays with containsNull=false) ev.isNull is the codegen
-      // constant `false` — assigning to it made janino REJECT the
-      // generated class ("isNull_0 is not an rvalue") and the whole
-      // enclosing predicate silently fell back to INTERPRETED mode
-      // (r19: every non-nullable-array join verify — the minhash and
-      // prefix-Jaccard τ filters — was running interpreted). Null
-      // elements cannot exist in that shape, so the guard is emitted
-      // only when it is both needed and assignable.
+      // arrays with containsNull=false) nullSafeCodeGen never declares
+      // ev.isNull: the result is the codegen constant `false`, and any
+      // reference to the name — assigning it (r19) or reading it —
+      // makes janino REJECT the generated class ("isNull_0 is not an
+      // rvalue"), so the enclosing stage or join condition silently
+      // fell back to INTERPRETED mode (every non-nullable-array join
+      // verify: the minhash and prefix-Jaccard τ filters). Null
+      // elements cannot exist in that shape, so ev.isNull is touched
+      // only when it is declared.
       val nullElemGuard =
         if (nullable)
           s"if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }"
         else ""
+      val store =
+        if (nullable) s"if (!${ev.isNull}) { ${ev.value} = $n; }"
+        else s"${ev.value} = $n;"
       s"""
          |int $i = 0, $j = 0; long $n = 0;
          |int $an = $a.numElements(), $bn = $b.numElements();
@@ -161,7 +165,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
          |  if ($xv == $yv) { $n++; $i++; $j++; }
          |  else if ($xv < $yv) $i++; else $j++;
          |}
-         |if (!${ev.isNull}) { ${ev.value} = $n; }
+         |$store
        """.stripMargin
     })
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType,
+  StructField, StructType}
 
 /** Reusable whole-operator APIs for the capabilities Spark has no
   * single built-in for. Each is the shuffle-minimal formulation the
@@ -269,19 +271,36 @@ object Operators {
     * low τ the prefix approaches the whole set and the dense-corpus
     * broadcast scan wins instead; measure at your τ.
     *
-    * The set projection is `localCheckpoint()`ed (it feeds three
-    * joins and Spark never dedups plan subtrees) and the returned
-    * frame reads it lazily, so the blocks cannot be freed here: after
-    * materializing the result, call [[releaseCheckpoints]] on it to
-    * drop them without waiting for a driver GC.
+    * The input is checkpointed and counted once, and the returned frame
+    * reads that checkpoint lazily: after materializing the result, call
+    * [[releaseCheckpoints]] on it to drop the blocks without waiting
+    * for a driver GC.
     */
   def jaccardPairsPrefix(codeSets: DataFrame, idCol: String, setCol: String,
       tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau in (0,1]: $tau")
-    // materialize the (typically expensive — shingling/hashing) set
-    // projection ONCE: it feeds the frequency pass plus the recode
-    // pass, and Spark never dedups plan subtrees
-    val sets = freqRankedSets(codeSets, idCol, setCol)
+    val (sets, n) = countedSets(codeSets, idCol, setCol)
+    prefixPairs(sets, n, tau)
+  }
+
+  /** Checkpoint `df` and count it in one pass: the checkpoint is lazy,
+    * so the count's job writes its blocks and the upstream runs once. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.queryExecution.toRdd.count())
+  }
+
+  /** The checkpointed, counted (__id, __cs, __len) projection every
+    * Jaccard entry starts from (shingling/hashing upstream runs once). */
+  private def countedSets(codeSets: DataFrame, idCol: String,
+      setCol: String): (DataFrame, Long) =
+    checkpointCounted(codeSets.select(col(idCol).as("__id"),
+      col(setCol).as("__cs"), size(col(setCol)).as("__len")))
+
+  /** The prefix route over [[countedSets]]' output; the result reads
+    * its checkpoint (or, above the re-rank crossover, the re-ranked one). */
+  private def prefixPairs(sets: DataFrame, n: Long, tau: Double): DataFrame = {
+    val ranked = freqRanked(sets, n)
     // EVERY τ-dependent filter in the cascade is nudged by a relative
     // epsilon in the ADMIT direction: τ·len (and τ/(1+τ)) round UP in
     // binary for many τ (e.g. 100·0.55 = 55.000000000000006, τ=0.2 →
@@ -289,32 +308,22 @@ object Operators {
     // exact-boundary pairs the verify stage — and the all-pairs oracle
     // — would keep. The nudge only admits extra candidates, which the
     // exact verify prunes identically on both engines.
-    // dedup-AFTER-verify (r18 optimization round): the equi-join's
-    // duplicate hits (one per shared prefix code) used to be deduped
-    // by a distinct over EVERY candidate pair before the verify — at
-    // sf0.1/τ=0.5 that shuffled 6.4 M narrow rows to keep 3.7 M, of
-    // which only 256 survive the verify. Verifying duplicates costs
-    // one extra codegen intersect per duplicate hit (broadcast joins,
-    // no exchange), so the dedup moves BEHIND the τ filter where rows
-    // are survivors-only. Duplicate hits verify to bit-identical rows
-    // (inter is exact, jaccard the same double arithmetic), so
-    // dropDuplicates keeps the same pair set and values.
-    val cand = prefixCandidates(sets, tau, dedup = false)
-    // verify-join physical shape, chosen by MEASURED corpus size (the
-    // count reads the checkpoint's cached blocks — near-free):
-    //  - small corpus → explicit broadcast: the candidate side never
-    //    shuffles at all (the pre-round-12 auto-broadcast plan, made
-    //    deliberate);
-    //  - large corpus → shuffle-hash: SMJ would SORT candidate rows
-    //    already carrying a code-set payload (spill = survivor mass ×
-    //    set size; ScaleBench factor 20 measured 987 M survivors), SHJ
-    //    builds the per-partition map on the n/partitions corpus slice
-    //    and STREAMS the narrow id-pair side. Threshold ~32 k sets ×
-    //    a few hundred bytes ≈ an executor-safe broadcast.
-    val nDocs = sets.count()
+    // dedup AFTER the verify: the equi-join's duplicate hits (one per
+    // shared prefix code) verify to bit-identical rows, and deduping
+    // every candidate first shuffled 6.4 M rows to keep 3.7 M at
+    // sf0.1/τ=0.5, of which 256 survive — behind the τ filter the
+    // distinct sees survivors only.
+    val cand = prefixCandidates(ranked, tau, dedup = false)
+    // verify-join physical shape by corpus size `n` (an upper bound on
+    // the re-ranked corpus, which drops empty sets): up to ~32 k sets ×
+    // a few hundred bytes the corpus side broadcasts and candidates
+    // never shuffle; above, shuffle-hash builds per-partition maps on
+    // the corpus slice and STREAMS the narrow id pairs (SMJ would SORT
+    // candidates carrying a set payload — ScaleBench factor 20
+    // measured 987 M survivors).
     def side(idAs: String, csAs: String): DataFrame = {
-      val s = sets.select(col("__id").as(idAs), col("__cs").as(csAs))
-      if (nDocs <= 32768) broadcast(s) else s.hint("shuffle_hash")
+      val s = ranked.select(col("__id").as(idAs), col("__cs").as(csAs))
+      if (n <= 32768) broadcast(s) else s.hint("shuffle_hash")
     }
     cand
       .join(side("a_id", "ca"), "a_id")
@@ -340,38 +349,40 @@ object Operators {
     * zipWithIndex, never a driver collect or a single-partition
     * window. Intersections and set sizes are preserved by the
     * bijection, so pairs and jaccards are IDENTICAL to the hash-order
-    * path. Empty sets drop here (they can never reach τ > 0). Returns
-    * a localCheckpoint'd (__id, __cs, __len). */
+    * path. Returns a localCheckpoint'd (__id, __cs, __len), re-ranked
+    * above the crossover (empty sets drop there: they never reach τ). */
   private[graft] def freqRankedSets(codeSets: DataFrame, idCol: String,
       setCol: String): DataFrame = {
-    val raw = codeSets.select(col(idCol).as("__id"), col(setCol).as("__cs0"))
-      .localCheckpoint() // feeds the df pass AND the recode pass
+    val (sets, n) = countedSets(codeSets, idCol, setCol)
+    freqRanked(sets, n)
+  }
+
+  /** [[freqRankedSets]] over [[countedSets]]' output; above the
+    * crossover it frees `sets` once the re-ranked checkpoint exists. */
+  private def freqRanked(sets: DataFrame, n: Long): DataFrame = {
     // the recode is a linear overhead that pays for itself through the
     // quadratic candidate join — but only once the corpus is big
     // enough for Σ df² to dominate (measured: 10 k docs 12.7 s → 4.3 s
     // WITH recode; 5 k docs 5.4 s → 6.9 s, overhead-bound). Below the
     // crossover keep the input's own sorted hash order — the filter
     // cascade is order-agnostic, results identical either way.
-    val nRaw = raw.count()
-    if (nRaw <= 8192)
-      return raw.select(col("__id"), col("__cs0").as("__cs"),
-        size(col("__cs0")).as("__len"))
-    val sp = codeSets.sparkSession
+    if (n <= 8192) return sets
+    val sp = sets.sparkSession
     import sp.implicits._
-    val rankDf = raw.select(explode(col("__cs0")).as("__code"))
+    val rankDf = sets.select(explode(col("__cs")).as("__code"))
       .groupBy("__code").agg(count(lit(1)).as("__df"))
       .orderBy(col("__df"), col("__code"))
       .rdd.zipWithIndex()
       .map { case (r, i) => (r.getLong(0), i) }
       .toDF("__code", "__rank")
-    val sets = raw.select(col("__id"), explode(col("__cs0")).as("__code"))
+    val ranked = sets.select(col("__id"), explode(col("__cs")).as("__code"))
       .join(rankDf.hint("shuffle_hash"), "__code")
       .groupBy("__id")
       .agg(sort_array(collect_list(col("__rank"))).as("__cs"),
         count(lit(1)).cast("int").as("__len"))
       .localCheckpoint()
-    freeCheckpoint(raw) // both consumers materialized into `sets`
-    sets
+    freeCheckpoint(sets) // both consumers materialized into `ranked`
+    ranked
   }
 
   /** The ppjoin candidate stage, shared by the production path and the
@@ -453,8 +464,9 @@ object Operators {
     *
     * Both routes return identical results (exact verify; boundary
     * epsilon only ever ADMITS candidates): (a_id, b_id, inter,
-    * jaccard ≥ tau). Dense-route results read a `localCheckpoint` —
-    * call [[releaseCheckpoints]] after materializing.
+    * jaccard ≥ tau). The input is checkpointed and counted once, and
+    * either route's result reads that `localCheckpoint` — call
+    * [[releaseCheckpoints]] after materializing.
     *
     * The mass estimate is measured in the INPUT's hash order, while
     * the prefix route itself re-ranks by document frequency
@@ -467,23 +479,16 @@ object Operators {
       tau: Double, denseMaxDocs: Long = 16384,
       bitmapMaxVocab: Int = BitmapMaxVocab): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau in (0,1]: $tau")
-    val sets = codeSets.select(col(idCol).as("__id"), col(setCol).as("__cs"),
-      size(col(setCol)).as("__len"))
-      .localCheckpoint() // feeds the stats pass + whichever route wins
-    val n = sets.count()
+    // one pass feeds the stats pass + whichever route wins
+    val (sets, n) = countedSets(codeSets, idCol, setCol)
     // n < 2 → no pairs: take the dense route without the stats pass
     // (prefixCandidateMass' sum() over an empty frame is null)
     val useDense = n <= denseMaxDocs && (n < 2 || {
       val densePairs = n * (n - 1) / 2
       densePairs <= prefixCandidateMass(sets, tau) / 2
     })
-    if (!useDense) {
-      val out = jaccardPairsPrefix(sets, "__id", "__cs", tau)
-      // jaccardPairsPrefix checkpoints its own (eager) projection of
-      // `sets`, so the stats-pass checkpoint is already superseded
-      freeCheckpoint(sets)
-      out
-    } else {
+    if (!useDense) prefixPairs(sets, n, tau)
+    else {
       // BIT-PARALLEL verify (r18 optimization round): a corpus is only
       // ever routed dense because its vocabulary is HOT — which also
       // means it is small. Measure it (one bounded collect); when it
@@ -560,44 +565,32 @@ object Operators {
   private val BitmapMaxVocab = 32768
 
   /** Connected components over an undirected edge list — the dedup
-    * pipeline's clustering step (every near-dup pair collapses into a
-    * cluster; keep min id as canonical). Iterative min-label
-    * propagation: each round joins labels across edges and keeps the
-    * minimum (two shuffles per round, converges in graph-diameter
-    * rounds; near-dup graphs are shallow). Deterministic: the fixed
-    * point is min-reachable-id, independent of iteration schedule.
-    * Returns (id, cluster) where cluster = min id in the component.
+    * pipeline's clustering step. Returns (id, cluster) where cluster =
+    * min id in the component. Up to `driverFastPathMaxEdges` input
+    * edge ROWS are collected and folded by driver-side union-find (0
+    * Spark jobs for a local edge list, else 2: count, collect). Larger
+    * graphs run iterative min-label propagation: each round joins
+    * labels across the mirrored edges and keeps the minimum (two
+    * shuffles and a fixed ~1s of scheduling per round; near-dup graphs
+    * are shallow). Deterministic: the fixed point is min-reachable-id.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20, driverFastPathMaxEdges: Long = 1_000_000L): DataFrame = {
-    // materialize the (possibly expensive) edge list ONCE before
-    // mirroring — a union of two branches over the raw plan would
-    // evaluate the upstream pair computation twice
     val e0 = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      // normalize partitioning: upstream operators may leave hundreds of
-      // tiny partitions whose per-task overhead dwarfs the graph work
-      .repartition(edges.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    val sym = e0
-      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint() // reused every round
-    freeCheckpoint(e0) // sym materialized eagerly; e0 is superseded
-    // Algorithm by graph size (the broadcast-threshold idea applied to
-    // graphs): under the cutoff the edge list fits comfortably on the
-    // driver and union-find finishes in milliseconds — iterative
-    // label-propagation rounds each cost a fixed ~1s of scheduling.
-    // Above it, the distributed loop is the only option.
-    if (sym.count() <= driverFastPathMaxEdges) {
-      val spark = edges.sparkSession
-      val idType = sym.schema("src").dataType
+    // sized BEFORE anything is collected; a non-local input is
+    // checkpointed by the counting pass, so the (possibly expensive)
+    // upstream pair computation runs once whichever path wins
+    val (e, nEdges) = e0.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        (e0, lr.data.length.toLong)
+      case _ => checkpointCounted(e0)
+    }
+    if (nEdges <= driverFastPathMaxEdges) {
+      val idType = e.schema("src").dataType
       implicit val ord: Ordering[Any] = (idType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType =>
+        case LongType | IntegerType | ShortType =>
           Ordering.by((x: Any) => x.asInstanceOf[Number].longValue())
-        case org.apache.spark.sql.types.StringType =>
-          Ordering.by((x: Any) => x.asInstanceOf[String])
+        case StringType => Ordering.by((x: Any) => x.asInstanceOf[String])
         case other =>
           throw new IllegalArgumentException(s"unsupported id type $other")
       })
@@ -609,23 +602,30 @@ object Operators {
         while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      sym.collect().foreach { row =>
+      e.collect().foreach { row =>
         val (a, b) = (row.get(0), row.get(1))
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
       }
+      freeCheckpoint(e) // collected to the driver; blocks not needed
       val rows = parent.keys.toSeq.groupBy(find).toSeq.flatMap {
         case (root, members) => members.map(id =>
           org.apache.spark.sql.Row(id, root)) // root IS the min by construction
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("cluster", idType)))
+      val schema = StructType(Seq(StructField("id", idType),
+        StructField("cluster", idType)))
       import scala.jdk.CollectionConverters._
-      freeCheckpoint(sym) // collected to the driver; blocks not needed
-      return spark.createDataFrame(rows.asJava, schema)
+      return edges.sparkSession.createDataFrame(rows.asJava, schema)
     }
+    // normalize partitioning: upstream operators may leave hundreds of
+    // tiny partitions whose per-task overhead dwarfs the graph work
+    val e1 = e.repartition(edges.sparkSession.sparkContext.defaultParallelism)
+    val sym = e1
+      .unionByName(e1.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .localCheckpoint() // reused every round
+    freeCheckpoint(e) // sym materialized eagerly; e is superseded
     // localCheckpoint per round truncates lineage — without it the
     // plan (and driver heap) grows with every iteration
     var labels = sym.select(col("src").as("id")).distinct()

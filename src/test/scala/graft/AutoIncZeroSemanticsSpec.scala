@@ -256,4 +256,18 @@ class AutoIncZeroSemanticsSpec extends SparkSpec {
     assert(exec(e, "SELECT id FROM p WHERE v = 'auto'").df.get
       .as[Long].head() === 51L)
   }
+
+  test("a DECIMAL auto-increment key routed through a parent advances by value") {
+    // parquet stores DECIMAL(10,2) as INT64 unscaled: a footer max of
+    // 5.00 reads 500, and taking it as the key pushed the counter to 501
+    val e = new Engine(spark, tmpDir("autoinc_decimal_part"))
+    exec(e, "CREATE TABLE d (id DECIMAL(10,2) NOT NULL AUTO_INCREMENT, v STRING, " +
+      "PRIMARY KEY (id)) PARTITION BY RANGE (id)")
+    exec(e, "CREATE TABLE d_lo PARTITION OF d FOR VALUES FROM (0) TO (10)")
+    exec(e, "CREATE TABLE d_hi PARTITION OF d DEFAULT")
+    exec(e, "INSERT INTO d VALUES (5.00, 'five')")
+    exec(e, "INSERT INTO d (v) VALUES ('auto')") // counter -> 6
+    assert(exec(e, "SELECT CAST(id AS BIGINT) FROM d WHERE v = 'auto'").df.get
+      .as[Long].head() === 6L)
+  }
 }

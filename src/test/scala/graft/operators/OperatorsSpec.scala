@@ -50,6 +50,32 @@ class OperatorsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("Jaccard verify joins compile under whole-stage codegen (no fallback)") {
+    // sorted_intersect_count over non-nullable arrays (collect_set
+    // output) inside a ShuffledHashJoin condition failed to compile
+    // ("isNull_0 is not an rvalue") and ran interpreted; with the
+    // fallback off that compile error fails the query instead
+    val docs = Seq(
+      (1L, Seq("a", "b", "c", "d", "e", "f", "g", "h")),
+      (2L, Seq("a", "b", "c", "d", "e", "f", "g", "x")),
+      (3L, Seq("q", "r", "s", "t", "u", "v", "w", "z")))
+      .toDF("id", "toks")
+    val sets = Seq((1L, Seq(1L, 2L, 3L, 4L)), (2L, Seq(1L, 2L, 3L, 5L)),
+      (3L, Seq(7L, 8L, 9L))).toDF("id", "cs")
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val mh = Operators.minHashPairs(docs, "id", "toks", threshold = 0.5)
+        .select("a_id", "b_id").as[(Long, Long)].collect()
+      assert(mh.toSeq === Seq((1L, 2L)))
+      val pre = Operators.jaccardPairsPrefix(sets, "id", "cs", 0.5)
+      try assert(pre.select("a_id", "b_id", "inter").as[(Long, Long, Long)]
+        .collect().toSeq === Seq((1L, 2L, 3L)))
+      finally Operators.releaseCheckpoints(pre)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("jaccardPairsPrefix keeps exact-threshold pairs (positional-filter rounding)") {
     // two 9-code sets sharing exactly their 3 LAST-sorted codes:
     // Jaccard = 3/15 = 0.2 = τ. τ/(1+τ) rounds UP in double for τ=0.2

@@ -28,9 +28,10 @@ package graft
   *  4. `expr = ANY(...)` → `my_list_contains(...)` (array form) or
   *     `IN` (subquery form).
   *  5. `~ !~ ~* !~*` regex operators → (NOT) RLIKE.
-  *  6. `expr::type` casts → `CAST(expr AS t)`; `'name'::regclass`
-  *     resolves to the live relation oid, `'name'::regtype` to the
-  *     type oid.
+  *  6. `expr::type` casts: the `::` stays (Spark parses it, operand
+  *     and precedence included); only the PG type name is aliased to
+  *     its Spark type. `'name'::regclass` resolves to the live
+  *     relation oid, `'name'::regtype` to the type oid.
   *  7. Remaining double-quoted identifiers → backticks.
   *
   * Dialect caveat (documented, not hidden): set-returning functions in
@@ -62,7 +63,8 @@ object PgCompat {
     // MySQL-dialect statements use double quotes for STRINGS and must
     // keep them
     if (s.contains("\"") &&
-      (s != sql || lower.contains("pg_catalog") || lower.contains("__sys__")))
+      (s != sql || lower.contains("::") || lower.contains("pg_catalog") ||
+        lower.contains("__sys__")))
       s = quoteIdents(s)
     s
   }
@@ -291,13 +293,14 @@ object PgCompat {
   }
 
   // ------------------------------------------------------------------
-  // 6. ::type casts. LHS extends left over an identifier chain, a
-  //    quoted identifier, a string literal, a number, or a
-  //    parenthesized expression together with the identifier chain
-  //    glued to it (`count(*)`, `s.f(x)`); RHS is a (possibly parenthesized)
-  //    type word. regclass/regtype literals resolve against the live
-  //    catalog at rewrite time — settings and oids are statement-time
-  //    constants, the same contract the reference's rewrites rely on.
+  // 6. ::type casts. Spark parses `expr::type` itself, with PG's
+  //    precedence, so the operand is Catalyst's to find: this pass
+  //    rewrites only the type phrase after each `::` — PG names Spark
+  //    rejects (int4, text, ...), the two Spark would read differently
+  //    (bare numeric, interval) — and drops a `[]` array suffix.
+  //    regclass/regtype literals resolve against the live catalog at
+  //    rewrite time — settings and oids are statement-time constants,
+  //    the same contract the reference's rewrites rely on.
 
   private val castTypeMap = Map(
     "text" -> "STRING", "varchar" -> "STRING", "name" -> "STRING",
@@ -310,91 +313,47 @@ object PgCompat {
     "decimal" -> "DECIMAL(38,18)", "bool" -> "BOOLEAN",
     "boolean" -> "BOOLEAN", "date" -> "DATE", "timestamp" -> "TIMESTAMP",
     "timestamptz" -> "TIMESTAMP", "json" -> "STRING", "jsonb" -> "STRING",
-    "uuid" -> "STRING", "bytea" -> "BINARY")
+    "uuid" -> "STRING", "bytea" -> "BINARY",
+    "character varying" -> "STRING", "double precision" -> "DOUBLE",
+    "timestamp without time zone" -> "TIMESTAMP",
+    "timestamp with time zone" -> "TIMESTAMP")
 
-  private[graft] def casts(engine: Engine, s0: String): String = {
-    var cur = s0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val sps = pgSpans(cur)
-      val masked = SqlText.mask(cur, sps)
-      val i = masked.indexOf("::")
-      if (i < 0) return cur
-      // ---- LHS extent
-      def chainStart(end: Int): Int = {
-        var lo = end
-        while (lo > 0 && (masked.charAt(lo - 1).isLetterOrDigit ||
-          "._$".contains(masked.charAt(lo - 1)))) lo -= 1
-        lo
-      }
-      val lo = sps.find(sp => sp.end == i && sp.kind == SqlText.Quoted) match {
-        case Some(quoted) => quoted.start
-        case None if i > 0 && masked.charAt(i - 1) == ')' =>
-          val open = SqlText.matchParen(masked, i - 1)
-          if (open < 0) 0 else chainStart(open)
-        case None => chainStart(i)
-      }
-      // ---- RHS extent: word, optional second word, optional (args),
-      //      optional []
-      var hi = i + 2
-      while (hi < masked.length && masked.charAt(hi) == ' ') hi += 1
-      val wordStart = hi
-      while (hi < masked.length && (masked.charAt(hi).isLetterOrDigit ||
-        masked.charAt(hi) == '_')) hi += 1
-      var tyWord = cur.substring(wordStart, hi).toLowerCase
-      // multi-word forms: character varying, double precision,
-      // timestamp with/without time zone
-      val rest = masked.substring(hi)
-      val multi = Seq(" varying", " precision",
-        " without time zone", " with time zone")
-        .find(m => rest.toLowerCase.startsWith(m))
-      multi.foreach { m =>
-        tyWord = (tyWord + m).trim match {
-          case "character varying" => "varchar"
-          case "double precision" => "float8"
-          case "timestamp without time zone" => "timestamp"
-          case "timestamp with time zone" => "timestamptz"
-          case w => w
-        }
-        hi += m.length
-      }
-      var precision = ""
-      if (hi < masked.length && masked.charAt(hi) == '(') {
-        val c = SqlText.matchParen(masked, hi)
-        if (c > 0) { precision = cur.substring(hi, c + 1); hi = c + 1 }
-      }
-      if (hi + 1 < masked.length && masked.charAt(hi) == '[' &&
-        masked.charAt(hi + 1) == ']') hi += 2 // array cast: dropped
-      val lhs = cur.substring(lo, i)
-      val rep = tyWord match {
-        case "regclass" =>
-          val target =
-            if (lhs.startsWith("'"))
-              PgCatalog.relOid(engine, lhs.substring(1, lhs.length - 1))
-                .map(_.toString).getOrElse("NULL")
-            else lhs
-          s"CAST($target AS BIGINT)"
-        case "regtype" =>
-          val target =
-            if (lhs.startsWith("'"))
-              PgCatalog.typeOidByName.get(lhs.substring(1, lhs.length - 1)
-                .toLowerCase).map(_.toString).getOrElse("NULL")
-            else lhs
-          s"CAST($target AS BIGINT)"
-        case "interval" => s"CAST($lhs AS INTERVAL DAY TO SECOND)"
-        case w =>
-          val t = castTypeMap.get(w) match {
-            case Some("DECIMAL(38,18)") if precision.nonEmpty =>
-              "DECIMAL" + precision
-            case Some(t0) => t0
-            case None => w.toUpperCase // unknown: let Catalyst judge
+  // `::`, the type word (or a multi-word PG spelling), optional (args),
+  // optional []
+  private val CastTypeRe = ("""(?i)::\s*(character\s+varying|double\s+precision|""" +
+    """timestamp\s+with(?:out)?\s+time\s+zone|\w+)(\([^()]*\))?(\[\])?""").r
+
+  private[graft] def casts(engine: Engine, s: String): String = {
+    val sps = pgSpans(s)
+    val masked = SqlText.mask(s, sps)
+    val spans = CastTypeRe.findAllMatchIn(masked).flatMap { m =>
+      val args = Option(m.group(2)).getOrElse("")
+      def to(t: String) = // no span where the text already says `t`
+        if (m.matched.drop(2).trim.equalsIgnoreCase(t)) None
+        else Some((m.start, m.end, "::" + t))
+      m.group(1).toLowerCase.split("\\s+").mkString(" ") match {
+        case w @ ("regclass" | "regtype") =>
+          // a literal operand resolves now; any other is an oid already
+          sps.find(sp => sp.kind == SqlText.Quoted && sp.end == m.start &&
+              s.charAt(sp.start) == '\'') match {
+            case Some(lit) =>
+              val name = s.substring(lit.start + 1, lit.end - 1)
+              val oid =
+                if (w == "regclass") PgCatalog.relOid(engine, name)
+                else PgCatalog.typeOidByName.get(name.toLowerCase)
+              Some((lit.start, m.end, oid.fold("NULL")(_.toString) + "::BIGINT"))
+            case None => to("BIGINT")
           }
-          s"CAST($lhs AS $t)"
+        case "interval" => to("INTERVAL DAY TO SECOND")
+        case w => castTypeMap.get(w) match {
+          case Some("DECIMAL(38,18)") if args.nonEmpty => to("DECIMAL" + args)
+          case Some(t) => to(t)
+          case None => // unknown: Catalyst judges it; only [] goes
+            Option(m.group(3)).map(_ => (m.start(3), m.end(3), ""))
+        }
       }
-      cur = cur.substring(0, lo) + rep + cur.substring(hi)
-    }
-    cur
+    }.toSeq
+    splice(s, spans)
   }
 
   // ------------------------------------------------------------------

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * scaled corpora and prints wall time, output size, and the
   * THEORETICAL candidate masses per scale factor, so the 100-TB
   * "sub-quadratic" verdicts rest on measured growth curves instead of
-  * argument. Results are summarized in docs/BENCH_SUMMARY.md.
+  * argument. The measured regimes are tabulated in docs/SCALE.md.
   *
   * Corpus construction: the sf documents/embeddings replicated
   * `factor`× with disjoint id ranges; replica r ≥ 1 perturbs content
@@ -307,7 +307,7 @@ object ScaleBench {
     // round-11 verdict asked the SAME doubling for the two remaining
     // curves — ppjoin (with its survivor mass, the quantity its wall
     // time tracks) and the fixed-k pruned-cosine path — so every
-    // 100-TB extrapolation in BENCH_SUMMARY rests on a measured
+    // 100-TB extrapolation (docs/SCALE.md) rests on a measured
     // factor-20 point, not a 10× curve extended by argument.
     if (args.isEmpty || f20Only || f20Cos) {
       val f = 20

@@ -14,28 +14,25 @@ import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StringType,
   */
 object Operators {
 
-  /** Free the storage blocks behind a `localCheckpoint()`ed frame the
-    * moment it is superseded. `Dataset.unpersist` cannot do this (the
-    * blocks belong to the checkpointed internal RDD, not the cache
-    * manager), and waiting for the ContextCleaner means an iterative
-    * operator holds every superseded iteration's blocks until a driver
-    * GC — on a 100 TB run that storage residue evicts execution memory.
-    * The checkpointed RDD sits in the plan's `LogicalRDD` leaf. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Free every `localCheckpoint()` block an operator's RESULT plan
-    * still references — for operators (e.g. [[jaccardPairsPrefix]])
-    * whose returned frame reads the checkpoint lazily, so they cannot
-    * free it internally. Call AFTER materializing the result (write /
-    * collect); the frame must not be re-executed afterwards. Iterative
-    * operators that fully consume their checkpoints internally
-    * ([[connectedComponents]]) free them eagerly and need no call. */
-  def releaseCheckpoints(df: DataFrame): Unit = freeCheckpoint(df)
+  /** Free the storage blocks behind every `localCheckpoint()` a frame's
+    * plan references, each RDD once, the moment the frame is
+    * superseded. `Dataset.unpersist` cannot do this (the blocks belong
+    * to the checkpointed internal RDD, not the cache manager), and
+    * waiting for the ContextCleaner means an iterative operator holds
+    * every superseded iteration's blocks until a driver GC — on a
+    * 100 TB run that storage residue evicts execution memory. The
+    * checkpointed RDD sits in the plan's `LogicalRDD` leaves.
+    *
+    * Operators whose RESULT reads a checkpoint lazily (e.g.
+    * [[jaccardPairsPrefix]]) cannot free it internally: call this on
+    * the result AFTER materializing it (write / collect); the frame must
+    * not be re-executed afterwards. Iterative operators that fully
+    * consume their checkpoints internally ([[connectedComponents]])
+    * free them eagerly and need no call. */
+  def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.distinctBy(_.id).foreach(_.unpersist(blocking = false))
 
   /** AS-OF JOIN: for every left row, the most recent right row at or
     * before it per key. One shuffle on the key, one ordered window pass
@@ -381,7 +378,7 @@ object Operators {
       .agg(sort_array(collect_list(col("__rank"))).as("__cs"),
         count(lit(1)).cast("int").as("__len"))
       .localCheckpoint()
-    freeCheckpoint(sets) // both consumers materialized into `ranked`
+    releaseCheckpoints(sets) // both consumers materialized into `ranked`
     ranked
   }
 
@@ -608,7 +605,7 @@ object Operators {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
       }
-      freeCheckpoint(e) // collected to the driver; blocks not needed
+      releaseCheckpoints(e) // collected to the driver; blocks not needed
       val rows = parent.keys.toSeq.groupBy(find).toSeq.flatMap {
         case (root, members) => members.map(id =>
           org.apache.spark.sql.Row(id, root)) // root IS the min by construction
@@ -625,7 +622,7 @@ object Operators {
       .unionByName(e1.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint() // reused every round
-    freeCheckpoint(e) // sym materialized eagerly; e is superseded
+    releaseCheckpoints(e) // sym materialized eagerly; e is superseded
     // localCheckpoint per round truncates lineage — without it the
     // plan (and driver heap) grows with every iteration
     var labels = sym.select(col("src").as("id")).distinct()
@@ -643,12 +640,12 @@ object Operators {
       val changed = next.as("n")
         .join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.cluster") =!= col("o.cluster")).count()
-      freeCheckpoint(labels) // superseded by next (already materialized)
+      releaseCheckpoints(labels) // superseded by next (already materialized)
       labels = next
       converged = changed == 0
       i += 1
     }
-    freeCheckpoint(sym) // the fixed point no longer references edges
+    releaseCheckpoints(sym) // the fixed point no longer references edges
     labels
   }
 
@@ -798,7 +795,7 @@ object Operators {
     * (PARTITION BY g)` second window.
     *
     * `maxGroupRows` default: measured on local[32], 3 groups
-    * (docs/BENCH_SUMMARY round 7) — at 1M rows/group the two paths tie
+    * (round 7) — at 1M rows/group the two paths tie
     * (2.40s vs 2.45s), at 2M the distributed path already wins 1.6x
     * (4.85s vs 3.04s), at 16M it wins 2.9x (50.6s vs 17.6s, the window
     * regime sorting 16M-row groups on 3 of 32 cores). The crossover is

@@ -848,7 +848,7 @@ object SimilarityOps {
     }
     // the working checkpoint is fully consumed (centroids are plain
     // driver values) — free its storage blocks now rather than waiting
-    // for a driver GC (see Operators.freeCheckpoint)
+    // for a driver GC (see Operators.releaseCheckpoints)
     Operators.releaseCheckpoints(vecs)
     cents
   }

@@ -333,7 +333,7 @@ object ExtendedQueries {
   // the 3-group window path runs (one shuffle, fastest below the
   // crossover); past ~4M rows in one group the SAME query routes to the
   // distributed groupedRank instead of serializing a group per task —
-  // measured crossover in docs/BENCH_SUMMARY.md round 7.
+  // the measured crossover is in the rankAndCountByGroup scaladoc.
   private val q77 = QueryDef(
     "q77_percentiles",
     (s, dir) => {

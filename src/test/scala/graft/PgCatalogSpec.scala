@@ -429,23 +429,46 @@ class PgCatalogSpec extends SparkSpec {
       === "SELECT NOT (a RLIKE 'x') FROM t")
     assert(PgCompat.regexOps("SELECT a ~* 'x.*y' FROM t")
       === "SELECT a RLIKE '(?i)x.*y' FROM t")
-    // a '::' inside a literal survives; outside it folds to CAST with
-    // the multi-word PG type names mapped
+    // a '::' inside a literal survives; outside it Spark parses the
+    // cast itself and only the PG type name is aliased
     assert(PgCompat.casts(e, "SELECT 'a::b' AS t") === "SELECT 'a::b' AS t")
-    assert(PgCompat.casts(e, "SELECT x::character varying(10) FROM t")
-      === "SELECT CAST(x AS STRING) FROM t")
-    assert(PgCompat.casts(e, "SELECT (a + b)::numeric(10,2) FROM t")
-      === "SELECT CAST((a + b) AS DECIMAL(10,2)) FROM t")
-    assert(PgCompat.casts(e, "SELECT ts::timestamp without time zone FROM t")
-      === "SELECT CAST(ts AS TIMESTAMP) FROM t")
-    // a paren group glued to an identifier chain is a call: the whole
-    // call is the operand; a doubled quote stays inside its literal
-    assert(PgCompat.casts(e, "SELECT count(*)::bigint FROM t")
-      === "SELECT CAST(count(*) AS BIGINT) FROM t")
-    assert(PgCompat.casts(e, "SELECT s.f(x, ')')::int FROM t")
-      === "SELECT CAST(s.f(x, ')') AS INT) FROM t")
-    assert(PgCompat.casts(e, "SELECT 'it''s'::text")
-      === "SELECT CAST('it''s' AS STRING)")
+    def typed(q: String): (Any, String) = {
+      val df = SqlRouter.execute(e, q).df.get
+      (df.collect().head.get(0), df.schema.head.dataType.catalogString)
+    }
+    val one = "FROM (SELECT 12 AS x, 1 AS a, 2 AS b, " +
+      "TIMESTAMP'2024-01-02 03:04:05' AS ts) t"
+    assert(typed(s"SELECT x::character varying(10) $one") === ("12", "string"))
+    assert(typed(s"SELECT (a + b)::numeric(10,2) $one")
+      === (new java.math.BigDecimal("3.00"), "decimal(10,2)"))
+    assert(typed(s"SELECT ts::timestamp without time zone $one")
+      === (rows(e, "SELECT TIMESTAMP'2024-01-02 03:04:05'").head.get(0), "timestamp"))
+    assert(typed(s"SELECT count(*)::bigint $one") === (1L, "bigint"))
+    // a `)` inside a literal argument stays inside its call
+    assert(typed(s"SELECT length(concat(x, ')'))::bigint $one") === (3L, "bigint"))
+    // a doubled quote stays inside its literal
+    assert(typed("SELECT 'it''s'::text") === ("it's", "string"))
+    // operands a text walk-back misreads: CASE ... END, a subscript, a
+    // spaced `::`, and more casts than one statement used to rewrite
+    assert(typed(s"SELECT CASE WHEN x > 0 THEN x END::text $one") === ("12", "string"))
+    assert(typed("SELECT array(1,2)[0]::int4") === (1, "int"))
+    assert(typed(s"SELECT x :: int4 $one") === (12, "int"))
+    val wide = SqlRouter.execute(e,
+      (1 to 65).map(i => s"'$i'::int4 AS c$i").mkString("SELECT ", ", ", "")).df.get
+    assert(wide.collect().head.toSeq === (1 to 65))
+    assert(wide.schema.map(_.dataType.catalogString).distinct === Seq("int"))
+    // Catalyst's precedence: `::` binds tighter than * and unary minus
+    // (a literal's sign is part of the literal)
+    assert(typed("SELECT -1::text") === ("-1", "string"))
+    assert(typed("SELECT (1+2)::text") === ("3", "string"))
+    assert(typed("SELECT 2 * 3::int4") === (6, "int"))
+    // bare numeric keeps PG's unconstrained scale, not Spark's (10,0)
+    assert(typed("SELECT 3::numeric")
+      === (new java.math.BigDecimal("3.000000000000000000"), "decimal(38,18)"))
+    assert(typed("SELECT 'pg_class'::regclass") === (1259L, "bigint")) // PG's fixed oid
+    // a double-quoted operand is an identifier, not a string literal,
+    // also where the cast needs no alias
+    assert(typed("SELECT \"Col\"::bigint FROM (SELECT '4' AS Col) t") === (4L, "bigint"))
     // ANY with a subquery operand becomes IN, array operand the shim
     assert(PgCompat.anyOp("WHERE x = ANY(SELECT id FROM t)")
       === "WHERE x IN (SELECT id FROM t)")

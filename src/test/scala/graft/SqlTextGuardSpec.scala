@@ -30,36 +30,62 @@ class SqlTextGuardSpec extends AnyFunSuite {
   }
 
   private val DmlRender = "s\"(UPDATE|DELETE FROM) \\$".r
+  private val CastRender = "s\"CAST\\(\\$".r
 
-  /** `file:line` of every UPDATE/DELETE text `file` builds by
-    * interpolation: the shape of a statement rendered only to be routed
-    * again. Every UPDATE/DELETE form goes through one parsed mutation
-    * path instead. */
-  private[graft] def dmlRenders(file: java.nio.file.Path): Seq[String] = {
+  /** `file:line` of every line of `file` that builds `render`-shaped
+    * SQL by interpolation: text rendered only to be parsed again. */
+  private[graft] def renders(file: java.nio.file.Path,
+      render: scala.util.matching.Regex): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val lines = java.nio.file.Files.readAllLines(file).asScala.toIndexedSeq
-    lines.indices.filter(i => DmlRender.findFirstIn(lines(i)).isDefined)
+    lines.indices.filter(i => render.findFirstIn(lines(i)).isDefined)
       .map(i => s"${file.getFileName}:${i + 1}")
   }
 
-  test("SqlRouter renders no UPDATE/DELETE text to re-route") {
-    val f = java.nio.file.Paths.get("src", "main", "scala", "graft",
-      "SqlRouter.scala")
+  private def mainSource(name: String): java.nio.file.Path = {
+    val f = java.nio.file.Paths.get("src", "main", "scala", "graft", name)
     assert(java.nio.file.Files.isRegularFile(f), s"run from the repo root: $f")
-    val found = dmlRenders(f)
+    f
+  }
+
+  private def planted(lines: String*): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile("render_guard", ".scala")
+    f.toFile.deleteOnExit()
+    java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    f
+  }
+
+  // Every UPDATE/DELETE form goes through one parsed mutation path.
+  test("SqlRouter renders no UPDATE/DELETE text to re-route") {
+    val found = renders(mainSource("SqlRouter.scala"), DmlRender)
     assert(found.isEmpty, "UPDATE/DELETE text rendered for re-routing " +
       s"(hand the parsed Mutation to mutateRows): ${found.mkString(", ")}")
   }
 
   test("the render guard recognizes a re-rendered DELETE") {
-    val f = java.nio.file.Files.createTempFile("dml_guard", ".scala")
-    f.toFile.deleteOnExit()
-    java.nio.file.Files.write(f, Seq(
+    val f = planted(
       "object R {",
       "  def f(c: String, w: String) = s\"DELETE FROM $c WHERE $w\"",
       "  def g(c: String) = s\"UPDATE $c SET v = 1\"",
-      "}").mkString("\n").getBytes("UTF-8"))
-    assert(dmlRenders(f) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
+      "}")
+    assert(renders(f, DmlRender) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
+  }
+
+  // Spark parses `expr::type` itself: PgCompat aliases the type name
+  // and never carves the operand out of the text.
+  test("PgCompat renders no CAST(operand AS type) text") {
+    val found = renders(mainSource("PgCompat.scala"), CastRender)
+    assert(found.isEmpty, "cast operand rendered from text (alias the " +
+      s"type after `::` instead): ${found.mkString(", ")}")
+  }
+
+  test("the cast guard recognizes a rendered CAST") {
+    val f = planted(
+      "object C {",
+      "  def f(lhs: String, t: String) = s\"CAST($lhs AS $t)\"",
+      "  def g(t: String) = s\"x::$t\"",
+      "}")
+    assert(renders(f, CastRender) === Seq(s"${f.getFileName}:2"))
   }
 
   test("no quote or comment state machine outside SqlText") {

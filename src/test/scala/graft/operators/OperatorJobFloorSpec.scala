@@ -2,7 +2,8 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,6 +79,30 @@ class OperatorJobFloorSpec extends SparkSpec {
     } yield (a, b)).toSet
     assert(brute.size === 16 && pairs === brute)
     assert(jobs <= 10, s"prefix-route jaccardPairsAuto + collect ran $jobs jobs")
+  }
+
+  test("releaseCheckpoints frees each checkpoint RDD once") {
+    // a prefix-route result reads its one checkpoint from four leaves
+    // (the candidate self-join's two sides and the two verify sides)
+    val found = Operators.jaccardPairsAuto(sparse(160), "doc_id", "cs", 0.5)
+    found.collect()
+    val leaves = found.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(leaves.size > leaves.distinct.size, "fixture shares no checkpoint")
+    val unpersists = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit =
+        unpersists.incrementAndGet()
+    }
+    Thread.sleep(200)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Operators.releaseCheckpoints(found)
+      Thread.sleep(200)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(unpersists.get() === leaves.distinct.size)
+    assert(unpersists.get() === 1)
   }
 
   test("connectedComponents: 0 jobs on a local edge list, 2 otherwise") {

@@ -316,7 +316,8 @@ object PgCompat {
     "uuid" -> "STRING", "bytea" -> "BINARY",
     "character varying" -> "STRING", "double precision" -> "DOUBLE",
     "timestamp without time zone" -> "TIMESTAMP",
-    "timestamp with time zone" -> "TIMESTAMP")
+    "timestamp with time zone" -> "TIMESTAMP",
+    "interval" -> "INTERVAL DAY TO SECOND")
 
   // `::`, the type word (or a multi-word PG spelling), optional (args),
   // optional []
@@ -344,7 +345,6 @@ object PgCompat {
               Some((lit.start, m.end, oid.fold("NULL")(_.toString) + "::BIGINT"))
             case None => to("BIGINT")
           }
-        case "interval" => to("INTERVAL DAY TO SECOND")
         case w => castTypeMap.get(w) match {
           case Some("DECIMAL(38,18)") if args.nonEmpty => to("DECIMAL" + args)
           case Some(t) => to(t)

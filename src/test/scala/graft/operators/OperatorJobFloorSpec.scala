@@ -30,22 +30,24 @@ class OperatorJobFloorSpec extends SparkSpec {
   }
   private def sparse(nDocs: Int): DataFrame = sparseSets(nDocs).toDF("doc_id", "cs")
 
-  /** Jobs started while `body` runs (listener count, as
-    * StatementJobFloorSpec: a short sleep lets the bus drain). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
+  /** Events `listen` counts while `body` runs (as StatementJobFloorSpec:
+    * a short sleep lets the bus drain). */
+  private def counted[T](listen: AtomicInteger => SparkListener)(
+      body: => T): (T, Int) = {
+    val n = new AtomicInteger(0)
+    val listener = listen(n)
     Thread.sleep(200)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
       Thread.sleep(200)
-      (out, jobs.get())
+      (out, n.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  private def jobsOf[T](body: => T): (T, Int) = counted(n => new SparkListener {
+    override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+  })(body)
 
   private def cachedRdds(): Set[Int] =
     spark.sparkContext.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet
@@ -90,18 +92,11 @@ class OperatorJobFloorSpec extends SparkSpec {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
     assert(leaves.size > leaves.distinct.size, "fixture shares no checkpoint")
-    val unpersists = new AtomicInteger(0)
-    val listener = new SparkListener {
+    val (_, unpersists) = counted(n => new SparkListener {
       override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit =
-        unpersists.incrementAndGet()
-    }
-    Thread.sleep(200)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Operators.releaseCheckpoints(found)
-      Thread.sleep(200)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(unpersists.get() === 1)
+        n.incrementAndGet()
+    })(Operators.releaseCheckpoints(found))
+    assert(unpersists === 1)
   }
 
   test("connectedComponents: 0 jobs on a local edge list, 2 otherwise") {

@@ -59,12 +59,12 @@ object PgCompat {
     if (s.contains("~")) s = regexOps(s)
     if (s.contains("::")) s = casts(engine, s)
     // identifier-quote conversion only for statements that showed a PG
-    // signal (a rewrite fired, or a catalog reference is present) —
-    // MySQL-dialect statements use double quotes for STRINGS and must
-    // keep them
+    // signal (a rewrite fired, a `::` outside any quoted span, or a
+    // catalog reference) — MySQL-dialect statements use double quotes
+    // for STRINGS and must keep them, `"::1"` included
     if (s.contains("\"") &&
-      (s != sql || lower.contains("::") || lower.contains("pg_catalog") ||
-        lower.contains("__sys__")))
+      (s != sql || lower.contains("pg_catalog") || lower.contains("__sys__") ||
+        (lower.contains("::") && SqlText.mask(sql, pgSpans(sql)).contains("::"))))
       s = quoteIdents(s)
     s
   }
@@ -334,9 +334,10 @@ object PgCompat {
         else Some((m.start, m.end, "::" + t))
       m.group(1).toLowerCase.split("\\s+").mkString(" ") match {
         case w @ ("regclass" | "regtype") =>
-          // a literal operand resolves now; any other is an oid already
-          sps.find(sp => sp.kind == SqlText.Quoted && sp.end == m.start &&
-              s.charAt(sp.start) == '\'') match {
+          // a literal operand (`'t'::` or `'t' ::`) resolves now; any
+          // other is an oid already
+          sps.find(sp => sp.kind == SqlText.Quoted && sp.end <= m.start &&
+              s.charAt(sp.start) == '\'' && s.substring(sp.end, m.start).isBlank) match {
             case Some(lit) =>
               val name = s.substring(lit.start + 1, lit.end - 1)
               val oid =

@@ -457,8 +457,9 @@ class PgCatalogSpec extends SparkSpec {
       (1 to 65).map(i => s"'$i'::int4 AS c$i").mkString("SELECT ", ", ", "")).df.get
     assert(wide.collect().head.toSeq === (1 to 65))
     assert(wide.schema.map(_.dataType.catalogString).distinct === Seq("int"))
-    // Catalyst's precedence: `::` binds tighter than * and unary minus
-    // (a literal's sign is part of the literal)
+    // Catalyst's precedence: `::` binds tighter than *. Known PG
+    // divergence: Spark lexes `-1` as one signed literal, so `-1::text`
+    // answers '-1', where PG reads `-(1::text)` and rejects it
     assert(typed("SELECT -1::text") === ("-1", "string"))
     assert(typed("SELECT (1+2)::text") === ("3", "string"))
     assert(typed("SELECT 2 * 3::int4") === (6, "int"))
@@ -466,9 +467,15 @@ class PgCatalogSpec extends SparkSpec {
     assert(typed("SELECT 3::numeric")
       === (new java.math.BigDecimal("3.000000000000000000"), "decimal(38,18)"))
     assert(typed("SELECT 'pg_class'::regclass") === (1259L, "bigint")) // PG's fixed oid
+    assert(typed("SELECT 'pg_class' :: regclass") === (1259L, "bigint"))
     // a double-quoted operand is an identifier, not a string literal,
     // also where the cast needs no alias
     assert(typed("SELECT \"Col\"::bigint FROM (SELECT '4' AS Col) t") === (4L, "bigint"))
+    // a `::` only inside quotes is no PG signal: MySQL-dialect double
+    // quotes stay strings
+    assert(typed("SELECT x FROM (SELECT 1 AS x, '::1' AS ip) t WHERE ip = \"::1\"")
+      === (1, "int"))
+    assert(typed("SELECT \"v6\" FROM (SELECT 'fe80::1' AS ip) t") === ("v6", "string"))
     // ANY with a subquery operand becomes IN, array operand the shim
     assert(PgCompat.anyOp("WHERE x = ANY(SELECT id FROM t)")
       === "WHERE x IN (SELECT id FROM t)")

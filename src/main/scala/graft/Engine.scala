@@ -1144,9 +1144,9 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     * with the server). Deliberately NOT run at Engine construction:
     * harness engines are constructed per query by the dozen, and
     * auto-starting network daemons there would be wrong (the same
-    * recorded decision as the replica controller's
-    * `running` flag — ENGINEERING_NOTES r16). Reconciler-based, so a
-    * racing ALTER converges to the persisted flag. */
+    * recorded decision as the replica controller's `running` flag —
+    * ENGINEERING_NOTES, recorded design decisions). Reconciler-based,
+    * so a racing ALTER converges to the persisted flag. */
   def resumeSubscriptionDaemons(): Unit =
     subscriptions.keys.foreach(reconcileSubDaemon)
 

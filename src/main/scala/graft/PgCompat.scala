@@ -296,8 +296,11 @@ object PgCompat {
   // 6. ::type casts. Spark parses `expr::type` itself, with PG's
   //    precedence, so the operand is Catalyst's to find: this pass
   //    rewrites only the type phrase after each `::` — PG names Spark
-  //    rejects (int4, text, ...), the two Spark would read differently
-  //    (bare numeric, interval) — and drops a `[]` array suffix.
+  //    rejects (int4, text, ...), the ones Spark would read differently
+  //    (bare numeric, interval, timestamp's precision argument) — and
+  //    drops a `[]` array suffix. Names Spark parses as spelled (int,
+  //    bigint, boolean, date, `timestamp without time zone` as
+  //    timestamp_ntz, ...) stay Catalyst's.
   //    regclass/regtype literals resolve against the live catalog at
   //    rewrite time — settings and oids are statement-time constants,
   //    the same contract the reference's rewrites rely on.
@@ -305,17 +308,13 @@ object PgCompat {
   private val castTypeMap = Map(
     "text" -> "STRING", "varchar" -> "STRING", "name" -> "STRING",
     "char" -> "STRING", "bpchar" -> "STRING", "character" -> "STRING",
-    "int2" -> "SMALLINT", "smallint" -> "SMALLINT",
-    "int4" -> "INT", "int" -> "INT", "integer" -> "INT",
-    "int8" -> "BIGINT", "bigint" -> "BIGINT", "oid" -> "BIGINT",
+    "int2" -> "SMALLINT", "int4" -> "INT", "int8" -> "BIGINT", "oid" -> "BIGINT",
     "float4" -> "FLOAT", "real" -> "FLOAT",
     "float8" -> "DOUBLE", "numeric" -> "DECIMAL(38,18)",
-    "decimal" -> "DECIMAL(38,18)", "bool" -> "BOOLEAN",
-    "boolean" -> "BOOLEAN", "date" -> "DATE", "timestamp" -> "TIMESTAMP",
+    "decimal" -> "DECIMAL(38,18)", "bool" -> "BOOLEAN", "timestamp" -> "TIMESTAMP",
     "timestamptz" -> "TIMESTAMP", "json" -> "STRING", "jsonb" -> "STRING",
     "uuid" -> "STRING", "bytea" -> "BINARY",
     "character varying" -> "STRING", "double precision" -> "DOUBLE",
-    "timestamp without time zone" -> "TIMESTAMP",
     "timestamp with time zone" -> "TIMESTAMP",
     "interval" -> "INTERVAL DAY TO SECOND")
 

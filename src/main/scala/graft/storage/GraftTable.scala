@@ -1657,7 +1657,7 @@ final class GraftTable(val spark: SparkSession, val path: Path,
         k -> renameInExpr(v, from, to)
       case (k, v) if k.startsWith("unique.") =>
         // expression indexes hold SQL TEXT — the ENGINEERING_NOTES
-        // invariant: every prop namespace holding SQL text rides the
+        // recorded decision: every prop namespace holding SQL text rides the
         // identifier rewrite (an orphaned `lower(old_name)` arbiter
         // would fail analysis on the next ON CONFLICT)
         k -> (if (v.startsWith("expr:"))

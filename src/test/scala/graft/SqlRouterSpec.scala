@@ -223,6 +223,8 @@ class SqlRouterSpec extends SparkSpec {
   test("statement classification emits the wire command tags (A38)") {
     val cases = Seq(
       "SELECT 1" -> "SELECT",
+      "(SELECT 1)" -> "SELECT",
+      "/* c */ SELECT 1" -> "SELECT",
       " with x as (select 1) select * from x" -> "SELECT",
       "VALUES (1)" -> "SELECT",
       "INSERT INTO t VALUES (1)" -> "INSERT",
@@ -231,6 +233,7 @@ class SqlRouterSpec extends SparkSpec {
       "DELETE FROM t" -> "DELETE",
       "TRUNCATE TABLE t" -> "TRUNCATE TABLE",
       "START TRANSACTION" -> "BEGIN",
+      "START REPLICA" -> "START REPLICA",
       "CREATE TABLE t (a INT)" -> "CREATE TABLE",
       "CREATE OR REPLACE VIEW v AS SELECT 1" -> "CREATE VIEW",
       "DROP DATABASE d" -> "DROP DATABASE",
@@ -239,7 +242,7 @@ class SqlRouterSpec extends SparkSpec {
       "DESCRIBE t" -> "SHOW",
       "EXPLAIN SELECT 1" -> "EXPLAIN")
     cases.foreach { case (sql, tag) =>
-      assert(SqlRouter.classify(sql) === tag, sql)
+      assert(Stmt.of(sql).tag === tag, sql)
     }
   }
 
@@ -1205,6 +1208,9 @@ class SqlRouterSpec extends SparkSpec {
     exec(e, "UPDATE dq SET body = $$text RETURNING rows$$ WHERE id = 1")
     assert(exec(e, "SELECT body FROM dq").df.get.as[String].head()
       === "text RETURNING rows")
+    // a parenthesized set-op head is a query: its dollar quotes fold
+    assert(exec(e, "(SELECT $$a$$) UNION (SELECT 'b')").df.get
+      .as[String].collect().sorted.toSeq === Seq("a", "b"))
   }
 
   test("ON CONFLICT ... RETURNING: the ORM id-grab upsert shape") {
@@ -1269,7 +1275,6 @@ class SqlRouterSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"))
     assert(plan.contains("Scan parquet") || plan.contains("Scan ExistingRDD")
       || plan.contains("LocalTableScan"))
-    assert(SqlRouter.classify("EXPLAIN SELECT 1") === "EXPLAIN")
 
     // EXPLAIN ANALYZE (PG/DuckDB spelling): runs the plan — the printed
     // adaptive plan is the runtime-final one, with a timing footer

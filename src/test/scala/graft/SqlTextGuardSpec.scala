@@ -32,13 +32,19 @@ class SqlTextGuardSpec extends AnyFunSuite {
   private val DmlRender = "s\"(UPDATE|DELETE FROM) \\$".r
   private val CastRender = "s\"CAST\\(\\$".r
 
-  /** `file:line` of every line of `file` that builds `render`-shaped
-    * SQL by interpolation: text rendered only to be parsed again. */
-  private[graft] def renders(file: java.nio.file.Path,
-      render: scala.util.matching.Regex): Seq[String] = {
+  // a statement-head keyword probed on raw text, or a letter-run head read
+  private val HeadProbe = ("""regionMatches\(true,[^"]*"(SELECT|WITH|TABLE|""" +
+    """VALUES|EXPLAIN|INSERT|REPLACE|UPDATE|DELETE|TRUNCATE|CREATE|DROP|""" +
+    """ALTER|RENAME|SHOW|SET|USE|RESET|BEGIN|START|COMMIT|ROLLBACK|LOCK|""" +
+    """UNLOCK|COPY|LOAD|CHECK)"|takeWhile\((_\.isLetter|c => c\.isLetter)\)""").r
+
+  /** `file:line` of every line of `file` matching `pattern` (a rendered
+    * SQL shape, a head probe). */
+  private[graft] def matchingLines(file: java.nio.file.Path,
+      pattern: scala.util.matching.Regex): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val lines = java.nio.file.Files.readAllLines(file).asScala.toIndexedSeq
-    lines.indices.filter(i => render.findFirstIn(lines(i)).isDefined)
+    lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined)
       .map(i => s"${file.getFileName}:${i + 1}")
   }
 
@@ -57,7 +63,7 @@ class SqlTextGuardSpec extends AnyFunSuite {
 
   // Every UPDATE/DELETE form goes through one parsed mutation path.
   test("SqlRouter renders no UPDATE/DELETE text to re-route") {
-    val found = renders(mainSource("SqlRouter.scala"), DmlRender)
+    val found = matchingLines(mainSource("SqlRouter.scala"), DmlRender)
     assert(found.isEmpty, "UPDATE/DELETE text rendered for re-routing " +
       s"(hand the parsed Mutation to mutateRows): ${found.mkString(", ")}")
   }
@@ -68,13 +74,13 @@ class SqlTextGuardSpec extends AnyFunSuite {
       "  def f(c: String, w: String) = s\"DELETE FROM $c WHERE $w\"",
       "  def g(c: String) = s\"UPDATE $c SET v = 1\"",
       "}")
-    assert(renders(f, DmlRender) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
+    assert(matchingLines(f, DmlRender) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
   }
 
   // Spark parses `expr::type` itself: PgCompat aliases the type name
   // and never carves the operand out of the text.
   test("PgCompat renders no CAST(operand AS type) text") {
-    val found = renders(mainSource("PgCompat.scala"), CastRender)
+    val found = matchingLines(mainSource("PgCompat.scala"), CastRender)
     assert(found.isEmpty, "cast operand rendered from text (alias the " +
       s"type after `::` instead): ${found.mkString(", ")}")
   }
@@ -85,7 +91,24 @@ class SqlTextGuardSpec extends AnyFunSuite {
       "  def f(lhs: String, t: String) = s\"CAST($lhs AS $t)\"",
       "  def g(t: String) = s\"x::$t\"",
       "}")
-    assert(renders(f, CastRender) === Seq(s"${f.getFileName}:2"))
+    assert(matchingLines(f, CastRender) === Seq(s"${f.getFileName}:2"))
+  }
+
+  // A statement's head is read once, by Stmt; the router reads the Stmt.
+  test("SqlRouter probes no statement head outside Stmt") {
+    val found = matchingLines(mainSource("SqlRouter.scala"), HeadProbe)
+    assert(found.isEmpty, "statement head re-read from text (read the " +
+      s"statement's Stmt instead): ${found.mkString(", ")}")
+  }
+
+  test("the head guard recognizes a head probe, not a clause keyword") {
+    val f = planted(
+      "object H {",
+      "  def f(s: String) = s.regionMatches(true, 0, \"SELECT\", 0, 6)",
+      "  def g(s: String) = s.trim.takeWhile(_.isLetter).toUpperCase",
+      "  def h(ob: String) = ob.regionMatches(true, 0, \"BY\", 0, 2)",
+      "}")
+    assert(matchingLines(f, HeadProbe) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
   }
 
   test("no quote or comment state machine outside SqlText") {

@@ -348,7 +348,8 @@ class SubscriptionSpec extends SparkSpec {
     assert(exec(sub, "SELECT id FROM acct ORDER BY id").df.get
       .as[Long].collect().toSeq === Seq(1L, 2L, 3L))
     // engine restart: daemons deliberately do NOT auto-start
-    // (per-query harness engines — ENGINEERING_NOTES r16/r17);
+    // (per-query harness engines — ENGINEERING_NOTES, recorded design
+    // decisions);
     // resumeSubscriptionDaemons is the explicit ops surface and
     // reconciles to the PERSISTED flag
     val sub2 = new Engine(spark, sub.warehouse)

@@ -1151,8 +1151,8 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
     subscriptions.keys.foreach(reconcileSubDaemon)
 
   /** Poll-apply: decode and LWW-merge every framelog frame past the
-    * checkpoint into the subscribed tables, then advance the
-    * checkpoint. Disabled subscriptions apply NOTHING (PG: DISABLE
+    * checkpoint into the subscribed tables ([[applyWindow]]), then
+    * advance the checkpoint. Disabled subscriptions apply NOTHING (PG: DISABLE
     * pauses the apply worker; the frames wait in the log). Returns the
     * number of frames applied. */
   def refreshSubscription(name: String): Long = {
@@ -1202,39 +1202,12 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
         return 0L
       }
       val (maxOff, n) = (head.getLong(0), head.getLong(1))
-      // ONE tagged decode pass for the whole window (the pgoutput twin
-      // of applyReplicaLog's multi-table apply): a subscription
-      // publishing many tables parses the window's bytes once, then
-      // each table's slice is a filter + struct projection over the
-      // persisted decode
-      val tbls = sub("tables").split(',').filter(_.nonEmpty).toSeq
-      if (tbls.size == 1) {
-        // single-table subscription: decode straight into the apply —
-        // the tagged pass below would pay a persist + count
-        // materialization job this window doesn't need
-        val t = table(s"${sub("db")}.${tbls.head}")
-        graft.streaming.CdcMerge.applyBatch(t,
-          graft.streaming.PgOutputDecoder.decodeSlotStreams(
-            frames, "slot", "off", "payload",
-            s"public.${tbls.head}", t.schema), Some(to - from))
-      } else if (tbls.nonEmpty) {
-        val byRel = tbls.map(tn =>
-          s"public.$tn" -> table(s"${sub("db")}.$tn").schema)
-        val decoded = graft.streaming.PgOutputDecoder
-          .decodeSlotStreamsMulti(frames, "slot", "off", "payload", byRel)
-          .persist()
-        try {
-          decoded.count() // materialize the single pass before the splits
-          tbls.zipWithIndex.foreach { case (tn, i) =>
-            val t = table(s"${sub("db")}.$tn")
-            val slice = decoded.filter(col(s"relation") === s"public.$tn")
-              .select(t.schema.fieldNames.toSeq
-                .map(f => col(s"__t_$i.`$f`").as(f)) ++
-                graft.streaming.CdcMerge.metaCols.map(col): _*)
-            graft.streaming.CdcMerge.applyBatch(t, slice, Some(to - from))
-          }
-        } finally decoded.unpersist()
-      }
+      val targets = sub("tables").split(',').filter(_.nonEmpty).toSeq
+        .map(tn => s"public.$tn" -> table(s"${sub("db")}.$tn"))
+      // the decode already yields each table's own schema
+      applyWindow(frames, to - from, targets)(
+        graft.streaming.PgOutputDecoder.decodeSlotStreamsMulti(_, "slot",
+          "off", "payload", targets.map { case (rel, t) => rel -> t.schema }))
       advance(Some(maxOff))
       n
     } finally frames.unpersist()
@@ -1443,26 +1416,24 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
   /** SQL-apply side of the replica, poll form (the reference's applier
     * thread applies row events as they arrive,
     * `binlogreplication/binlog_replica_applier.go:864-1266`; here the
-    * IO thread's flushed framelog applies in batches — the exact
-    * discipline of [[refreshSubscription]]): decode every frame in
-    * the window [apply checkpoint, last binlog txn boundary), honor
-    * the recorded REPLICATE_* filters (C10), LWW-condense + CoW-merge
-    * each named table (C6/C7), then advance the checkpoint. `tables`
+    * IO thread's flushed framelog applies in batches through
+    * [[applyWindow]]): decode every frame in the window [apply
+    * checkpoint, last binlog txn boundary), honor the recorded
+    * REPLICATE_* filters (C10), LWW-condense + CoW-merge each named
+    * table (C6/C7), then advance the checkpoint. `tables`
     * are local `db.table` names matching the primary's TABLE_MAP
     * names; decode specs derive from each table's declared schema
     * ([[graft.streaming.BinlogRowDecoder.specsFor]]). The window cut
     * ([[graft.streaming.FrameLog.endAtMyCommit]]) never splits a
     * transaction, so a poll racing the IO thread stays safe. Returns
     * the number of frames consumed. */
-  def applyReplicaLog(tables: Seq[String],
-      crc32Checksum: Boolean = false): Long = {
+  def applyReplicaLog(tables: Seq[String]): Long = {
     val dir = warehouse.resolve("_replica")
     val slot = "replica"
     if (!Files.isDirectory(dir)) return 0L
     val from = replicaConfig.getOrElse("apply.bytepos", "0").toLong
     val (to, _) = graft.streaming.FrameLog.endAtMyCommit(dir, slot, from)
     if (to <= from) return 0L
-    import org.apache.spark.sql.functions.col
     val frames = spark.read.format("framelog")
       .option(s"range.$slot", s"$from:$to").load(dir.toString)
       .persist() // one file read: discovery scan + ONE decode pass
@@ -1482,76 +1453,21 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
       // window name them).
       val targets0 =
         if (tables.nonEmpty) tables
-        else graft.streaming.BinlogEventDecoder
-          .windowTables(frames, "payload", crc32Checksum)
+        else graft.streaming.BinlogEventDecoder.windowTables(frames, "payload")
           .filter { qt =>
             qt.split('.') match {
               case Array(db, t) => listTables(db).contains(t)
               case _ => false
             }
           }
-      val targets = targets0.filter(admitted)
-      if (targets.nonEmpty) {
-        val specsByTable = targets.map(qt => qt ->
-          graft.streaming.BinlogRowDecoder.specsFor(table(qt).schema))
-        // decode types follow the wire specs; the table may declare a
-        // wider/different Spark type (BOOL rides TINYINT) — cast data
-        // columns back to the declared schema before the merge. TIME
-        // is the one non-cast conversion: Time2 decodes to
-        // MICROSECONDS, while Spark's numeric↔interval casts speak
-        // SECONDS (q120's oracle pins that), so divide first — exact,
-        // since |µs| ≤ 838h·3.6e9 ≈ 3e15 < 2^53
-        def aligned(df: org.apache.spark.sql.DataFrame, qt: String,
-            refSql: String => String,
-            decType: String => org.apache.spark.sql.types.DataType)
-            : org.apache.spark.sql.DataFrame =
-          df.select(
-            table(qt).schema.fields.map { f =>
-              (f.dataType, decType(f.name)) match {
-                case (it: org.apache.spark.sql.types.DayTimeIntervalType,
-                    org.apache.spark.sql.types.LongType) =>
-                  org.apache.spark.sql.functions.expr(
-                    s"make_dt_interval(0, 0, 0, " +
-                      s"CAST(${refSql(f.name)} / 1000000.0 " +
-                      s"AS DECIMAL(20,6)))")
-                    .cast(it).as(f.name)
-                case _ => org.apache.spark.sql.functions
-                  .expr(refSql(f.name)).cast(f.dataType).as(f.name)
-              }
-            }.toSeq ++
-              graft.streaming.CdcMerge.metaCols.map(col): _*)
-        if (targets.size == 1) {
-          // single-table window: decode straight into the apply — the
-          // tagged pass below would pay a persist + count
-          // materialization job this window doesn't need
-          val qt = targets.head
-          val decoded = graft.streaming.BinlogEventDecoder
-            .decodeSlotStreams(frames, "slot", "off", "payload", qt,
-              specsByTable.head._2, crc32Checksum)
-          graft.streaming.CdcMerge.applyBatch(table(qt),
-            aligned(decoded, qt, n => s"`$n`",
-              n => decoded.schema(n).dataType), Some(to - from))
-        } else {
-          // ONE tagged decode pass for the whole window (r17 verdict
-          // #5): the per-table loop used to re-parse every event's
-          // bytes once per replicated table
-          val decoded = graft.streaming.BinlogEventDecoder
-            .decodeSlotStreamsMulti(frames, "slot", "off", "payload",
-              specsByTable, crc32Checksum)
-            .persist()
-          try {
-            decoded.count() // materialize the pass before the splits
-            targets.zipWithIndex.foreach { case (qt, i) =>
-              val st = decoded.schema(s"__t_$i").dataType
-                .asInstanceOf[org.apache.spark.sql.types.StructType]
-              val slice = decoded.filter(col("relation") === qt)
-              graft.streaming.CdcMerge.applyBatch(table(qt),
-                aligned(slice, qt, n => s"`__t_$i`.`$n`",
-                  n => st(n).dataType), Some(to - from))
-            }
-          } finally decoded.unpersist()
-        }
-      }
+      val targets = targets0.filter(admitted).map(qt => qt -> table(qt))
+      // decode types follow the wire specs; applyWindow casts back to
+      // each table's declared schema (BOOL rides TINYINT, TIME micros)
+      applyWindow(frames, to - from, targets)(
+        graft.streaming.BinlogEventDecoder.decodeSlotStreamsMulti(_, "slot",
+          "off", "payload", targets.map { case (qt, t) =>
+            qt -> graft.streaming.BinlogRowDecoder.specsFor(t.schema)
+          }))
       // advance AGAINST THE CURRENT config, touching only the apply
       // key — a concurrent CHANGE/STOP must not be reverted
       synchronized {
@@ -1559,6 +1475,48 @@ final class Engine(parentSession: SparkSession, val warehouse: Path) {
       }
       n
     } finally frames.unpersist()
+  }
+
+  /** Apply one decoded CDC window — a poll's persisted `frames`,
+    * spanning `span` bytes — to `targets` (decoded relation name →
+    * local table, in order). `decode` is the tagged decode of `frames`
+    * over exactly those relations: `relation`, `__t_0` … `__t_{n-1}`,
+    * meta. A single table applies its projection straight from the
+    * decode, with no persist and no count; more tables persist the
+    * decode, materialize it with one job, and send each table's
+    * `filter(relation) + projection` to the merge, so the window's
+    * bytes are parsed once either way. The projection casts each data
+    * column to the table's declared type. TIME is the one non-cast
+    * conversion: it decodes to LongType MICROSECONDS while Spark's
+    * numeric↔interval casts speak SECONDS (q120's oracle pins that),
+    * so it divides first — exact, since |µs| ≤ 838h·3.6e9 ≈ 3e15 <
+    * 2^53. Every byte hint is the whole window's span, an upper bound
+    * for each slice. */
+  private def applyWindow(frames: DataFrame, span: Long,
+      targets: Seq[(String, GraftTable)])(
+      decode: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{DayTimeIntervalType, LongType}
+    if (targets.isEmpty) return
+    val decoded = decode(frames)
+    val split = targets.size > 1
+    try {
+      if (split) decoded.persist().count() // the one pass, before the splits
+      targets.zipWithIndex.foreach { case ((rel, t), i) =>
+        val wire = decoded.schema(s"__t_$i").dataType.asInstanceOf[StructType]
+        val rows = if (split) decoded.filter(col("relation") === rel) else decoded
+        graft.streaming.CdcMerge.applyBatch(t, rows.select(
+          t.schema.fields.toSeq.map { f =>
+            val ref = s"`__t_$i`.`${f.name}`"
+            (f.dataType, wire(f.name).dataType) match {
+              case (it: DayTimeIntervalType, LongType) =>
+                expr(s"make_dt_interval(0, 0, 0, " +
+                  s"CAST($ref / 1000000.0 AS DECIMAL(20,6)))").cast(it).as(f.name)
+              case _ => col(ref).cast(f.dataType).as(f.name)
+            }
+          } ++ graft.streaming.CdcMerge.metaCols.map(col): _*), Some(span))
+      }
+    } finally if (split) decoded.unpersist()
   }
 
   // ------------------------------------------------------------------

@@ -348,7 +348,12 @@ object PgCatalog {
           "relforcerowsecurity BOOLEAN, relispopulated BOOLEAN, relreplident STRING, " +
           "relispartition BOOLEAN, relrewrite BIGINT, relfrozenxid BIGINT, " +
           "relminmxid BIGINT, relacl STRING, reloptions STRING, relpartbound STRING")
-        mk(spark, schema, snap.rels.map { r =>
+        // the catalog relations are ordinary tables in pg_catalog
+        val catalogRels = catalogRelOids.toSeq.sortBy(_._2).map {
+          case (name, oid) => Rel(oid, 11L, "pg_catalog", name, "r",
+            new StructType(), Nil, 0, Set.empty, Map.empty, None, 0L)
+        }
+        mk(spark, schema, (snap.rels ++ catalogRels).map { r =>
           // a partitioned parent is relkind 'p' with relhassubclass;
           // an attached partition carries relispartition + its bounds
           // in relpartbound (pg_get_expr's passthrough returns the

@@ -16,8 +16,8 @@ import graft.streaming.BinlogRowDecoder._
   * LWW condense → CoW merge) can be driven — and oracle-gated —
   * without a network.
   *
-  * Events use the v4 header (19 bytes, no CRC32 — pass
-  * `crc32Checksum = false` to the decoder, its default) and the
+  * Events use the v4 header (19 bytes, no CRC32 trailer — the form
+  * every logged frame has) and the
   * byte-for-byte layouts the decoder parses: TABLE_MAP with a
   * length-encoded column count, WRITE/UPDATE/DELETE_ROWS v2 with the
   * 2-byte inclusive extra-data length, full columns-present bitmaps,

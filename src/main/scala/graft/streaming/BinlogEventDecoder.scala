@@ -13,8 +13,8 @@ import BinlogRowDecoder.ColSpec
   * PUBLIC binlog v4 event format, feeding the engine's delta schema.
   * The cell-level row-image decode is [[BinlogRowDecoder]]; this layer
   * adds the event framing, the per-slot TABLE_MAP registry, and the
-  * transaction coordinates. Together with [[FrameLogSource]] (one
-  * event per frame) it is the binlog twin of [[PgOutputDecoder]].
+  * transaction coordinates. [[FrameLogSource]] serves it one event
+  * per frame.
   *
   * Event layout (little-endian; 19-byte common header):
   *  timestamp (4), event type (1), server_id (4), event_size (4),
@@ -48,10 +48,10 @@ import BinlogRowDecoder.ColSpec
   * Unknown event types are SKIPPED, not errors — a live stream carries
   * heartbeats, format descriptions, and version-specific bookkeeping
   * events that a consumer must tolerate (the opposite contract from
-  * pgoutput, whose message set is closed). `crc32Checksum = true`
-  * strips the 4-byte CRC32 trailer the server appends when
-  * `binlog_checksum=CRC32` (the reference negotiates the same,
-  * `binlog_replica_applier.go` handshake).
+  * pgoutput, whose message set is closed). Frames never carry the
+  * 4-byte CRC32 trailer a `binlog_checksum=CRC32` server appends: the
+  * live client and [[splitFile]] strip it ([[ChecksumTrailers]])
+  * before a frame is logged.
   */
 object BinlogEventDecoder {
 
@@ -69,6 +69,9 @@ object BinlogEventDecoder {
 
   final case class Change(relation: String, action: Int, group: String,
       server: Array[Byte], seq: Long, stmt: Long, values: Seq[Any])
+      extends SlotChange {
+    def meta: Seq[Any] = Seq(action, null, server, group, seq, stmt)
+  }
 
   /** Statements that autocommit (DDL) or explicitly commit — the Query
     * forms that ARE their own commit marker under a GTID envelope.
@@ -175,19 +178,16 @@ object BinlogEventDecoder {
       }
 
     /** Parse one binlog event; emits zero or more [[Change]]s. */
-    def onEvent(frame: Array[Byte], specs: Map[String, Seq[ColSpec]],
-        crc32Checksum: Boolean = false): Seq[Change] = {
+    def onEvent(frame: Array[Byte],
+        specs: Map[String, Seq[ColSpec]]): Seq[Change] = {
       require(frame.length >= 19, s"binlog event shorter than header: ${frame.length}")
       val eventType = frame(4) & 0xff
       val logPos = uint(frame, 13, 4)
-      // CRC32 trailer rides every event when enabled (incl. FD itself
-      // in 5.6.1+); the body below must exclude it
-      val end = if (crc32Checksum) frame.length - 4 else frame.length
       val b = 19 // body offset
 
       eventType match {
         case RotateEvent =>
-          group = new String(frame, b + 8, end - b - 8, StandardCharsets.UTF_8)
+          group = new String(frame, b + 8, frame.length - b - 8, StandardCharsets.UTF_8)
           Nil
         case FormatDescriptionEvent => Nil
         case GtidEvent =>
@@ -231,7 +231,7 @@ object BinlogEventDecoder {
           val schemaPos = b + 13 + statusLen
           val schema = new String(frame, schemaPos, schemaLen, StandardCharsets.UTF_8)
           val q = new String(frame, schemaPos + schemaLen + 1,
-            end - (schemaPos + schemaLen + 1), StandardCharsets.UTF_8).trim
+            frame.length - (schemaPos + schemaLen + 1), StandardCharsets.UTF_8).trim
           if (q.equalsIgnoreCase("BEGIN")) {
             // non-GTID upstream: the BEGIN's log_pos is the txn order
             // within the current file (GTID, when present, supersedes)
@@ -301,7 +301,7 @@ object BinlogEventDecoder {
               checkAllPresent(p); p += bitmapBytes
               if (eventType == UpdateRowsV2) { checkAllPresent(p); p += bitmapBytes }
               val out = Seq.newBuilder[Change]
-              while (p < end) {
+              while (p < frame.length) {
                 val (before, n1) = BinlogRowDecoder.decodeRowAt(frame, p, sp)
                 p += n1
                 eventType match {
@@ -362,8 +362,7 @@ object BinlogEventDecoder {
   }
 
   /** True when the frame's last 4 bytes are a valid CRC32 of the rest
-    * — how `binlog_checksum=CRC32` is detected without a server-version
-    * table (false-positive odds 2^-32 on a checksum-free event). */
+    * (false-positive odds 2^-32 on a checksum-free event). */
   private def crcValid(frame: Array[Byte]): Boolean = {
     if (frame.length < 23) return false
     val crc = new java.util.zip.CRC32()
@@ -371,16 +370,58 @@ object BinlogEventDecoder {
     crc.getValue == uintAt(frame, frame.length - 4, 4)
   }
 
+  /** Strips `binlog_checksum=CRC32` trailers from one event sequence —
+    * a binlog file, or one replication session — so logged frames never
+    * carry them. Each FORMAT_DESCRIPTION decides for the events after
+    * it, and two independent signals must agree: (a) its checksum-
+    * algorithm byte — from 5.6.1 the last byte before the 4-byte
+    * trailer, 1 = CRC32 — and (b) an actual CRC32 match over its bytes.
+    * The trailer check alone has 2^-32 false-positive odds on a
+    * checksum-free FDE, which would silently cut 4 bytes from every
+    * event that follows.
+    *
+    * Events ahead of the first FDE (a session's fake ROTATE) wait for
+    * it, and are then stripped only if their own trailer verifies.
+    * After a CRC32 FDE, an event whose trailer fails verification is
+    * corrupt and throws. `offer` returns the events that are ready, in
+    * order, each with the key it was offered with. */
+  final class ChecksumTrailers[K] {
+    private var crc: Option[Boolean] = None // None until the first FDE
+    private var waiting = Vector.empty[(K, Array[Byte])]
+
+    private def strip(f: Array[Byte]) =
+      java.util.Arrays.copyOfRange(f, 0, f.length - 4)
+
+    def offer(key: K, frame: Array[Byte]): Seq[(K, Array[Byte])] =
+      if (frame.length > 4 && (frame(4) & 0xff) == FormatDescriptionEvent) {
+        val on = frame.length >= 24 && frame(frame.length - 5) == 1 &&
+          crcValid(frame)
+        crc = Some(on)
+        val ahead = waiting.map { case (k, f) =>
+          (k, if (on && crcValid(f)) strip(f) else f)
+        }
+        waiting = Vector.empty
+        ahead :+ ((key, if (on) strip(frame) else frame))
+      } else crc match {
+        case None => waiting :+= ((key, frame)); Nil
+        case Some(false) => Seq((key, frame))
+        case Some(true) =>
+          if (!crcValid(frame)) throw new IllegalStateException(
+            s"binlog event type ${frame(4) & 0xff} fails its CRC32 check")
+          Seq((key, strip(frame)))
+      }
+
+    /** Events still waiting for an FDE, unchanged (none came). */
+    def rest: Seq[(K, Array[Byte])] = waiting
+  }
+
   /** Split one binlog v4 FILE image — 4-byte magic `0xfe bin`, then
     * events back-to-back, each declaring its own size in the common
     * header — into (file byte offset, event frame) pairs.
     *
-    * `binlog_checksum=CRC32` is AUTO-DETECTED from the file's first
-    * event (the FORMAT_DESCRIPTION every binlog file leads with, which
-    * carries its own checksum from 5.6.1 on): its trailer is verified
-    * as an actual CRC32 of the event bytes. When detected, the 4-byte
-    * trailer is stripped from EVERY returned frame, so downstream
-    * decode always runs with `crc32Checksum = false`.
+    * `binlog_checksum=CRC32` is detected from the FORMAT_DESCRIPTION
+    * every binlog file leads with, and trailers are stripped from the
+    * returned frames ([[ChecksumTrailers]]).
     *
     * A torn tail — an event whose declared size overruns the file, as
     * left by a crash mid-write or a copy of a live segment — yields the
@@ -392,35 +433,19 @@ object BinlogEventDecoder {
       bytes(1) == 'b'.toByte && bytes(2) == 'i'.toByte && bytes(3) == 'n'.toByte,
       "not a binlog v4 file (bad magic)")
     val out = Seq.newBuilder[(Long, Array[Byte])]
+    val trailers = new ChecksumTrailers[Long]
     var pos = 4
-    var crc = false
-    var first = true
     var done = false
     while (!done && pos + 19 <= bytes.length) {
       val size = uintAt(bytes, pos + 9, 4)
       if (size < 19 || pos + size > bytes.length) done = true // torn tail
       else {
-        val frame = java.util.Arrays.copyOfRange(bytes, pos, pos + size.toInt)
-        if (first) {
-          // Two independent signals must agree before trailers are
-          // stripped: (a) the FD event's checksum-algorithm byte — from
-          // 5.6.1 the last byte before the 4-byte trailer, 1 = CRC32 —
-          // and (b) an actual CRC32 match over the event bytes. The
-          // trailer check alone has 2^-32 false-positive odds on a
-          // checksum-free FD event, which would silently truncate 4
-          // bytes from EVERY event in the file with no diagnostic.
-          val algSaysCrc = (frame(4) & 0xff) == FormatDescriptionEvent &&
-            frame.length >= 24 && frame(frame.length - 5) == 1
-          crc = algSaysCrc && crcValid(frame)
-          first = false
-        }
-        out += ((pos.toLong,
-          if (crc) java.util.Arrays.copyOfRange(frame, 0, frame.length - 4)
-          else frame))
+        out ++= trailers.offer(pos.toLong,
+          java.util.Arrays.copyOfRange(bytes, pos, pos + size.toInt))
         pos += size.toInt
       }
     }
-    out.result()
+    (out ++= trailers.rest).result()
   }
 
   /** One ROTATE frame naming `file`, synthesized at each file's start
@@ -464,8 +489,7 @@ object BinlogEventDecoder {
     *    transactions a later segment re-ships — use this for
     *    OVERLAPPING dumps / reconnect re-deliveries.
     *
-    * CRC32 trailers are stripped per [[splitFile]]; pass
-    * `crc32Checksum = false` downstream. */
+    * CRC32 trailers are stripped per [[splitFile]]. */
   def framesFromFiles(files: DataFrame, pathCol: String = "path",
       contentCol: String = "content", slot: Option[String] = None): DataFrame = {
     val pIdx = files.columns.indexOf(pathCol)
@@ -490,49 +514,20 @@ object BinlogEventDecoder {
   }
 
   // ------------------------------------------------------------------
-  // Spark surface (mirrors PgOutputDecoder's)
-
-  private def outSchema(dataSchema: StructType): StructType =
-    StructType(dataSchema.fields ++ Seq(
-      StructField("action", IntegerType),
-      StructField("txn_tag", StringType),
-      StructField("txn_server", BinaryType),
-      StructField("txn_group", StringType),
-      StructField("txn_seq", LongType),
-      StructField("txn_stmt", LongType)))
-
-  private def toRow(c: Change): Row =
-    Row.fromSeq(c.values ++ Seq(c.action, null, c.server, c.group, c.seq, c.stmt))
+  // Spark surface
 
   /** Decode raw binlog event streams into the flattened delta schema
     * for one target table (`"db.table"` with declared `specs`), ready
-    * for [[CdcMerge.condense]] + merge. `events` holds one row per
-    * event: slot id, monotone offset, raw event bytes — exactly what
+    * for [[CdcMerge.condense]] + merge: [[decodeSlotStreamsMulti]] of
+    * the one table, flattened. `events` holds one row per event: slot
+    * id, monotone offset, raw event bytes — exactly what
     * [[FrameLogSource]] emits. A fresh slice must start at a txn
     * boundary and carry its TABLE_MAPs (the replica re-requests both
     * on reconnect, like the reference's applier). */
   def decodeSlotStreams(events: DataFrame, slotCol: String, offsetCol: String,
-      payloadCol: String, targetTable: String, specs: Seq[ColSpec],
-      crc32Checksum: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    decodePasses.incrementAndGet()
-    val schema = outSchema(BinlogRowDecoder.rowSchema(specs))
-    val slotIdx = events.columns.indexOf(slotCol)
-    val payloadIdx = events.columns.indexOf(payloadCol)
-    val specMap = Map(targetTable -> specs)
-    events
-      .repartition(col(slotCol))
-      .sortWithinPartitions(col(slotCol), col(offsetCol))
-      .mapPartitions { it =>
-        val states = scala.collection.mutable.Map.empty[Any, SlotState]
-        it.flatMap { r =>
-          val st = states.getOrElseUpdate(r.get(slotIdx), new SlotState())
-          st.onEvent(r.getAs[Array[Byte]](payloadIdx), specMap, crc32Checksum)
-            .filter(_.relation == targetTable)
-            .map(toRow)
-        }
-      }(Encoders.row(schema))
-  }
+      payloadCol: String, targetTable: String, specs: Seq[ColSpec]): DataFrame =
+    SlotStreams.flat(decodeSlotStreamsMulti(events, slotCol, offsetCol,
+      payloadCol, Seq(targetTable -> specs)))
 
   /** Streaming variant whose per-slot decode state (TABLE_MAP registry
     * + txn coords) lives in the streaming checkpoint, so a connector
@@ -542,25 +537,25 @@ object BinlogEventDecoder {
     * buffer guard. */
   def decodeSlotStreamsStateful(events: DataFrame, slotCol: String,
       offsetCol: String, payloadCol: String, targetTable: String,
-      specs: Seq[ColSpec], crc32Checksum: Boolean = false,
-      maxBufferedBytes: Long = 1L << 30): DataFrame = {
-    val schema = outSchema(BinlogRowDecoder.rowSchema(specs))
+      specs: Seq[ColSpec], maxBufferedBytes: Long = 1L << 30): DataFrame = {
+    val schema = StructType(
+      BinlogRowDecoder.rowSchema(specs).fields ++ CdcMerge.metaSchema)
     val specMap = Map(targetTable -> specs)
     SlotStreams.statefulDecode(events, slotCol, offsetCol, payloadCol,
       schema, maxBufferedBytes, "maxFramesPerTrigger",
       Encoders.product[SlotSnapshot]) { snap =>
       val st = snap.map(SlotState.restore).getOrElse(new SlotState())
-      (frame => st.onEvent(frame, specMap, crc32Checksum)
+      (frame => st.onEvent(frame, specMap)
         .filter(_.relation == targetTable)
-        .map(toRow),
+        .map(SlotStreams.flatRow),
         () => st.snapshot)
     }
   }
 
-  /** Driver-side count of full row-decode passes launched (the
-    * [[decodeSlotStreams]]/[[decodeSlotStreamsMulti]] calls) — spec
-    * observability ONLY: lets a test assert a 3-table apply window
-    * parsed its bytes ONCE (r17 verdict #5). Not part of the API. */
+  /** Driver-side count of full row-decode passes launched (one per
+    * [[decodeSlotStreamsMulti]] call) — spec observability ONLY: lets a
+    * test assert a 3-table apply window parsed its bytes ONCE (r17
+    * verdict #5). Not part of the API. */
   private[graft] val decodePasses =
     new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -570,16 +565,14 @@ object BinlogEventDecoder {
     * per event), so an applier can learn the window's table set
     * without a spec map, then decode with exactly those specs in one
     * [[decodeSlotStreamsMulti]] pass. Order-insensitive by
-    * construction (names are a set), so no repartition/sort. */
-  def windowTables(events: DataFrame, payloadCol: String,
-      crc32Checksum: Boolean = false): Seq[String] = {
+    * construction (names are a set), so no shuffle or sort. */
+  def windowTables(events: DataFrame, payloadCol: String): Seq[String] = {
     import org.apache.spark.sql.functions.col
     events.select(col(payloadCol)).as(Encoders.BINARY)
       .mapPartitions { it =>
         it.flatMap { frame =>
           if (frame.length < 19) Nil
           else {
-            val end = if (crc32Checksum) frame.length - 4 else frame.length
             val b = 19
             (frame(4) & 0xff) match {
               case TableMapEvent =>
@@ -590,16 +583,16 @@ object BinlogEventDecoder {
                 val tLen = frame(p) & 0xff
                 val t = new String(frame, p + 1, tLen, StandardCharsets.UTF_8)
                 Seq(s"$db.$t")
-              case QueryEvent if end > b + 13 =>
+              case QueryEvent if frame.length > b + 13 =>
                 val schemaLen = frame(b + 8) & 0xff
                 val statusLen = uintAt(frame, b + 11, 2).toInt
                 val schemaPos = b + 13 + statusLen
-                if (schemaPos + schemaLen + 1 >= end) Nil
+                if (schemaPos + schemaLen + 1 >= frame.length) Nil
                 else {
                   val schema = new String(frame, schemaPos, schemaLen,
                     StandardCharsets.UTF_8)
                   val q = new String(frame, schemaPos + schemaLen + 1,
-                    end - (schemaPos + schemaLen + 1),
+                    frame.length - (schemaPos + schemaLen + 1),
                     StandardCharsets.UTF_8).trim
                   truncateTarget(q, schema).toSeq
                 }
@@ -612,57 +605,24 @@ object BinlogEventDecoder {
   }
 
   /** SINGLE-PASS multi-table decode (r17 verdict #5): ONE event-parse
-    * pass over the window with the FULL spec map, emitting
-    * `(relation, one nullable per-table struct, meta)` rows; the
-    * caller splits per table with a filter + struct projection over
-    * the (persisted) result. A many-table replica therefore parses
-    * the window's bytes once, where the per-table
-    * [[decodeSlotStreams]] loop parsed them once PER TABLE — at 1000
-    * replicated tables that is the difference between one pass and a
-    * thousand. Output schema: `relation` STRING, then `__t_<i>`
+    * pass over the window with the FULL spec map, in the tagged schema
+    * of [[SlotStreams.decode]] — `relation`, one nullable `__t_<i>`
     * struct per entry of `specsByTable` (in order), then the meta
-    * columns; exactly one struct is non-null per row (TRUNCATE rows
-    * carry an all-null struct for their table — same contract as the
-    * flat decode's null data columns). */
+    * columns. The caller splits per table with a filter + struct
+    * projection, so a many-table replica parses the window's bytes
+    * once, not once per table. TRUNCATE rows carry an all-null struct
+    * for their table. */
   def decodeSlotStreamsMulti(events: DataFrame, slotCol: String,
       offsetCol: String, payloadCol: String,
-      specsByTable: Seq[(String, Seq[ColSpec])],
-      crc32Checksum: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
+      specsByTable: Seq[(String, Seq[ColSpec])]): DataFrame = {
     decodePasses.incrementAndGet()
-    val tableIdx = specsByTable.map(_._1).zipWithIndex.toMap
-    val schema = StructType(
-      StructField("relation", StringType) +:
-        (specsByTable.zipWithIndex.map { case ((_, sp), i) =>
-          StructField(s"__t_$i", BinlogRowDecoder.rowSchema(sp))
-        } ++ Seq(
-          StructField("action", IntegerType),
-          StructField("txn_tag", StringType),
-          StructField("txn_server", BinaryType),
-          StructField("txn_group", StringType),
-          StructField("txn_seq", LongType),
-          StructField("txn_stmt", LongType))))
-    val nTables = specsByTable.size
-    val slotIdx = events.columns.indexOf(slotCol)
-    val payloadIdx = events.columns.indexOf(payloadCol)
     val specMap = specsByTable.toMap
-    events
-      .repartition(col(slotCol))
-      .sortWithinPartitions(col(slotCol), col(offsetCol))
-      .mapPartitions { it =>
-        val states = scala.collection.mutable.Map.empty[Any, SlotState]
-        it.flatMap { r =>
-          val st = states.getOrElseUpdate(r.get(slotIdx), new SlotState())
-          st.onEvent(r.getAs[Array[Byte]](payloadIdx), specMap, crc32Checksum)
-            .flatMap { c =>
-              tableIdx.get(c.relation).map { i =>
-                val structs = new Array[Any](nTables)
-                structs(i) = Row.fromSeq(c.values)
-                Row.fromSeq(c.relation +: (structs.toSeq ++
-                  Seq(c.action, null, c.server, c.group, c.seq, c.stmt)))
-              }
-            }
-        }
-      }(Encoders.row(schema))
+    val schemas = specsByTable.map { case (t, sp) =>
+      t -> BinlogRowDecoder.rowSchema(sp)
+    }
+    SlotStreams.decode(events, slotCol, offsetCol, payloadCol, schemas) { () =>
+      val st = new SlotState()
+      frame => st.onEvent(frame, specMap)
+    }
   }
 }

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
-  ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{BinaryType, ByteType, IntegerType,
+  LongType, ShortType, StringType, StructField, StructType}
 import graft.storage.GraftTable
 
 /** CDC ingest pipeline — the Spark-native re-expression of the
@@ -41,8 +41,16 @@ object CdcMerge {
   val ActionInsert = 2
   val ActionTruncate = 9
   val orderCols: Seq[String] = Seq("txn_group", "txn_seq", "txn_stmt", "action")
-  val metaCols: Seq[String] = Seq("action", "txn_tag", "txn_server",
-    "txn_group", "txn_seq", "txn_stmt")
+  /** The CDC metadata columns every decoder emits after the data
+    * columns, in this order. */
+  val metaSchema: Seq[StructField] = Seq(
+    StructField("action", IntegerType),
+    StructField("txn_tag", StringType),
+    StructField("txn_server", BinaryType),
+    StructField("txn_group", StringType),
+    StructField("txn_seq", LongType),
+    StructField("txn_stmt", LongType))
+  val metaCols: Seq[String] = metaSchema.map(_.name)
 
   /** Last-writer-wins condense (reference C6,
     * `/root/reference/delta/controller.go:654-697`): keep, per PK, the

@@ -31,7 +31,10 @@ import java.nio.charset.StandardCharsets
   *
   * Every binlog event frame is appended to `dir/<slot>.framelog` with a
   * MONOTONE sequence stamp — the `(off, payload)` shape
-  * [[FrameLogSource]] serves and [[BinlogEventDecoder]] consumes.
+  * [[FrameLogSource]] serves and [[BinlogEventDecoder]] consumes — with
+  * its CRC32 trailer stripped when the primary logs
+  * `binlog_checksum=CRC32` ([[BinlogEventDecoder.ChecksumTrailers]]; a
+  * trailer that fails verification fails the connection).
   * Heartbeat events (type 27) are transport-only and are NOT appended —
   * they never appear in a binlog (the reference skips them the same
   * way, `binlog_replica_applier.go:756-760`).
@@ -203,8 +206,10 @@ final class MySqlBinlogClient(
         out = new DataOutputStream(ssl.getOutputStream)
       }
       authenticate(in, out, scramble, serverPlugin)
-      // real servers refuse a dump without the checksum handshake
+      // real servers refuse a dump without the checksum handshake; a
+      // CRC32 primary then trails every event with its checksum
       query(in, out, "SET @master_binlog_checksum = @@global.binlog_checksum")
+      val trailers = new BinlogEventDecoder.ChecksumTrailers[Unit]
       // heartbeat registration: the primary now owes us a type-27 event
       // at this cadence when idle — silence becomes a liveness signal
       query(in, out,
@@ -264,37 +269,37 @@ final class MySqlBinlogClient(
           case 0xfe if p.length < 9 =>
             throw new IOException("server ended the dump (EOF)")
           case 0x00 =>
-            val frame = java.util.Arrays.copyOfRange(p, 1, p.length)
-            val evType = frame(4) & 0xff
-            if (evType == 27) () // heartbeat: transport-only, not logged
-            else {
-              off += 1
-              appendLock.synchronized { log.append(off, frame); logDirty = true }
-              framesAppended += 1
-              evType match {
-                case 33 => // GTID: flags(1) sid(16) gno(8) after the header
-                  curSid = (19 + 1 until 19 + 17)
-                    .map(i => f"${frame(i)}%02x").mkString
-                  curGno = LittleEndian.uint(frame, 19 + 17, 8)
-                case 16 => // XID commit marker
-                  markExecuted()
-                case 2 => // Query: GTID-mode DDL (and COMMIT on
-                  // non-transactional tables) commits HERE — no XID
-                  // follows (ADVICE r8). Marking is WHITELISTED to
-                  // statements that definitively end their
-                  // transaction: a mid-txn Query (SAVEPOINT, ROLLBACK
-                  // TO, XA phases) must NOT mark, or a disconnect
-                  // before the XID would advertise the gno as executed
-                  // and the reconnect would skip the transaction's row
-                  // events — permanent data loss. Not marking an
-                  // exotic committing statement only re-streams it
-                  // (the decoder dedups); marking a non-committing one
-                  // loses data, so unknown keywords stay unmarked.
-                  if (BinlogEventDecoder.queryCommitsTxn(frame))
+            val event = java.util.Arrays.copyOfRange(p, 1, p.length)
+            // heartbeat (27): transport-only, not logged
+            if ((event(4) & 0xff) != 27)
+              trailers.offer((), event).foreach { case (_, frame) =>
+                off += 1
+                appendLock.synchronized { log.append(off, frame); logDirty = true }
+                framesAppended += 1
+                (frame(4) & 0xff) match {
+                  case 33 => // GTID: flags(1) sid(16) gno(8) after the header
+                    curSid = (19 + 1 until 19 + 17)
+                      .map(i => f"${frame(i)}%02x").mkString
+                    curGno = LittleEndian.uint(frame, 19 + 17, 8)
+                  case 16 => // XID commit marker
                     markExecuted()
-                case _ => ()
+                  case 2 => // Query: GTID-mode DDL (and COMMIT on
+                    // non-transactional tables) commits HERE — no XID
+                    // follows (ADVICE r8). Marking is WHITELISTED to
+                    // statements that definitively end their
+                    // transaction: a mid-txn Query (SAVEPOINT, ROLLBACK
+                    // TO, XA phases) must NOT mark, or a disconnect
+                    // before the XID would advertise the gno as executed
+                    // and the reconnect would skip the transaction's row
+                    // events — permanent data loss. Not marking an
+                    // exotic committing statement only re-streams it
+                    // (the decoder dedups); marking a non-committing one
+                    // loses data, so unknown keywords stay unmarked.
+                    if (BinlogEventDecoder.queryCommitsTxn(frame))
+                      markExecuted()
+                  case _ => ()
+                }
               }
-            }
           case other =>
             throw new IOException(f"unexpected packet first byte 0x$other%02x")
         }

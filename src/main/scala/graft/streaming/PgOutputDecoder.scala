@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.types._
 
 /** PostgreSQL `pgoutput` logical-replication decode (reference C2/C3:
@@ -56,10 +55,11 @@ import org.apache.spark.sql.types._
   *
   * A replication slot is a serial stream, so decode state (the
   * in-stream Relation registry + current txn coords) lives per slot;
-  * the Spark surface shuffles on the slot column and walks each slot's
-  * messages in offset order within its partition — parallel across
-  * slots/tables (how the reference scales too: one applier per
-  * subscription), serial within one, with no driver involvement.
+  * the Spark surface ([[SlotStreams]]) shuffles on the slot column and
+  * walks each slot's messages in offset order within its partition —
+  * parallel across slots/tables (how the reference scales too: one
+  * applier per subscription), serial within one, with no driver
+  * involvement.
   */
 object PgOutputDecoder {
 
@@ -72,7 +72,9 @@ object PgOutputDecoder {
   /** One decoded change: delta-schema action + txn coords + row values
     * (key image for deletes; all-null values for truncate). */
   final case class Change(relation: String, action: Int, lsn: Long,
-      stmt: Long, values: Seq[Any])
+      stmt: Long, values: Seq[Any]) extends SlotChange {
+    def meta: Seq[Any] = Seq(action, null, null, null, lsn, stmt)
+  }
 
   // ------------------------------------------------------------------
   // byte-level parsing
@@ -468,39 +470,18 @@ object PgOutputDecoder {
 
   /** Decode pgoutput message streams into the flattened delta schema
     * for one target relation (`"namespace.name"`), ready for
-    * [[CdcMerge.condense]] + merge. `events` holds one row per message:
-    * a slot id, a monotone offset within the slot (the WAL position the
+    * [[CdcMerge.condense]] + merge: [[decodeSlotStreamsMulti]] of the
+    * one relation, flattened. `events` holds one row per message: a
+    * slot id, a monotone offset within the slot (the WAL position the
     * connector read the message at), and the raw message bytes. Events
     * for other relations are dropped (the C10 filter happens here,
     * before any shuffle leaves the decode stage).
     */
   def decodeSlotStreams(events: DataFrame, slotCol: String, offsetCol: String,
       payloadCol: String, targetRelation: String,
-      dataSchema: StructType, toastAsNull: Boolean = false): DataFrame = {
-    decodePasses.incrementAndGet()
-    val outSchema = StructType(dataSchema.fields ++ Seq(
-      StructField("action", IntegerType),
-      StructField("txn_tag", StringType),
-      StructField("txn_server", BinaryType),
-      StructField("txn_group", StringType),
-      StructField("txn_seq", LongType),
-      StructField("txn_stmt", LongType)))
-    val slotIdx = events.columns.indexOf(slotCol)
-    val payloadIdx = events.columns.indexOf(payloadCol)
-    events
-      .repartition(col(slotCol))
-      .sortWithinPartitions(col(slotCol), col(offsetCol))
-      .mapPartitions { it =>
-        val states = scala.collection.mutable.Map.empty[Any, SlotState]
-        it.flatMap { r =>
-          val st = states.getOrElseUpdate(r.get(slotIdx), new SlotState(toastAsNull))
-          st.onMessage(r.getAs[Array[Byte]](payloadIdx))
-            .filter(_.relation == targetRelation)
-            .map(c => Row.fromSeq(c.values ++
-              Seq(c.action, null, null, null, c.lsn, c.stmt)))
-        }
-      }(Encoders.row(outSchema))
-  }
+      dataSchema: StructType, toastAsNull: Boolean = false): DataFrame =
+    SlotStreams.flat(decodeSlotStreamsMulti(events, slotCol, offsetCol,
+      payloadCol, Seq(targetRelation -> dataSchema), toastAsNull))
 
   /** Streaming variant of [[decodeSlotStreams]] whose per-slot decode
     * state (Relation registry + txn coords) lives in the streaming
@@ -512,7 +493,7 @@ object PgOutputDecoder {
     * `offsetCol` must be a LongType WAL position, monotone within a
     * slot; one micro-batch's messages per slot are buffered and sorted
     * by it (micro-batch-sized, the same bound the stateless path's
-    * sortWithinPartitions implies). Works identically on a batch frame
+    * in-partition sort implies). Works identically on a batch frame
     * (state spans the single "batch").
     *
     * `maxBufferedBytes` bounds that per-slot buffer: an unthrottled
@@ -523,86 +504,43 @@ object PgOutputDecoder {
   def decodeSlotStreamsStateful(events: DataFrame, slotCol: String,
       offsetCol: String, payloadCol: String, targetRelation: String,
       dataSchema: StructType, toastAsNull: Boolean = false,
-      maxBufferedBytes: Long = 1L << 30): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val outSchema = StructType(dataSchema.fields ++ Seq(
-      StructField("action", IntegerType),
-      StructField("txn_tag", StringType),
-      StructField("txn_server", BinaryType),
-      StructField("txn_group", StringType),
-      StructField("txn_seq", LongType),
-      StructField("txn_stmt", LongType)))
+      maxBufferedBytes: Long = 1L << 30): DataFrame =
     SlotStreams.statefulDecode(events, slotCol, offsetCol, payloadCol,
-      outSchema, maxBufferedBytes, "maxFilesPerTrigger/maxFramesPerTrigger",
+      StructType(dataSchema.fields ++ CdcMerge.metaSchema), maxBufferedBytes,
+      "maxFilesPerTrigger/maxFramesPerTrigger",
       Encoders.product[SlotSnapshot]) { snap =>
       val st = snap.map(SlotState.restore(_, toastAsNull))
         .getOrElse(new SlotState(toastAsNull))
       (bytes => st.onMessage(bytes)
         .filter(_.relation == targetRelation)
-        .map(c => Row.fromSeq(c.values ++
-          Seq(c.action, null, null, null, c.lsn, c.stmt))),
+        .map(SlotStreams.flatRow),
         () => st.snapshot)
     }
-  }
 
-  /** Driver-side count of full message-decode passes launched — spec
-    * observability ONLY ([[BinlogEventDecoder.decodePasses]]' pgoutput
-    * twin): lets a test assert a multi-table subscription window
-    * parsed its bytes ONCE. Not part of the API. */
+  /** Driver-side count of full message-decode passes launched (one per
+    * [[decodeSlotStreamsMulti]] call) — spec observability ONLY: lets a
+    * test assert a multi-table subscription window parsed its bytes
+    * ONCE. Not part of the API. */
   private[graft] val decodePasses =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** SINGLE-PASS multi-relation decode
-    * ([[BinlogEventDecoder.decodeSlotStreamsMulti]]'s pgoutput twin):
-    * ONE message-parse pass over the window, emitting `(relation, one
-    * nullable per-relation struct, meta)` rows; the caller splits per
-    * relation with a filter + struct projection over the (persisted)
-    * result. A subscription publishing many tables therefore parses
-    * the window's bytes once, where the per-table
-    * [[decodeSlotStreams]] loop parsed them once PER TABLE. Output
-    * schema: `relation` STRING, then `__t_<i>` struct per entry of
-    * `schemasByRelation` (in order), then the meta columns; exactly
-    * one struct is non-null per row (TRUNCATE rows carry an all-null
-    * struct for their relation — same contract as the flat decode's
-    * null data columns). */
+  /** SINGLE-PASS multi-relation decode: ONE message-parse pass over the
+    * window, in the tagged schema of [[SlotStreams.decode]] —
+    * `relation`, one nullable `__t_<i>` struct per entry of
+    * `schemasByRelation` (in order), then the meta columns. The caller
+    * splits per relation with a filter + struct projection, so a
+    * subscription publishing many tables parses the window's bytes
+    * once, not once per table. TRUNCATE rows carry an all-null struct
+    * for their relation. */
   def decodeSlotStreamsMulti(events: DataFrame, slotCol: String,
       offsetCol: String, payloadCol: String,
       schemasByRelation: Seq[(String, StructType)],
       toastAsNull: Boolean = false): DataFrame = {
     decodePasses.incrementAndGet()
-    val relIdx = schemasByRelation.map(_._1).zipWithIndex.toMap
-    val outSchema = StructType(
-      StructField("relation", StringType) +:
-        (schemasByRelation.zipWithIndex.map { case ((_, sc), i) =>
-          StructField(s"__t_$i", sc)
-        } ++ Seq(
-          StructField("action", IntegerType),
-          StructField("txn_tag", StringType),
-          StructField("txn_server", BinaryType),
-          StructField("txn_group", StringType),
-          StructField("txn_seq", LongType),
-          StructField("txn_stmt", LongType))))
-    val nRels = schemasByRelation.size
-    val slotIdx = events.columns.indexOf(slotCol)
-    val payloadIdx = events.columns.indexOf(payloadCol)
-    events
-      .repartition(col(slotCol))
-      .sortWithinPartitions(col(slotCol), col(offsetCol))
-      .mapPartitions { it =>
-        val states = scala.collection.mutable.Map.empty[Any, SlotState]
-        it.flatMap { r =>
-          val st = states.getOrElseUpdate(r.get(slotIdx),
-            new SlotState(toastAsNull))
-          st.onMessage(r.getAs[Array[Byte]](payloadIdx))
-            .flatMap { c =>
-              relIdx.get(c.relation).map { i =>
-                val structs = new Array[Any](nRels)
-                structs(i) = Row.fromSeq(c.values)
-                Row.fromSeq(c.relation +: (structs.toSeq ++
-                  Seq(c.action, null, null, null, c.lsn, c.stmt)))
-              }
-            }
-        }
-      }(Encoders.row(outSchema))
+    SlotStreams.decode(events, slotCol, offsetCol, payloadCol,
+      schemasByRelation) { () =>
+      val st = new SlotState(toastAsNull)
+      bytes => st.onMessage(bytes)
+    }
   }
 }

@@ -159,6 +159,11 @@ class PgCatalogSpec extends SparkSpec {
       "SELECT oid FROM pg_catalog.pg_class WHERE relname = 'accounts'")
       .head.getLong(0)
     assert(fromCast === fromCat)
+    // the catalog relations are pg_class rows too, so a relname lookup
+    // agrees with the cast
+    assert(rows(e, "SELECT oid, relnamespace, relkind FROM " +
+      "pg_catalog.pg_class WHERE relname = 'pg_class'")
+      === Seq(Row(1259L, 11L, "r")))
     // attribute types line up with pg_type oids
     assert(rows(e,
       """SELECT a.attname, t.typname
@@ -234,13 +239,15 @@ class PgCatalogSpec extends SparkSpec {
     SqlRouter.execute(e,
       "CREATE VIEW table_census AS SELECT relkind, count(*) AS n " +
         "FROM pg_catalog.pg_class GROUP BY relkind")
+    // the user tables plus the catalog relations (relkind 'r' too)
+    val catalogRels = PgCatalog.catalogRelOids.size.toLong
     assert(rows(e,
-      "SELECT n FROM table_census WHERE relkind = 'r'") === Seq(Row(2L)))
+      "SELECT n FROM table_census WHERE relkind = 'r'") === Seq(Row(2L + catalogRels)))
     // a catalog change is visible through the stored view: frames
     // rebuild from live metadata on every registration
     SqlRouter.execute(e, "CREATE TABLE extra (x INT)")
     assert(rows(e,
-      "SELECT n FROM table_census WHERE relkind = 'r'") === Seq(Row(3L)))
+      "SELECT n FROM table_census WHERE relkind = 'r'") === Seq(Row(3L + catalogRels)))
   }
 
   test("pg_proc lists the engine-native function surface") {

@@ -115,7 +115,11 @@ class ReplicaControllerSpec extends SparkSpec {
     // state and wedge the next poll on a GTID-less suffix
     FrameLog.append(dir, "replica",
       Seq((0L, BE.fde())) ++ t1 ++ t2.dropRight(1))
-    assert(e.applyReplicaLog(Seq("main.t1")) === t1.size + 1L)
+    val (n1, jobs1) = countJobs(e.applyReplicaLog(Seq("main.t1")))
+    assert(n1 === t1.size + 1L)
+    // a single-table window pays no persist + count (6 jobs measured
+    // before the apply was shared with subscriptions)
+    assert(jobs1 <= 6, s"single-table replica window ran $jobs1 jobs")
     import spark.implicits._
     assert(exec(e, "SELECT id, v FROM t1 ORDER BY id").df.get
       .as[(Long, String)].collect().toSeq ===
@@ -249,7 +253,9 @@ class ReplicaControllerSpec extends SparkSpec {
       Seq((0L, BE.fde())) ++ x1 ++ x2 ++ x3 ++ x4)
     exec(e, "CHANGE REPLICATION FILTER REPLICATE_IGNORE_TABLE=(main.tc)")
     val passes0 = BinlogEventDecoder.decodePasses.get()
-    val applied = e.applyReplicaLog(Nil) // discovery arm
+    val (applied, jobs) = countJobs(e.applyReplicaLog(Nil)) // discovery arm
+    assert(jobs <= 13, s"3-table replica window ran $jobs jobs (13 measured " +
+      "before the apply was shared with subscriptions)")
     assert(applied === 1L + x1.size + x2.size + x3.size + x4.size)
     assert(BinlogEventDecoder.decodePasses.get() - passes0 === 1L,
       "a multi-table window must be row-decoded in ONE pass")

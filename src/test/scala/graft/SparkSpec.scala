@@ -13,6 +13,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.toFile.deleteOnExit()
     p
   }
+
+  /** `body`'s result and the number of Spark jobs it started. Short
+    * sleeps around it let the listener bus drain, as in
+    * StatementJobFloorSpec. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Thread.sleep(200)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      Thread.sleep(200)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

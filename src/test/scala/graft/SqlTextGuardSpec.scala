@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * variable named like one (`var inQ`, `var quote`, ...) declared within
   * a few lines of a comparison against a quote character. */
 class SqlTextGuardSpec extends AnyFunSuite {
+  import SqlTextGuardSpec.matchingLines
+
   private val StateVar =
     """\bvar\s+(inQ|q|quote|inQuote|inStr|inString|inSingle|inDouble|inComment|inBlock)\b""".r
   private val QuoteCompare = """(==|!=|case)\s*'(\\'|"|`)'""".r
@@ -37,16 +39,6 @@ class SqlTextGuardSpec extends AnyFunSuite {
     """VALUES|EXPLAIN|INSERT|REPLACE|UPDATE|DELETE|TRUNCATE|CREATE|DROP|""" +
     """ALTER|RENAME|SHOW|SET|USE|RESET|BEGIN|START|COMMIT|ROLLBACK|LOCK|""" +
     """UNLOCK|COPY|LOAD|CHECK)"|takeWhile\((_\.isLetter|c => c\.isLetter)\)""").r
-
-  /** `file:line` of every line of `file` matching `pattern` (a rendered
-    * SQL shape, a head probe). */
-  private[graft] def matchingLines(file: java.nio.file.Path,
-      pattern: scala.util.matching.Regex): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.readAllLines(file).asScala.toIndexedSeq
-    lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined)
-      .map(i => s"${file.getFileName}:${i + 1}")
-  }
 
   private def mainSource(name: String): java.nio.file.Path = {
     val f = java.nio.file.Paths.get("src", "main", "scala", "graft", name)
@@ -129,5 +121,17 @@ class SqlTextGuardSpec extends AnyFunSuite {
       "  }",
       "}").mkString("\n").getBytes("UTF-8"))
     assert(stateMachines(dir) === Seq("Scan.scala:3"))
+  }
+}
+
+object SqlTextGuardSpec {
+  /** `file:line` of every line of `file` matching `pattern` (a rendered
+    * SQL shape, a head probe). */
+  def matchingLines(file: java.nio.file.Path,
+      pattern: scala.util.matching.Regex): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(file).asScala.toIndexedSeq
+    lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined)
+      .map(i => s"${file.getFileName}:${i + 1}")
   }
 }

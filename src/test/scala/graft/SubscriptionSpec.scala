@@ -61,7 +61,12 @@ class SubscriptionSpec extends SparkSpec {
         PgOutputEncoder.Change(CdcMerge.ActionUpdate, Seq(2L, "b2", 21)),
         PgOutputEncoder.Change(CdcMerge.ActionDelete, Seq(1L, null, null))))
     FrameLog.append(fl, "sub1", t2)
-    assert(exec(sub, "ALTER SUBSCRIPTION sub1 REFRESH").affected > 0L)
+    val (applied, jobs) =
+      countJobs(exec(sub, "ALTER SUBSCRIPTION sub1 REFRESH").affected)
+    assert(applied > 0L)
+    // a single-table window pays no persist + count (6 jobs measured
+    // before the apply was shared with the replica)
+    assert(jobs <= 6, s"single-table subscription window ran $jobs jobs")
     assert(exec(sub, "SELECT id, v, n FROM acct ORDER BY id").df.get
       .as[(Long, String, Int)].collect().toSeq ===
       Seq((2L, "b2", 21), (3L, "c", 30), (4L, "d", 40)))
@@ -113,9 +118,9 @@ class SubscriptionSpec extends SparkSpec {
   }
 
   test("refresh: a multi-table window applies in ONE decode pass") {
-    // the pgoutput twin of applyReplicaLog's single-pass apply: a
-    // subscription publishing N tables must parse the poll window's
-    // bytes once (decodeSlotStreamsMulti), not once per table
+    // the window apply the replica shares: a subscription publishing
+    // N tables must parse the poll window's bytes once
+    // (decodeSlotStreamsMulti), not once per table
     val pubWh = tmpDir("multi_pub")
     val fl = tmpDir("multi_fl")
     val pub = new Engine(spark, pubWh)
@@ -141,8 +146,11 @@ class SubscriptionSpec extends SparkSpec {
         PgOutputEncoder.Change(CdcMerge.ActionDelete, Seq(20L, null, null))))
     FrameLog.append(fl, "subm", t1 ++ t2 ++ t3)
     val passes0 = graft.streaming.PgOutputDecoder.decodePasses.get()
-    assert(exec(sub, "ALTER SUBSCRIPTION subm REFRESH").affected ===
-      (t1.size + t2.size + t3.size).toLong)
+    val (applied, jobs) =
+      countJobs(exec(sub, "ALTER SUBSCRIPTION subm REFRESH").affected)
+    assert(applied === (t1.size + t2.size + t3.size).toLong)
+    assert(jobs <= 13, s"3-table subscription window ran $jobs jobs (13 " +
+      "measured before the apply was shared with the replica)")
     assert(graft.streaming.PgOutputDecoder.decodePasses.get() - passes0
       === 1L,
       "a multi-table subscription window must be message-decoded ONCE")

@@ -36,7 +36,7 @@ class BinlogEncoderSpec extends AnyFunSuite {
     assert(frames.map(_._1) === (5L until 5L + frames.size)) // monotone
     val st = new BinlogEventDecoder.SlotState()
     val changes = frames.flatMap { case (_, f) =>
-      st.onEvent(f, Map("db1.t" -> specs), crc32Checksum = false)
+      st.onEvent(f, Map("db1.t" -> specs))
     }
     // Upd emits Delete(before) + Insert(after)
     assert(changes.map(_.action) ===

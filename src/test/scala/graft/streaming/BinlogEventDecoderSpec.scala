@@ -100,12 +100,11 @@ class BinlogEventDecoderSpec extends SparkSpec {
   private val specs = Seq(ColSpec("pk", Int64), ColSpec("val", Varchar(40)))
   private val Tid = 7L
 
-  private def decode(msgs: Seq[Array[Byte]], slot: String = "s1",
-      crc: Boolean = false): DataFrame = {
+  private def decode(msgs: Seq[Array[Byte]], slot: String = "s1"): DataFrame = {
     val df = msgs.zipWithIndex.map { case (m, i) => (slot, i.toLong, m) }
       .toDF("slot", "off", "payload")
     BinlogEventDecoder.decodeSlotStreams(df, "slot", "off", "payload",
-      "db1.t", specs, crc32Checksum = crc)
+      "db1.t", specs)
   }
 
   test("insert/update/delete with GTID txn coords") {
@@ -186,16 +185,6 @@ class BinlogEventDecoderSpec extends SparkSpec {
     assert(out.count() === 1L)
   }
 
-  test("crc32 mode strips the 4-byte trailer from every event") {
-    def crc(e: Array[Byte]): Array[Byte] = bytes(e, Array[Byte](1, 2, 3, 4))
-    val out = decode(Seq(
-      crc(rotate("binlog.000009")), crc(gtid(42L)),
-      crc(tableMap(Tid, "db1", "t", 2)),
-      crc(writeRows(Tid, rowImg(Some(3L), Some("c"))))), crc = true)
-      .select("pk", "val", "txn_group", "txn_seq").collect()
-    assert(out === Array(Row(3L, "c", "binlog.000009", 42L)))
-  }
-
   test("a rows event before its TABLE_MAP fails with a boundary hint") {
     val err = intercept[org.apache.spark.SparkException](
       decode(Seq(gtid(1L), writeRows(Tid, rowImg(Some(1L), Some("a"))))).collect())
@@ -236,7 +225,7 @@ class BinlogEventDecoderSpec extends SparkSpec {
     // offsets are the events' byte positions in the file
     assert(frames.head._1 === 4L)
     assert(frames.map(_._1) === frames.map(_._1).sorted)
-    // trailers stripped: frames decode with crc32Checksum = false
+    // trailers stripped: the frames decode as they are
     val out = decode(frames.map(_._2))
       .select("pk", "val", "txn_seq").collect()
     assert(out === Array(Row(4L, "d", 7L)))

@@ -214,6 +214,21 @@ class ReplicationClientSpec extends SparkSpec {
     def fde(): Array[Byte] =
       event(15, 0L, cat(le(4L, 2), Array.fill(50)(0.toByte), le(0L, 4),
         Array(19.toByte), Array.fill(39)(0.toByte)))
+    /** FDE ending in the 5.6.1+ checksum-algorithm byte (1 = CRC32). */
+    def fde(alg: Int): Array[Byte] = event(15, 0L, cat(le(4L, 2),
+      Array.fill(50)(0.toByte), le(0L, 4), Array(19.toByte),
+      Array.fill(39)(0.toByte), Array(alg.toByte)))
+    def rotate(file: String): Array[Byte] =
+      event(4, 0L, cat(le(4L, 8), file.getBytes(StandardCharsets.UTF_8)))
+    /** The event as a `binlog_checksum=CRC32` primary sends it: the
+      * header's event_size covers a real CRC32 trailer. */
+    def withCrc(e: Array[Byte]): Array[Byte] = {
+      val sized = e.clone()
+      val total = le(e.length + 4L, 4)
+      System.arraycopy(total, 0, sized, 9, 4)
+      val crc = new java.util.zip.CRC32(); crc.update(sized)
+      cat(sized, le(crc.getValue, 4))
+    }
     def heartbeat(): Array[Byte] =
       event(27, 0L, "binlog.000001".getBytes(StandardCharsets.UTF_8))
     def queryEvt(sql: String, schema: String = "db1"): Array[Byte] = {
@@ -509,6 +524,76 @@ class ReplicationClientSpec extends SparkSpec {
     // the reconnect re-requests it and its rows are not lost
     assert(dumpRequests.get(1) === Map(my.sidHex -> "100-101"))
     assert(client.executed === Map(my.sidHex -> "100-101"))
+  }
+
+  test("mysql client: a CRC32 session reaches the framelog without trailers") {
+    // binlog_checksum=CRC32 (MySQL 8's default): every event, the fake
+    // ROTATE ahead of the FDE included, ends in a 4-byte CRC32. The
+    // framelog must hold the events without it, or a ROWS trailer
+    // parses as one more row image and a TRUNCATE's text ends in 4
+    // stray bytes.
+    val dir = tmpDir("myrepl_crc")
+    val Tid = 7L
+    val scramble: Array[Byte] = (21 to 40).map(_.toByte).toArray
+    val serverErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val good = Seq(my.rotate("binlog.000001"), my.fde(alg = 1),
+      my.gtid(100L), my.tableMap(Tid, "db1", "t", 2),
+      my.writeRows(Tid, my.rowImg(1L, "a"), my.rowImg(2L, "b")), my.xid(),
+      my.gtid(101L), my.queryEvt("TRUNCATE TABLE t"),
+      my.gtid(102L), my.tableMap(Tid, "db1", "t", 2),
+      my.writeRows(Tid, my.rowImg(3L, "c")), my.xid()).map(my.withCrc)
+    // session 2: a frame whose trailer fails verification after a
+    // CRC32 FDE must fail the connection, not reach the framelog
+    val corrupt = my.withCrc(my.gtid(103L))
+    corrupt(corrupt.length - 1) = (corrupt.last ^ 0x5a).toByte
+    val server = new ServerSocket(0)
+    def serve(events: Seq[Array[Byte]]): java.net.Socket = {
+      val s = server.accept()
+      val in = new DataInputStream(s.getInputStream)
+      val out = new DataOutputStream(s.getOutputStream)
+      my.writePacket(out, 0, my.handshakeV10(scramble))
+      my.readPacket(in)
+      my.writePacket(out, 2, my.okPacket)
+      myServeTail(in, out, events)
+      s
+    }
+    val fake = new Thread(() => {
+      try {
+        serve(good).close()
+        val s2 = serve(Seq(my.withCrc(my.fde(alg = 1)), corrupt))
+        try s2.getInputStream.read() catch { case _: Throwable => () }
+        s2.close()
+      } catch { case e: Throwable => serverErr.set(e) }
+    }, "fake-mysql-crc32")
+    fake.start()
+    val client = new MySqlBinlogClient("127.0.0.1", server.getLocalPort,
+      "repl", "secret", "crc", dir).start()
+    try {
+      await("the corrupt trailer fails the connection")(
+        client.lastError.exists(e => String.valueOf(e.getMessage).contains("CRC32")))
+    } finally {
+      client.stop()
+      server.close()
+      fake.join(5000)
+    }
+    assert(serverErr.get() === null,
+      s"fake server assertion failed: ${serverErr.get()}")
+    val frames = spark.read.format("framelog").load(dir.toString)
+    // every logged frame is its event minus the trailer; session 2
+    // logged only its FDE
+    assert(frames.orderBy("off").select("payload").as[Array[Byte]]
+      .collect().map(_.toSeq).toSeq ===
+      (good :+ my.withCrc(my.fde(alg = 1))).map(_.dropRight(4).toSeq))
+    val specs = Seq(BinlogRowDecoder.ColSpec("pk", BinlogRowDecoder.Int64),
+      BinlogRowDecoder.ColSpec("val", BinlogRowDecoder.Varchar(40)))
+    val table = GraftTable.create(spark, tmpDir("myrepl_crc_tbl"),
+      StructType(Seq(StructField("pk", LongType), StructField("val", StringType))),
+      Seq("pk"))
+    CdcMerge.applyBatch(table, BinlogEventDecoder.decodeSlotStreams(frames,
+      "slot", "off", "payload", "db1.t", specs))
+    // the TRUNCATE applied between the two inserting transactions
+    assert(table.read().orderBy("pk").as[(Long, String)].collect() ===
+      Array((3L, "c")))
   }
 
   // ==================================================================

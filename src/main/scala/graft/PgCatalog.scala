@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   *
   * Schema-to-namespace mapping: the engine's CURRENT database plays the
   * role of PG's `public` schema (oid 2200) — the same convention
-  * `SqlRouter.stripPublicSchema` applies to `public.`-qualified DDL —
+  * `SqlRouter.normalizeStatement` applies to `public.`-qualified names —
   * and every other database appears as a namespace under its own name.
   *
   * Everything here is metadata-sized: frames are built from manifests

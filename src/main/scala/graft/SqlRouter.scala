@@ -620,9 +620,8 @@ object SqlRouter {
     // `/root/reference/main_test.go:585` TestAnsiQuotesSqlMode): when
     // the session mode carries it — SET sql_mode = 'ANSI_QUOTES' or
     // the composite 'ANSI' — double quotes lex as IDENTIFIER quotes,
-    // so they fold to backticks here, BEFORE the literal pipeline:
-    // the normalizer and Catalyst then both read them as identifiers,
-    // and the routing regexes see them via the backtick stripper.
+    // so they fold to backticks here, BEFORE the walk: Catalyst then
+    // reads them as identifiers and the routing text carries them bare.
     // Without the mode, MySQL semantics hold ("x" is a string).
     val stmtQ =
       if (stmt0.contains("\"") && engine.getVar("sql_mode")
@@ -630,26 +629,15 @@ object SqlRouter {
         // MySQL lexing: backslash escapes stay active inside '...'
         PgCompat.quoteIdents(stmt0, standardStrings = false)
       else stmt0
-    // `SELECT @@x` (the client handshake surface) folds sysvar refs to
-    // literals on QUERY heads only — SET statements keep their @@
-    // spelling for the SetVariable arm. Dollar quotes fold on query and
-    // DML heads only: CREATE FUNCTION bodies stay dollar-quoted for the
-    // routine discriminators and the dump drop-arms.
-    val text = stmt match {
-      case _: Stmt.Query =>
-        foldDollarQuotes(if (stmtQ.contains("@@")) rewriteSysVars(engine, stmtQ) else stmtQ)
-      case _: Stmt.Dml => foldDollarQuotes(stmtQ)
+    // the anchored cuts take a suffix off the statement before the walk:
+    // row-locking tails on queries, MySQL partition trailers on CREATE
+    val cut = stmt match {
+      case _: Stmt.Query => stripLockingTail(stmtQ)
+      case Stmt.Ddl("CREATE", _) => stripMySqlPartitionTrailer(engine, stmtQ)
       case _ => stmtQ
     }
-    // MySQL literal forms first (the rewrite must reach Catalyst too,
-    // unlike backtick stripping which is routing-only — see ADVICE r6)
-    val lit0 = stripPublicSchema(normalizeMysqlLiterals(text))
-    val lit = stmt match {
-      case _: Stmt.Query => stripLockingTail(lit0)
-      case Stmt.Ddl("CREATE", _) => stripMySqlPartitionTrailer(engine, lit0)
-      case _ => lit0
-    }
-    executeRouted(engine, stmt, stripIdentQuotes(stripComments(lit)), lit)
+    val (lit, routing) = normalizeStatement(engine, stmt, cut)
+    executeRouted(engine, stmt, routing, lit)
   }
 
   /** MySQL partition-clause trailers on CREATE TABLE — the explicit
@@ -663,7 +651,7 @@ object SqlRouter {
     * a Note lands in the diagnostics area (SHOW WARNINGS). Matching
     * runs on masked text, so a trailer inside a literal or a comment
     * span (mysqldump's bang-50100 version conditional) is left for
-    * the comment pipeline. */
+    * the walk's comment rule. */
   private def stripMySqlPartitionTrailer(engine: Engine, s: String): String = {
     // column-body CREATEs only — a CTAS SELECT can carry window
     // `PARTITION BY` text this strip must never look at
@@ -691,32 +679,6 @@ object SqlRouter {
     s.take(m.end(1))
   }
 
-  /** PG dollar-quoted literals (`$$...$$`, `$tag$...$tag$`) fold to
-    * standard escaped string literals on DML/query statements —
-    * Catalyst has no dollar-quoting, so `SET body = $$it's$$` would
-    * otherwise be a guaranteed parse error. `execute` runs it on
-    * query and DML statements only. Unterminated spans pass through
-    * verbatim (loud failure beats silent truncation). */
-  private[graft] def foldDollarQuotes(s: String): String = {
-    if (!s.contains("$")) return s
-    val out = new StringBuilder
-    SqlText.spans(s, dollarQuotes = true).foreach { sp =>
-      val tagEnd = if (sp.kind == SqlText.Dollar)
-        s.indexOf('$', sp.start + 1) + 1 else -1
-      val tagLen = tagEnd - sp.start
-      val closed = sp.kind == SqlText.Dollar &&
-        sp.end - sp.start >= 2 * tagLen &&
-        s.regionMatches(sp.end - tagLen, s, sp.start, tagLen)
-      if (closed) {
-        val content = s.substring(sp.start + tagLen, sp.end - tagLen)
-        out.append('\'')
-          .append(content.replace("\\", "\\\\").replace("'", "\\'"))
-          .append('\'')
-      } else out.append(s.substring(sp.start, sp.end))
-    }
-    out.toString
-  }
-
   private val LockingTail =
     ("""(?is)\s+(?:FOR\s+(?:UPDATE|SHARE|NO\s+KEY\s+UPDATE|KEY\s+SHARE)""" +
       """(?:\s+OF\s+[\w\s,."]+)?(?:\s+NOWAIT|\s+SKIP\s+LOCKED)?""" +
@@ -733,73 +695,6 @@ object SqlRouter {
   private[graft] def stripLockingTail(s: String): String =
     LockingTail.findFirstMatchIn(s).map(m => s.substring(0, m.start))
       .getOrElse(s)
-
-  /** Comment spans removed for ROUTING (each replaced by one space so
-    * tokens can't glue). mysqldump rides real syntax inside
-    * version-conditional comments — most commonly the 50100
-    * `PARTITION BY RANGE (...) (PARTITION p0 ...)` trailer on
-    * CREATE TABLE — and those inner parens derail the greedy
-    * `CREATE TABLE (cols)` capture: the column body swallowed through
-    * the comment and the stored PK became garbage like `id)\n) ENGINE`.
-    * With comments gone the capture ends at the real column-list close.
-    * Partitioning itself is accepted-and-dropped (the engine's layout
-    * analog is clustering, A21) — same as every other in-comment
-    * option. ROUTING text only: the Catalyst fall-through still
-    * receives the original, comments included. Dollar-quoted bodies
-    * stay opaque (a block-comment opener inside a PG function body is
-    * content) and '#' stays code (PG `#>` operators). */
-  private[graft] def stripComments(s: String): String = {
-    if (!s.contains("--") && !s.contains("/*")) return s
-    val out = new StringBuilder
-    SqlText.spans(s, dollarQuotes = true).foreach { sp =>
-      sp.kind match {
-        case SqlText.LineComment | SqlText.BlockComment => out.append(' ')
-        case _ => out.append(s.substring(sp.start, sp.end))
-      }
-    }
-    out.toString
-  }
-
-  /** pg_dump qualifies every object with its schema, and the default
-    * schema is `public` — which the engine's `db.table` convention
-    * would read as a DATABASE named public. The qualifier is dropped
-    * (outside quoted spans; `"public"` and `'public'` survive) so the
-    * dump restores into the CURRENT database, which is what the
-    * unqualified original names meant. Dialect tradeoff, PG-leaning
-    * like splitStatements': a MySQL database literally named `public`
-    * must be addressed via USE. */
-  private[graft] def stripPublicSchema(s: String): String = {
-    val idx = s.toLowerCase.indexOf("public.")
-    if (idx < 0) return s
-    def isWord(c: Char): Boolean =
-      Character.isLetterOrDigit(c) || c == '_' || c == '$'
-    // knobs: comments are spans here too — an apostrophe inside a
-    // `--` comment must not flip quote state (or every later real
-    // `public.` qualifier on that statement would be kept/eaten
-    // wrongly); no '#' (PG-leaning like the rest of this path)
-    val sps = SqlText.spans(s)
-    val out = new StringBuilder
-    var i = 0
-    var si = 0
-    var prev: Char = ' '
-    while (i < s.length) {
-      while (sps(si).end <= i) si += 1
-      val sp = sps(si)
-      val c = s.charAt(i)
-      if (sp.kind != SqlText.Code) {
-        out.append(s.substring(i, sp.end)); i = sp.end
-      } else if ((c == 'p' || c == 'P') && !isWord(prev) && prev != '.' &&
-          i + 7 <= s.length &&
-          s.substring(i, i + 7).equalsIgnoreCase("public.") &&
-          i + 7 < s.length &&
-          (Character.isLetter(s.charAt(i + 7)) || s.charAt(i + 7) == '_' ||
-            s.charAt(i + 7) == '"')) {
-        i += 7 // drop the qualifier, keep the object name
-      } else { out.append(c); i += 1 }
-      prev = if (out.nonEmpty) out.last else ' '
-    }
-    out.toString
-  }
 
   /** Leading `--` / `#` line comments and `/*...*/` blocks come off the
     * statement head (version-conditional `/*!...*/` included — the same
@@ -848,32 +743,58 @@ object SqlRouter {
     "cp1256", "cp1257", "sjis", "euckr", "greek", "hebrew", "koi8r",
     "koi8u", "tis620", "ujis", "eucjpms")
 
-  /** MySQL-only literal forms rewritten to Catalyst-parseable ones —
-    * OUTSIDE quoted/backticked spans only (A37's remaining dialect
-    * gap; without this a mysqldump of any table with BLOB columns
-    * fails to replay):
-    *   `0xDEADBEEF`  → `X'DEADBEEF'` (--hex-blob output; byte-exact,
-    *                    odd digit counts get MySQL's implied leading 0)
-    *   `b'0101'`     → the decimal value (bit literal)
-    *   `_binary'…'`  → `'…'` (introducer dropped: the script text is
-    *                    already in the script's encoding, and the
-    *                    target column's cast supplies the type) */
-  private[graft] def normalizeMysqlLiterals(s: String): String = {
+  /** The statement's one span walk. It lexes `s` once (dollar quotes
+    * on; `#` is code, as in Spark's parser and PG's `#>` operators) and
+    * returns two texts: (Catalyst text, routing text).
+    *
+    * The Catalyst text rewrites code spans only:
+    *  - `@@[scope.]name` → the variable's value (session vars over
+    *    [[SysVarDefaults]]), on query heads only: the Connector/J and
+    *    mysql-CLI handshake shape. SET keeps its `@@` spelling for the
+    *    SetVariable arm. An unknown variable is refused with the
+    *    server's wording.
+    *  - `0xDEADBEEF` → `X'DEADBEEF'` (mysqldump --hex-blob; byte-exact,
+    *    odd digit counts get MySQL's implied leading 0).
+    *  - `b'0101'` → the decimal value (bit literal).
+    *  - `_binary'…'`, `_utf8mb4 0x…` → the literal alone: the script
+    *    text is already in its encoding, and the target column's cast
+    *    supplies the type.
+    *  - `E'…'` → `'…'`: PG escape strings (pre-standard_conforming
+    *    dumps); Catalyst string literals already process backslashes.
+    *  - `public.name` → `name`: pg_dump qualifies every object with the
+    *    default schema, which the engine's `db.table` convention would
+    *    read as a DATABASE named public, so the dump restores into the
+    *    current database. `"public"` and `'public'` survive; a MySQL
+    *    database literally named `public` must be addressed via USE.
+    *
+    * On query and DML heads a closed `$tag$…$tag$` literal folds to an
+    * escaped `'…'` (Catalyst has no dollar quoting); CREATE FUNCTION
+    * bodies stay dollar-quoted for the routine arms. Every other span
+    * copies through: quoted text (a backtick closes at the next
+    * backtick, MySQL's rule), comments, and dollar bodies, unterminated
+    * ones verbatim (loud failure beats silent truncation).
+    *
+    * The routing text is the same text with each comment replaced by
+    * one space and plain backtick identifiers bare. mysqldump rides
+    * real syntax inside version-conditional comments (the 50100
+    * `PARTITION BY RANGE (...)` trailer), whose parens would derail the
+    * `CREATE TABLE (cols)` capture; and every routing regex reads bare
+    * names. A backticked name that is not a plain identifier keeps its
+    * backticks. Catalyst gets the first text, where backticks still
+    * quote reserved words and comments are its own business. */
+  private[graft] def normalizeStatement(engine: Engine, stmt: Stmt,
+      s: String): (String, String) = {
     def isWord(c: Char): Boolean =
       Character.isLetterOrDigit(c) || c == '_' || c == '$'
-    if (!s.contains("0x") && !s.contains("b'") && !s.contains("B'") &&
-      !s.contains("E'") && !s.contains("e'") && !s.contains("_")) return s
-    // knobs: '#' IS a comment (an apostrophe or literal-looking text
-    // inside one must neither flip quote state nor be rewritten —
-    // ADVICE r7; for PG text the verbatim copy-to-EOL is harmless
-    // EXCEPT that an E'...' later on a line with a JSON-path '#'
-    // operator keeps its prefix — only reachable in a
-    // pre-standard-conforming dump that also uses JSON operators in
-    // DDL, not a shape pg_dump emits). Backslash escapes apply inside
-    // backticks too (this scanner's historical reading).
-    val sps = SqlText.spans(s, hashComments = true,
-      backslashInBacktick = true)
-    val out = new StringBuilder
+    val query = stmt.isInstanceOf[Stmt.Query]
+    val foldDollar = query || stmt.isInstanceOf[Stmt.Dml]
+    val sps = SqlText.spans(s, dollarQuotes = true)
+    val lit = new java.lang.StringBuilder(s.length)
+    val route = new java.lang.StringBuilder(s.length)
+    def emit(t: String): Unit = { lit.append(t); route.append(t) }
+    def copy(from: Int, until: Int): Unit = {
+      lit.append(s, from, until); route.append(s, from, until)
+    }
     var i = 0
     var si = 0
     var prev: Char = ' '
@@ -882,79 +803,79 @@ object SqlRouter {
       val sp = sps(si)
       val c = s.charAt(i)
       if (sp.kind != SqlText.Code) {
-        // quoted/comment spans copy through verbatim (a rewrite below
-        // can CONSUME a following quoted span — b'0101', _utf8'…' —
-        // after which i has moved to that span's end and the cursor
-        // resync above skips it)
-        out.append(s.substring(i, sp.end)); i = sp.end
+        // b'0101' below CONSUMES the start of its quoted span and can
+        // leave i inside a longer one; the rest copies through. Every
+        // other span is entered at its start.
+        sp.kind match {
+          case SqlText.LineComment | SqlText.BlockComment =>
+            lit.append(s, i, sp.end); route.append(' ')
+          case SqlText.Quoted if c == '`' =>
+            val inner = s.substring(i + 1, math.max(i + 1, sp.end - 1))
+            lit.append(s, i, sp.end)
+            if (sp.end - i >= 2 && s.charAt(sp.end - 1) == '`' &&
+              inner.matches("[A-Za-z_][A-Za-z0-9_]*")) route.append(inner)
+            else route.append(s, i, sp.end)
+          case SqlText.Dollar if foldDollar =>
+            val tagLen = s.indexOf('$', i + 1) + 1 - i
+            if (sp.end - i >= 2 * tagLen &&
+              s.regionMatches(sp.end - tagLen, s, i, tagLen))
+              emit("'" + s.substring(i + tagLen, sp.end - tagLen)
+                .replace("\\", "\\\\").replace("'", "\\'") + "'")
+            else copy(i, sp.end)
+          case _ => copy(i, sp.end)
+        }
+        i = sp.end
+      } else if (c == '@' && query && s.startsWith("@@", i)) {
+        val m = SysVarRef.pattern.matcher(s).region(i, sp.end)
+        if (m.lookingAt()) {
+          val name = m.group(1).toLowerCase
+          val v = engine.getVar(name).orElse(SysVarDefaults.get(name))
+            .getOrElse(throw new IllegalArgumentException(
+              s"Unknown system variable '$name'"))
+          emit(if (v.matches("-?\\d{1,18}")) v
+            else "'" + v.replace("'", "''") + "'")
+          i = m.end
+        } else { copy(i, i + 1); i += 1 }
       } else if (c == '0' && !isWord(prev) && i + 1 < s.length &&
           s.charAt(i + 1) == 'x') {
         var j = i + 2
-        while (j < s.length && isHexDigit(s.charAt(j))) j += 1
+        while (j < s.length && "0123456789abcdefABCDEF".indexOf(s.charAt(j)) >= 0)
+          j += 1
         val hex = s.substring(i + 2, j)
         if (hex.nonEmpty && (j >= s.length || !isWord(s.charAt(j)))) {
-          out.append("X'").append(if (hex.length % 2 == 1) "0" else "")
-            .append(hex).append('\'')
+          emit((if (hex.length % 2 == 1) "X'0" else "X'") + hex + "'")
           i = j
-        } else { out.append(c); i += 1 }
+        } else { copy(i, i + 1); i += 1 }
       } else if ((c == 'E' || c == 'e') && !isWord(prev) &&
           i + 1 < s.length && s.charAt(i + 1) == '\'') {
-        // PG escape-string literal E'...' (pre-standard_conforming
-        // dumps): drop the prefix — Catalyst string literals already
-        // process backslash escapes
-        i += 1
+        i += 1 // the prefix drops; the quoted span follows
       } else if ((c == 'b' || c == 'B') && !isWord(prev) &&
           i + 1 < s.length && s.charAt(i + 1) == '\'') {
         val close = s.indexOf('\'', i + 2)
         val bits = if (close > 0) s.substring(i + 2, close) else "x"
         if (close > 0 && bits.forall(ch => ch == '0' || ch == '1')) {
-          out.append(if (bits.isEmpty) "0"
-            else BigInt(bits, 2).toString)
+          emit(if (bits.isEmpty) "0" else BigInt(bits, 2).toString)
           i = close + 1
-        } else { out.append(c); i += 1 }
+        } else { copy(i, i + 1); i += 1 }
       } else if (c == '_' && !isWord(prev)) {
         var j = i + 1
-        while (j < s.length && isWord(s.charAt(j))) j += 1
+        while (j < sp.end && isWord(s.charAt(j))) j += 1
         var k = j
         while (k < s.length && Character.isWhitespace(s.charAt(k))) k += 1
-        val name = s.substring(i + 1, j).toLowerCase
         val beforeLiteral = k < s.length &&
-          (s.charAt(k) == '\'' || (s.charAt(k) == '0' &&
-            k + 1 < s.length && s.charAt(k + 1) == 'x'))
-        if (Introducers.contains(name) && beforeLiteral) i = k // drop it
-        else { out.append(s.substring(i, j)); i = j }
-      } else { out.append(c); i += 1 }
-      prev = if (out.nonEmpty) out.last else ' '
+          (s.charAt(k) == '\'' || s.startsWith("0x", k))
+        if (beforeLiteral && Introducers(s.substring(i + 1, j).toLowerCase))
+          i = k // the introducer drops
+        else { copy(i, j); i = j }
+      } else if ((c == 'p' || c == 'P') && !isWord(prev) && prev != '.' &&
+          i + 7 < s.length && s.regionMatches(true, i, "public.", 0, 7) &&
+          (Character.isLetter(s.charAt(i + 7)) || s.charAt(i + 7) == '_' ||
+            s.charAt(i + 7) == '"')) {
+        i += 7 // the qualifier drops, the object name stays
+      } else { copy(i, i + 1); i += 1 }
+      if (lit.length > 0) prev = lit.charAt(lit.length - 1)
     }
-    out.toString
-  }
-
-  private def isHexDigit(c: Char): Boolean =
-    (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
-
-  /** Backtick-quoted identifiers (standard mysqldump output) become
-    * bare identifiers for ROUTING — outside string literals only, and
-    * only when the quoted text is a plain identifier; anything else
-    * keeps its backticks and reaches Catalyst (which parses them
-    * natively). Without this every `CREATE TABLE \`t\` ...` in a dump
-    * silently missed the router and landed in the Spark catalog as a
-    * non-graft table. */
-  private[graft] def stripIdentQuotes(s: String): String = {
-    if (s.indexOf('`') < 0) return s
-    // knobs: defaults — a backtick span closes at the next backtick
-    // (no backslash escapes, MySQL's rule), and backticks inside
-    // comments stay untouched
-    val out = new StringBuilder
-    SqlText.spans(s).foreach { sp =>
-      val isBacktick = sp.kind == SqlText.Quoted && s.charAt(sp.start) == '`'
-      if (isBacktick) {
-        val closed = sp.end > sp.start + 1 && s.charAt(sp.end - 1) == '`'
-        val inner = if (closed) s.substring(sp.start + 1, sp.end - 1) else ""
-        if (closed && inner.matches("[A-Za-z_][A-Za-z0-9_]*")) out.append(inner)
-        else out.append(s.substring(sp.start, sp.end))
-      } else out.append(s.substring(sp.start, sp.end))
-    }
-    out.toString
+    (lit.toString, route.toString)
   }
 
   /** One method per [[Stmt]] family, each trying its arms in order and
@@ -2564,7 +2485,7 @@ object SqlRouter {
       val results = Seq.newBuilder[Result]
       var i = 0
       while (i < stmts.length) {
-        val run = if (engine.inTransaction) 1 else dmlRunLength(stmts, i)
+        val run = if (engine.inTransaction) 1 else dmlRunLength(engine, stmts, i)
         if (run >= 2) {
           engine.begin()
           try {
@@ -2584,29 +2505,35 @@ object SqlRouter {
     * INSERT IGNORE / ON DUPLICATE KEY are included — they stage through
     * the same table txn API; UPDATE and DELETE name the target their
     * Mutation parse finds; LOAD/COPY are not (their own bulk commit
-    * is already one version). Only DML heads reach the regexes. */
-  private def dmlTarget(stmt: String): Option[String] = stripIdentQuotes(stmt) match {
-    case _ if !Stmt.of(stmt).isInstanceOf[Stmt.Dml] => None
-    case ReplaceInto(name, _, _) => Some(name)
-    case InsertIgnore(name, _, _) => Some(name)
-    case InsertOnDup(Insert(name, _, _), _) => Some(name)
-    case Insert(name, _, _) => Some(name)
-    case InsertSet(name, _) => Some(name)
-    case ReplaceSet(name, _) => Some(name)
-    // a statement that does not parse runs (and fails) on its own
-    case UpdateStmt(refs, tail) =>
-      scala.util.Try(parseUpdate(refs, tail).target).toOption
-    case DeleteStmt(body) => scala.util.Try(parseDelete(body).target).toOption
-    case _ => None
+    * is already one version). Only DML heads reach the regexes, and
+    * they read the routing text `execute` routes on, so a dump's header
+    * block or an inline comment does not end a run. */
+  private def dmlTarget(engine: Engine, raw: String): Option[String] = {
+    val s = stripLeadingComments(raw)
+    val st = Stmt.of(s)
+    if (!st.isInstanceOf[Stmt.Dml]) None
+    else normalizeStatement(engine, st, s)._2 match {
+      case ReplaceInto(name, _, _) => Some(name)
+      case InsertIgnore(name, _, _) => Some(name)
+      case InsertOnDup(Insert(name, _, _), _) => Some(name)
+      case Insert(name, _, _) => Some(name)
+      case InsertSet(name, _) => Some(name)
+      case ReplaceSet(name, _) => Some(name)
+      // a statement that does not parse runs (and fails) on its own
+      case UpdateStmt(refs, tail) =>
+        scala.util.Try(parseUpdate(refs, tail).target).toOption
+      case DeleteStmt(body) => scala.util.Try(parseDelete(body).target).toOption
+      case _ => None
+    }
   }
 
   /** Length of the run of consecutive DML statements on ONE table
     * starting at `from` (0 when stmts(from) is not batchable DML). */
-  private def dmlRunLength(stmts: Seq[String], from: Int): Int =
-    dmlTarget(stmts(from)).fold(0) { target =>
+  private def dmlRunLength(engine: Engine, stmts: Seq[String], from: Int): Int =
+    dmlTarget(engine, stmts(from)).fold(0) { target =>
       var n = 1
       while (from + n < stmts.length &&
-        dmlTarget(stmts(from + n)).contains(target)) n += 1
+        dmlTarget(engine, stmts(from + n)).contains(target)) n += 1
       n
     }
 
@@ -4250,23 +4177,6 @@ object SqlRouter {
     "have_ssl" -> "YES",
     "hostname" -> "localhost",
     "last_insert_id" -> "0")
-
-  /** `@@[scope.]name` references in query statements fold to literal
-    * values (session vars over [[SysVarDefaults]]) — the Connector/J /
-    * mysql-CLI handshake shape (`SELECT @@session.auto_increment_
-    * increment AS ..., ...`). Quoted spans stay untouched; an unknown
-    * variable is refused with the server's wording. */
-  private[graft] def rewriteSysVars(engine: Engine, s: String): String =
-    // dollarQuotes: a $$...$$ literal carrying user@@host text must
-    // stay opaque (this rewrite runs BEFORE foldDollarQuotes)
-    SqlText.replaceCode(s, SysVarRef, SqlText.spans(s, dollarQuotes = true)) {
-      mm =>
-        val name = mm.group(1).toLowerCase
-        val v = engine.getVar(name).orElse(SysVarDefaults.get(name))
-          .getOrElse(throw new IllegalArgumentException(
-            s"Unknown system variable '$name'"))
-        if (v.matches("-?\\d{1,18}")) v else "'" + v.replace("'", "''") + "'"
-    }
 
   private val SysVarRef =
     "@@(?:(?i:SESSION|GLOBAL|LOCAL)\\.)?([A-Za-z_][A-Za-z0-9_]*)".r

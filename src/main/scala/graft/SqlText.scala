@@ -24,17 +24,14 @@ import scala.util.matching.Regex
   *
   * | knob                  | meaning                                | set by |
   * |-----------------------|----------------------------------------|--------|
-  * | `hashComments`        | `#` starts a line comment (MySQL)      | stripLeadingComments, normalizeMysqlLiterals |
-  * | `dollarQuotes`        | `$tag$...$tag$` is one span (PG)       | splitStatements (off when the DELIMITER holds `$`), foldDollarQuotes, stripComments, callHeads, rewriteAliasHaving, rewriteSysVars, observeDialectEvidence, splitReturning |
-  * | `backslashInBacktick` | `\` escapes inside `` `...` ``         | normalizeMysqlLiterals |
+  * | `hashComments`        | `#` starts a line comment (MySQL)      | stripLeadingComments |
+  * | `dollarQuotes`        | `$tag$...$tag$` is one span (PG)       | splitStatements (off when the DELIMITER holds `$`), normalizeStatement, callHeads, rewriteAliasHaving, observeDialectEvidence, splitReturning |
   * | `standardStrings`     | `\` is literal in `'...'`/`"..."` (PG) | every PgCompat pass, PgCompat.quoteIdents (off for the MySQL ANSI_QUOTES fold), Partitioning's bound splits |
   * | `keep` ([[mask]] only) | quote kinds left unmasked             | PgCompat toSys/dropFunctionQualifiers/regexOps (`"`), isDumpFunction and joinRefs (`` ` `` `"`), observeDialectEvidence (`` ` ``) |
   *
   * Keep `hashComments` OFF wherever Postgres text can flow through: PG
   * spells JSON-path operators `#>` / `#>>`. Dollar tags start with a
   * letter/underscore so `$1` positional params never open a span.
-  * MySQL backtick identifiers escape a backtick by doubling it, so the
-  * default leaves `\` alone there.
   *
   * Shared rules (what mysqldump/pg_dump actually emit):
   *  - `--` opens a line comment anywhere in code, through end-of-line
@@ -42,7 +39,8 @@ import scala.util.matching.Regex
   *  - Block comments do NOT nest (MySQL rule; PG nests — dump output
   *    never does) and an unterminated one runs to end of input.
   *  - `\` escapes the next character inside `'...'` and `"..."`
-  *    unless `standardStrings`.
+  *    unless `standardStrings`. Inside `` `...` `` it is literal: MySQL
+  *    backtick identifiers escape a backtick only by doubling it.
   *  - A doubled delimiter (`''`, `""`, ``` `` ```) stays inside its
   *    quoted span.
   *  - An unterminated quote runs to end of input.
@@ -65,7 +63,6 @@ object SqlText {
 
   def spans(s: String, hashComments: Boolean = false,
       dollarQuotes: Boolean = false,
-      backslashInBacktick: Boolean = false,
       standardStrings: Boolean = false): Seq[Span] = {
     val out = Vector.newBuilder[Span]
     var i = 0
@@ -77,7 +74,7 @@ object SqlText {
       if (c == '\'' || c == '"' || c == '`') {
         flushCode(i)
         val start = i
-        val escapes = if (c == '`') backslashInBacktick else !standardStrings
+        val escapes = c != '`' && !standardStrings
         i += 1
         var closed = false
         while (!closed && i < s.length) {

@@ -4,6 +4,10 @@ class SqlRouterSpec extends SparkSpec {
   import spark.implicits._
 
   private def exec(e: Engine, q: String) = SqlRouter.execute(e, q)
+  private lazy val walkEngine = new Engine(spark, tmpDir("router_walk"))
+  /** `execute`'s one span walk over `q`: (Catalyst text, routing text). */
+  private def walk(q: String) =
+    SqlRouter.normalizeStatement(walkEngine, Stmt.of(q), q)
 
   test("end-to-end SQL statement surface") {
     val e = new Engine(spark, tmpDir("router_wh"))
@@ -488,6 +492,23 @@ class SqlRouterSpec extends SparkSpec {
          INSERT INTO t VALUES (12, 'x', 'extra-col')"""))
     assert(!e.inTransaction) // the auto-txn was rolled back, not leaked
     assert(exec(e, "SELECT count(*) AS n FROM t").df.get.as[Long].head() === before)
+    // the batcher reads the routing text: a pg_dump --inserts header
+    // block on the first statement, or an inline comment, keeps the run
+    val v1 = e.table("t").history().last
+    SqlRouter.executeScript(e,
+      """--
+         -- Data for Name: t; Type: TABLE DATA; Schema: public; Owner: -
+         --
+
+         INSERT INTO public.t VALUES (20, 'u');
+         INSERT INTO public.t VALUES (21, 'v');
+         INSERT INTO public.t VALUES (22, 'w');""")
+    assert(e.table("t").history().last === v1 + 1)
+    SqlRouter.executeScript(e,
+      """INSERT /* x */ INTO t VALUES (23, 'y');
+         INSERT /* x */ INTO t VALUES (24, 'z')""")
+    assert(e.table("t").history().last === v1 + 2)
+    assert(exec(e, "SELECT count(*) AS n FROM t").df.get.as[Long].head() === before + 5)
   }
 
   test("script splitter ignores ';' in comments and backticked names") {
@@ -605,7 +626,7 @@ class SqlRouterSpec extends SparkSpec {
     // backticks INSIDE string literals survive verbatim
     exec(e, "UPDATE bt SET v = 'tick `x` kept' WHERE id = 1")
     assert(exec(e, "SELECT v FROM bt").df.get.as[String].head() === "tick `x` kept")
-    assert(SqlRouter.stripIdentQuotes("SELECT `a b`") === "SELECT `a b`") // not an identifier
+    assert(walk("SELECT `a b`")._2 === "SELECT `a b`") // not an identifier
   }
 
   // ------------------------------------------------------------------
@@ -766,8 +787,8 @@ class SqlRouterSpec extends SparkSpec {
       .collect()(0).getLong(0) === 1L)
   }
 
-  test("normalizeMysqlLiterals: hex, bit, introducers — quote-aware") {
-    val n = SqlRouter.normalizeMysqlLiterals _
+  test("normalizeStatement: hex, bit, introducers — quote-aware") {
+    def n(q: String) = walk(q)._1
     // --hex-blob literals, incl. MySQL's implied leading zero
     assert(n("INSERT INTO t VALUES (1, 0x48454C)") ===
       "INSERT INTO t VALUES (1, X'48454C')")
@@ -789,6 +810,30 @@ class SqlRouterSpec extends SparkSpec {
     assert(n("SELECT _notacharset 'alias'") === "SELECT _notacharset 'alias'")
     // PG escape-string prefix dropped; bare identifiers ending in e kept
     assert(n("SELECT E'a\\nb', e'x', sole 'y'") === "SELECT 'a\\nb', 'x', sole 'y'")
+    // a backslash inside backticks is literal: the backtick span closes
+    // at the next backtick and the literal after it still rewrites
+    assert(n("SELECT 1 AS `a\\`, 0x41 AS h") === "SELECT 1 AS `a\\`, X'41' AS h")
+  }
+
+  test("normalizeStatement: one walk gives the Catalyst and the routing text") {
+    // every rule at once; the routing text differs only by the comment
+    // (one space) and the plain backtick identifier (bare)
+    assert(walk("SELECT $$a$$, 0x41, b'1', _binary 'x', E'y', `c` FROM public.t -- n") ===
+      (("SELECT 'a', X'41', 1, 'x', 'y', `c` FROM t -- n",
+        "SELECT 'a', X'41', 1, 'x', 'y', c FROM t  ")))
+    // `#` mid-statement is code (Spark has no `#` comment; PG's `#>`)
+    assert(walk("SELECT j #> '{a}', 0x41 FROM t")._1 === "SELECT j #> '{a}', X'41' FROM t")
+    // a dollar body is opaque on every family: a CREATE FUNCTION body
+    // keeps its literals, qualifiers and backticks
+    val fn = "CREATE FUNCTION f() RETURNS int AS $$ SELECT 0x41, `c` FROM public.t $$ LANGUAGE sql"
+    assert(walk(fn) === ((fn, fn)))
+  }
+
+  test("a backslash inside backticks does not hide the rest of the statement") {
+    val e = new Engine(spark, tmpDir("router_bt_bs"))
+    val r = exec(e, "SELECT 1 AS `a\\`, 0x41 AS h").df.get
+    assert(r.columns.toSeq === Seq("a\\", "h"))
+    assert(r.head().getAs[Array[Byte]]("h").toSeq === Seq(0x41.toByte))
   }
 
   test("blob columns replay from mysqldump literal forms end-to-end") {
@@ -916,9 +961,8 @@ class SqlRouterSpec extends SparkSpec {
       s <- samples
       hash <- Seq(true, false)
       dollar <- Seq(true, false)
-      bsBt <- Seq(true, false)
     } {
-      val sps = SqlText.spans(s, hash, dollar, bsBt)
+      val sps = SqlText.spans(s, hash, dollar)
       assert(sps.map(sp => s.substring(sp.start, sp.end)).mkString === s,
         s"partition of ${s.take(40)} hash=$hash dollar=$dollar")
       assert(sps.forall(sp => sp.end > sp.start))
@@ -966,18 +1010,18 @@ class SqlRouterSpec extends SparkSpec {
     assert(SqlText.matchParen(SqlText.mask("(a"), 0) === -1)
   }
 
-  test("stripPublicSchema: an apostrophe inside a comment can't flip quote state") {
+  test("normalizeStatement: an apostrophe inside a comment can't flip quote state") {
     // the bug class ADVICE r7 flagged on the literal normalizer: the
     // comment's apostrophe used to open a phantom string span, after
     // which every later real qualifier was kept verbatim
     val q = "-- it's the header\nSELECT * FROM public.users u " +
       "JOIN public.orders o ON u.id = o.uid"
-    val out = SqlRouter.stripPublicSchema(q)
+    val out = walk(q)._1
     assert(!out.contains("public."))
     assert(out.contains("FROM users"))
     // and the protections stay: quoted occurrences survive untouched
     val keep = "SELECT 'public.keep', \"public\".x FROM t -- public.nope"
-    val kept = SqlRouter.stripPublicSchema(keep)
+    val kept = walk(keep)._1
     assert(kept.contains("'public.keep'"))
     assert(kept.contains("\"public\""))
     assert(kept.contains("-- public.nope"))

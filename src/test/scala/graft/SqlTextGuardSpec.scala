@@ -40,6 +40,28 @@ class SqlTextGuardSpec extends AnyFunSuite {
     """ALTER|RENAME|SHOW|SET|USE|RESET|BEGIN|START|COMMIT|ROLLBACK|LOCK|""" +
     """UNLOCK|COPY|LOAD|CHECK)"|takeWhile\((_\.isLetter|c => c\.isLetter)\)""").r
 
+  private val BacktickKnob = """\bbackslashInBacktick\b""".r
+  private val SpansCall = """\bSqlText\.spans\(""".r
+  /** `SqlText.spans(` call sites in SqlRouter.scala: `execute` lexes a
+    * statement once, in `normalizeStatement`; a new walker adds one. */
+  private val RouterSpansCalls = 10
+
+  /** Every `SqlText.spans(` call site in `file` once there are more
+    * than [[RouterSpansCalls]] of them, else none. */
+  private[graft] def extraWalks(file: java.nio.file.Path): Seq[String] = {
+    val found = matchingLines(file, SpansCall)
+    if (found.size > RouterSpansCalls) found else Nil
+  }
+
+  /** `file:line` of every `backslashInBacktick` under `root`. */
+  private[graft] def knobUses(root: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.walk(root)
+    val files = try st.iterator().asScala.toList finally st.close()
+    files.filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+      .flatMap(matchingLines(_, BacktickKnob))
+  }
+
   private def mainSource(name: String): java.nio.file.Path = {
     val f = java.nio.file.Paths.get("src", "main", "scala", "graft", name)
     assert(java.nio.file.Files.isRegularFile(f), s"run from the repo root: $f")
@@ -101,6 +123,35 @@ class SqlTextGuardSpec extends AnyFunSuite {
       "  def h(ob: String) = ob.regionMatches(true, 0, \"BY\", 0, 2)",
       "}")
     assert(matchingLines(f, HeadProbe) === Seq(s"${f.getFileName}:2", s"${f.getFileName}:3"))
+  }
+
+  // MySQL backticks escape only by doubling: no knob reads `\` there.
+  test("no backslash-in-backtick knob under src/main") {
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val found = knobUses(root)
+    assert(found.isEmpty, s"backslashInBacktick is back: ${found.mkString(", ")}")
+  }
+
+  // `execute` lexes each statement once; a second walker is a new call.
+  test("SqlRouter's SqlText.spans call sites do not grow") {
+    val found = extraWalks(mainSource("SqlRouter.scala"))
+    assert(found.isEmpty, s"more than $RouterSpansCalls span walks in " +
+      s"SqlRouter (extend normalizeStatement instead): ${found.mkString(", ")}")
+  }
+
+  test("the lexer guards recognize the knob and one spans call too many") {
+    val dir = java.nio.file.Files.createTempDirectory("lexer_guard")
+    java.nio.file.Files.write(dir.resolve("Walk.scala"), Seq(
+      "object Walk {",
+      "  def f(s: String) = SqlText.spans(s, backslashInBacktick = true)",
+      "  def g(s: String) = SqlText.mask(s)",
+      "}").mkString("\n").getBytes("UTF-8"))
+    assert(knobUses(dir) === Seq("Walk.scala:2"))
+    val calls = (1 to RouterSpansCalls).map(i => s"  val s$i = SqlText.spans(t)")
+    assert(extraWalks(planted(calls: _*)).isEmpty)
+    val over = planted(calls :+ "  val x = SqlText.spans(t, dollarQuotes = true)": _*)
+    assert(extraWalks(over).size === RouterSpansCalls + 1)
   }
 
   test("no quote or comment state machine outside SqlText") {
